@@ -3,10 +3,9 @@
 NOT part of the driver contract — bench.py is frozen for measurement; this
 file exists so optimization A/Bs can be recorded without touching it.
 
+Per-stage pipeline walls: perfbench/run.py --trace 1.
+
 Modes:
-  --mode stages  --cores N [--runs R]
-      run_dedup over the bench corpus with per-stage walls (stderr) at
-      local[N]; prints one JSON line of {stage: sec} per run.
   --mode queries [--names a,b,c] [--repeats K] [--noop]
       per-query timing at local[$SPARK_GRAFT_CPUS] over $SPARK_GRAFT_SF_DIR,
       K interleaved repeats, reporting all samples + min. --noop times
@@ -39,31 +38,6 @@ def _mk_spark(cores: int, shuffle_partitions: int):
         shuffle_partitions=shuffle_partitions,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-
-
-def mode_stages(cores: int, runs: int) -> None:
-    import tempfile
-
-    from lsh_cascade_poc_spark.checkpoint import StageStore
-    from lsh_cascade_poc_spark.config import DedupConfig
-    from lsh_cascade_poc_spark.pipeline import run_dedup
-
-    os.environ["DEDUP_STAGE_TIMING"] = "1"
-    corpus = os.path.join(REPO, ".bench_cache", "turns_v2_n400000_seed42")
-    spark = _mk_spark(cores, max(16, 8))
-    turns = spark.read.parquet(corpus)
-    cfg = DedupConfig()
-    for _ in range(runs):
-        with tempfile.TemporaryDirectory(prefix="bx_stages_") as tmp:
-            store = StageStore(spark=spark, work_dir=tmp, config_hash="run")
-            t0 = time.perf_counter()
-            res = run_dedup(spark, turns, cfg=cfg, store=store,
-                            enable_overlap_stage=True)
-            nc = res.clusters.select("cluster_id").distinct().count()
-            wall = time.perf_counter() - t0
-        print(json.dumps({"cores": cores, "wall": round(wall, 3),
-                          "n_clusters": nc}), flush=True)
-    spark.stop()
 
 
 def mode_queries(names: list[str], repeats: int, noop: bool) -> None:
@@ -110,9 +84,7 @@ def mode_plans(names: list[str], out_dir: str, suffix: str) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mode", required=True,
-                    choices=["stages", "queries", "plans"])
-    ap.add_argument("--cores", type=int, default=4)
-    ap.add_argument("--runs", type=int, default=1)
+                    choices=["queries", "plans"])
     ap.add_argument("--names", default="")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--noop", action="store_true")
@@ -120,9 +92,6 @@ def main() -> None:
     ap.add_argument("--suffix", default="")
     args = ap.parse_args()
 
-    if args.mode == "stages":
-        mode_stages(args.cores, args.runs)
-        return
     import bench as benchmod
 
     names = ([n for n in args.names.split(",") if n]

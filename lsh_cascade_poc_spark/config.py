@@ -21,15 +21,14 @@ MERSENNE_P = (1 << 61) - 1
 
 @dataclass(frozen=True)
 class DedupConfig:
-    """All knobs of the dedup cascade. Deterministic: every random element
-    (permutation params, hyperplanes) derives from ``seed`` only, so cluster
-    assignments are reproducible across partitionings and parallelism levels
-    (SURVEY.md §7.3 determinism requirement)."""
+    """All knobs of the dedup cascade. Deterministic: the one random element,
+    the MinHash permutation parameters, derives from ``minhash_seed`` only
+    (SimHash and every band key are plain hashes), so cluster assignments
+    are reproducible across partitionings and parallelism levels (SURVEY.md
+    §7.3 determinism requirement)."""
 
     # --- document assembly (BASELINE.json input_hint) ---
     min_doc_chars: int = 10          # reference drops <10 chars (src/loader.py:118-119)
-    max_doc_chars: int = 0           # 0 = no truncation of the assembled doc;
-                                     # per-turn truncation below
     max_turn_chars: int = 2048       # reference truncates passages at 2048 (src/loader.py:114-116)
 
     # --- shingling ---
@@ -114,13 +113,12 @@ class DedupConfig:
     cc_max_iterations: int = 20
 
     # doc_id = xxhash64(conv_id) can collide (birthday bound ~n^2/2^65: real
-    # at 10^12 docs). One cheap aggregate over the materialized docs stage
-    # detects it and fails loudly instead of silently merging conversations.
+    # at 10^12 docs). One cheap aggregate over the materialized docs (batch)
+    # or the batch's and every indexed doc (streaming) detects it and fails
+    # loudly instead of silently merging conversations.
     check_id_collisions: bool = True
 
     # --- execution ---
-    seed: int = 42
-    shuffle_partitions: int = 32
     pair_repartition: int = 0        # 0 = leave to AQE; else explicit repartition
                                      # on band keys before the self-join
 

@@ -63,60 +63,27 @@ def explode_bands(
     )
 
 
-def band_index_stats(bands: DataFrame) -> DataFrame:
-    """A6: one-row stats of a band/segment index — row count, distinct
-    buckets, max/mean bucket size (the reference's get_stats +
-    query_with_stats counters, src/cascade_search.py:292-299,
-    src/e2lsh.py:321-369, as ONE aggregate instead of per-query dicts)."""
-    per_bucket = bands.groupBy("tier", "band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    return per_bucket.agg(
-        F.sum("n_docs").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("n_docs").alias("max_bucket"),
-        F.avg("n_docs").alias("mean_bucket"),
-    )
-
-
-def cap_hot_bands(
+def bucket_sizes(
     bands: DataFrame, cap: int,
     persist_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Split the band table into (kept, dropped_bucket_stats).
+    """The hot-bucket rule, the engine's skew-survival policy: count the
+    docs per (tier, band_id, band_key) bucket -> (sizes, hot) where hot =
+    the buckets holding more than `cap` docs. The frequency pre-pass is one
+    partial-aggregated groupBy (map-side combine), cheap relative to the
+    self-join it protects. `hot` (tier, band_id, band_key, n_docs) is
+    recorded by the callers, so a drop is observable, not silent.
 
-    dropped_bucket_stats(tier, band_id, band_key, n_docs) — written to the
-    metrics table so the drop is observable, not silent. The frequency
-    pre-pass is one partial-aggregated groupBy (map-side combine), cheap
-    relative to the self-join it protects.
-
-    When `persist_registry` is given, the per-bucket count table (small:
-    one row per distinct bucket) is persisted and appended to it, so a
-    caller that later materializes the `hot` side for metrics reuses the
-    aggregation instead of re-scanning the full band table.
-    """
-    counts = bands.groupBy("tier", "band_id", "band_key").agg(
+    When `persist_registry` is given, the sizes table (one row per distinct
+    bucket) is persisted and appended to it, so every consumer of sizes and
+    hot reuses one aggregation instead of re-scanning the band table."""
+    sizes = bands.groupBy("tier", "band_id", "band_key").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     if persist_registry is not None:
-        counts = counts.persist()
-        persist_registry.append(counts)
-    hot = counts.filter(F.col("n_docs") > cap)
-    # hot keys are OUTLIER buckets, so the anti-join build side is normally
-    # tiny — but its COUNT is bounded only by rows/cap, so a forced
-    # F.broadcast hint would be an unbounded driver collect on a
-    # boilerplate-heavy corpus (millions of distinct over-cap keys at
-    # warehouse scale). The hot side sits directly below an aggregation
-    # (= an AQE query-stage boundary), so AQE sees its ACTUAL size at
-    # runtime and converts the anti-join to broadcast whenever it is under
-    # the threshold; adversarial hot sets degrade to a shuffle join instead
-    # of an OOM.
-    kept = bands.join(
-        hot.select("tier", "band_id", "band_key"),
-        ["tier", "band_id", "band_key"],
-        "left_anti",
-    )
-    return kept, hot
+        sizes = sizes.persist()
+        persist_registry.append(sizes)
+    return sizes, sizes.filter(F.col("n_docs") > cap)
 
 
 # broadcast cap for the pairable-bucket gate set — same rationale as
@@ -131,9 +98,9 @@ def pairable_bands(
     persist_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the band table into (pairable, dropped_bucket_stats) where
-    pairable = rows whose bucket holds 2..cap docs.
+    pairable = rows whose bucket holds 2..cap docs (bucket_sizes' rule).
 
-    Strictly stronger than cap_hot_bands for SELF-JOIN consumers: a
+    Drops more than the hot cap alone for SELF-JOIN consumers: a
     singleton bucket can never produce a pair, and at this corpus shape
     most buckets are singletons, so the self-join's sort/probe input
     shrinks several-fold (measured on the 3.84M-turn bench corpus,
@@ -141,20 +108,17 @@ def pairable_bands(
     stage fell from 23.1-32.0s to 6.7-9.3s with identical 121,724 output
     pairs). Do NOT use it for band tables that feed a persistent INDEX —
     the streaming index must keep singleton buckets, because a future
-    batch's doc may collide with them (cap_hot_bands remains that path).
+    batch's doc may collide with them.
 
     The gate set is counted and broadcast iff small; past
     _PAIRABLE_BROADCAST_MAX rows it degrades to a shuffle join — the
     100TB-safe fallback. The count action is cheap only when `bands`
     derives from a MATERIALIZED table (explode over the signatures
     checkpoint) — don't feed it an expensive lazy plan."""
-    counts = bands.groupBy("tier", "band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    ).persist()
-    if persist_registry is not None:
-        persist_registry.append(counts)
-    hot = counts.filter(F.col("n_docs") > cap)
-    pairable = counts.filter(
+    sizes, hot = bucket_sizes(
+        bands, cap, [] if persist_registry is None else persist_registry
+    )
+    pairable = sizes.filter(
         (F.col("n_docs") >= 2) & (F.col("n_docs") <= cap)
     ).select("tier", "band_id", "band_key")
     gate = (

@@ -89,19 +89,7 @@ def tag_exact_duplicates(
 def split_exact_duplicates(
     tagged: DataFrame, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """(representatives, star_edges) from a tag_exact_duplicates output."""
-    reps = tagged.filter(F.col(id_col) == F.col("_root")).drop("_root")
-    star = (
-        tagged.filter(F.col(id_col) != F.col("_root"))
-        .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-    return reps, star
-
-
-def collapse_exact_duplicates(
-    docs_with_fp: DataFrame, fp_col: str = "fingerprint", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """One window pass -> (representatives, star_edges).
+    """(representatives, star_edges) from a tag_exact_duplicates output.
 
     representatives = the min-id row of every fingerprint group; star_edges =
     (root, member) for every non-representative. THE key scale move: exact
@@ -111,6 +99,10 @@ def collapse_exact_duplicates(
     Near-dup relations are invariant under the collapse (identical text =>
     identical shingles => identical jaccard to any third doc), and connected
     components re-attaches members through the star edges."""
-    return split_exact_duplicates(
-        tag_exact_duplicates(docs_with_fp, fp_col, id_col), id_col
+    reps = tagged.filter(F.col(id_col) == F.col("_root")).drop("_root")
+    star = (
+        tagged.filter(F.col(id_col) != F.col("_root"))
+        .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
     )
+    return reps, star
+

@@ -23,8 +23,10 @@ stages); metrics rows record per-stage row counts and wall time.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +41,7 @@ from .operators.components import clusters_with_singletons, connected_components
 from .operators.pairs import (
     pairs_from_bands,
     pairs_with_min_match,
+    split_exact_duplicates,
     survivors,
     tag_exact_duplicates,
 )
@@ -52,8 +55,48 @@ class DedupResult:
     signatures: DataFrame  # (doc_id, shingles, minhash, simhash, fingerprint)
     #                        — exact-dup-group REPRESENTATIVES only (members
     #                        carry no signature; they re-attach via _root)
-    dup_pairs: DataFrame   # (id_a, id_b, jaccard, source)
+    dup_pairs: DataFrame   # (id_a, id_b, jaccard)
     clusters: DataFrame    # (doc_id, cluster_id) — all docs, singletons included
+
+
+def build_docs(turns: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Stage 0 of batch and streaming: assemble conversations into
+    documents, add the stable `doc_id`, the full-text md5 `fingerprint` and
+    the exact-group tag `_root` (min doc_id of the fingerprint group). Lazy;
+    the caller materializes it. Tagging here, on raw text, instead of on the signature
+    table means the window shuffle moves the ~1KB text rows once and the
+    expensive signature kernel runs ONLY on group representatives
+    (split_exact_duplicates): an m-fold exact flood costs one kernel
+    invocation, not m, and the signatures stage needs no shuffle at all."""
+    return tag_exact_duplicates(
+        with_doc_id(
+            assemble_conversations(
+                turns, max_turn_chars=cfg.max_turn_chars,
+                min_doc_chars=cfg.min_doc_chars,
+            )
+        ).withColumn(
+            # max_chars=0: full-content exact key (see fingerprint_md5)
+            "fingerprint", fingerprint_md5(F.col("doc_text"), max_chars=0)
+        )
+    )
+
+
+def check_doc_id_collisions(docs: DataFrame) -> None:
+    """doc_id = xxhash64(conv_id): raise on a 64-bit collision (distinct
+    conv_ids sharing a doc_id would corrupt signatures and clusters) — one
+    aggregate over (conv_id, doc_id) rows. The same conv_id seen twice (a
+    re-delivered conversation) is not a collision."""
+    n_coll = (
+        docs.groupBy("doc_id")
+        .agg(F.countDistinct("conv_id").alias("n"))
+        .filter(F.col("n") > 1)
+        .count()
+    )
+    if n_coll:
+        raise RuntimeError(
+            f"{n_coll} doc_id collisions (xxhash64 of distinct conv_ids); "
+            "re-run with salted ids or dedupe conv_ids"
+        )
 
 
 def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -95,6 +138,15 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return out
 
 
+def coarse_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Tier-0 (coarse, high-recall) MinHash bands: the only tier the
+    streaming index holds and probes."""
+    return explode_bands(
+        signatures, "minhash", tier=0,
+        n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
+    )
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame, cfg: DedupConfig,
     persist_registry: list | None = None,
@@ -104,14 +156,10 @@ def minhash_candidate_pairs(
     can unpersist them once downstream stages are materialized (leaked
     persists accumulate block-manager memory across repeated runs — measured
     as a 7x warm-run slowdown on this VM's ballooned memory)."""
-    # tier 0: coarse, whole corpus. pairable_bands (not cap_hot_bands):
-    # every consumer below is a pair self-join, so singleton buckets are
-    # dead weight — gating them out shrank this stage ~3x (bands.py
-    # measurement note)
-    coarse = explode_bands(
-        signatures, "minhash", tier=0,
-        n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
-    )
+    # tier 0: coarse, whole corpus. pairable_bands: every consumer below is
+    # a pair self-join, so singleton buckets are dead weight — gating them
+    # out shrank this stage ~3x (bands.py measurement note)
+    coarse = coarse_bands(signatures, cfg)
     coarse_kept, hot0 = pairable_bands(coarse, cfg.hot_band_cap,
                                        persist_registry=persist_registry)
     # persisted: referenced by the survivor gate AND the final AND-join —
@@ -195,28 +243,56 @@ def overlap_docs_gate(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def overlap_pairs(docs: DataFrame, cfg: DedupConfig,
-                  persist_registry: list | None = None,
-                  fps: DataFrame | None = None) -> DataFrame:
+def overlap_pairs(docs: DataFrame, fps: DataFrame, cfg: DedupConfig,
+                  persist_registry: list | None = None) -> DataFrame:
     """Winnowing fingerprints -> seed candidates -> exact extension; emits
     pairs sharing an exact substring of >= min_overlap_chars.
 
-    `fps`: pass the PRE-MATERIALIZED winnow fingerprint table (run_dedup
-    checkpoints it as its own stage). The candidate gate counts the
-    shared-fp set in a separate action to size-gate its broadcast
-    (operators/suffix.py _shared_fp_gate); with a lazy fps plan that count
-    would re-run the winnow kernel — the most expensive Arrow pass in the
-    stage — a second time."""
+    `fps` is the PRE-MATERIALIZED winnow fingerprint table of the gated
+    docs (run_dedup checkpoints it as its own stage). The candidate gate
+    counts the shared-fp set in a separate action to size-gate its
+    broadcast (operators/suffix.py _shared_fp_gate); with a lazy fps plan
+    that count would re-run the winnow kernel — the most expensive Arrow
+    pass in the stage — a second time."""
     docs = overlap_docs_gate(docs, cfg)
-    if fps is None:
-        fps = winnow_fingerprints(docs, cfg.winnow_kgram_chars,
-                                  cfg.winnow_window)
     cands = overlap_candidates(fps, hot_cap=cfg.overlap_hot_cap,
                                min_shared_fps=cfg.overlap_min_shared_fps,
                                persist_registry=persist_registry)
     return verify_overlaps(
         cands, docs, cfg.winnow_kgram_chars, cfg.min_overlap_chars
     ).select("id_a", "id_b")
+
+
+def release_persisted(dfs: list) -> None:
+    """Unpersist and forget the persisted intermediates a consumed stage
+    leaves behind. They die with the stage that consumed them: holding them
+    through later stages measurably slows THOSE stages (r5: verify ran 3x
+    slower with the three tiers' gate tables still cached), and a long
+    stream would accumulate one set per micro-batch."""
+    for df in dfs:
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+    dfs.clear()
+
+
+def merge_evidence(verified: DataFrame, exact: DataFrame,
+                   overlap: DataFrame | None) -> DataFrame:
+    """dup_pairs(id_a, id_b, jaccard) from the three kinds of evidence:
+    Jaccard-verified pairs keep their score, exact-duplicate pairs score
+    1.0, and substring-proven overlap pairs score -1.0 (the overlap-
+    evidence-only marker), each pair keeping its best score. `verified`
+    holds only rows with jaccard >= threshold > 0, so the max keeps an
+    overlap pair's verified score whenever it has one."""
+    out = verified.select("id_a", "id_b", "jaccard").unionByName(
+        exact.select("id_a", "id_b").withColumn("jaccard", F.lit(1.0))
+    )
+    if overlap is not None:
+        out = out.unionByName(
+            overlap.select("id_a", "id_b").withColumn("jaccard", F.lit(-1.0))
+        )
+    return out.groupBy("id_a", "id_b").agg(F.max("jaccard").alias("jaccard"))
 
 
 def run_dedup(
@@ -228,91 +304,29 @@ def run_dedup(
 ) -> DedupResult:
     cfg = cfg or DedupConfig()
 
-    import os
-    import sys
-    import time as _time
-
-    verbose = os.environ.get("DEDUP_STAGE_TIMING", "") == "1"
-
     def stage(name: str, factory, **kw):
-        t0 = _time.perf_counter()
         if store is not None:
-            out = store.materialize(name, factory, **kw)
-        else:
-            # no checkpoint store: localCheckpoint both materializes the stage
-            # (multi-consumer stages would recompute otherwise) and TRUNCATES
-            # the logical plan — without truncation each stage embeds every
-            # upstream stage's expression tree and Catalyst analysis explodes
-            out = factory().localCheckpoint(eager=True)
-        if verbose:
-            print(f"[dedup-stage] {name}: {_time.perf_counter() - t0:.1f}s",
-                  file=sys.stderr, flush=True)
-        return out
+            return store.materialize(name, factory, **kw)
+        # no checkpoint store: localCheckpoint both materializes the stage
+        # (multi-consumer stages would recompute otherwise) and TRUNCATES
+        # the logical plan — without truncation each stage embeds every
+        # upstream stage's expression tree and Catalyst analysis explodes
+        return factory().localCheckpoint(eager=True)
 
-    # the docs stage carries the exact-dup tag: fingerprint (md5 of the
-    # normalized text) + _root (min doc_id of the fingerprint group), computed
-    # in the SAME materialization. Tagging here — on raw text — instead of on
-    # the signature table means the window shuffle moves the ~1KB text rows
-    # once and the expensive signature kernel (below) runs ONLY on group
-    # representatives: an m-fold exact flood costs one kernel invocation, not
-    # m, and the signatures stage needs no shuffle at all.
-    docs = stage(
-        "docs",
-        lambda: tag_exact_duplicates(
-            with_doc_id(
-                assemble_conversations(
-                    turns, max_turn_chars=cfg.max_turn_chars,
-                    min_doc_chars=cfg.min_doc_chars,
-                )
-            ).withColumn(
-                # max_chars=0: full-content exact key (see fingerprint_md5)
-                "fingerprint", fingerprint_md5(F.col("doc_text"), max_chars=0)
-            )
-        ),
-    )
-    def _check_id_collisions() -> None:
-        # doc_id = xxhash64(conv_id): detect 64-bit collisions (distinct
-        # conv_ids sharing a doc_id would corrupt signatures/clusters) —
-        # one aggregate over the already-materialized docs stage. Runs as a
-        # third concurrent task next to the candidate chains (it reads only
-        # the docs checkpoint and gates nothing until its result is checked),
-        # so its ~full-pass barrier back-fills chain idle time instead of
-        # serializing in front of everything.
-        n_coll = (
-            docs.groupBy("doc_id")
-            .agg(F.countDistinct("conv_id").alias("n"))
-            .filter(F.col("n") > 1)
-            .count()
-        )
-        if n_coll:
-            raise RuntimeError(
-                f"{n_coll} doc_id collisions (xxhash64 of distinct conv_ids); "
-                "re-run with salted ids or dedupe conv_ids"
-            )
+    docs = stage("docs", lambda: build_docs(turns, cfg))
+    # the id-collision check runs SERIALLY, in front of the chains: as a
+    # third concurrent task it was measured 153.6-159.4s vs 149.2-150.2s
+    # for check-first + two chains (its countDistinct aggregate competes
+    # with the two Arrow kernels for cores exactly when they saturate the
+    # machine, delaying both chains for no overlap gain)
+    if cfg.check_id_collisions:
+        check_doc_id_collisions(docs)
     # exact-duplicate collapse BEFORE any signature computation or banding:
     # representatives and star edges are NARROW filters over the docs
-    # checkpoint (tagged above), the signature kernel runs over reps only,
-    # and all LSH passes see one row per distinct text; members re-attach via
-    # star edges in the clustering stage.
-    persists: list = []
-
-    def _release(dfs: list) -> None:
-        # persisted intermediates die with the stage that consumed them:
-        # holding them through later stages measurably slows THOSE stages
-        # on this memory-balloon host (r5: verify ran 3x slower with the
-        # three tiers' gate tables still cached)
-        for df in dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        dfs.clear()
-
-    reps_docs = docs.filter(F.col("doc_id") == F.col("_root"))
-    star_edges = docs.filter(F.col("doc_id") != F.col("_root")).select(
-        F.col("_root").alias("id_a"), F.col("doc_id").alias("id_b")
-    )
-    exact_pairs = star_edges.withColumn("source", F.lit("exact"))
+    # checkpoint, the signature kernel runs over reps only, and all LSH
+    # passes see one row per distinct text; members re-attach via star
+    # edges in the clustering stage.
+    reps_docs, star_edges = split_exact_duplicates(docs)
 
     # each candidate tier is its own materialization, NOT one fused write:
     # fusing them into a single job looked cheaper on paper (one Catalyst
@@ -346,14 +360,12 @@ def run_dedup(
         if store is not None:
             stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
         # every band-tier persisted intermediate is now consumed
-        _release(band_persists)
+        release_persisted(band_persists)
         return signatures, mh_pairs, sh_pairs
 
     def _overlap_chain():
         """overlap_fps -> pairs_overlap (independent of the signature
         chain: both consume only the materialized docs stage)."""
-        # narrow filter, not a semi-join: reps are tagged on the docs rows
-        docs_reps = docs.filter(F.col("doc_id") == F.col("_root"))
         # the fp table is its own materialization: the candidate gate's
         # broadcast-sizing count (suffix.py _shared_fp_gate) and the
         # candidate self-join both consume it — lazy, the winnow Arrow
@@ -361,78 +373,49 @@ def run_dedup(
         ov_fps = stage(
             "overlap_fps",
             lambda: winnow_fingerprints(
-                overlap_docs_gate(docs_reps, cfg),
+                overlap_docs_gate(reps_docs, cfg),
                 cfg.winnow_kgram_chars, cfg.winnow_window,
             ),
         )
         ov_persists: list = []
         ov_pairs = stage(
             "pairs_overlap",
-            lambda: overlap_pairs(docs_reps, cfg,
-                                  persist_registry=ov_persists, fps=ov_fps)
+            lambda: overlap_pairs(reps_docs, ov_fps, cfg,
+                                  persist_registry=ov_persists)
             .withColumn("source", F.lit("overlap")),
         )
-        _release(ov_persists)
+        release_persisted(ov_persists)
         return ov_pairs
 
     # The two chains share no data dependency (guide §2.6: actions are only
-    # sequential because driver code calls them sequentially). Running them
-    # from two driver threads lets each chain's tasks back-fill the idle
-    # capacity the other leaves behind — stage-tail stragglers, AQE/commit
-    # driver round-trips, the gate-count barriers — at BOTH parallelism
-    # levels (at local[1] the single core is idle during every driver
-    # round-trip too, so the lo level gains the same gap-fill). Stage
+    # sequential because driver code calls them sequentially). The overlap
+    # chain runs on a worker thread while the signature chain runs on this
+    # one, so each chain's tasks back-fill the idle capacity the other
+    # leaves behind — stage-tail stragglers, AQE/commit driver round-trips,
+    # the gate-count barriers — at BOTH parallelism levels (at local[1] the
+    # single core is idle during every driver round-trip too). Stage
     # outputs, and therefore every downstream result, are bit-identical:
-    # only the wall-clock interleaving changes. Set DEDUP_SEQUENTIAL_STAGES=1
-    # to fall back to the serial order (e.g. on memory-starved hosts; the
-    # A/B for this host is recorded in OPTIMIZATION_r06.md).
-    sequential = os.environ.get("DEDUP_SEQUENTIAL_STAGES", "") == "1"
-    if enable_overlap_stage and not sequential:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # the id-collision check stays SERIAL in front of the chains: a
-        # third concurrent task was measured 153.6-159.4s vs 149.2-150.2s
-        # for check-first + two chains (its countDistinct aggregate competes
-        # with the two Arrow kernels for cores exactly when they saturate
-        # the machine, delaying both chains for no overlap gain)
-        if cfg.check_id_collisions:
-            _check_id_collisions()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_mh = pool.submit(inheritable_thread_target(spark)(_minhash_chain))
-            fut_ov = pool.submit(inheritable_thread_target(spark)(_overlap_chain))
-            signatures, mh_pairs, sh_pairs = fut_mh.result()
-            ov_pairs = fut_ov.result()
-        sources = [exact_pairs, mh_pairs, sh_pairs, ov_pairs]
-    else:
-        if cfg.check_id_collisions:
-            _check_id_collisions()
+    # only the wall-clock interleaving changes (A/B in OPTIMIZATION_r06.md).
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut_ov = (
+            pool.submit(inheritable_thread_target(spark)(_overlap_chain))
+            if enable_overlap_stage else None
+        )
         signatures, mh_pairs, sh_pairs = _minhash_chain()
-        sources = [exact_pairs, mh_pairs, sh_pairs]
-        if enable_overlap_stage:
-            sources.append(_overlap_chain())
-    sig_reps = signatures
-
-    # union + dedup BEFORE the expensive verify (the one barrier worth paying;
-    # reference dedups candidates the same way, src/e2lsh.py:292-307).
-    # sources are kept as a SET: a pair found by both minhash and overlap must
-    # retain its overlap evidence even if it fails exact Jaccard (ADVICE r1).
-    all_cands = sources[0]
-    for s in sources[1:]:
-        all_cands = all_cands.unionByName(s)
-    cand_dedup = (
-        all_cands.groupBy("id_a", "id_b").agg(F.collect_set("source").alias("sources"))
-    ).persist()
-    persists.append(cand_dedup)
+        ov_pairs = fut_ov.result() if fut_ov is not None else None
 
     def _verify():
-        # exact pairs are definitionally jaccard 1.0 — skip their verify join;
-        # overlap pairs already passed an exact-substring check but still go
-        # through Jaccard so dup_pairs carries a uniform score (they may fall
-        # below threshold and be kept ONLY as overlap evidence -> keep them).
-        is_exact = F.array_contains("sources", "exact")
-        non_exact = cand_dedup.filter(~is_exact)
+        # exact pairs are definitionally jaccard 1.0 and skip the verify
+        # join; overlap pairs already passed an exact-substring check but
+        # still go through Jaccard so dup_pairs carries a uniform score
+        # (merge_evidence keeps those below threshold as overlap evidence).
+        # Candidates are deduplicated BEFORE the expensive verify (the one
+        # barrier worth paying; reference dedups candidates the same way,
+        # src/e2lsh.py:292-307).
+        cands = mh_pairs.select("id_a", "id_b").unionByName(
+            sh_pairs.select("id_a", "id_b"))
+        if ov_pairs is not None:
+            cands = cands.unionByName(ov_pairs.select("id_a", "id_b"))
         shingle_provider = None
         if not cfg.store_shingles:
             from .functions.signature_udf import make_shingles_udf
@@ -442,37 +425,15 @@ def run_dedup(
                 docs.join(ids, "doc_id", "left_semi")
                 .select("doc_id", sh_udf("doc_text").alias("shingles"))
             )
-        # persisted: consumed by both the union and the overlap anti-join
         verified = verify_pairs_exact_jaccard(
-            non_exact.select("id_a", "id_b"),
-            sig_reps,
+            cands.distinct(),
+            signatures,
             threshold=cfg.jaccard_threshold,
             shingle_provider=shingle_provider,
-        ).persist()
-        persists.append(verified)
-        exact = (
-            cand_dedup.filter(is_exact)
-            .select("id_a", "id_b")
-            .withColumn("jaccard", F.lit(1.0))
         )
-        overlap_kept = (
-            cand_dedup.filter(F.array_contains("sources", "overlap") & ~is_exact)
-            .select("id_a", "id_b")
-            .join(verified.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
-            .withColumn("jaccard", F.lit(-1.0))  # overlap-evidence-only marker
-        )
-        return verified.unionByName(exact).unionByName(overlap_kept) \
-            .groupBy("id_a", "id_b").agg(F.max("jaccard").alias("jaccard"))
+        return merge_evidence(verified, star_edges, ov_pairs)
 
     dup_pairs = stage("dup_pairs", _verify)
-    # dup_pairs is materialized: every persisted intermediate is now dead
-    # weight in the block manager — release eagerly (repeat runs in one
-    # session otherwise accumulate GBs and trigger this VM's balloon refaults)
-    for df in persists:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
 
     # overlap-evidence-only pairs (jaccard = -1) are excluded from clustering
     # unless cluster_on_overlap is set (see config.py rationale)

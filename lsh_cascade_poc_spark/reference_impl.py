@@ -231,7 +231,7 @@ def run_reference(turn_rows: list[tuple], cfg: DedupConfig | None = None,
 
     # exact-duplicate collapse: one representative (min conv_id) per distinct
     # text; all LSH passes run over representatives only (mirrors
-    # operators/pairs.py collapse_exact_duplicates)
+    # operators/pairs.py split_exact_duplicates)
     exact_pairs: set[tuple[str, str]] = set()
     by_fp: dict[str, list[str]] = defaultdict(list)
     for c in cids:

@@ -5,13 +5,23 @@ doesn't require it either, but a 10^12-turn corpus is APPENDED to in
 practice, so the engine ships an incremental path:
 
   readStream(turn files) -> foreachBatch:
-      1. assemble the micro-batch's conversations (complete convs per batch —
-         the file-per-conversation-chunk contract; for turns arriving ACROSS
+      1. build the micro-batch's docs (complete convs per batch — the
+         file-per-conversation-chunk contract; for turns arriving ACROSS
          micro-batches use streaming_state.assemble_conversations_stream,
-         the applyInPandasWithState + event-time-timeout assembler)
-      2. compute signatures with the SAME kernels as the batch pipeline
+         the applyInPandasWithState + event-time-timeout assembler) and
+         check doc_id collisions against every indexed doc
+      2. collapse exact duplicates (within the batch and against fp_index),
+         then compute signatures for fresh representatives
       3. match new docs against the EXISTING banded index (join, not self-join)
       4. append new signatures + discovered dup pairs to the index tables
+
+The cascade steps are the batch pipeline's own functions: build_docs,
+check_doc_id_collisions, split_exact_duplicates, build_signatures,
+coarse_bands, the hot-bucket rule (operators/bands.py bucket_sizes),
+overlap_docs_gate and merge_evidence. What differs is the candidate
+generation: streaming probes the coarse tier 0 only, with no tight tier and
+no SimHash pass, so it can keep a pair batch's coarse-AND-tight rule would
+reject and miss a SimHash-only pair (tests/test_streaming.py pins this).
 
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
@@ -27,9 +37,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .operators.assemble import assemble_conversations, with_doc_id
-from .operators.bands import explode_bands
-from .pipeline import build_signatures
+from .operators.bands import bucket_sizes
+from .operators.pairs import split_exact_duplicates
+from .pipeline import (
+    build_docs,
+    build_signatures,
+    check_doc_id_collisions,
+    coarse_bands,
+    merge_evidence,
+    overlap_docs_gate,
+    release_persisted,
+)
 
 TURNS_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -208,13 +226,6 @@ class IncrementalDedup:
             f"{self._path(name)}/batch_id={batch_id}"
         )
 
-    def _bands_of(self, signatures: DataFrame) -> DataFrame:
-        cfg = self.cfg
-        return explode_bands(
-            signatures, "minhash", tier=0,
-            n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
-        )
-
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
         from pyarrow import fs as pafs
@@ -224,21 +235,17 @@ class IncrementalDedup:
         if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
             return  # replayed micro-batch after restart: already applied
 
-        from .functions.text import fingerprint_md5
-        from .operators.pairs import tag_exact_duplicates
-
-        docs = tag_exact_duplicates(
-            with_doc_id(
-                assemble_conversations(
-                    turns_batch, max_turn_chars=cfg.max_turn_chars,
-                    min_doc_chars=cfg.min_doc_chars,
+        docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
+        # the id-collision check covers every doc ever ingested, and runs
+        # before any index write, so a failing batch leaves no done-marker
+        if cfg.check_id_collisions:
+            ids = docs.select("conv_id", "doc_id")
+            if self._exists("docs"):
+                ids = ids.unionByName(
+                    self._read_table("docs", exclude_batch=batch_id)
+                    .select("conv_id", "doc_id")
                 )
-            ).withColumn(
-                # max_chars=0: full-content exact key, same as the batch
-                # path (see functions/text.py fingerprint_md5)
-                "fingerprint", fingerprint_md5(F.col("doc_text"), max_chars=0)
-            )
-        ).localCheckpoint(eager=True)
+            check_doc_id_collisions(ids)
 
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
@@ -249,10 +256,7 @@ class IncrementalDedup:
         # their min-id rep; reps whose fingerprint is already indexed
         # (fp_index: one row per distinct fingerprint ever seen) attach to
         # the indexed root by an equi-join and are not signed or banded.
-        reps_docs = docs.filter(F.col("doc_id") == F.col("_root"))
-        exact_pairs = docs.filter(F.col("doc_id") != F.col("_root")).select(
-            F.col("_root").alias("id_a"), F.col("doc_id").alias("id_b")
-        ).withColumn("jaccard", F.lit(1.0))
+        reps_docs, exact_pairs = split_exact_duplicates(docs)
         if self._exists("fp_index"):
             idx_fp = self._read_table("fp_index", exclude_batch=batch_id)
             matched = reps_docs.join(
@@ -268,16 +272,15 @@ class IncrementalDedup:
                 # band-probe join below, else a degenerate self-pair lands in
                 # dup_pairs
                 .filter(F.col("id_a") != F.col("id_b"))
-                .withColumn("jaccard", F.lit(1.0))
             )
+            exact_pairs = exact_pairs.unionByName(exact_old)
             fresh_reps_docs = reps_docs.join(
                 matched.select("doc_id"), "doc_id", "left_anti"
             )
         else:
-            exact_old = None
             fresh_reps_docs = reps_docs
         sigs = build_signatures(fresh_reps_docs, cfg).localCheckpoint(eager=True)
-        new_bands = self._bands_of(sigs)
+        new_bands = coarse_bands(sigs, cfg)
 
         # a missing index is just an EMPTY index: one code path for the first
         # and every later batch, so a cap-semantics fix can never silently
@@ -291,18 +294,14 @@ class IncrementalDedup:
         # hot-band cap over the COMBINED (index ∪ new) band table: a
         # bucket that grew hot across batches is excluded from probing on
         # BOTH sides and from the index append, and the drop is recorded
-        # (same cap rule as the batch path, operators/bands.py:82) — the
+        # (the batch path's rule, operators/bands.py bucket_sizes) — the
         # probe join already scans the full index, so the count pre-pass
         # adds no asymptotic cost
         combined = idx_bands.select("tier", "band_id", "band_key").unionAll(
             new_bands.select("tier", "band_id", "band_key")
         )
-        hot = (
-            combined.groupBy("tier", "band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > cfg.hot_band_cap)
-            .localCheckpoint(eager=True)
-        )
+        _sizes, hot = bucket_sizes(combined, cfg.hot_band_cap)
+        hot = hot.localCheckpoint(eager=True)
         hot_keys = hot.select("tier", "band_id", "band_key")
         kept_new = new_bands.join(
             hot_keys, ["tier", "band_id", "band_key"], "left_anti"
@@ -340,7 +339,7 @@ class IncrementalDedup:
         # gates as the batch operator; pairs verify by exact extension over
         # the texts table. ov_pairs candidates join the Jaccard verify
         # below; substring-proven pairs that fail Jaccard keep the batch
-        # path's jaccard = -1 evidence marker.
+        # path's jaccard = -1 evidence marker (merge_evidence).
         ov_pairs = None
         if self.enable_overlap:
             from .operators.suffix import (
@@ -349,11 +348,7 @@ class IncrementalDedup:
                 winnow_fingerprints,
             )
 
-            # exact prefilter (batch parity, pipeline.overlap_pairs): docs
-            # shorter than min_overlap_chars bytes can never verify
-            long_reps = fresh_reps_docs.filter(
-                F.octet_length(F.col("doc_text")) >= cfg.min_overlap_chars
-            )
+            long_reps = overlap_docs_gate(fresh_reps_docs, cfg)
             new_fps = winnow_fingerprints(
                 long_reps, cfg.winnow_kgram_chars, cfg.winnow_window
             ).localCheckpoint(eager=True)
@@ -383,38 +378,23 @@ class IncrementalDedup:
                 .localCheckpoint(eager=True)
             )
             # the gate set persisted inside the candidate probe is consumed
-            # by the materialization above — release it NOW, or a long
-            # stream accumulates one small persisted DF per micro-batch
-            for df in ov_persists:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+            # by the materialization above
+            release_persisted(ov_persists)
             cands = cands.unionByName(ov_pairs).distinct()
 
         all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
 
         from .operators.verify import verify_pairs_exact_jaccard
 
-        dup = verify_pairs_exact_jaccard(
+        verified = verify_pairs_exact_jaccard(
             cands, all_sigs, threshold=cfg.jaccard_threshold
         )
-        dup = dup.unionByName(exact_pairs.select("id_a", "id_b", "jaccard"))
-        if exact_old is not None:
-            dup = dup.unionByName(exact_old)
-        if ov_pairs is not None:
-            # overlap-evidence-only rows: substring-proven, below the
-            # Jaccard threshold (pipeline.py overlap_kept analog)
-            ov_only = ov_pairs.join(
-                dup.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-            ).withColumn("jaccard", F.lit(-1.0))
-            dup = dup.unionByName(ov_only)
-        dup = dup.groupBy("id_a", "id_b").agg(F.max("jaccard").alias("jaccard"))
         # materialize BEFORE touching the index dirs: dup's lazy plan reads
         # the existing bands/signatures batches, and a replay OVERWRITES this
         # batch's own subdirectories below — writing dup lazily after that
         # would read deleted files
-        dup = dup.localCheckpoint(eager=True)
+        dup = merge_evidence(verified, exact_pairs, ov_pairs) \
+            .localCheckpoint(eager=True)
 
         # batch-scoped subdirectories + overwrite: a crash between the writes
         # is healed by the replay overwriting the SAME directories, so the

@@ -5,13 +5,15 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from lsh_cascade_poc_spark.operators.bands import cap_hot_bands, explode_bands
+from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
 from lsh_cascade_poc_spark.operators.pairs import (
-    collapse_exact_duplicates,
     pairs_from_bands,
     pairs_with_min_match,
+    split_exact_duplicates,
     survivors,
+    tag_exact_duplicates,
 )
+from lsh_cascade_poc_spark.pipeline import merge_evidence
 
 
 def _sig_df(spark, sigs: dict[int, list[int]]):
@@ -66,11 +68,11 @@ def test_hot_band_cap_drops_and_records(spark):
     sig = [1, 2, 3, 4]
     df = _sig_df(spark, {i: sig for i in range(10)})
     bands = explode_bands(df, "minhash", tier=0, n_bands=1, rows_per_band=4)
-    kept, hot = cap_hot_bands(bands, cap=5)
+    kept, hot = pairable_bands(bands, cap=5)
     assert kept.count() == 0
     hrows = hot.collect()
     assert len(hrows) == 1 and hrows[0].n_docs == 10
-    kept2, hot2 = cap_hot_bands(bands, cap=100)
+    kept2, hot2 = pairable_bands(bands, cap=100)
     assert kept2.count() == 10 and hot2.count() == 0
 
 
@@ -83,8 +85,21 @@ def test_survivors_and_exact_pairs(spark):
         [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, "z")],
         "doc_id long, fingerprint string",
     )
-    reps, star = collapse_exact_duplicates(docs)
+    reps, star = split_exact_duplicates(tag_exact_duplicates(docs))
     ep = sorted((r.id_a, r.id_b) for r in star.collect())
     # star topology: every member pairs with the group min
     assert ep == [(1, 2), (1, 3)]
     assert sorted(r.doc_id for r in reps.collect()) == [1, 4, 5]
+
+    # evidence merge: each pair keeps its best score — verified + overlap
+    # -> the verified jaccard, exact + overlap -> 1.0, overlap only -> -1.0
+    verified = spark.createDataFrame(
+        [(4, 5, 0.9)], "id_a long, id_b long, jaccard double"
+    )
+    overlap = spark.createDataFrame(
+        [(1, 3), (4, 5), (6, 7)], "id_a long, id_b long"
+    )
+    merged = merge_evidence(verified, star, overlap)
+    assert sorted(tuple(r) for r in merged.collect()) == [
+        (1, 2, 1.0), (1, 3, 1.0), (4, 5, 0.9), (6, 7, -1.0),
+    ]

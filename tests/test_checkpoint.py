@@ -86,17 +86,19 @@ def test_pipeline_resume(spark, tiny_turns, tmp_path):
     assert by_stage["signatures"] == n_reps
     assert by_stage["signatures"] <= by_stage["docs"]
 
-def test_band_index_stats_and_stage_size(spark, store):
-    """A6: band-index statistics + on-disk stage footprint."""
-    from lsh_cascade_poc_spark.operators.bands import band_index_stats
+def test_bucket_sizes_and_stage_size(spark, store):
+    """A6: per-bucket band-index sizes + on-disk stage footprint."""
+    from lsh_cascade_poc_spark.operators.bands import bucket_sizes
 
     bands = spark.createDataFrame(
         [(0, 0, 10, 1), (0, 0, 10, 2), (0, 0, 10, 3), (0, 1, 99, 1)],
         "tier int, band_id int, band_key long, doc_id long",
     )
-    s = band_index_stats(bands).collect()[0]
-    assert s.n_rows == 4 and s.n_buckets == 2
-    assert s.max_bucket == 3 and abs(s.mean_bucket - 2.0) < 1e-9
+    sizes, hot = bucket_sizes(bands, cap=2)
+    assert sorted(tuple(r) for r in sizes.collect()) == [
+        (0, 0, 10, 3), (0, 1, 99, 1),
+    ]
+    assert [tuple(r) for r in hot.collect()] == [(0, 0, 10, 3)]
 
     store.materialize("sized", lambda: spark.range(1000))
     assert store.stage_size_bytes("sized") > 0

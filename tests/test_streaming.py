@@ -416,3 +416,95 @@ def test_streaming_overlap_flanked_by_boilerplate(spark, tmp_path):
     want = tuple(sorted((id_map["convA"], id_map["convB"])))
     assert want in pairs, f"flanked cross-batch overlap missing, got {pairs}"
     assert pairs[want] == -1.0
+
+
+def test_doc_id_collision_fails_in_batch_and_stream(spark, tmp_path, monkeypatch):
+    """Two conv_ids forced onto one doc_id must fail loudly in batch and in
+    streaming. Streaming checks the batch against every indexed doc, before
+    any index write, so the failing batch leaves no done-marker."""
+    from lsh_cascade_poc_spark import pipeline
+
+    def colliding(docs):  # conv "b" takes conv "a"'s doc_id
+        return docs.withColumn("doc_id", F.xxhash64(
+            F.when(F.col("conv_id") == "b", F.lit("a"))
+            .otherwise(F.col("conv_id"))
+        ))
+
+    monkeypatch.setattr(pipeline, "with_doc_id", colliding)
+    texts = {c: f"conversation {c} says something entirely its own" for c in "abc"}
+    turns = lambda convs: spark.createDataFrame(  # noqa: E731
+        _mk_turns([(c, texts[c]) for c in convs]), TURNS_DDL
+    )
+
+    with pytest.raises(RuntimeError, match="doc_id collisions"):
+        pipeline.run_dedup(spark, turns("abc"), cfg=CFG)
+
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), CFG)
+    inc.process_batch(turns("ac"), 0)
+    with pytest.raises(RuntimeError, match="doc_id collisions"):
+        inc.process_batch(turns("b"), 1)
+    assert not (index / "_batch_1_done").exists()
+    assert not (index / "docs" / "batch_id=1").exists()
+
+
+def _partition(conv_of: dict, edges) -> set[frozenset]:
+    """Connected components of `edges` over every doc, as conv_id sets."""
+    parent = {d: d for d in conv_of}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    groups: dict = {}
+    for d, c in conv_of.items():
+        groups.setdefault(find(d), set()).add(c)
+    return {frozenset(g) for g in groups.values()}
+
+
+def test_batch_stream_parity(spark, tmp_path):
+    """Where the two cascades coincide — tight tier bypassed, SimHash pass
+    emitting nothing, no hot bucket — batch run_dedup and streaming in 2 or
+    3 micro-batches cluster the corpus identically. Exact-group
+    representatives may differ between the paths, so partitions of conv_ids
+    are compared, not raw pairs."""
+    from lsh_cascade_poc_spark.pipeline import run_dedup
+
+    cfg = DedupConfig(
+        n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
+        tight_min_match=0, simhash_hamming_tau=-1,
+        hot_band_cap=10**6, overlap_hot_cap=10**6,
+    )
+    turns = generate_corpus(n_base=30, dup_fraction=0.5, seed=11).turns
+    res = run_dedup(spark, spark.createDataFrame(turns, TURNS_DDL), cfg=cfg)
+    conv_of = {r.doc_id: r.conv_id
+               for r in res.docs.select("doc_id", "conv_id").collect()}
+    batch = _partition(conv_of, [
+        (r.doc_id, r.cluster_id) for r in res.clusters.collect()
+    ])
+    assert any(len(g) > 1 for g in batch)
+
+    convs = sorted(turns.conv_id.unique())
+    for k in (2, 3):
+        inc = IncrementalDedup(spark, str(tmp_path / f"index{k}"), cfg)
+        for i in range(k):
+            part = turns[turns.conv_id.isin(convs[i::k])]
+            inc.process_batch(spark.createDataFrame(part, TURNS_DDL), i)
+        stream_conv_of = {r.doc_id: r.conv_id for r in
+                          inc.docs().select("doc_id", "conv_id").collect()}
+        assert stream_conv_of == conv_of
+        edges = [(r.id_a, r.id_b) for r in
+                 inc.dup_pairs().filter(F.col("jaccard") >= 0).collect()]
+        assert _partition(conv_of, edges) == batch, f"{k} micro-batches"
+
+    # the documented difference under the default config: the streaming
+    # index holds (and probes) the coarse tier 0 only
+    inc = IncrementalDedup(spark, str(tmp_path / "index_default"))
+    inc.process_batch(spark.createDataFrame(turns, TURNS_DDL), 0)
+    tiers = {r.tier for r in inc._read_table("bands").select("tier")
+             .distinct().collect()}
+    assert tiers == {0}

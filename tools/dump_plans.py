@@ -37,7 +37,7 @@ def main() -> None:
         assemble_conversations,
         with_doc_id,
     )
-    from lsh_cascade_poc_spark.operators.bands import cap_hot_bands, explode_bands
+    from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
     from lsh_cascade_poc_spark.operators.components import _large_star, _canonical
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
     from lsh_cascade_poc_spark.pipeline import build_signatures
@@ -88,15 +88,16 @@ def main() -> None:
     sigs_ck = sigs.localCheckpoint(eager=True)
     bands = explode_bands(sigs_ck, "minhash", tier=0, n_bands=4,
                           rows_per_band=4)
-    kept, _hot = cap_hot_bands(bands, cap=100)
+    kept, _hot = pairable_bands(bands, cap=100)
     sections.append((
         "Band self-join: equi-join on (tier, band_id, band_key)",
         "The cascade's dominant shuffle. Band keys are `xxhash64` over "
         "signature slices — computed in whole-stage codegen, no Python. "
         "The self-join is an EQUI-join (test_plans.py pins 'never "
         "nested-loop'; broadcast at this toy scale, shuffle join at real "
-        "scale under the 8MB threshold); the hot-band cap's count+anti-join "
-        "guards the quadratic bucket blowup before it, and `id_a < id_b` + "
+        "scale under the 8MB threshold); the pairable-bucket gate (bucket "
+        "sizes 2..cap, broadcast when small) drops singleton and hot "
+        "buckets before it, and `id_a < id_b` + "
         "`distinct` dedups pairs across bands BEFORE the expensive verify. "
         "Both sides read the checkpointed signature stage, mirroring "
         "run_dedup's stage materialization.",
