@@ -77,7 +77,6 @@ class StageStore:
         self,
         stage: str,
         df_factory,
-        partition_cols: list[str] | None = None,
         extra_metrics: dict | None = None,
     ) -> DataFrame:
         """Run `df_factory()` and persist its result unless the stage already
@@ -90,10 +89,7 @@ class StageStore:
             return self.spark.read.parquet(path)
         t0 = time.perf_counter()
         df: DataFrame = df_factory()
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         wall_ms = (time.perf_counter() - t0) * 1000.0
         out = self.spark.read.parquet(path)
         # row count + partition count from parquet FOOTERS (driver-side, no
@@ -102,18 +98,6 @@ class StageStore:
         fs, fspath = self._fs_path(stage)
         rows, n_parts = self._footer_stats(fs, fspath)
         self._append_metrics(stage, rows, n_parts, wall_ms, extra_metrics or {})
-        if partition_cols:
-            # one metric row per partition value (e.g. candidates/source=minhash):
-            # a fused multi-tier stage stays per-tier observable (A5) without
-            # per-tier write jobs — counts come from the same parquet footers
-            from pyarrow import fs as pafs
-
-            for info in fs.get_file_info(pafs.FileSelector(fspath)):
-                sub = info.path.rstrip("/").rsplit("/", 1)[-1]
-                if "=" in sub and not info.is_file:
-                    srows, sparts = self._footer_stats(fs, info.path)
-                    self._append_metrics(f"{stage}/{sub}", srows, sparts,
-                                         wall_ms, extra_metrics or {})
         # atomic-enough commit marker: written only after data + metrics land
         with fs.open_output_stream(f"{fspath}/{_COMMIT_MARKER}") as f:
             f.write(json.dumps({"rows": rows, "wall_ms": wall_ms}).encode())
@@ -152,7 +136,6 @@ class StageStore:
         })
         fs, mdir = self._fs_path("_metrics")
         fs.create_dir(mdir, recursive=True)
-        fname = stage.replace("/", "__")  # per-partition rows: candidates/source=x
         # uuid uniquifier: wall-clock microseconds alone can collide (coarse
         # clocks / concurrent stores sharing a work_dir) and would silently
         # overwrite a sibling metric row
@@ -160,7 +143,7 @@ class StageStore:
 
         pq.write_table(
             table,
-            f"{mdir}/{fname}-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet",
+            f"{mdir}/{stage}-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet",
             filesystem=fs,
         )
 

@@ -96,10 +96,6 @@ class DedupConfig:
     # share multiple fingerprints; requiring >=2 kills the accidental
     # single-fp collisions that dominate the candidate set
     overlap_min_shared_fps: int = 2
-    # overlap pairs are *evidence* by default (reported in dup_pairs with
-    # jaccard = -1) but do NOT merge clusters: shared boilerplate turns would
-    # otherwise chain unrelated conversations into one giant component
-    cluster_on_overlap: bool = False
 
     # Store full shingle arrays in the signatures table (True) or only the
     # slim n_shingles count (False). False is the 100TB-scale setting: the
@@ -111,16 +107,6 @@ class DedupConfig:
     # --- verification + clustering ---
     jaccard_threshold: float = 0.80
     cc_max_iterations: int = 20
-
-    # doc_id = xxhash64(conv_id) can collide (birthday bound ~n^2/2^65: real
-    # at 10^12 docs). One cheap aggregate over the materialized docs (batch)
-    # or the batch's and every indexed doc (streaming) detects it and fails
-    # loudly instead of silently merging conversations.
-    check_id_collisions: bool = True
-
-    # --- execution ---
-    pair_repartition: int = 0        # 0 = leave to AQE; else explicit repartition
-                                     # on band keys before the self-join
 
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True).encode()

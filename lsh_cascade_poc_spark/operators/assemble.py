@@ -76,7 +76,7 @@ def with_doc_id(docs: DataFrame) -> DataFrame:
     break determinism across parallelism levels. Birthday bound: expected
     collisions ~ n^2/2^65 — ~0.03 at 10^9 docs but ~27,000 at 10^12 docs,
     NOT negligible at the north-rule scale. Batch and streaming both detect
-    collisions (pipeline.check_doc_id_collisions, cfg.check_id_collisions)
-    and fail loudly rather than silently merging distinct conversations;
+    collisions (pipeline.check_doc_id_collisions, always on) and fail
+    loudly rather than silently merging distinct conversations;
     conv_id is kept alongside everywhere."""
     return docs.withColumn("doc_id", F.xxhash64("conv_id"))

@@ -15,8 +15,9 @@ after the signature UDF.
 Hot-band capping: a band key shared by m docs yields m(m-1)/2 pairs; one
 boilerplate bucket with 10^6 docs is 5*10^11 pairs. AQE splits skewed
 partitions but cannot fix a single quadratic key (SURVEY.md §4 item 2), so
-buckets above `hot_band_cap` are dropped and *recorded* (count + sample) in
-the stage metrics; recall for such boilerplate is recovered by the exact
+buckets above `hot_band_cap` are dropped and *recorded*: the
+`hot_band_drops` stage stores every dropped bucket's (tier, band_id,
+band_key, n_docs); recall for such boilerplate is recovered by the exact
 fingerprint (md5) pass which groups identical docs without pair explosion.
 """
 
@@ -26,15 +27,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def band_keys_column(sig_col: str, tier: int, n_bands: int, rows_per_band: int,
-                     lane_offset: int = 0) -> F.Column:
-    """array<long> of n_bands keys; band b = xxhash64(tier, b, lanes[b*r : b*r+r]).
-    `lane_offset` lets tiers use disjoint signature regions."""
+def band_keys_column(sig_col: str, tier: int, n_bands: int,
+                     rows_per_band: int) -> F.Column:
+    """array<long> of n_bands keys; band b = xxhash64(tier, b, lanes[b*r : b*r+r])."""
     keys = [
         F.xxhash64(
             F.lit(tier),
             F.lit(b),
-            F.slice(F.col(sig_col), lane_offset + b * rows_per_band + 1, rows_per_band),
+            F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
         )
         for b in range(n_bands)
     ]
@@ -48,7 +48,6 @@ def explode_bands(
     n_bands: int,
     rows_per_band: int,
     id_col: str = "doc_id",
-    lane_offset: int = 0,
 ) -> DataFrame:
     """-> (doc_id, tier, band_id, band_key). posexplode keeps the band index,
     mirroring the segment_id column of the reference's segment index."""
@@ -56,7 +55,7 @@ def explode_bands(
         signatures.select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(
-                band_keys_column(sig_col, tier, n_bands, rows_per_band, lane_offset)
+                band_keys_column(sig_col, tier, n_bands, rows_per_band)
             ).alias("band_id", "band_key"),
         )
         .withColumn("tier", F.lit(tier))

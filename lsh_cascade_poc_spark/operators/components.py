@@ -101,7 +101,6 @@ def _local_union_find(edge_rows) -> list[tuple[int, int]]:
 def connected_components(
     pairs: DataFrame,
     max_iterations: int = 20,
-    checkpoint_each_round: bool = True,
     local_finish_edges: int = 250_000,
 ) -> DataFrame:
     """pairs(id_a, id_b) -> clusters(doc_id, cluster_id) where cluster_id is
@@ -122,7 +121,8 @@ def connected_components(
     graph has billions of edges, so early rounds run distributed and the
     local finish fires only once contraction has actually shrunk the
     frontier. Set local_finish_edges=0 to force the fully-distributed
-    fixpoint."""
+    fixpoint. Raises RuntimeError when the star rounds have not converged
+    after `max_iterations`: a non-fixpoint edge set is not a clustering."""
     def _signature(df: DataFrame) -> tuple[int, int]:
         """(edge count, order-independent checksum) — one cheap job per round
         instead of two exceptAll scans; a checksum collision would only cost
@@ -135,13 +135,11 @@ def connected_components(
         ).collect()[0]
         return int(row.n), int(row.chk)
 
-    edges = _canonical(pairs)
-    if checkpoint_each_round:
-        # lazy: the _signature collect right below materializes the
-        # checkpoint — eager=True would run a SEPARATE job first, doubling
-        # the per-round driver round-trips (each is ~0.3-0.5s of serial
-        # scheduling; the CC stage's wall is almost entirely these)
-        edges = edges.localCheckpoint(eager=False)
+    # lazy: the _signature collect right below materializes the
+    # checkpoint — eager=True would run a SEPARATE job first, doubling the
+    # per-round driver round-trips (each is ~0.3-0.5s of serial
+    # scheduling; the CC stage's wall is almost entirely these)
+    edges = _canonical(pairs).localCheckpoint(eager=False)
     sig = _signature(edges)
 
     def _finish_local(e: DataFrame) -> DataFrame:
@@ -176,15 +174,18 @@ def connected_components(
         after = edges
         for _r in range(2):
             after = _small_star(_large_star(after))
-        if checkpoint_each_round:
-            after = after.localCheckpoint(eager=False)
-        new_sig = _signature(after)
-        edges = after
+        edges = after.localCheckpoint(eager=False)
+        new_sig = _signature(edges)
         if 0 < new_sig[0] <= local_finish_edges:
             return _finish_local(edges)
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {max_iterations} "
+            f"star rounds ({new_sig[0]} edges left); raise cc_max_iterations"
+        )
 
     # at fixpoint every edge is (node -> component min)
     members = edges.select(

@@ -1,4 +1,4 @@
-"""Candidate-pair generation: the cascade's Stage 1, as band self-joins.
+"""Candidate-pair generation: the cascade's Stage 1, as shared-key joins.
 
 Reference analog: the per-query coarse filter `WHERE list_has_any(lsh_chunks,
 query_chunks)` (/root/reference/src/db.py:148-169) asks "which docs share a
@@ -6,6 +6,12 @@ band with THIS query". The all-pairs formulation asks it for every doc at
 once: self-join the exploded band table on (tier, band_id, band_key) with
 id_a < id_b. The reference's min-match counting knob (DF-LSH band_filter,
 /root/reference/src/dflsh.py:187-197,373-383) becomes groupBy(pair).count >= m.
+
+Every candidate tier emits its pairs through ONE join, `shared_key_pairs`:
+the MinHash band tiers and the SimHash chunks (pipeline.py), the winnow
+fingerprints (operators/suffix.py overlap_candidates), and streaming's
+probes of its persistent index (streaming.py), which pass the indexed rows
+as `index`; a batch run passes none.
 
 Cascade semantics (mirrors the 3-stage search, src/pipeline.py:68-119):
   tier 0 (coarse bands, few rows/band, high recall) generates pairs over the
@@ -22,45 +28,75 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pairs_from_bands(bands: DataFrame, repartition: int = 0) -> DataFrame:
-    """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
-    id_a < id_b. The self-join shuffles both sides on the band key — this is
-    the pipeline's dominant shuffle; `repartition` pins the partition count
-    when AQE's estimate is off at very large scale."""
-    b = bands
-    if repartition:
-        b = b.repartition(repartition, "band_key")
-    left = b.select(
-        F.col("tier"), F.col("band_id"), F.col("band_key"),
-        F.col("doc_id").alias("id_a"),
-    )
-    right = b.select(
-        F.col("tier"), F.col("band_id"), F.col("band_key"),
-        F.col("doc_id").alias("id_b"),
-    )
-    return (
-        left.join(right, ["tier", "band_id", "band_key"])
+BAND_KEY = ["tier", "band_id", "band_key"]
+
+
+def shared_key_pairs(new: DataFrame, index: DataFrame | None,
+                     keys: list[str], cols=()) -> DataFrame:
+    """The cascade's one candidate join: docs sharing a key become a pair.
+
+    (doc_id, *keys, *cols) rows of `new` and `index` -> one row per shared
+    key occurrence (keys..., id_a, id_b, {c}_a, {c}_b) with id_a < id_b and
+    each payload column following its id; NOT deduplicated. Pairs with at
+    least one `new` row are emitted: new x new plus new x index, never
+    index x index (an earlier micro-batch already emitted those). A batch
+    run is a first micro-batch against an empty index (`index=None`):
+    Catalyst prunes the empty new x index branch, so the batch plan is the
+    plain self-join."""
+    if index is None:
+        index = new.limit(0)
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(*keys, F.col("doc_id").alias(f"id_{tag}"),
+                         *[F.col(c).alias(f"{c}_{tag}") for c in cols])
+
+    out = [*keys, "id_a", "id_b",
+           *[f"{c}_a" for c in cols], *[f"{c}_b" for c in cols]]
+    within = (
+        side(new, "a").join(side(new, "b"), keys)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        .select(*out)
     )
+    # a doc re-delivered next to its indexed copy never pairs with itself
+    cross = side(new, "n").join(side(index, "o"), keys).filter(
+        F.col("id_n") != F.col("id_o")
+    )
+    new_first = F.col("id_n") < F.col("id_o")
+    cross = cross.select(
+        *keys,
+        F.least("id_n", "id_o").alias("id_a"),
+        F.greatest("id_n", "id_o").alias("id_b"),
+        *[F.when(new_first, F.col(f"{c}_{x}")).otherwise(F.col(f"{c}_{y}"))
+          .alias(f"{c}_{t}")
+          for t, x, y in (("a", "n", "o"), ("b", "o", "n")) for c in cols],
+    )
+    return within.unionByName(cross)
+
+
+def pairs_from_bands(bands: DataFrame,
+                     index: DataFrame | None = None) -> DataFrame:
+    """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
+    id_a < id_b: the tier-0 band pass of batch, and streaming's probe of
+    the new batch's bands against the indexed ones. The join shuffles both
+    sides on the band key — the pipeline's dominant shuffle."""
+    return shared_key_pairs(bands, index, BAND_KEY).select(
+        "id_a", "id_b"
+    ).distinct()
 
 
 def pairs_with_min_match(bands: DataFrame, min_match: int) -> DataFrame:
     """Min-match band counting (src/dflsh.py:187-197): keep a pair only if it
-    collides in >= min_match bands. min_match <= 1 degenerates to the plain
-    OR-semantics band join (no counting aggregate needed)."""
+    collides in >= min_match bands -> (id_a, id_b, n_bands). min_match <= 1
+    degenerates to the plain OR-semantics band join (id_a, id_b), with no
+    counting aggregate."""
     if min_match <= 1:
-        return pairs_from_bands(bands).withColumn("n_bands", F.lit(None).cast("long"))
-    left = bands.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_a"))
-    right = bands.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_b"))
-    matched = (
-        left.join(right, ["tier", "band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        return pairs_from_bands(bands)
+    return (
+        shared_key_pairs(bands, None, BAND_KEY)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
+        .filter(F.col("n_bands") >= min_match)
     )
-    return matched.filter(F.col("n_bands") >= min_match).select("id_a", "id_b", "n_bands")
 
 
 def survivors(pairs: DataFrame) -> DataFrame:

@@ -11,9 +11,9 @@ Design (public algorithms only):
      w-hash window (rightmost minimum). GUARANTEE: any shared substring of
      length >= w + k - 1 chars produces at least one shared fingerprint.
      Computed in a vectorized pandas_udf (numpy sliding-window minimum).
-  2. Fingerprints are exploded to (fp, doc_id, pos) and self-joined on fp —
-     the same banded-join shape as MinHash LSH, so the same hot-key capping
-     applies (boilerplate license headers etc.).
+  2. Fingerprints are exploded to (fp, doc_id, pos) and joined on fp by
+     the same shared_key_pairs operator as the MinHash bands, so the same
+     hot-key capping applies (boilerplate license headers etc.).
   3. Candidate pairs are verified per-bucket with groupBy().applyInPandas:
      seed positions are extended greedily left/right over the two texts to
      measure the true maximal common substring around the seed; pairs whose
@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .pairs import shared_key_pairs
 
 # two parallel arrays (not array<struct>): lets the kernel emit numpy arrays
 # straight through Arrow with no per-row Python dict materialization
@@ -345,8 +347,8 @@ _GATE_BROADCAST_MAX_FPS = 8_000_000
 
 def _shared_fp_gate(fps: DataFrame, hot_cap: int,
                     persist_registry: list | None = None) -> DataFrame:
-    """fps filtered to fingerprints SHARED by 2..hot_cap docs. The lower
-    bound is the big win: winnowing over distinct text makes most
+    """The fingerprints SHARED by 2..hot_cap docs of `fps`, as a join gate.
+    The lower bound is the big win: winnowing over distinct text makes most
     fingerprints singletons (measured at the 2.4M-turn bench corpus: 9.36M
     distinct fps, only 1.47M shared — 65% of the 12.28M exploded rows were
     singleton fps that can never form a pair yet flowed through the
@@ -363,25 +365,28 @@ def _shared_fp_gate(fps: DataFrame, hot_cap: int,
     ).select("fp").persist()
     if persist_registry is not None:
         persist_registry.append(shared)
-    gate = (
+    return (
         F.broadcast(shared)
         if shared.count() <= _GATE_BROADCAST_MAX_FPS else shared
     )
-    return fps.join(gate, "fp")
 
 
 def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
                        min_shared_fps: int = 1,
-                       persist_registry: list | None = None) -> DataFrame:
-    """Self-join fingerprints -> per-pair seed candidates (three seeds per
-    pair, see _pair_seed_agg) bounding the verify stage.
+                       persist_registry: list | None = None,
+                       index: DataFrame | None = None) -> DataFrame:
+    """Fingerprint pairs -> per-pair seed candidates (three seeds per pair,
+    see _pair_seed_agg) bounding the verify stage. `fps` (doc_id, fp, pos)
+    pairs with itself and with the persistent `index` fingerprints of a
+    streaming run (shared_key_pairs: new x new plus new x index); a batch
+    run has no index.
 
-    Skew control: fingerprints shared by more than `hot_cap` docs are
-    boilerplate (short repeated turns), not long-overlap evidence — dropped
-    before the self-join (quadratic in bucket size); see _shared_fp_gate.
-    `min_shared_fps` exploits the winnowing density (one fingerprint per
-    ~w/2 chars): a true long overlap shares many fingerprints, an
-    accidental collision one.
+    Skew control: fingerprints shared by more than `hot_cap` docs of
+    index ∪ fps are boilerplate (short repeated turns), not long-overlap
+    evidence — dropped on both sides before the join (quadratic in bucket
+    size); see _shared_fp_gate. `min_shared_fps` exploits the winnowing
+    density (one fingerprint per ~w/2 chars): a true long overlap shares
+    many fingerprints, an accidental collision one.
 
     Shape note (measured on the 24.5M-fp bench corpus, local[4]): this
     countDistinct + codegen self-join formulation beat both a
@@ -390,21 +395,24 @@ def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
     collect_list-per-fp + higher-order-function pair-explosion variant
     (5x slower: interpreted lambda expressions + object aggregation lose
     badly to whole-stage-codegen joins). Don't "simplify" it back."""
-    cold = _shared_fp_gate(fps, hot_cap, persist_registry)
-    a = cold.select("fp", F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a"))
-    b = cold.select("fp", F.col("doc_id").alias("id_b"), F.col("pos").alias("pos_b"))
-    out = _pair_seed_agg(
-        a.join(b, "fp").filter(F.col("id_a") < F.col("id_b"))
+    if index is None:
+        index = fps.limit(0)
+    gate = _shared_fp_gate(
+        fps.select("doc_id", "fp").unionByName(index.select("doc_id", "fp")),
+        hot_cap, persist_registry,
     )
+    out = _pair_seed_agg(shared_key_pairs(
+        fps.join(gate, "fp"), index.join(gate, "fp"), ["fp"], ["pos"]
+    ))
     if min_shared_fps > 1:
         out = out.filter(F.col("n_shared_fps") >= min_shared_fps)
     return out
 
 
 def _pair_seed_agg(joined: DataFrame) -> DataFrame:
-    """Pair-level seed selection shared by the batch and probe candidate
-    operators: joined(id_a, id_b, pos_a, pos_b) -> one row per pair with
-    THREE verify seeds + the shared-fp count.
+    """Pair-level seed selection over the fingerprint pairs of
+    shared_key_pairs: joined(id_a, id_b, pos_a, pos_b) -> one row per pair
+    with THREE verify seeds + the shared-fp count.
 
       * seed / seed2 — boundary seeds (min / max position struct): cheap,
         and one of them lands inside the true overlap whenever no accidental
@@ -455,50 +463,6 @@ def _pair_seed_agg(joined: DataFrame) -> DataFrame:
             "n_shared_fps",
         )
     )
-
-
-def overlap_candidates_probe(
-    idx_fps: DataFrame,
-    new_fps: DataFrame,
-    hot_cap: int = 200,
-    min_shared_fps: int = 1,
-    persist_registry: list | None = None,
-) -> DataFrame:
-    """Incremental variant of `overlap_candidates`: fingerprints of NEW docs
-    probe the union of (persistent index ∪ new) fingerprints, emitting only
-    pairs with at least one new side — the streaming "probe the inverted
-    index" shape (new x indexed plus new x new, never indexed x indexed,
-    whose pairs earlier batches already emitted). Same shared-fp gate
-    (2..hot_cap distinct docs — singletons can never pair, hotter keys are
-    boilerplate) and the same three-seed/min-shared aggregation
-    (_pair_seed_agg) as the batch operator, so batch and streaming
-    candidates agree on a shared corpus.
-    The new-side flag rides the exploded rows from union time — no extra
-    join to mark sides."""
-    comb = idx_fps.select("doc_id", "fp", "pos").withColumn(
-        "is_new", F.lit(False)
-    ).unionByName(
-        new_fps.select("doc_id", "fp", "pos").withColumn("is_new", F.lit(True))
-    )
-    # same size-gated broadcast semi-join as the batch operator (the gate
-    # CONTENT is identical either way; only the join strategy adapts)
-    kept = _shared_fp_gate(comb, hot_cap, persist_registry)
-    a = kept.select(
-        "fp", F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a"),
-        F.col("is_new").alias("new_a"),
-    )
-    b = kept.select(
-        "fp", F.col("doc_id").alias("id_b"), F.col("pos").alias("pos_b"),
-        F.col("is_new").alias("new_b"),
-    )
-    out = _pair_seed_agg(
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("new_a") | F.col("new_b"))
-    )
-    if min_shared_fps > 1:
-        out = out.filter(F.col("n_shared_fps") >= min_shared_fps)
-    return out
 
 
 def _extend_match(ba: bytes, bb: bytes, pa: int, pb: int, k: int) -> int:

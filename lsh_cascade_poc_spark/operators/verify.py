@@ -11,8 +11,7 @@ Both sides of each pair need their shingle arrays: two joins against the
 signature table. The pair table is orders of magnitude smaller than the
 corpus after banding (the reference measures ~6x Stage-1 reduction,
 CASCADE_SEARCH_DESIGN.md:185-199; banding at our thresholds reduces far
-more), so these are fine-grained shuffle joins on doc_id; the signature
-table is pre-partitioned on doc_id by the pipeline to make them co-located.
+more), so these are fine-grained shuffle joins on doc_id.
 """
 
 from __future__ import annotations

@@ -39,8 +39,10 @@ from .operators.assemble import assemble_conversations, with_doc_id
 from .operators.bands import explode_bands, pairable_bands
 from .operators.components import clusters_with_singletons, connected_components
 from .operators.pairs import (
+    BAND_KEY,
     pairs_from_bands,
     pairs_with_min_match,
+    shared_key_pairs,
     split_exact_duplicates,
     survivors,
     tag_exact_duplicates,
@@ -164,7 +166,7 @@ def minhash_candidate_pairs(
                                        persist_registry=persist_registry)
     # persisted: referenced by the survivor gate AND the final AND-join —
     # without it the band self-join recomputes once per consumer
-    coarse_pairs = pairs_from_bands(coarse_kept, cfg.pair_repartition).persist()
+    coarse_pairs = pairs_from_bands(coarse_kept).persist()
     if persist_registry is not None:
         persist_registry.append(coarse_pairs)
 
@@ -213,14 +215,10 @@ def simhash_candidate_pairs(
     ).withColumn("tier", F.lit(2))
     kept, hot = pairable_bands(banded, cfg.hot_band_cap,
                                persist_registry=persist_registry)
-    a = kept.select("tier", "band_id", "band_key",
-                    F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"))
-    b = kept.select("tier", "band_id", "band_key",
-                    F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"))
     pairs = (
-        a.join(b, ["tier", "band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(hamming64(F.col("sim_a"), F.col("sim_b")) <= cfg.simhash_hamming_tau)
+        shared_key_pairs(kept, None, BAND_KEY, ["simhash"])
+        .filter(hamming64(F.col("simhash_a"), F.col("simhash_b"))
+                <= cfg.simhash_hamming_tau)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -319,8 +317,7 @@ def run_dedup(
     # for check-first + two chains (its countDistinct aggregate competes
     # with the two Arrow kernels for cores exactly when they saturate the
     # machine, delaying both chains for no overlap gain)
-    if cfg.check_id_collisions:
-        check_doc_id_collisions(docs)
+    check_doc_id_collisions(docs)
     # exact-duplicate collapse BEFORE any signature computation or banding:
     # representatives and star edges are NARROW filters over the docs
     # checkpoint, the signature kernel runs over reps only, and all LSH
@@ -435,12 +432,10 @@ def run_dedup(
 
     dup_pairs = stage("dup_pairs", _verify)
 
-    # overlap-evidence-only pairs (jaccard = -1) are excluded from clustering
-    # unless cluster_on_overlap is set (see config.py rationale)
-    cluster_edges = (
-        dup_pairs if cfg.cluster_on_overlap
-        else dup_pairs.filter(F.col("jaccard") >= 0)
-    )
+    # overlap-evidence-only pairs (jaccard = -1) are reported but never
+    # merge clusters: shared boilerplate turns would otherwise chain
+    # unrelated conversations into one giant component
+    cluster_edges = dup_pairs.filter(F.col("jaccard") >= 0)
     clusters = stage(
         "clusters",
         lambda: clusters_with_singletons(

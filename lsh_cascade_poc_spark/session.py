@@ -26,14 +26,6 @@ def iceberg_configs(warehouse: str, catalog: str = "local") -> dict[str, str]:
     }
 
 
-def has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def _tune_worker_malloc() -> None:
     """Make Python-worker numpy allocations REUSE memory instead of
     mmap/munmap-ing per batch. glibc mmaps allocations over ~128KB and

@@ -12,16 +12,23 @@ practice, so the engine ships an incremental path:
          check doc_id collisions against every indexed doc
       2. collapse exact duplicates (within the batch and against fp_index),
          then compute signatures for fresh representatives
-      3. match new docs against the EXISTING banded index (join, not self-join)
+      3. match new docs against the EXISTING index and each other:
+         operators/pairs.py shared_key_pairs with the indexed band and
+         fingerprint rows as its `index` side (new x new plus new x
+         indexed, never indexed x indexed)
       4. append new signatures + discovered dup pairs to the index tables
 
 The cascade steps are the batch pipeline's own functions: build_docs,
 check_doc_id_collisions, split_exact_duplicates, build_signatures,
 coarse_bands, the hot-bucket rule (operators/bands.py bucket_sizes),
-overlap_docs_gate and merge_evidence. What differs is the candidate
-generation: streaming probes the coarse tier 0 only, with no tight tier and
-no SimHash pass, so it can keep a pair batch's coarse-AND-tight rule would
-reject and miss a SimHash-only pair (tests/test_streaming.py pins this).
+pairs_from_bands and overlap_candidates (both over shared_key_pairs — batch
+is the same call with an empty index), overlap_docs_gate and
+merge_evidence. What differs is the tier set: streaming probes the coarse
+tier 0 only, with no tight tier and no SimHash pass, so it can keep a pair
+batch's coarse-AND-tight rule would reject and miss a SimHash-only pair
+(tests/test_streaming.py pins this). The hot-bucket cap also differs: it
+counts index ∪ new and keeps singleton buckets, which a future batch's doc
+may still collide with.
 
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
@@ -38,7 +45,13 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .operators.bands import bucket_sizes
-from .operators.pairs import split_exact_duplicates
+from .operators.pairs import pairs_from_bands, split_exact_duplicates
+from .operators.suffix import (
+    overlap_candidates,
+    verify_overlaps,
+    winnow_fingerprints,
+)
+from .operators.verify import verify_pairs_exact_jaccard
 from .pipeline import (
     build_docs,
     build_signatures,
@@ -238,14 +251,13 @@ class IncrementalDedup:
         docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
         # the id-collision check covers every doc ever ingested, and runs
         # before any index write, so a failing batch leaves no done-marker
-        if cfg.check_id_collisions:
-            ids = docs.select("conv_id", "doc_id")
-            if self._exists("docs"):
-                ids = ids.unionByName(
-                    self._read_table("docs", exclude_batch=batch_id)
-                    .select("conv_id", "doc_id")
-                )
-            check_doc_id_collisions(ids)
+        ids = docs.select("conv_id", "doc_id")
+        if self._exists("docs"):
+            ids = ids.unionByName(
+                self._read_table("docs", exclude_batch=batch_id)
+                .select("conv_id", "doc_id")
+            )
+        check_doc_id_collisions(ids)
 
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
@@ -309,45 +321,19 @@ class IncrementalDedup:
         kept_idx = idx_bands.join(
             hot_keys, ["tier", "band_id", "band_key"], "left_anti"
         )
-        # probe: new docs vs existing index (plus new-vs-new self-join)
-        probe = kept_new.select(
-            "tier", "band_id", "band_key", F.col("doc_id").alias("id_new")
-        )
-        hits_old = (
-            probe.join(kept_idx.select(
-                "tier", "band_id", "band_key", F.col("doc_id").alias("id_old")),
-                ["tier", "band_id", "band_key"])
-            .select(
-                F.least("id_new", "id_old").alias("id_a"),
-                F.greatest("id_new", "id_old").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        l = kept_new.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_a"))
-        r = kept_new.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_b"))
-        hits_new = (
-            l.join(r, ["tier", "band_id", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct()
-        )
-        cands = hits_old.unionByName(hits_new).distinct()
+        # probe: new docs vs the existing index plus new vs new
+        cands = pairs_from_bands(kept_new, kept_idx)
 
         # long-overlap stage, incremental (batch analog: pipeline.py
         # overlap_pairs): fresh reps' winnow fingerprints probe the
-        # persistent overlap_fps index under the SAME shared-fp and hot
-        # gates as the batch operator; pairs verify by exact extension over
-        # the texts table. ov_pairs candidates join the Jaccard verify
-        # below; substring-proven pairs that fail Jaccard keep the batch
-        # path's jaccard = -1 evidence marker (merge_evidence).
+        # persistent overlap_fps index through the batch operator itself
+        # (overlap_candidates with an index); pairs verify by exact
+        # extension over the texts table. ov_pairs candidates join the
+        # Jaccard verify below; substring-proven pairs that fail Jaccard
+        # keep the batch path's jaccard = -1 evidence marker
+        # (merge_evidence).
         ov_pairs = None
         if self.enable_overlap:
-            from .operators.suffix import (
-                overlap_candidates_probe,
-                verify_overlaps,
-                winnow_fingerprints,
-            )
-
             long_reps = overlap_docs_gate(fresh_reps_docs, cfg)
             new_fps = winnow_fingerprints(
                 long_reps, cfg.winnow_kgram_chars, cfg.winnow_window
@@ -362,11 +348,12 @@ class IncrementalDedup:
                     "doc_id", "doc_text"
                 ).limit(0)
             ov_persists: list = []
-            ov_cands = overlap_candidates_probe(
-                idx_ofps, new_fps,
+            ov_cands = overlap_candidates(
+                new_fps,
                 hot_cap=cfg.overlap_hot_cap,
                 min_shared_fps=cfg.overlap_min_shared_fps,
                 persist_registry=ov_persists,
+                index=idx_ofps,
             )
             texts_all = idx_texts.unionByName(
                 long_reps.select("doc_id", "doc_text")
@@ -383,9 +370,6 @@ class IncrementalDedup:
             cands = cands.unionByName(ov_pairs).distinct()
 
         all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
-
-        from .operators.verify import verify_pairs_exact_jaccard
-
         verified = verify_pairs_exact_jaccard(
             cands, all_sigs, threshold=cfg.jaccard_threshold
         )

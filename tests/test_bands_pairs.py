@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
 from lsh_cascade_poc_spark.operators.pairs import (
     pairs_from_bands,
     pairs_with_min_match,
+    shared_key_pairs,
     split_exact_duplicates,
     survivors,
     tag_exact_duplicates,
@@ -103,3 +108,52 @@ def test_survivors_and_exact_pairs(spark):
     assert sorted(tuple(r) for r in merged.collect()) == [
         (1, 2, 1.0), (1, 3, 1.0), (4, 5, 0.9), (6, 7, -1.0),
     ]
+
+
+def _random_key_rows(rng: random.Random, ids: list[int], n: int):
+    """n (doc_id, k, pos) rows over a small key space (many collisions)."""
+    return [(rng.choice(ids), rng.randrange(6), rng.randrange(1000))
+            for _ in range(n)]
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_shared_key_pairs_matches_brute_force(spark, seed):
+    """shared_key_pairs(new, index) == every pair of rows sharing a key in
+    index ∪ new with id_a < id_b and at least one `new` row, payload in id
+    order — as a MULTISET (one row per shared key occurrence). Some doc_ids
+    sit on both sides, like a re-delivered doc next to its indexed copy."""
+    rng = random.Random(seed)
+    both = [100, 101, 102]
+    new = _random_key_rows(rng, list(range(20, 35)) + both, 40)
+    idx = _random_key_rows(rng, list(range(0, 15)) + both, 50)
+    schema = "doc_id long, k int, pos int"
+    got = Counter(
+        tuple(r) for r in shared_key_pairs(
+            spark.createDataFrame(new, schema),
+            spark.createDataFrame(idx, schema), ["k"], ["pos"],
+        ).collect()
+    )
+    rows = [(*r, True) for r in new] + [(*r, False) for r in idx]
+    want = Counter()
+    for i, (id1, k1, p1, n1) in enumerate(rows):
+        for id2, k2, p2, n2 in rows[i + 1:]:
+            if k1 == k2 and id1 != id2 and (n1 or n2):
+                (ia, pa), (ib, pb) = sorted([(id1, p1), (id2, p2)])
+                want[(k1, ia, ib, pa, pb)] += 1
+    assert want and got == want
+
+    # the band probe keeps streaming's former hits_old ∪ hits_new set rule
+    bschema = "doc_id long, band_id int, band_key long"
+    nb = [(d, k % 2, k) for d, k, _ in new]
+    ib = [(d, k % 2, k) for d, k, _ in idx]
+
+    def as_bands(rs):
+        return spark.createDataFrame(rs, bschema).withColumn("tier", F.lit(0))
+
+    hits_old = {(min(a, b), max(a, b)) for a, *ka in nb for b, *kb in ib
+                if ka == kb and a != b}
+    hits_new = {(a, b) for a, *ka in nb for b, *kb in nb
+                if ka == kb and a < b}
+    got_pairs = pairs_from_bands(as_bands(nb), as_bands(ib)).collect()
+    assert len(got_pairs) == len(hits_old | hits_new)
+    assert {tuple(r) for r in got_pairs} == hits_old | hits_new

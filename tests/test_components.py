@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from lsh_cascade_poc_spark.operators.components import (
     clusters_with_singletons,
     connected_components,
@@ -69,3 +71,12 @@ def test_local_finish_matches_distributed_fixpoint(spark):
         for r in connected_components(df, local_finish_edges=0).collect()
     }
     assert local == dist
+
+
+def test_unconverged_components_raise(spark):
+    """Out of star rounds before the fixpoint: fail loudly instead of
+    returning a partial contraction as if it were the clustering."""
+    edges = [(i, i + 1) for i in range(1, 64)]  # 64-node path
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iterations=2, local_finish_edges=0)

@@ -68,6 +68,46 @@ def test_band_self_join_is_hash_join_not_nested_loop(spark, tiny_turns):
             or "BroadcastHashJoin" in plan), plan
 
 
+def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
+    """Batch runs the streaming candidate operator (shared_key_pairs)
+    against an EMPTY index: Catalyst must prune the new x index branch, so
+    the batch plan stays the plain self-join — no Union, and exactly one
+    join on the key table (plus, for overlap, the shared-fp gate join of
+    the one fps side). A lost pruning would double the batch joins."""
+    from lsh_cascade_poc_spark.config import DedupConfig
+    from lsh_cascade_poc_spark.operators.assemble import (
+        assemble_conversations,
+        with_doc_id,
+    )
+    from lsh_cascade_poc_spark.operators.bands import explode_bands
+    from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
+    from lsh_cascade_poc_spark.operators.suffix import (
+        overlap_candidates,
+        winnow_fingerprints,
+    )
+    from lsh_cascade_poc_spark.pipeline import build_signatures
+
+    def optimized(df) -> tuple[str, list[str], list[str]]:
+        """(plan, its joins, its pair joins: those filtering id_a < id_b)"""
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        joins = [ln for ln in plan.splitlines() if "Join " in ln]
+        return plan, joins, [ln for ln in joins if "id_a#" in ln]
+
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4)
+    docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
+    sigs = build_signatures(docs, cfg).localCheckpoint()
+    bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
+    plan, joins, pair_joins = optimized(pairs_from_bands(bands))
+    assert "Union" not in plan, plan
+    assert len(joins) == len(pair_joins) == 1, plan
+
+    fps = winnow_fingerprints(docs, 24, 64).localCheckpoint()
+    plan, joins, pair_joins = optimized(overlap_candidates(fps))
+    assert "Union" not in plan, plan
+    # the pair join + the shared-fp gate join under each side of it
+    assert len(joins) == 3 and len(pair_joins) == 1, plan
+
+
 def test_signature_kernel_is_one_fused_arrow_pass(spark, tiny_turns):
     """build_signatures must evaluate exactly ONE Python/Arrow UDF node:
     shingle+minhash+simhash are fused into a single kernel. Two+ nodes mean

@@ -386,7 +386,7 @@ def test_streaming_overlap_flanked_by_boilerplate(spark, tmp_path):
     """The r3 ADVICE drop scenario, cross-batch: a true >=200-char overlap
     whose doc pair also shares boilerplate before AND after it, with the
     docs arriving in DIFFERENT micro-batches — so the probe-path seed
-    selection (overlap_candidates_probe -> _pair_seed_agg) must produce
+    selection (overlap_candidates with the index -> _pair_seed_agg) must produce
     the alignment-dominant third seed, not just the boilerplate-landing
     boundary seeds. Pins the streaming path of the seed3 fix (the batch
     path is pinned by test_suffix.test_true_overlap_flanked_by_boilerplate

@@ -40,6 +40,10 @@ def main() -> None:
     from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
     from lsh_cascade_poc_spark.operators.components import _large_star, _canonical
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
+    from lsh_cascade_poc_spark.operators.suffix import (
+        overlap_candidates,
+        winnow_fingerprints,
+    )
     from lsh_cascade_poc_spark.pipeline import build_signatures
     from lsh_cascade_poc_spark.session import get_spark
 
@@ -100,8 +104,27 @@ def main() -> None:
         "buckets before it, and `id_a < id_b` + "
         "`distinct` dedups pairs across bands BEFORE the expensive verify. "
         "Both sides read the checkpointed signature stage, mirroring "
-        "run_dedup's stage materialization.",
+        "run_dedup's stage materialization. The join is `shared_key_pairs`, "
+        "the operator streaming probes its index with; a batch run passes "
+        "an empty index, whose new x index branch Catalyst prunes — no "
+        "`Union`, one join (tests/test_plans.py pins it).",
         pairs_from_bands(kept),
+        "simple",
+    ))
+
+    fps = winnow_fingerprints(docs, cfg.winnow_kgram_chars,
+                              cfg.winnow_window).localCheckpoint(eager=True)
+    sections.append((
+        "Overlap candidates: the same shared-key join on `fp`",
+        "The winnow fingerprint table pairs through the same "
+        "`shared_key_pairs` join as the bands, keyed on `fp` with `pos` as "
+        "payload. Both join sides are gated to fingerprints shared by "
+        "2..hot_cap docs (the persisted, counted gate set — broadcast when "
+        "small); the empty-index branch is pruned as above. Two "
+        "aggregates then pick three verify seeds per pair (per alignment "
+        "delta, then per pair) and apply `min_shared_fps`.",
+        overlap_candidates(fps, hot_cap=cfg.overlap_hot_cap,
+                           min_shared_fps=cfg.overlap_min_shared_fps),
         "simple",
     ))
 
