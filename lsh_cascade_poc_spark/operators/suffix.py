@@ -1,4 +1,4 @@
-"""Exact long-overlap detection: winnowing fingerprints + per-bucket verify.
+"""Exact long-overlap detection: winnowing fingerprints + exact extension.
 
 The north rule asks for a "per-partition suffix-array substring stage for
 exact long-overlap detection" — pairs of documents sharing a long verbatim
@@ -13,14 +13,15 @@ Design (public algorithms only):
      Computed in a vectorized pandas_udf (numpy sliding-window minimum).
   2. Fingerprints are exploded to (fp, doc_id, pos) and joined on fp by
      the same shared_key_pairs operator as the MinHash bands, so the same
-     hot-key capping applies (boilerplate license headers etc.).
-  3. Candidate pairs are verified per-bucket with groupBy().applyInPandas:
-     seed positions are extended greedily left/right over the two texts to
-     measure the true maximal common substring around the seed; pairs whose
-     exact overlap >= min_overlap_chars survive. The per-bucket verifier is
-     the "per-partition suffix stage": each Arrow group holds one pair's two
-     texts and its seed positions; extension is O(overlap) per seed and we
-     verify only the best few seeds per pair.
+     hot-key capping applies (boilerplate license headers etc.); the
+     fingerprint pairs aggregate to one row per doc pair carrying three
+     seed positions (_pair_seed_agg).
+  3. verify_overlaps joins both texts onto each candidate pair and runs a
+     mapInPandas kernel over the joined rows: each seed is extended left
+     and right over the two texts (_extend_match) to measure the maximal
+     common substring around it; pairs whose exact overlap >=
+     min_overlap_chars survive. Extension costs O(log overlap) bytes
+     comparisons per seed, and only the three seeds per pair are tried.
 
 Reference analog: this generalizes the reference's Overlap segment index
 (CASCADE_SEARCH_DESIGN.md:17-38, notebook 49) — overlapping windows over the
@@ -465,21 +466,44 @@ def _pair_seed_agg(joined: DataFrame) -> DataFrame:
     )
 
 
+def _run_length(ba: bytes, bb: bytes, a: int, b: int, limit: int,
+                backward: bool) -> int:
+    """Length of the longest equal byte run, at most `limit`, that starts
+    at (a, b) — or, `backward`, ends just before (a, b). Equal runs are
+    prefix-closed, so a galloping probe (1, 2, 4, …) brackets the answer
+    and a binary search pins it; every probe is one bytes comparison
+    (memcmp), so a run of n bytes costs O(log n) C-level compares instead
+    of n interpreted byte steps."""
+
+    def equal(n: int) -> bool:
+        if backward:
+            return ba[a - n : a] == bb[b - n : b]
+        return ba[a : a + n] == bb[b : b + n]
+
+    good, bad = 0, 1  # longest length known equal, first length to try
+    while bad <= limit and equal(bad):
+        good, bad = bad, 2 * bad
+    bad = min(bad, limit + 1)  # lengths >= bad are unequal or out of reach
+    while bad - good > 1:
+        mid = (good + bad) // 2
+        if equal(mid):
+            good = mid
+        else:
+            bad = mid
+    return good
+
+
 def _extend_match(ba: bytes, bb: bytes, pa: int, pb: int, k: int) -> int:
-    """Greedily extend an exact k-gram seed match left and right over utf-8
-    BYTES; returns the maximal common substring length around the seed (0 if
-    the seed bytes don't actually match — hash collision)."""
+    """Extend an exact k-gram seed match left and right over utf-8 BYTES;
+    returns the maximal common substring length around the seed (0 if the
+    seed bytes don't actually match — hash collision)."""
     if ba[pa : pa + k] != bb[pb : pb + k]:
         return 0
-    lo_a, lo_b = pa, pb
-    while lo_a > 0 and lo_b > 0 and ba[lo_a - 1] == bb[lo_b - 1]:
-        lo_a -= 1
-        lo_b -= 1
-    hi_a, hi_b = pa + k, pb + k
-    while hi_a < len(ba) and hi_b < len(bb) and ba[hi_a] == bb[hi_b]:
-        hi_a += 1
-        hi_b += 1
-    return hi_a - lo_a
+    left = _run_length(ba, bb, pa, pb, min(pa, pb), backward=True)
+    right = _run_length(ba, bb, pa + k, pb + k,
+                        max(min(len(ba) - pa, len(bb) - pb) - k, 0),
+                        backward=False)
+    return left + k + right
 
 
 def verify_overlaps(

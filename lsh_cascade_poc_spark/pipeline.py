@@ -261,6 +261,23 @@ def overlap_pairs(docs: DataFrame, fps: DataFrame, cfg: DedupConfig,
     ).select("id_a", "id_b")
 
 
+def run_concurrently(spark: SparkSession, *branches):
+    """Run independent driver-side branches at once -> their results, in
+    branch order. The first branch runs on the calling thread, every other
+    one on its own worker thread wrapped by `inheritable_thread_target`, so
+    each sees the caller's Spark local properties (job groups, tracing
+    tags) in a private copy. Returns, or re-raises the first failure in
+    branch order, only after EVERY branch has finished: no Spark job of a
+    failed call outlives it. Only the interleaving of Spark jobs changes,
+    never a result: Spark actions are only sequential because driver code
+    calls them sequentially."""
+    with ThreadPoolExecutor(max_workers=max(len(branches) - 1, 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b))
+                   for b in branches[1:]]
+        first = branches[0]()
+        return [first] + [f.result() for f in futures]
+
+
 def release_persisted(dfs: list) -> None:
     """Unpersist and forget the persisted intermediates a consumed stage
     leaves behind. They die with the stage that consumed them: holding them
@@ -362,7 +379,10 @@ def run_dedup(
 
     def _overlap_chain():
         """overlap_fps -> pairs_overlap (independent of the signature
-        chain: both consume only the materialized docs stage)."""
+        chain: both consume only the materialized docs stage); None when
+        the stage is disabled."""
+        if not enable_overlap_stage:
+            return None
         # the fp table is its own materialization: the candidate gate's
         # broadcast-sizing count (suffix.py _shared_fp_gate) and the
         # candidate self-join both consume it — lazy, the winnow Arrow
@@ -384,22 +404,17 @@ def run_dedup(
         release_persisted(ov_persists)
         return ov_pairs
 
-    # The two chains share no data dependency (guide §2.6: actions are only
-    # sequential because driver code calls them sequentially). The overlap
-    # chain runs on a worker thread while the signature chain runs on this
-    # one, so each chain's tasks back-fill the idle capacity the other
-    # leaves behind — stage-tail stragglers, AQE/commit driver round-trips,
-    # the gate-count barriers — at BOTH parallelism levels (at local[1] the
-    # single core is idle during every driver round-trip too). Stage
-    # outputs, and therefore every downstream result, are bit-identical:
-    # only the wall-clock interleaving changes (A/B in OPTIMIZATION_r06.md).
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_ov = (
-            pool.submit(inheritable_thread_target(spark)(_overlap_chain))
-            if enable_overlap_stage else None
-        )
-        signatures, mh_pairs, sh_pairs = _minhash_chain()
-        ov_pairs = fut_ov.result() if fut_ov is not None else None
+    # The two chains share no data dependency, so the overlap chain runs
+    # on a worker thread while the signature chain runs on this one: each
+    # chain's tasks back-fill the idle capacity the other leaves behind —
+    # stage-tail stragglers, AQE/commit driver round-trips, the gate-count
+    # barriers — at BOTH parallelism levels (at local[1] the single core is
+    # idle during every driver round-trip too). Stage outputs, and
+    # therefore every downstream result, are bit-identical (A/B in
+    # OPTIMIZATION_r06.md).
+    (signatures, mh_pairs, sh_pairs), ov_pairs = run_concurrently(
+        spark, _minhash_chain, _overlap_chain
+    )
 
     def _verify():
         # exact pairs are definitionally jaccard 1.0 and skip the verify

@@ -9,14 +9,22 @@ practice, so the engine ships an incremental path:
          file-per-conversation-chunk contract; for turns arriving ACROSS
          micro-batches use streaming_state.assemble_conversations_stream,
          the applyInPandasWithState + event-time-timeout assembler) and
-         check doc_id collisions against every indexed doc
-      2. collapse exact duplicates (within the batch and against fp_index),
-         then compute signatures for fresh representatives
-      3. match new docs against the EXISTING index and each other:
-         operators/pairs.py shared_key_pairs with the indexed band and
-         fingerprint rows as its `index` side (new x new plus new x
-         indexed, never indexed x indexed)
-      4. append new signatures + discovered dup pairs to the index tables
+         collapse exact duplicates (within the batch and against fp_index)
+      2. run three independent branches at once (pipeline.py
+         run_concurrently), each reading only the docs and the index as it
+         stood before this batch:
+           - band: signatures of fresh representatives, tier-0 bands capped
+             over index ∪ new, the band probe
+           - overlap: winnow fingerprints, the fingerprint probe and the
+             exact-extension verify
+           - the doc_id collision check against every indexed doc
+         Both probes are operators/pairs.py shared_key_pairs with the
+         indexed rows as its `index` side (new x new plus new x indexed,
+         never indexed x indexed)
+      3. Jaccard-verify the union of both branches' candidates and merge the
+         evidence into the batch's dup pairs
+      4. write the batch's index tables concurrently; the ``_batch_<id>_done``
+         marker, written after the last of them, is the commit point
 
 The cascade steps are the batch pipeline's own functions: build_docs,
 check_doc_id_collisions, split_exact_duplicates, build_signatures,
@@ -39,6 +47,7 @@ Spark's checkpointLocation + idempotent batch-id guard.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,12 +69,17 @@ from .pipeline import (
     merge_evidence,
     overlap_docs_gate,
     release_persisted,
+    run_concurrently,
 )
 
 TURNS_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
     "ts timestamp"
 )
+
+# every index table, one batch_id-partitioned parquet directory each
+INDEX_TABLES = ("docs", "signatures", "bands", "fp_index", "dup_pairs",
+                "overlap_fps", "texts", "hot_band_drops")
 
 
 class IncrementalDedup:
@@ -190,9 +204,15 @@ class IncrementalDedup:
     def _compact(self, upto: int) -> None:
         """Fold every per-batch subdirectory with batch_id <= upto (all
         done-marked — `upto` is the just-committed batch) plus the previous
-        compacted partition into ONE partition per table.
+        compacted partition into ONE partition per table. The tables share
+        nothing, so they fold concurrently (run_concurrently), each in its
+        own protocol order (_compact_table)."""
+        run_concurrently(self.spark, *(
+            partial(self._compact_table, name, upto) for name in INDEX_TABLES
+        ))
 
-        Idempotent marker protocol (write-ahead order):
+    def _compact_table(self, name: str, upto: int) -> None:
+        """Compact one table. Idempotent marker protocol (write-ahead order):
           1. write the folded rows to ``batch_id=-(upto+1)`` (a staging dir
              no reader selects yet — readers require the marker),
           2. write ``_compact_<upto>_done`` (the commit point: readers now
@@ -201,38 +221,34 @@ class IncrementalDedup:
              their markers (a crash here leaves garbage, not wrong answers —
              see _table_paths).
         """
-        from pyarrow import fs as pafs
-
         fs, root = self._fs()
-        for name in ("docs", "signatures", "bands", "fp_index", "dup_pairs",
-                     "overlap_fps", "texts", "hot_band_drops"):
-            dirs, gens = self._list_table(name)
-            if not any(0 <= b <= upto for b in dirs):
-                continue  # nothing to fold (table absent or already compact)
-            view = self._table_paths(name, upto=upto)
-            df = self.spark.read.option("basePath", self._path(name)) \
-                .parquet(*view).drop("batch_id")
-            # single partition: the compacted result IS the small historical
-            # tail; at cluster scale raise this to taste via repartition
-            df.coalesce(1).write.mode("overwrite").parquet(
-                f"{self._path(name)}/batch_id=-{upto + 1}"
-            )
-            tdir = f"{root.rstrip('/')}/{name}"
-            with fs.open_output_stream(f"{tdir}/_compact_{upto}_done") as f:
-                f.write(b"ok")
-            # GC: folded batch dirs, superseded compacted dirs + markers
-            for b, base in dirs.items():
-                if (0 <= b <= upto) or (b < 0 and b != -(upto + 1)):
-                    try:
-                        fs.delete_dir(f"{tdir}/{base}")
-                    except Exception:
-                        pass
-            for g in gens:
-                if g != upto:
-                    try:
-                        fs.delete_file(f"{tdir}/_compact_{g}_done")
-                    except Exception:
-                        pass
+        dirs, gens = self._list_table(name)
+        if not any(0 <= b <= upto for b in dirs):
+            return  # nothing to fold (table absent or already compact)
+        view = self._table_paths(name, upto=upto)
+        df = self.spark.read.option("basePath", self._path(name)) \
+            .parquet(*view).drop("batch_id")
+        # single partition: the compacted result IS the small historical
+        # tail; at cluster scale raise this to taste via repartition
+        df.coalesce(1).write.mode("overwrite").parquet(
+            f"{self._path(name)}/batch_id=-{upto + 1}"
+        )
+        tdir = f"{root.rstrip('/')}/{name}"
+        with fs.open_output_stream(f"{tdir}/_compact_{upto}_done") as f:
+            f.write(b"ok")
+        # GC: folded batch dirs, superseded compacted dirs + markers
+        for b, base in dirs.items():
+            if (0 <= b <= upto) or (b < 0 and b != -(upto + 1)):
+                try:
+                    fs.delete_dir(f"{tdir}/{base}")
+                except Exception:
+                    pass
+        for g in gens:
+            if g != upto:
+                try:
+                    fs.delete_file(f"{tdir}/_compact_{g}_done")
+                except Exception:
+                    pass
 
     def _write_batch(self, df: DataFrame, name: str, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(
@@ -249,15 +265,18 @@ class IncrementalDedup:
             return  # replayed micro-batch after restart: already applied
 
         docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
-        # the id-collision check covers every doc ever ingested, and runs
-        # before any index write, so a failing batch leaves no done-marker
-        ids = docs.select("conv_id", "doc_id")
-        if self._exists("docs"):
-            ids = ids.unionByName(
-                self._read_table("docs", exclude_batch=batch_id)
-                .select("conv_id", "doc_id")
-            )
-        check_doc_id_collisions(ids)
+
+        def check_ids():
+            """The id-collision check covers every doc ever ingested. It
+            returns before the first index write below, so a failing batch
+            leaves no done-marker."""
+            ids = docs.select("conv_id", "doc_id")
+            if self._exists("docs"):
+                ids = ids.unionByName(
+                    self._read_table("docs", exclude_batch=batch_id)
+                    .select("conv_id", "doc_id")
+                )
+            check_doc_id_collisions(ids)
 
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
@@ -291,49 +310,56 @@ class IncrementalDedup:
             )
         else:
             fresh_reps_docs = reps_docs
-        sigs = build_signatures(fresh_reps_docs, cfg).localCheckpoint(eager=True)
-        new_bands = coarse_bands(sigs, cfg)
 
-        # a missing index is just an EMPTY index: one code path for the first
-        # and every later batch, so a cap-semantics fix can never silently
-        # diverge between them (the empty-side joins are no-ops under AQE)
-        if self._exists("bands"):
-            idx_bands = self._read_table("bands", exclude_batch=batch_id)
-            idx_sigs = self._read_table("signatures", exclude_batch=batch_id)
-        else:
-            idx_bands = new_bands.limit(0)
-            idx_sigs = sigs.limit(0)
-        # hot-band cap over the COMBINED (index ∪ new) band table: a
-        # bucket that grew hot across batches is excluded from probing on
-        # BOTH sides and from the index append, and the drop is recorded
-        # (the batch path's rule, operators/bands.py bucket_sizes) — the
-        # probe join already scans the full index, so the count pre-pass
-        # adds no asymptotic cost
-        combined = idx_bands.select("tier", "band_id", "band_key").unionAll(
-            new_bands.select("tier", "band_id", "band_key")
-        )
-        _sizes, hot = bucket_sizes(combined, cfg.hot_band_cap)
-        hot = hot.localCheckpoint(eager=True)
-        hot_keys = hot.select("tier", "band_id", "band_key")
-        kept_new = new_bands.join(
-            hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-        ).localCheckpoint(eager=True)
-        kept_idx = idx_bands.join(
-            hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-        )
-        # probe: new docs vs the existing index plus new vs new
-        cands = pairs_from_bands(kept_new, kept_idx)
+        def band_branch():
+            """Signatures -> capped tier-0 bands -> band probe candidates,
+            plus the verify's signature table (index ∪ new)."""
+            sigs = build_signatures(fresh_reps_docs, cfg) \
+                .localCheckpoint(eager=True)
+            new_bands = coarse_bands(sigs, cfg)
+            # a missing index is just an EMPTY index: one code path for the
+            # first and every later batch, so a cap-semantics fix can never
+            # silently diverge between them (the empty-side joins are no-ops
+            # under AQE)
+            if self._exists("bands"):
+                idx_bands = self._read_table("bands", exclude_batch=batch_id)
+                idx_sigs = self._read_table("signatures",
+                                            exclude_batch=batch_id)
+            else:
+                idx_bands = new_bands.limit(0)
+                idx_sigs = sigs.limit(0)
+            # hot-band cap over the COMBINED (index ∪ new) band table: a
+            # bucket that grew hot across batches is excluded from probing
+            # on BOTH sides and from the index append, and the drop is
+            # recorded (the batch path's rule, operators/bands.py
+            # bucket_sizes) — the probe join already scans the full index,
+            # so the count pre-pass adds no asymptotic cost
+            combined = idx_bands.select("tier", "band_id", "band_key") \
+                .unionAll(new_bands.select("tier", "band_id", "band_key"))
+            _sizes, hot = bucket_sizes(combined, cfg.hot_band_cap)
+            hot = hot.localCheckpoint(eager=True)
+            hot_keys = hot.select("tier", "band_id", "band_key")
+            kept_new = new_bands.join(
+                hot_keys, ["tier", "band_id", "band_key"], "left_anti"
+            ).localCheckpoint(eager=True)
+            kept_idx = idx_bands.join(
+                hot_keys, ["tier", "band_id", "band_key"], "left_anti"
+            )
+            # probe: new docs vs the existing index plus new vs new
+            cands = pairs_from_bands(kept_new, kept_idx)
+            all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
+            return sigs, hot, kept_new, cands, all_sigs
 
-        # long-overlap stage, incremental (batch analog: pipeline.py
-        # overlap_pairs): fresh reps' winnow fingerprints probe the
-        # persistent overlap_fps index through the batch operator itself
-        # (overlap_candidates with an index); pairs verify by exact
-        # extension over the texts table. ov_pairs candidates join the
-        # Jaccard verify below; substring-proven pairs that fail Jaccard
-        # keep the batch path's jaccard = -1 evidence marker
-        # (merge_evidence).
-        ov_pairs = None
-        if self.enable_overlap:
+        def overlap_branch():
+            """Long-overlap stage, incremental (batch analog: pipeline.py
+            overlap_pairs): fresh reps' winnow fingerprints probe the
+            persistent overlap_fps index through the batch operator itself
+            (overlap_candidates with an index); pairs verify by exact
+            extension over the texts table. -> (long reps, their
+            fingerprints, substring-proven pairs), all None when the stage
+            is off."""
+            if not self.enable_overlap:
+                return None, None, None
             long_reps = overlap_docs_gate(fresh_reps_docs, cfg)
             new_fps = winnow_fingerprints(
                 long_reps, cfg.winnow_kgram_chars, cfg.winnow_window
@@ -367,9 +393,20 @@ class IncrementalDedup:
             # the gate set persisted inside the candidate probe is consumed
             # by the materialization above
             release_persisted(ov_persists)
-            cands = cands.unionByName(ov_pairs).distinct()
+            return long_reps, new_fps, ov_pairs
 
-        all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
+        # the three branches read only docs and the index as it stood before
+        # this batch, and meet first at verify
+        (sigs, hot, kept_new, cands, all_sigs), \
+            (long_reps, new_fps, ov_pairs), _ = run_concurrently(
+                self.spark, band_branch, overlap_branch, check_ids
+            )
+
+        # ov_pairs candidates join the Jaccard verify; substring-proven pairs
+        # that fail Jaccard keep the batch path's jaccard = -1 evidence
+        # marker (merge_evidence)
+        if ov_pairs is not None:
+            cands = cands.unionByName(ov_pairs).distinct()
         verified = verify_pairs_exact_jaccard(
             cands, all_sigs, threshold=cfg.jaccard_threshold
         )
@@ -383,35 +420,37 @@ class IncrementalDedup:
         # batch-scoped subdirectories + overwrite: a crash between the writes
         # is healed by the replay overwriting the SAME directories, so the
         # done-marker is a true commit point (ADVICE r1: plain appends made
-        # replays duplicate rows)
-        # narrow per-doc bookkeeping (EVERY doc, signed or not): id mapping +
-        # fingerprint + exact-group root — the signature table carries only
-        # fresh representatives
-        self._write_batch(
-            docs.select("conv_id", "doc_id", "fingerprint", "_root"),
-            "docs", batch_id,
-        )
-        self._write_batch(sigs, "signatures", batch_id)
-        self._write_batch(kept_new, "bands", batch_id)
-        self._write_batch(
-            sigs.select("fingerprint", F.col("doc_id").alias("root_id")),
-            "fp_index", batch_id,
-        )
-        self._write_batch(dup, "dup_pairs", batch_id)
+        # replays duplicate rows). The writes are independent and run
+        # concurrently; the marker follows the last of them.
+        writes = [
+            # narrow per-doc bookkeeping (EVERY doc, signed or not): id
+            # mapping + fingerprint + exact-group root — the signature table
+            # carries only fresh representatives
+            (docs.select("conv_id", "doc_id", "fingerprint", "_root"), "docs"),
+            (sigs, "signatures"),
+            (kept_new, "bands"),
+            (sigs.select("fingerprint", F.col("doc_id").alias("root_id")),
+             "fp_index"),
+            (dup, "dup_pairs"),
+            # A5 analog: dropped hot buckets are recorded, never silent
+            (hot, "hot_band_drops"),
+        ]
         if self.enable_overlap:
-            self._write_batch(new_fps, "overlap_fps", batch_id)
-            # texts of fresh LONG representatives (every possible verify
-            # candidate is gated, so short docs are dead weight here): the
-            # overlap verify of every FUTURE batch needs the indexed side's
-            # raw text. At cluster scale this table is a projection of the
-            # corpus the stream already owns — point it at the source table
-            # instead of materializing when storage matters.
-            self._write_batch(
-                long_reps.select("doc_id", "doc_text"), "texts",
-                batch_id,
-            )
-        # A5 analog: dropped hot buckets are recorded, never silent
-        self._write_batch(hot, "hot_band_drops", batch_id)
+            writes += [
+                (new_fps, "overlap_fps"),
+                # texts of fresh LONG representatives (every possible verify
+                # candidate is gated, so short docs are dead weight here):
+                # the overlap verify of every FUTURE batch needs the indexed
+                # side's raw text. At cluster scale this table is a
+                # projection of the corpus the stream already owns — point
+                # it at the source table instead of materializing when
+                # storage matters.
+                (long_reps.select("doc_id", "doc_text"), "texts"),
+            ]
+        run_concurrently(self.spark, *(
+            partial(self._write_batch, df, name, batch_id)
+            for df, name in writes
+        ))
         with fs.open_output_stream(done_marker) as f:
             f.write(b"ok")
         # periodic index compaction AFTER the commit point: only done-marked

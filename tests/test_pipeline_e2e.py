@@ -253,3 +253,50 @@ def test_recall_report_module(spark_result):
     # (the metric itself splits by true Jaccard, not by kind)
     if "substring" in pk:
         assert pk["substring"]["contract"] == 0
+
+
+def test_run_concurrently_order_properties_and_failure(spark):
+    """Results come back in branch order; a local property the caller set is
+    visible in every branch (tracing tags and streaming query properties
+    rely on it); a failing branch re-raises only after a slower sibling
+    has finished."""
+    import threading
+    import time
+
+    from lsh_cascade_poc_spark.pipeline import run_concurrently
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("run_concurrently.test", "tagged")
+    try:
+        def branch(i, delay):
+            def run():
+                time.sleep(delay)
+                return (i, sc.getLocalProperty("run_concurrently.test"),
+                        threading.get_ident())
+            return run
+
+        got = run_concurrently(spark, *(branch(i, 0.2 - 0.05 * i)
+                                        for i in range(4)))
+        assert [i for i, _, _ in got] == [0, 1, 2, 3]
+        assert {p for _, p, _ in got} == {"tagged"}
+        # the first branch runs on the calling thread, the others do not
+        assert got[0][2] == threading.get_ident()
+        assert len({t for _, _, t in got}) == 4
+
+        def fail():
+            raise ValueError("branch failed")
+
+        for layout in ("first", "sibling"):
+            finished = threading.Event()
+
+            def slow():
+                time.sleep(0.5)
+                finished.set()
+
+            branches = (fail, slow) if layout == "first" else \
+                (lambda: None, fail, slow)
+            with pytest.raises(ValueError, match="branch failed"):
+                run_concurrently(spark, *branches)
+            assert finished.is_set(), layout
+    finally:
+        sc.setLocalProperty("run_concurrently.test", None)

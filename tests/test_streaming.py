@@ -4,6 +4,7 @@ duplicate pairs the batch pipeline finds, across batch boundaries."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -508,3 +509,53 @@ def test_batch_stream_parity(spark, tmp_path):
     tiers = {r.tier for r in inc._read_table("bands").select("tier")
              .distinct().collect()}
     assert tiers == {0}
+
+
+def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):
+    """One of the concurrent index writes fails: process_batch raises only
+    after every sibling write has finished (no Spark job outlives it), the
+    batch leaves no done-marker, and the replay gives the dup pairs of an
+    uninterrupted index."""
+    corpus = generate_corpus(n_base=20, dup_fraction=0.5, seed=5)
+    turns = corpus.turns
+    convs = sorted(turns.conv_id.unique())
+    batches = [spark.createDataFrame(turns[turns.conv_id.isin(convs[i::2])],
+                                     TURNS_DDL) for i in range(2)]
+
+    clean = IncrementalDedup(spark, str(tmp_path / "clean"), CFG)
+    for i, b in enumerate(batches):
+        clean.process_batch(b, i)
+    want = {(r.id_a, r.id_b, r.jaccard) for r in clean.dup_pairs().collect()}
+
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), CFG)
+    inc.process_batch(batches[0], 0)
+    write = IncrementalDedup._write_batch
+    in_flight = []
+
+    def failing_write(self, df, name, batch_id):
+        if batch_id != 1:
+            return write(self, df, name, batch_id)
+        if name == "texts":
+            raise OSError("injected texts write failure")
+        in_flight.append(name)
+        try:
+            if name == "signatures":  # a slow sibling of the failing write
+                time.sleep(1.0)
+            write(self, df, name, batch_id)
+        finally:
+            in_flight.remove(name)
+
+    monkeypatch.setattr(IncrementalDedup, "_write_batch", failing_write)
+    with pytest.raises(OSError, match="injected"):
+        inc.process_batch(batches[1], 1)
+    assert in_flight == []
+    assert not (index / "_batch_1_done").exists()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+    monkeypatch.setattr(IncrementalDedup, "_write_batch", write)
+    inc.process_batch(batches[1], 1)
+    assert (index / "_batch_1_done").exists()
+    got = {(r.id_a, r.id_b, r.jaccard) for r in inc.dup_pairs().collect()}
+    assert got == want
+    assert any(j >= 0 for _, _, j in want)

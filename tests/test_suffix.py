@@ -92,6 +92,62 @@ def test_extend_match():
     assert _extend_match(b"abcdef", b"zzzzzz", 0, 0, 3) == 0
 
 
+def _extend_match_oracle(ba: bytes, bb: bytes, pa: int, pb: int, k: int) -> int:
+    """The byte-at-a-time extension _extend_match replaced: the oracle."""
+    if ba[pa : pa + k] != bb[pb : pb + k]:
+        return 0
+    lo_a, lo_b = pa, pb
+    while lo_a > 0 and lo_b > 0 and ba[lo_a - 1] == bb[lo_b - 1]:
+        lo_a -= 1
+        lo_b -= 1
+    hi_a, hi_b = pa + k, pb + k
+    while hi_a < len(ba) and hi_b < len(bb) and ba[hi_a] == bb[hi_b]:
+        hi_a += 1
+        hi_b += 1
+    return hi_a - lo_a
+
+
+def test_extend_match_parity_with_byte_loop():
+    rng = np.random.default_rng(2024)
+
+    def rand_bytes(n: int) -> bytes:
+        # a 3-letter alphabet: long accidental runs and near-misses
+        return bytes(rng.choice(np.frombuffer(b"abc", np.uint8), size=n))
+
+    cases = [
+        (b"abcdef", b"zzzzzz", 0, 0, 3),        # hash collision -> 0
+        (b"xyzabc", b"abcxyz", 3, 3, 3),        # collision at the text end
+        (b"abcdef", b"abcdef", 0, 0, 3),        # seed at offset 0
+        (b"abcdef", b"zzabcdef", 3, 5, 3),      # seed ending at both text ends
+        (b"abcdef", b"qabcdef", 4, 5, 5),       # k past both ends, equal tails
+        (b"abcdef", b"abcdefgh", 4, 4, 5),      # k past one end only
+        (b"", b"", 0, 0, 1),
+    ]
+    for _ in range(5000):
+        shared = rand_bytes(int(rng.integers(0, 200)))
+        head_a, head_b = (int(n) for n in rng.integers(0, 30, size=2))
+        ba = rand_bytes(head_a) + shared + rand_bytes(int(rng.integers(0, 30)))
+        bb = rand_bytes(head_b) + shared + rand_bytes(int(rng.integers(0, 30)))
+        if rng.random() < 0.3 and bb:  # a point mutation, often in the run
+            i = int(rng.integers(0, len(bb)))
+            bb = bb[:i] + b"d" + bb[i + 1:]
+        k = int(rng.integers(1, 16))
+        if rng.random() < 0.7:  # a seed aligned on the shared run
+            off = int(rng.integers(0, len(shared) + 1))
+            pa, pb = head_a + off, head_b + off
+        else:
+            pa = int(rng.integers(0, len(ba) + 1))
+            pb = int(rng.integers(0, len(bb) + 1))
+        cases.append((ba, bb, pa, pb, k))
+    n_zero = 0
+    for ba, bb, pa, pb, k in cases:
+        want = _extend_match_oracle(ba, bb, pa, pb, k)
+        assert _extend_match(ba, bb, pa, pb, k) == want, (ba, bb, pa, pb, k)
+        n_zero += want == 0
+    # the random cases exercise both outcomes, not just collisions
+    assert 0 < n_zero < len(cases) // 2
+
+
 def test_overlap_stage_end_to_end(spark):
     shared = "alpha beta gamma delta epsilon zeta eta theta " * 4  # ~190 chars
     docs = spark.createDataFrame(
