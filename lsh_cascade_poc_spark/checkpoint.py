@@ -37,6 +37,17 @@ METRICS_SCHEMA = (
 )
 
 
+def resolve_fs(uri: str) -> tuple:
+    """(pyarrow FileSystem, path inside it) for a local path or a
+    ``scheme://`` URI — the driver-side filesystem of StageStore and of the
+    streaming index (streaming.py)."""
+    from pyarrow import fs as pafs
+
+    if "://" in uri:
+        return pafs.FileSystem.from_uri(uri)
+    return pafs.LocalFileSystem(), os.path.abspath(uri)
+
+
 @dataclass
 class StageStore:
     spark: SparkSession
@@ -49,18 +60,10 @@ class StageStore:
 
     # -- driver-side filesystem (URI-aware) --------------------------------
 
-    def _fs(self):
-        """(pyarrow FileSystem, work_dir path inside it). Resolved per call —
-        pyarrow filesystems are cheap handles and a dataclass field would
-        break pickling of the store."""
-        from pyarrow import fs as pafs
-
-        if "://" in self.work_dir:
-            return pafs.FileSystem.from_uri(self.work_dir)
-        return pafs.LocalFileSystem(), os.path.abspath(self.work_dir)
-
     def _fs_path(self, stage: str) -> tuple:
-        fs, root = self._fs()
+        # resolved per call: pyarrow filesystems are cheap handles and a
+        # dataclass field would break pickling of the store
+        fs, root = resolve_fs(self.work_dir)
         return fs, f"{root.rstrip('/')}/{self.config_hash}/{stage}"
 
     def exists(self, stage: str) -> bool:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 # Mersenne prime 2^61 - 1: modulus for the universal-hash MinHash permutations
@@ -107,6 +107,24 @@ class DedupConfig:
     # --- verification + clustering ---
     jaccard_threshold: float = 0.80
     cc_max_iterations: int = 20
+
+    def __post_init__(self) -> None:
+        # a band slice past the end of the signature is EMPTY, and an empty
+        # band is one bucket every doc shares
+        for tier in ("coarse", "tight"):
+            n_bands = getattr(self, f"{tier}_n_bands")
+            rows = getattr(self, f"{tier}_rows_per_band")
+            if n_bands * rows > self.n_perm:
+                raise ValueError(
+                    f"{tier} tier reads {n_bands} bands x {rows} rows = "
+                    f"{n_bands * rows} MinHash lanes, past n_perm={self.n_perm}"
+                )
+        if self.simhash_band_bits <= 0 or \
+                self.simhash_bits % self.simhash_band_bits:
+            raise ValueError(
+                f"simhash_bits={self.simhash_bits} is not a multiple of "
+                f"simhash_band_bits={self.simhash_band_bits}"
+            )
 
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True).encode()

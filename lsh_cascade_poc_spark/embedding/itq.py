@@ -164,20 +164,6 @@ def whitening_transform_numpy(x: np.ndarray, model: WhitenModel,
     return z.astype(np.float32)
 
 
-def make_whitening_udf(model: WhitenModel, renormalize: bool = True):
-    mean, w = model.mean, model.w
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def whiten(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = WhitenModel(mean=mean, w=w)
-        for s in it:
-            x = np.stack([np.asarray(v, dtype=np.float32) for v in s])
-            z = whitening_transform_numpy(x, m, renormalize)
-            yield pd.Series(list(z))
-
-    return whiten
-
-
 def isotropy_score(x: np.ndarray) -> float:
     """Eigenvalue condition-number-based isotropy diagnostic (H16):
     min(eig)/max(eig) of the covariance — 1.0 is perfectly isotropic."""

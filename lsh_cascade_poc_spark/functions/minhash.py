@@ -48,7 +48,6 @@ def minhash_flat(
     offsets: np.ndarray,
     a: np.ndarray,
     b: np.ndarray,
-    max_block_elems: int = 32_000_000,  # kept for signature compat; unused
 ) -> np.ndarray:
     """Core kernel: flat int64 shingle hashes + row offsets -> (n_rows, n_perm)
     int64 signature matrix. One reused temp buffer (allocation/first-touch of

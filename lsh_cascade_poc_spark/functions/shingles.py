@@ -1,46 +1,17 @@
-"""Shingling: documents -> sets of hashed k-gram shingles.
+"""Shingle-set similarity.
 
 Reference analog: the LSH chunk tokens stored per document
 (/root/reference/src/db.py:65, produced by chunk_hash at src/lsh.py:266-304)
 are the reference's "set representation" of a document. For text dedup the
-set is word k-gram shingles, hashed to int64.
-
-Everything here is Catalyst built-ins (split/transform/xxhash64): shingle
-hashing stays JVM-side and inside whole-stage codegen — the Python boundary
-is first crossed only at the MinHash kernel (minhash.py), which consumes the
-already-hashed int64 arrays via Arrow.
+set is word k-gram shingles, hashed to int64 by the fused signature kernel
+(signature_udf.py); the exact Jaccard of two such sets stays a Catalyst
+built-in expression.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .text import tokens
-
-
-def shingle_strings(col: Column, k: int) -> Column:
-    """array<string> of word k-gram shingles (space-joined). Documents with
-    fewer than k tokens yield a single shingle = the whole token sequence,
-    so short docs still participate (reference keeps short docs that pass the
-    10-char floor, src/loader.py:118-119)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    n_sh = F.greatest(n - F.lit(k - 1), F.least(n, F.lit(1)))
-    return F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-
-
-def hashed_shingles(col: Column, k: int, distinct: bool = True) -> Column:
-    """array<long>: xxhash64 of each k-gram shingle; distinct (set semantics)
-    and sorted for deterministic downstream kernels."""
-    h = F.transform(shingle_strings(col, k), lambda s: F.xxhash64(s))
-    if distinct:
-        h = F.array_distinct(h)
-    return F.array_sort(h)
 
 
 def jaccard_on_shingle_arrays(a: Column, b: Column) -> Column:
@@ -50,27 +21,3 @@ def jaccard_on_shingle_arrays(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-# ---------------------------------------------------------------------------
-# numpy reference implementations (test oracles; mirror tests/test_lsh.py's
-# batch-vs-single parity style, /root/reference/tests/test_lsh.py:66-72)
-# ---------------------------------------------------------------------------
-
-def shingle_strings_numpy(text: str, k: int) -> list[str]:
-    toks = [t for t in text.split() if t]
-    if not toks:
-        return []
-    if len(toks) < k:
-        return [" ".join(toks)]
-    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-
-
-def xxhash64_spark_compat(spark, strings: list[str]) -> np.ndarray:
-    """Hash strings exactly as Spark's xxhash64 does, by round-tripping
-    through a tiny DataFrame. Used only in tests for parity checks."""
-    if not strings:
-        return np.empty(0, dtype=np.int64)
-    df = spark.createDataFrame([(s,) for s in strings], ["s"])
-    rows = df.select(F.xxhash64("s").alias("h")).collect()
-    return np.array([r.h for r in rows], dtype=np.int64)

@@ -46,11 +46,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_ngrams_count(col: Column, n: int) -> Column:
-    """Number of character n-grams (length-n windows) in the string."""
-    return F.greatest(F.length(col) - F.lit(n - 1), F.lit(0))
-
-
 def quality_features(col: Column) -> dict[str, Column]:
     """Cheap document-quality heuristics (length / punctuation / stopword /
     uniqueness ratios) as named columns — the kind of scoring a training-data
@@ -114,15 +109,6 @@ def langid(col: Column) -> Column:
     return best_lang
 
 
-def bpe_like_token_count(col: Column) -> Column:
-    """Subword-ish token estimate without a tokenizer model: count the
-    pieces produced by a GPT-2-style pre-tokenization regex (contractions,
-    letter runs, digit runs, punctuation runs, whitespace) — a standard
-    public pattern for budgeting text by approximate BPE tokens."""
-    pattern = r"'(?:s|t|re|ve|m|ll|d)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+"
-    return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0)))
-
-
 def fingerprint_md5(col: Column, max_chars: int = 2048) -> Column:
     """Content fingerprint of the normalized text (exact-dup key).
 
@@ -135,8 +121,3 @@ def fingerprint_md5(col: Column, max_chars: int = 2048) -> Column:
     into one "exact" group (found r5 by a synthetic prefix-sharing pair:
     the cascade reported jaccard 1.0 for a true-0.885 pair)."""
     return F.md5(normalize_text(col, max_chars=max_chars))
-
-
-def fingerprint_xxhash(col: Column) -> Column:
-    """64-bit content fingerprint — cheaper than md5, JVM xxhash64."""
-    return F.xxhash64(normalize_text(col))

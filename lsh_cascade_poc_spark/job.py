@@ -38,7 +38,9 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="output directory: clusters/ and dup_pairs/ parquet")
     p.add_argument("--jaccard-threshold", type=float, default=None)
     p.add_argument("--shingle-k", type=int, default=None)
-    p.add_argument("--n-perm", type=int, default=None)
+    p.add_argument("--n-perm", type=int, default=None,
+                   help="MinHash signature length; the default band tiers "
+                        "read 126 lanes")
     p.add_argument("--hot-band-cap", type=int, default=None)
     p.add_argument("--no-overlap", action="store_true",
                    help="skip the winnowing long-overlap stage")

@@ -47,13 +47,12 @@ def explode_bands(
     tier: int,
     n_bands: int,
     rows_per_band: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """-> (doc_id, tier, band_id, band_key). posexplode keeps the band index,
     mirroring the segment_id column of the reference's segment index."""
     return (
         signatures.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.posexplode(
                 band_keys_column(sig_col, tier, n_bands, rows_per_band)
             ).alias("band_id", "band_key"),

@@ -197,11 +197,11 @@ def connected_components(
     return members.unionByName(roots).distinct()
 
 
-def clusters_with_singletons(clusters: DataFrame, all_docs: DataFrame,
-                             id_col: str = "doc_id") -> DataFrame:
+def clusters_with_singletons(clusters: DataFrame,
+                             all_docs: DataFrame) -> DataFrame:
     """Union non-duplicated docs back as their own clusters."""
     singles = (
-        all_docs.select(F.col(id_col).alias("doc_id"))
+        all_docs.select("doc_id")
         .join(clusters.select("doc_id"), "doc_id", "left_anti")
         .withColumn("cluster_id", F.col("doc_id"))
     )

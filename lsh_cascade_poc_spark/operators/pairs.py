@@ -111,20 +111,16 @@ def survivors(pairs: DataFrame) -> DataFrame:
     )
 
 
-def tag_exact_duplicates(
-    docs_with_fp: DataFrame, fp_col: str = "fingerprint", id_col: str = "doc_id"
-) -> DataFrame:
+def tag_exact_duplicates(docs_with_fp: DataFrame) -> DataFrame:
     """ONE window pass: adds ``_root`` = min id of the row's fingerprint
     group. Materialize THIS table once, then split into representatives
     (id == _root) and star edges (id != _root) with two cheap filters —
     r1 ran the window twice by materializing reps and edges separately."""
-    w = Window.partitionBy(fp_col)
-    return docs_with_fp.withColumn("_root", F.min(id_col).over(w))
+    w = Window.partitionBy("fingerprint")
+    return docs_with_fp.withColumn("_root", F.min("doc_id").over(w))
 
 
-def split_exact_duplicates(
-    tagged: DataFrame, id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
+def split_exact_duplicates(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(representatives, star_edges) from a tag_exact_duplicates output.
 
     representatives = the min-id row of every fingerprint group; star_edges =
@@ -135,10 +131,10 @@ def split_exact_duplicates(
     Near-dup relations are invariant under the collapse (identical text =>
     identical shingles => identical jaccard to any third doc), and connected
     components re-attaches members through the star edges."""
-    reps = tagged.filter(F.col(id_col) == F.col("_root")).drop("_root")
+    reps = tagged.filter(F.col("doc_id") == F.col("_root")).drop("_root")
     star = (
-        tagged.filter(F.col(id_col) != F.col("_root"))
-        .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
+        tagged.filter(F.col("doc_id") != F.col("_root"))
+        .select(F.col("_root").alias("id_a"), F.col("doc_id").alias("id_b"))
     )
     return reps, star
 

@@ -319,12 +319,11 @@ def make_winnow_udf(k: int, w: int):
     return winnow_udf
 
 
-def winnow_fingerprints(docs: DataFrame, k: int, w: int,
-                        text_col: str = "doc_text", id_col: str = "doc_id") -> DataFrame:
-    """-> (doc_id, fp, pos) exploded fingerprint table."""
+def winnow_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
+    """(doc_id, doc_text) -> (doc_id, fp, pos) exploded fingerprint table."""
     udf = make_winnow_udf(k, w)
     return (
-        docs.select(F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("w"))
+        docs.select("doc_id", udf(F.col("doc_text")).alias("w"))
         .select("doc_id", F.explode(F.arrays_zip(F.col("w.fps").alias("fp"),
                                                  F.col("w.poss").alias("pos"))).alias("f"))
         .select("doc_id", F.col("f.fp").alias("fp"), F.col("f.pos").alias("pos"))
@@ -511,17 +510,12 @@ def verify_overlaps(
     docs: DataFrame,
     k: int,
     min_overlap_chars: int,
-    text_col: str = "doc_text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact verification: join texts onto seed pairs, extend seeds inside a
     mapInPandas batch kernel -> (id_a, id_b, overlap_chars) for survivors.
     Texts are utf-8-encoded JVM-SIDE (F.encode) so the Python kernel touches
     ready bytes — no per-row str->bytes encode of multi-KB documents."""
-    docs_sel = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("t"),
-    )
+    docs_sel = docs.select("doc_id", F.encode("doc_text", "UTF-8").alias("t"))
     sided = (
         candidates.join(docs_sel.withColumnsRenamed({"doc_id": "id_a", "t": "text_a"}), "id_a")
         .join(docs_sel.withColumnsRenamed({"doc_id": "id_b", "t": "text_b"}), "id_b")

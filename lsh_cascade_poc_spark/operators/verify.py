@@ -27,15 +27,14 @@ def attach_pair_sides(
     pairs: DataFrame,
     signatures: DataFrame,
     cols: list[str],
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """pairs(id_a, id_b, ...) + signatures(doc_id, *cols) ->
     pairs + {c}_a + {c}_b for each requested column."""
     sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
+        F.col("doc_id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
     )
     sig_b = signatures.select(
-        F.col(id_col).alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
+        F.col("doc_id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
     )
     return pairs.join(sig_a, "id_a").join(sig_b, "id_b")
 
@@ -45,8 +44,6 @@ def verify_pairs_exact_jaccard(
     signatures: DataFrame,
     threshold: float,
     estimate_margin: float | None = 0.1,
-    shingles_col: str = "shingles",
-    minhash_col: str = "minhash",
     shingle_provider=None,
 ) -> DataFrame:
     """-> dup_pairs(id_a, id_b, jaccard), verified in three widening joins so
@@ -81,7 +78,7 @@ def verify_pairs_exact_jaccard(
         )
     else:
         sizes = signatures.select(
-            F.col("doc_id"), F.size(shingles_col).alias("n_sh")
+            F.col("doc_id"), F.size("shingles").alias("n_sh")
         )
     p = (
         pairs.join(sizes.withColumnsRenamed({"doc_id": "id_a", "n_sh": "n_a"}), "id_a")
@@ -94,10 +91,10 @@ def verify_pairs_exact_jaccard(
     )
 
     if estimate_margin is not None:
-        mh = signatures.select("doc_id", minhash_col)
+        mh = signatures.select("doc_id", "minhash")
         p = (
-            p.join(mh.withColumnsRenamed({"doc_id": "id_a", minhash_col: "mh_a"}), "id_a")
-            .join(mh.withColumnsRenamed({"doc_id": "id_b", minhash_col: "mh_b"}), "id_b")
+            p.join(mh.withColumnsRenamed({"doc_id": "id_a", "minhash": "mh_a"}), "id_a")
+            .join(mh.withColumnsRenamed({"doc_id": "id_b", "minhash": "mh_b"}), "id_b")
             .filter(
                 jaccard_estimate_from_signatures(F.col("mh_a"), F.col("mh_b"))
                 >= F.lit(threshold - estimate_margin)
@@ -113,11 +110,9 @@ def verify_pairs_exact_jaccard(
         )
         shingle_src = shingle_provider(ids)
     else:
-        shingle_src = signatures.select("doc_id", shingles_col)
-    sided = attach_pair_sides(p, shingle_src, [shingles_col])
-    jac = jaccard_on_shingle_arrays(
-        F.col(f"{shingles_col}_a"), F.col(f"{shingles_col}_b")
-    )
+        shingle_src = signatures.select("doc_id", "shingles")
+    sided = attach_pair_sides(p, shingle_src, ["shingles"])
+    jac = jaccard_on_shingle_arrays(F.col("shingles_a"), F.col("shingles_b"))
     return (
         sided.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)

@@ -170,6 +170,11 @@ def minhash_candidate_pairs(
     if persist_registry is not None:
         persist_registry.append(coarse_pairs)
 
+    # a candidate must be generated by the coarse tier AND confirmed by the
+    # tight tier (the cascade's AND-tightening); when tight_min_match == 0 the
+    # tight tier is bypassed: it builds nothing and records no drops
+    if cfg.tight_min_match <= 0:
+        return coarse_pairs, hot0
     # tier 1: tight bands computed only for tier-0 survivors (cascade gate);
     # min-match counting prunes candidates (src/dflsh.py:187-197 analog)
     surv = survivors(coarse_pairs)
@@ -183,16 +188,8 @@ def minhash_candidate_pairs(
     tight_pairs = pairs_with_min_match(tight_kept, cfg.tight_min_match).select(
         "id_a", "id_b"
     )
-
-    # a candidate must be generated by the coarse tier AND confirmed by the
-    # tight tier (the cascade's AND-tightening); when tight_min_match == 0 the
-    # tight tier is bypassed.
-    if cfg.tight_min_match > 0:
-        cand = coarse_pairs.join(tight_pairs, ["id_a", "id_b"], "inner")
-    else:
-        cand = coarse_pairs
-    hot = hot0.unionByName(hot1)
-    return cand, hot
+    cand = coarse_pairs.join(tight_pairs, ["id_a", "id_b"], "inner")
+    return cand, hot0.unionByName(hot1)
 
 
 def simhash_candidate_pairs(

@@ -9,7 +9,8 @@ practice, so the engine ships an incremental path:
          file-per-conversation-chunk contract; for turns arriving ACROSS
          micro-batches use streaming_state.assemble_conversations_stream,
          the applyInPandasWithState + event-time-timeout assembler) and
-         collapse exact duplicates (within the batch and against fp_index)
+         collapse exact duplicates (within the batch and against the
+         fingerprints of the indexed signatures)
       2. run three independent branches at once (pipeline.py
          run_concurrently), each reading only the docs and the index as it
          stood before this batch:
@@ -41,17 +42,27 @@ may still collide with.
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
 state lives in parquet tables (index_dir), so the stream is restartable via
-Spark's checkpointLocation + idempotent batch-id guard.
+Spark's checkpointLocation + idempotent batch-id guard. Each fact is stored
+once, in one of seven tables (INDEX_TABLES):
+
+  docs            (conv_id, doc_id, fingerprint) of every ingested doc
+  signatures      fresh representatives' signatures; its (fingerprint,
+                  doc_id) projection is also the exact-collapse index
+  bands           their capped tier-0 bands
+  dup_pairs       (id_a, id_b, jaccard) evidence
+  overlap_fps     winnow fingerprints of long fresh representatives
+  texts           (doc_id, doc_text) of those long representatives
+  hot_band_drops  the recorded hot-bucket drops
 """
 
 from __future__ import annotations
 
-import os
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoint import resolve_fs
 from .config import DedupConfig
 from .operators.bands import bucket_sizes
 from .operators.pairs import pairs_from_bands, split_exact_duplicates
@@ -77,9 +88,10 @@ TURNS_DDL = (
     "ts timestamp"
 )
 
-# every index table, one batch_id-partitioned parquet directory each
-INDEX_TABLES = ("docs", "signatures", "bands", "fp_index", "dup_pairs",
-                "overlap_fps", "texts", "hot_band_drops")
+# every index table, one batch_id-partitioned parquet directory each; every
+# batch writes all of them and every compaction folds all of them
+INDEX_TABLES = ("docs", "signatures", "bands", "dup_pairs", "overlap_fps",
+                "texts", "hot_band_drops")
 
 
 class IncrementalDedup:
@@ -87,11 +99,16 @@ class IncrementalDedup:
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cfg: DedupConfig | None = None,
-                 enable_overlap: bool = True,
                  compact_every: int = 32):
         self.spark = spark
         self.index_dir = index_dir
         self.cfg = cfg or DedupConfig()
+        if not self.cfg.store_shingles:
+            raise ValueError(
+                "IncrementalDedup needs store_shingles=True: the index keeps "
+                "no text of short representatives, so the verify cannot "
+                "re-shingle them"
+            )
         # fold per-batch subdirectories into one compacted partition every
         # this many batches (0 disables). Without it the index accumulates
         # one directory per micro-batch FOREVER and every batch's probe pays
@@ -99,39 +116,12 @@ class IncrementalDedup:
         # nit left by r3 (VERDICT r3 #5). See _compact for the idempotent
         # marker protocol.
         self.compact_every = compact_every
-        # batch-parity: the winnowing long-overlap stage also runs
-        # incrementally (new docs' fingerprints probe a persistent fp
-        # index; texts of indexed representatives are kept so the exact
-        # extension can verify both sides). Overlap evidence lands in
-        # dup_pairs with the batch path's jaccard = -1 marker.
-        self.enable_overlap = enable_overlap
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         fs.create_dir(root, recursive=True)
-
-    def _fs(self):
-        """(pyarrow FileSystem, index_dir path inside it) — URI-aware like
-        StageStore, so the index can live on s3://…/hdfs://… in a cluster
-        deployment while the driver's marker bookkeeping keeps working."""
-        from pyarrow import fs as pafs
-
-        if "://" in self.index_dir:
-            return pafs.FileSystem.from_uri(self.index_dir)
-        return pafs.LocalFileSystem(), os.path.abspath(self.index_dir)
 
     def _path(self, name: str) -> str:
         """Path as Spark sees it (keeps the URI scheme)."""
         return f"{self.index_dir.rstrip('/')}/{name}"
-
-    def _exists(self, name: str) -> bool:
-        from pyarrow import fs as pafs
-
-        fs, root = self._fs()
-        sel = pafs.FileSelector(f"{root.rstrip('/')}/{name}", recursive=True,
-                                allow_not_found=True)
-        return any(
-            i.is_file and i.path.endswith(".parquet")
-            for i in fs.get_file_info(sel)
-        )
 
     def _list_table(self, name: str) -> tuple[dict[int, str], list[int]]:
         """Direct children of a table dir -> ({batch_or_gen dir key: base
@@ -140,7 +130,7 @@ class IncrementalDedup:
         count only when their ``_compact_<gen>_done`` marker exists."""
         from pyarrow import fs as pafs
 
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         infos = fs.get_file_info(
             pafs.FileSelector(f"{root.rstrip('/')}/{name}",
                               allow_not_found=True)
@@ -161,45 +151,44 @@ class IncrementalDedup:
                     pass
         return dirs, gens
 
-    def _table_paths(self, name: str, upto: int | None = None) -> list[str]:
-        """Spark-readable subdirectory paths forming the CURRENT view of a
-        table: the newest MARKED compacted partition plus every per-batch
-        directory above its watermark. Stale artifacts a crash can leave
+    def _read_table(self, name: str, batch_id: int | None = None,
+                    like: DataFrame | None = None) -> DataFrame:
+        """One listing of a table's directory -> its CURRENT view: the
+        newest MARKED compacted partition plus every per-batch directory
+        above its watermark (and below `batch_id` when given: the index as
+        it stood before that batch). Stale artifacts a crash can leave
         behind — an unmarked compacted dir (died before its marker), an
         older compacted gen or folded batch dirs (died before GC) — are
-        excluded by construction, so deletion in _compact is pure garbage
-        collection, never a correctness step."""
+        never selected, so deletion in _compact is pure garbage collection,
+        never a correctness step. Leaving out the reading batch's own
+        directory hides a crashed attempt's half-written output from its
+        replay, which then overwrites that directory, so a replay can never
+        accumulate duplicate rows. (A replayed batch can never sit BELOW a
+        compaction watermark: compaction only folds done-marked batches,
+        and done batches short-circuit in process_batch.)
+
+        With nothing selected the view is ``like.limit(0)`` — the first
+        batch probes an EMPTY index through the same code path, and
+        Catalyst prunes the empty relation out of its plans; without
+        `like` an empty table raises."""
         dirs, gens = self._list_table(name)
         gen = max((g for g in gens if -(g + 1) in dirs), default=None)
-        keys: list[int] = []
-        if gen is not None:
-            keys.append(-(gen + 1))
-        keys.extend(sorted(
+        keys = [] if gen is None else [-(gen + 1)]
+        keys += sorted(
             b for b in dirs
             if b >= 0 and (gen is None or b > gen)
-            and (upto is None or b <= upto)
-        ))
-        return [f"{self._path(name)}/{dirs[k]}" for k in keys]
-
-    def _read_table(self, name: str, exclude_batch: int | None = None) -> DataFrame:
-        """Read a batch-partitioned index table, dropping the discovery
-        column. A replayed batch overwrites its own subdirectory, so a crash
-        between appends can never accumulate duplicate rows (idempotency is
-        per-directory, not per-append). `exclude_batch` additionally hides a
-        batch's OWN partial output from its replay: without it, the replay's
-        probe would read the crashed attempt's half-written signatures/bands
-        as if they were index state. (A replayed batch can never sit BELOW a
-        compaction watermark: compaction only folds done-marked batches, and
-        done batches short-circuit in process_batch.)"""
-        paths = self._table_paths(name)
-        if not paths:  # only stale unmarked artifacts present: empty view
-            return self.spark.read.parquet(self._path(name)).limit(0) \
-                .drop("batch_id")
-        df = self.spark.read.option("basePath", self._path(name)) \
-            .parquet(*paths)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch_id") != exclude_batch)
-        return df.drop("batch_id")
+            and (batch_id is None or b < batch_id)
+        )
+        if not keys:
+            if like is None:
+                raise FileNotFoundError(
+                    f"index table {name!r} under {self.index_dir} holds no "
+                    "batch yet"
+                )
+            return like.limit(0)
+        base = self._path(name)
+        return self.spark.read.option("basePath", base) \
+            .parquet(*(f"{base}/{dirs[k]}" for k in keys)).drop("batch_id")
 
     def _compact(self, upto: int) -> None:
         """Fold every per-batch subdirectory with batch_id <= upto (all
@@ -219,15 +208,13 @@ class IncrementalDedup:
              prefer this gen and ignore everything at or below it),
           3. best-effort GC of folded batch dirs, older compacted gens and
              their markers (a crash here leaves garbage, not wrong answers —
-             see _table_paths).
+             see _read_table).
         """
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         dirs, gens = self._list_table(name)
         if not any(0 <= b <= upto for b in dirs):
             return  # nothing to fold (table absent or already compact)
-        view = self._table_paths(name, upto=upto)
-        df = self.spark.read.option("basePath", self._path(name)) \
-            .parquet(*view).drop("batch_id")
+        df = self._read_table(name, upto + 1)
         # single partition: the compacted result IS the small historical
         # tail; at cluster scale raise this to taste via repartition
         df.coalesce(1).write.mode("overwrite").parquet(
@@ -259,7 +246,7 @@ class IncrementalDedup:
         cfg = self.cfg
         from pyarrow import fs as pafs
 
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         done_marker = f"{root.rstrip('/')}/_batch_{batch_id}_done"
         if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
             return  # replayed micro-batch after restart: already applied
@@ -271,12 +258,10 @@ class IncrementalDedup:
             returns before the first index write below, so a failing batch
             leaves no done-marker."""
             ids = docs.select("conv_id", "doc_id")
-            if self._exists("docs"):
-                ids = ids.unionByName(
-                    self._read_table("docs", exclude_batch=batch_id)
-                    .select("conv_id", "doc_id")
-                )
-            check_doc_id_collisions(ids)
+            check_doc_id_collisions(ids.unionByName(
+                self._read_table("docs", batch_id, like=ids)
+                .select("conv_id", "doc_id")
+            ))
 
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
@@ -284,32 +269,29 @@ class IncrementalDedup:
         # kernel invocations, and never m rows in a band bucket of the
         # PERSISTENT index (where one such bucket would make every future
         # batch's probe join quadratic). Within-batch groups collapse to
-        # their min-id rep; reps whose fingerprint is already indexed
-        # (fp_index: one row per distinct fingerprint ever seen) attach to
-        # the indexed root by an equi-join and are not signed or banded.
+        # their min-id rep; reps whose fingerprint is already indexed (the
+        # signatures table holds one row per distinct fingerprint ever seen;
+        # Parquet reads only the two projected columns) attach to the
+        # indexed root by an equi-join and are not signed or banded.
         reps_docs, exact_pairs = split_exact_duplicates(docs)
-        if self._exists("fp_index"):
-            idx_fp = self._read_table("fp_index", exclude_batch=batch_id)
-            matched = reps_docs.join(
-                idx_fp.withColumnRenamed("root_id", "id_old"), "fingerprint"
-            ).select("doc_id", "id_old")
-            exact_old = (
-                matched.select(
-                    F.least("doc_id", "id_old").alias("id_a"),
-                    F.greatest("doc_id", "id_old").alias("id_b"),
-                )
-                # a conversation re-delivered in a later batch (at-least-once
-                # source) matches its OWN fp_index row — same guard as the
-                # band-probe join below, else a degenerate self-pair lands in
-                # dup_pairs
-                .filter(F.col("id_a") != F.col("id_b"))
+        idx_fp = self._read_table("signatures", batch_id, like=reps_docs) \
+            .select("fingerprint", F.col("doc_id").alias("id_old"))
+        matched = reps_docs.join(idx_fp, "fingerprint") \
+            .select("doc_id", "id_old")
+        exact_pairs = exact_pairs.unionByName(
+            matched.select(
+                F.least("doc_id", "id_old").alias("id_a"),
+                F.greatest("doc_id", "id_old").alias("id_b"),
             )
-            exact_pairs = exact_pairs.unionByName(exact_old)
-            fresh_reps_docs = reps_docs.join(
-                matched.select("doc_id"), "doc_id", "left_anti"
-            )
-        else:
-            fresh_reps_docs = reps_docs
+            # a conversation re-delivered in a later batch (at-least-once
+            # source) matches its OWN indexed row — same guard as the
+            # band-probe join below, else a degenerate self-pair lands in
+            # dup_pairs
+            .filter(F.col("id_a") != F.col("id_b"))
+        )
+        fresh_reps_docs = reps_docs.join(
+            matched.select("doc_id"), "doc_id", "left_anti"
+        )
 
         def band_branch():
             """Signatures -> capped tier-0 bands -> band probe candidates,
@@ -317,17 +299,8 @@ class IncrementalDedup:
             sigs = build_signatures(fresh_reps_docs, cfg) \
                 .localCheckpoint(eager=True)
             new_bands = coarse_bands(sigs, cfg)
-            # a missing index is just an EMPTY index: one code path for the
-            # first and every later batch, so a cap-semantics fix can never
-            # silently diverge between them (the empty-side joins are no-ops
-            # under AQE)
-            if self._exists("bands"):
-                idx_bands = self._read_table("bands", exclude_batch=batch_id)
-                idx_sigs = self._read_table("signatures",
-                                            exclude_batch=batch_id)
-            else:
-                idx_bands = new_bands.limit(0)
-                idx_sigs = sigs.limit(0)
+            idx_bands = self._read_table("bands", batch_id, like=new_bands)
+            idx_sigs = self._read_table("signatures", batch_id, like=sigs)
             # hot-band cap over the COMBINED (index ∪ new) band table: a
             # bucket that grew hot across batches is excluded from probing
             # on BOTH sides and from the index append, and the drop is
@@ -355,24 +328,17 @@ class IncrementalDedup:
             overlap_pairs): fresh reps' winnow fingerprints probe the
             persistent overlap_fps index through the batch operator itself
             (overlap_candidates with an index); pairs verify by exact
-            extension over the texts table. -> (long reps, their
-            fingerprints, substring-proven pairs), all None when the stage
-            is off."""
-            if not self.enable_overlap:
-                return None, None, None
-            long_reps = overlap_docs_gate(fresh_reps_docs, cfg)
+            extension over the texts table. Overlap evidence lands in
+            dup_pairs with the batch path's jaccard = -1 marker. -> (texts
+            of the long reps, their fingerprints, substring-proven
+            pairs)."""
+            long_texts = overlap_docs_gate(fresh_reps_docs, cfg) \
+                .select("doc_id", "doc_text")
             new_fps = winnow_fingerprints(
-                long_reps, cfg.winnow_kgram_chars, cfg.winnow_window
+                long_texts, cfg.winnow_kgram_chars, cfg.winnow_window
             ).localCheckpoint(eager=True)
-            if self._exists("overlap_fps"):
-                idx_ofps = self._read_table("overlap_fps",
-                                            exclude_batch=batch_id)
-                idx_texts = self._read_table("texts", exclude_batch=batch_id)
-            else:
-                idx_ofps = new_fps.limit(0)
-                idx_texts = fresh_reps_docs.select(
-                    "doc_id", "doc_text"
-                ).limit(0)
+            idx_ofps = self._read_table("overlap_fps", batch_id, like=new_fps)
+            idx_texts = self._read_table("texts", batch_id, like=long_texts)
             ov_persists: list = []
             ov_cands = overlap_candidates(
                 new_fps,
@@ -381,9 +347,7 @@ class IncrementalDedup:
                 persist_registry=ov_persists,
                 index=idx_ofps,
             )
-            texts_all = idx_texts.unionByName(
-                long_reps.select("doc_id", "doc_text")
-            )
+            texts_all = idx_texts.unionByName(long_texts)
             ov_pairs = (
                 verify_overlaps(ov_cands, texts_all, cfg.winnow_kgram_chars,
                                 cfg.min_overlap_chars)
@@ -393,22 +357,21 @@ class IncrementalDedup:
             # the gate set persisted inside the candidate probe is consumed
             # by the materialization above
             release_persisted(ov_persists)
-            return long_reps, new_fps, ov_pairs
+            return long_texts, new_fps, ov_pairs
 
         # the three branches read only docs and the index as it stood before
         # this batch, and meet first at verify
         (sigs, hot, kept_new, cands, all_sigs), \
-            (long_reps, new_fps, ov_pairs), _ = run_concurrently(
+            (long_texts, new_fps, ov_pairs), _ = run_concurrently(
                 self.spark, band_branch, overlap_branch, check_ids
             )
 
         # ov_pairs candidates join the Jaccard verify; substring-proven pairs
         # that fail Jaccard keep the batch path's jaccard = -1 evidence
         # marker (merge_evidence)
-        if ov_pairs is not None:
-            cands = cands.unionByName(ov_pairs).distinct()
         verified = verify_pairs_exact_jaccard(
-            cands, all_sigs, threshold=cfg.jaccard_threshold
+            cands.unionByName(ov_pairs).distinct(), all_sigs,
+            threshold=cfg.jaccard_threshold,
         )
         # materialize BEFORE touching the index dirs: dup's lazy plan reads
         # the existing bands/signatures batches, and a replay OVERWRITES this
@@ -422,34 +385,28 @@ class IncrementalDedup:
         # done-marker is a true commit point (ADVICE r1: plain appends made
         # replays duplicate rows). The writes are independent and run
         # concurrently; the marker follows the last of them.
-        writes = [
+        writes = {
             # narrow per-doc bookkeeping (EVERY doc, signed or not): id
-            # mapping + fingerprint + exact-group root — the signature table
-            # carries only fresh representatives
-            (docs.select("conv_id", "doc_id", "fingerprint", "_root"), "docs"),
-            (sigs, "signatures"),
-            (kept_new, "bands"),
-            (sigs.select("fingerprint", F.col("doc_id").alias("root_id")),
-             "fp_index"),
-            (dup, "dup_pairs"),
+            # mapping + fingerprint — the signature table carries only fresh
+            # representatives
+            "docs": docs.select("conv_id", "doc_id", "fingerprint"),
+            "signatures": sigs,
+            "bands": kept_new,
+            "dup_pairs": dup,
+            "overlap_fps": new_fps,
+            # texts of fresh LONG representatives (every possible verify
+            # candidate is gated, so short docs are dead weight here): the
+            # overlap verify of every FUTURE batch needs the indexed side's
+            # raw text. At cluster scale this table is a projection of the
+            # corpus the stream already owns — point it at the source table
+            # instead of materializing when storage matters.
+            "texts": long_texts,
             # A5 analog: dropped hot buckets are recorded, never silent
-            (hot, "hot_band_drops"),
-        ]
-        if self.enable_overlap:
-            writes += [
-                (new_fps, "overlap_fps"),
-                # texts of fresh LONG representatives (every possible verify
-                # candidate is gated, so short docs are dead weight here):
-                # the overlap verify of every FUTURE batch needs the indexed
-                # side's raw text. At cluster scale this table is a
-                # projection of the corpus the stream already owns — point
-                # it at the source table instead of materializing when
-                # storage matters.
-                (long_reps.select("doc_id", "doc_text"), "texts"),
-            ]
+            "hot_band_drops": hot,
+        }
         run_concurrently(self.spark, *(
-            partial(self._write_batch, df, name, batch_id)
-            for df, name in writes
+            partial(self._write_batch, writes[name], name, batch_id)
+            for name in INDEX_TABLES
         ))
         with fs.open_output_stream(done_marker) as f:
             f.write(b"ok")
@@ -484,28 +441,24 @@ class IncrementalDedup:
 
     def docs(self) -> DataFrame:
         """Narrow per-doc bookkeeping for EVERY ingested doc:
-        (conv_id, doc_id, fingerprint, _root). _root is the GLOBAL
-        exact-group root (the fingerprint's first-indexed representative,
-        resolved through fp_index at read time — one row per distinct
-        fingerprint ever seen), so an exact group straddling micro-batches
-        reads with ONE root; the per-batch rows on disk keep their
-        within-batch root untouched for idempotent replays."""
-        d = self._read_table("docs")
-        if not self._exists("fp_index"):
-            return d
-        fp = self._read_table("fp_index")
+        (fingerprint, conv_id, doc_id, _root). _root is the GLOBAL
+        exact-group root, derived at read time: the fingerprint's
+        first-indexed representative, i.e. its one row in the signatures
+        table. An exact group straddling micro-batches thus reads with ONE
+        root."""
+        roots = self._read_table("signatures") \
+            .select("fingerprint", F.col("doc_id").alias("root_id"))
         return (
-            d.drop("_root")
-            .join(fp, "fingerprint", "left")
+            self._read_table("docs")
+            .join(roots, "fingerprint", "left")
             .withColumn("_root", F.coalesce("root_id", F.col("doc_id")))
             .drop("root_id")
         )
 
     def hot_band_drops(self) -> DataFrame:
         """Recorded hot-bucket drops (tier, band_id, band_key, n_docs) per
-        batch — empty DataFrame if no batch has dropped anything yet."""
-        if not self._exists("hot_band_drops"):
-            return self.spark.createDataFrame(
-                [], "tier int, band_id int, band_key bigint, n_docs bigint"
-            )
-        return self._read_table("hot_band_drops")
+        batch — empty before the first batch."""
+        empty = self.spark.createDataFrame(
+            [], "tier int, band_id int, band_key bigint, n_docs bigint"
+        )
+        return self._read_table("hot_band_drops", like=empty)

@@ -81,6 +81,47 @@ def test_hot_band_cap_drops_and_records(spark):
     assert kept2.count() == 10 and hot2.count() == 0
 
 
+def test_bypassed_tight_tier_records_no_drops(spark):
+    """tight_min_match == 0 bypasses tier 1: the candidates are the coarse
+    pairs and no tier-1 bucket is built, so none is recorded as dropped."""
+    from lsh_cascade_poc_spark.config import DedupConfig
+    from lsh_cascade_poc_spark.pipeline import minhash_candidate_pairs
+
+    # coarse (2 bands x 4 lanes) pairs A-B and B-C through buckets of 2;
+    # tight (8 bands x 1 lane): lane 3 is one bucket of all three, above
+    # the cap
+    sigs = _sig_df(spark, {
+        1: [1, 1, 1, 1, 2, 2, 2, 2],
+        2: [1, 1, 1, 1, 3, 3, 3, 3],
+        3: [5, 5, 5, 1, 3, 3, 3, 3],
+    })
+    geometry = dict(n_perm=8, coarse_n_bands=2, coarse_rows_per_band=4,
+                    tight_n_bands=8, tight_rows_per_band=1, hot_band_cap=2)
+    _, hot = minhash_candidate_pairs(sigs, DedupConfig(**geometry))
+    assert [(r.tier, r.band_id, r.n_docs) for r in hot.collect()] == [(1, 3, 3)]
+
+    cands, hot = minhash_candidate_pairs(
+        sigs, DedupConfig(tight_min_match=0, **geometry))
+    assert sorted((r.id_a, r.id_b) for r in cands.collect()) == [(1, 2), (2, 3)]
+    assert hot.filter(F.col("tier") == 1).count() == 0
+
+
+@pytest.mark.parametrize("bad", [
+    dict(n_perm=32),                     # coarse 16 x 4 = 64 lanes
+    dict(n_perm=64),                     # tight 21 x 6 = 126 lanes
+    dict(tight_n_bands=22),              # tight 22 x 6 = 132 lanes
+    dict(simhash_band_bits=24),          # 64 bits in 24-bit bands
+])
+def test_config_rejects_bands_past_the_signature(bad):
+    """A band slice past the end of the signature would be empty — one
+    bucket every doc shares — so such geometry is refused up front."""
+    from lsh_cascade_poc_spark.config import DedupConfig
+
+    with pytest.raises(ValueError):
+        DedupConfig(**bad)
+    DedupConfig(n_perm=64, coarse_n_bands=16, tight_n_bands=10)  # fits
+
+
 def test_survivors_and_exact_pairs(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     surv = sorted({r.doc_id for r in survivors(pairs).collect()})

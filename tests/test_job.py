@@ -23,7 +23,7 @@ def _run_job(input_path: str, work: str, out: str) -> dict:
     cmd = [
         sys.executable, "-m", "lsh_cascade_poc_spark",
         "--input", input_path, "--work-dir", work, "--output", out,
-        "--n-perm", "32", "--no-overlap",
+        "--no-overlap",
     ]
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,

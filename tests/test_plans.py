@@ -57,7 +57,8 @@ def test_band_self_join_is_hash_join_not_nested_loop(spark, tiny_turns):
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
     from lsh_cascade_poc_spark.pipeline import build_signatures
 
-    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4)
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
+                      tight_n_bands=5)
     docs = with_doc_id(assemble_conversations(tiny_turns))
     sigs = build_signatures(docs, cfg)
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
@@ -93,7 +94,8 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
         joins = [ln for ln in plan.splitlines() if "Join " in ln]
         return plan, joins, [ln for ln in joins if "id_a#" in ln]
 
-    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4)
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
+                      tight_n_bands=5)
     docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
     sigs = build_signatures(docs, cfg).localCheckpoint()
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
@@ -122,7 +124,8 @@ def test_signature_kernel_is_one_fused_arrow_pass(spark, tiny_turns):
     docs = with_doc_id(assemble_conversations(tiny_turns))
     # "simple" mode: one line per node ("formatted" repeats each node in the
     # detail section, double-counting)
-    plan = plan_of(build_signatures(docs, DedupConfig(n_perm=32)), mode="simple")
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=8, tight_n_bands=5)
+    plan = plan_of(build_signatures(docs, cfg), mode="simple")
     n_arrow_nodes = plan.count("ArrowEvalPython")
     assert n_arrow_nodes == 1, f"{n_arrow_nodes} Arrow UDF nodes:\n{plan}"
 

@@ -13,7 +13,8 @@ from lsh_cascade_poc_spark.config import DedupConfig
 from lsh_cascade_poc_spark.datagen.transcripts import generate_corpus
 from lsh_cascade_poc_spark.streaming import TURNS_DDL, IncrementalDedup
 
-CFG = DedupConfig(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4)
+CFG = DedupConfig(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
+                  tight_n_bands=5)
 
 
 def test_incremental_matches_batchwise(spark, tmp_path):
@@ -140,7 +141,8 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     (b) cap hot band buckets over (index ∪ new) with recorded drops, so one
     boilerplate band key can never make future probe joins quadratic."""
     cfg = DedupConfig(
-        n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4, hot_band_cap=2
+        n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4, tight_n_bands=5,
+        hot_band_cap=2,
     )
     flood = "FLOOD the same identical payload text repeated verbatim " * 3
     common = (
@@ -221,7 +223,7 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
 
 def test_redelivered_conversation_no_self_pair(spark, tmp_path):
     """A conversation re-delivered in a LATER batch (at-least-once source:
-    rewritten file, replayed upstream) matches its OWN fp_index entry; the
+    rewritten file, replayed upstream) matches its OWN indexed fingerprint; the
     exact-fingerprint fast path must not emit a degenerate self-pair
     (id_a == id_b) into dup_pairs."""
     corpus = generate_corpus(n_base=10, dup_fraction=0.3, seed=13)
@@ -285,15 +287,6 @@ def test_streaming_cross_batch_overlap(spark, tmp_path):
     assert pairs[want] == -1.0  # substring-proven, sub-threshold Jaccard
     assert all(id_map["convC"] not in p for p in pairs)
 
-    # the overlap stage can be disabled (no fp/text index tables written)
-    inc2 = IncrementalDedup(spark, str(tmp_path / "index2"), CFG,
-                            enable_overlap=False)
-    inc2.process_batch(
-        spark.createDataFrame(_mk_turns([("convA", doc_a)]), TURNS_DDL), 0
-    )
-    assert not inc2._exists("overlap_fps")
-    assert not inc2._exists("texts")
-
 
 def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
     """VERDICT r3 #5: >= 20 micro-batches with compact_every=8 produce
@@ -338,7 +331,7 @@ def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
 
     # compactions fired at batch 7 and 15: everything <= 15 lives in ONE
     # compacted partition (batch_id=-16), batches 16..20 stay per-batch
-    for name in ("bands", "signatures", "fp_index", "dup_pairs", "docs"):
+    for name in ("bands", "signatures", "dup_pairs", "docs"):
         dirs_c = batch_dirs("ix_c", name)
         assert len(dirs_c) <= 1 + 8, (name, dirs_c)
         assert "batch_id=-16" in dirs_c, (name, dirs_c)
@@ -363,12 +356,29 @@ def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
     assert len(batch_dirs("ix_c", "bands")) == n_bands_before
 
 
+def test_streaming_rejects_slim_signatures(spark, tmp_path):
+    """The index keeps no text of short representatives, so streaming
+    cannot re-shingle them for the verify: store_shingles=False is refused
+    before any work runs."""
+    with pytest.raises(ValueError, match="store_shingles"):
+        IncrementalDedup(spark, str(tmp_path / "index"),
+                         DedupConfig(store_shingles=False))
+
+
 def test_docs_root_is_global_across_batches(spark, tmp_path):
     """VERDICT r3 #8: an exact-fingerprint group straddling micro-batches
     reads back from docs() with ONE global _root (the fingerprint's
-    first-indexed representative), not one root per batch."""
+    first-indexed representative), not one root per batch. The root is
+    derived at read time from the signatures table: the index holds its
+    seven tables and nothing else, and the docs table on disk keeps only
+    (conv_id, doc_id, fingerprint)."""
+    import pyarrow.parquet as pq
+
+    from lsh_cascade_poc_spark.streaming import INDEX_TABLES
+
     text = " ".join(f"tok{i} shared exact payload" for i in range(30))
-    inc = IncrementalDedup(spark, str(tmp_path / "index"), CFG)
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), CFG)
     inc.process_batch(
         spark.createDataFrame(_mk_turns([("c0", text), ("c1", text)]),
                               TURNS_DDL), 0)
@@ -381,6 +391,13 @@ def test_docs_root_is_global_across_batches(spark, tmp_path):
     assert len(roots) == 1, f"expected one global root, got {roots}"
     ids = {r.conv_id: r.doc_id for r in rows}
     assert roots == {ids["c0"]} or roots == {ids["c1"]}  # batch-0 rep
+
+    tables = sorted(d.name for d in index.iterdir() if d.is_dir())
+    assert tables == sorted(INDEX_TABLES) and len(tables) == 7
+    for b in range(2):
+        part = next((index / "docs" / f"batch_id={b}").glob("*.parquet"))
+        assert pq.read_schema(part).names == ["conv_id", "doc_id", "fingerprint"]
+    assert inc.docs().columns == ["fingerprint", "conv_id", "doc_id", "_root"]
 
 
 def test_streaming_overlap_flanked_by_boilerplate(spark, tmp_path):
@@ -477,7 +494,7 @@ def test_batch_stream_parity(spark, tmp_path):
 
     cfg = DedupConfig(
         n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
-        tight_min_match=0, simhash_hamming_tau=-1,
+        tight_n_bands=0, tight_min_match=0, simhash_hamming_tau=-1,
         hot_band_cap=10**6, overlap_hot_cap=10**6,
     )
     turns = generate_corpus(n_base=30, dup_fraction=0.5, seed=11).turns

@@ -50,7 +50,8 @@ def main() -> None:
     spark = get_spark(app_name="dump_plans", master="local[4]",
                       shuffle_partitions=8,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
-    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4)
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
+                      tight_n_bands=5)
     turns = corpus_to_spark(spark, generate_corpus(n_base=30, dup_fraction=0.3,
                                                    seed=3))
     docs = with_doc_id(assemble_conversations(turns))
