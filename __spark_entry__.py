@@ -108,9 +108,10 @@ def _docs_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word 3-gram distinct shingles, docs with >= 3 tokens. All built-ins —
-    the JVM-side shingling path (functions/shingles.py uses the same shape
-    with xxhash64; here shingles stay strings so DuckDB can mirror them).
+    """Word 3-gram distinct shingles, docs with >= 3 tokens. All built-ins,
+    and the shingles stay strings so DuckDB can mirror them (the engine
+    itself shingles inside its fused Arrow kernel, as hashed word k-grams:
+    functions/signature_udf.py).
 
     The trigram is built by zipping three shifted slices of the token array
     so the transform lambda references ONLY its own zipped element — never

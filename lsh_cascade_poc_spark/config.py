@@ -39,14 +39,15 @@ class DedupConfig:
                                      # src/db.py:64; we use 128 64-bit minhash lanes)
     minhash_seed: int = 42
 
-    # --- cascade band tiers (coarse first, tight for survivors) ---
+    # --- cascade tiers (coarse bands, then a tight filter on their pairs) ---
     # tier 0 = coarse: few rows/band => high recall, crude (the reference's
     # Overlap(8,4) wide segments, CASCADE_SEARCH_DESIGN.md:17-38)
     coarse_rows_per_band: int = 4
     coarse_n_bands: int = 16         # uses first 64 lanes
-    # tier 1 = tight: more rows/band + min-match counting (DF-LSH band filter
-    # with min_matches, src/dflsh.py:187-197)
-    # r=6, b=21 => P(candidate) at jaccard 0.8 is 1-(1-0.8^6)^21 ≈ 0.998
+    # tier 1 = tight: keep a tier-0 pair iff its signatures agree on >=
+    # tight_min_match of these slices (0 bypasses; DF-LSH band filter with
+    # min_matches, src/dflsh.py:187-197)
+    # r=6, b=21, m=1 => P(kept) at jaccard 0.8 is 1-(1-0.8^6)^21 ≈ 0.998
     # (keeps the >=0.99 recall target reachable at the decision threshold),
     # while jaccard 0.5 pairs survive with prob ≈ 0.28 — the verify stage
     # finishes the tightening.
@@ -109,8 +110,8 @@ class DedupConfig:
     cc_max_iterations: int = 20
 
     def __post_init__(self) -> None:
-        # a band slice past the end of the signature is EMPTY, and an empty
-        # band is one bucket every doc shares
+        # a slice past the end of the signature is EMPTY: one band bucket
+        # every doc shares, and a tier-1 slice every pair agrees on
         for tier in ("coarse", "tight"):
             n_bands = getattr(self, f"{tier}_n_bands")
             rows = getattr(self, f"{tier}_rows_per_band")

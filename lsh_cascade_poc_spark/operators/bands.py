@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pairs import broadcast_if_small
+
 
 def band_keys_column(sig_col: str, tier: int, n_bands: int,
                      rows_per_band: int) -> F.Column:
@@ -39,6 +41,20 @@ def band_keys_column(sig_col: str, tier: int, n_bands: int,
         for b in range(n_bands)
     ]
     return F.array(*keys)
+
+
+def slice_agreements_column(sig_a: str, sig_b: str, n_bands: int,
+                            rows_per_band: int) -> F.Column:
+    """int: on how many of the n_bands slices lanes[b*r : b*r+r]
+    (band_keys_column's geometry) the arrays sig_a and sig_b agree — the
+    number of band buckets the two docs share, counted without any."""
+    r = rows_per_band
+    same = [
+        (F.slice(F.col(sig_a), b * r + 1, r)
+         == F.slice(F.col(sig_b), b * r + 1, r)).cast("int")
+        for b in range(n_bands)
+    ]
+    return sum(same, F.lit(0))
 
 
 def explode_bands(
@@ -84,13 +100,6 @@ def bucket_sizes(
     return sizes, sizes.filter(F.col("n_docs") > cap)
 
 
-# broadcast cap for the pairable-bucket gate set — same rationale as
-# operators/suffix.py _GATE_BROADCAST_MAX_FPS (the one relation class where
-# a bigger-than-session-threshold broadcast measurably pays; falls back to
-# a shuffle join on its own when the corpus outgrows it)
-_PAIRABLE_BROADCAST_MAX = 8_000_000
-
-
 def pairable_bands(
     bands: DataFrame, cap: int,
     persist_registry: list | None = None,
@@ -102,26 +111,22 @@ def pairable_bands(
     singleton bucket can never produce a pair, and at this corpus shape
     most buckets are singletons, so the self-join's sort/probe input
     shrinks several-fold (measured on the 3.84M-turn bench corpus,
-    local[4], interleaved draws: the full coarse+tight minhash candidate
-    stage fell from 23.1-32.0s to 6.7-9.3s with identical 121,724 output
-    pairs). Do NOT use it for band tables that feed a persistent INDEX —
-    the streaming index must keep singleton buckets, because a future
-    batch's doc may collide with them.
+    local[4], interleaved draws, when tier 1 was a banded self-join too:
+    the coarse+tight minhash candidate stage fell from 23.1-32.0s to
+    6.7-9.3s with identical 121,724 output pairs). Do NOT use it for band
+    tables that feed a persistent INDEX — the streaming index must keep
+    singleton buckets, because a future batch's doc may collide with them.
 
-    The gate set is counted and broadcast iff small; past
-    _PAIRABLE_BROADCAST_MAX rows it degrades to a shuffle join — the
-    100TB-safe fallback. The count action is cheap only when `bands`
-    derives from a MATERIALIZED table (explode over the signatures
-    checkpoint) — don't feed it an expensive lazy plan."""
+    The gate set goes through broadcast_if_small, whose count action is
+    cheap only when `bands` derives from a MATERIALIZED table (explode
+    over the signatures checkpoint) — don't feed it an expensive lazy
+    plan."""
     sizes, hot = bucket_sizes(
         bands, cap, [] if persist_registry is None else persist_registry
     )
     pairable = sizes.filter(
         (F.col("n_docs") >= 2) & (F.col("n_docs") <= cap)
     ).select("tier", "band_id", "band_key")
-    gate = (
-        F.broadcast(pairable)
-        if pairable.count() <= _PAIRABLE_BROADCAST_MAX else pairable
-    )
-    kept = bands.join(gate, ["tier", "band_id", "band_key"])
+    kept = bands.join(broadcast_if_small(pairable),
+                      ["tier", "band_id", "band_key"])
     return kept, hot

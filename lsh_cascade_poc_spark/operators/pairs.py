@@ -5,7 +5,8 @@ query_chunks)` (/root/reference/src/db.py:148-169) asks "which docs share a
 band with THIS query". The all-pairs formulation asks it for every doc at
 once: self-join the exploded band table on (tier, band_id, band_key) with
 id_a < id_b. The reference's min-match counting knob (DF-LSH band_filter,
-/root/reference/src/dflsh.py:187-197,373-383) becomes groupBy(pair).count >= m.
+/root/reference/src/dflsh.py:187-197,373-383) becomes a per-pair count of
+agreeing signature slices (operators/bands.py slice_agreements_column).
 
 Every candidate tier emits its pairs through ONE join, `shared_key_pairs`:
 the MinHash band tiers and the SimHash chunks (pipeline.py), the winnow
@@ -15,11 +16,11 @@ as `index`; a batch run passes none.
 
 Cascade semantics (mirrors the 3-stage search, src/pipeline.py:68-119):
   tier 0 (coarse bands, few rows/band, high recall) generates pairs over the
-  whole corpus; tier 1 (tight bands) is computed ONLY for docs that survived
-  tier 0 (left-semi join), and its min-match count prunes the candidate set
-  before the expensive exact-Jaccard verify. Deduplicating pairs across bands
-  *before* verification is the one barrier worth paying (the reference dedups
-  its candidate set the same way, src/e2lsh.py:292-307).
+  whole corpus; tier 1 (pipeline.py tight_tier) keeps only the tier-0 pairs
+  whose signatures agree on >= tight_min_match tight slices, pruning the
+  candidate set before the expensive exact-Jaccard verify. Deduplicating
+  pairs across bands *before* both is the one barrier worth paying (the
+  reference dedups its candidate set the same way, src/e2lsh.py:292-307).
 """
 
 from __future__ import annotations
@@ -29,6 +30,27 @@ from pyspark.sql import functions as F
 
 
 BAND_KEY = ["tier", "band_id", "band_key"]
+
+# Broadcast cap for a key-gate set (the pairable band buckets, the shared
+# winnow fingerprints): below this row count the gate join broadcasts (8-16
+# bytes/row -> a blob of at most 64-128MB), above it it stays a shuffle
+# join. Why not the session-wide AQE threshold: that was deliberately
+# lowered to 8MB after mid-size TEXT relations stalled the driver
+# (session.py rationale) — gate sets are the one relation class where
+# a bigger broadcast measurably pays (r5 A/B on the 19.6M-fp bench corpus,
+# interleaved draws: broadcast 25.1-30.6s vs shuffle-gate 35.8-66.3s vs
+# shuffle_hash-hint 30.1-60.2s, identical 309,711 output rows). Scale: gate
+# sets grow with the corpus, so at the 100TB design point the count exceeds
+# this cap and the join falls back to the shuffle on its own — the
+# broadcast is an optimization the runtime size decides, never an
+# assumption.
+_GATE_BROADCAST_MAX = 8_000_000
+
+
+def broadcast_if_small(gate: DataFrame) -> DataFrame:
+    """`gate` hinted for broadcast iff it holds <= _GATE_BROADCAST_MAX rows.
+    Runs one count job over `gate`: callers persist what it derives from."""
+    return F.broadcast(gate) if gate.count() <= _GATE_BROADCAST_MAX else gate
 
 
 def shared_key_pairs(new: DataFrame, index: DataFrame | None,
@@ -82,33 +104,6 @@ def pairs_from_bands(bands: DataFrame,
     return shared_key_pairs(bands, index, BAND_KEY).select(
         "id_a", "id_b"
     ).distinct()
-
-
-def pairs_with_min_match(bands: DataFrame, min_match: int) -> DataFrame:
-    """Min-match band counting (src/dflsh.py:187-197): keep a pair only if it
-    collides in >= min_match bands -> (id_a, id_b, n_bands). min_match <= 1
-    degenerates to the plain OR-semantics band join (id_a, id_b), with no
-    counting aggregate."""
-    if min_match <= 1:
-        return pairs_from_bands(bands)
-    return (
-        shared_key_pairs(bands, None, BAND_KEY)
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-        .filter(F.col("n_bands") >= min_match)
-    )
-
-
-def survivors(pairs: DataFrame) -> DataFrame:
-    """Doc ids appearing in any candidate pair — the semi-join input that
-    gates the next (tighter) cascade tier, mirroring how the reference's
-    Stage 2 only touches Stage-1 survivors (src/pipeline.py:91-97).
-    NOT deduplicated: the only consumer is a left-semi join, which tolerates
-    duplicates — a distinct here would add a full extra shuffle of the pair
-    ids purely to shrink the semi-join's build side."""
-    return pairs.select(F.col("id_a").alias("doc_id")).unionAll(
-        pairs.select(F.col("id_b").alias("doc_id"))
-    )
 
 
 def tag_exact_duplicates(docs_with_fp: DataFrame) -> DataFrame:

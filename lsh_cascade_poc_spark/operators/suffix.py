@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pairs import shared_key_pairs
+from .pairs import broadcast_if_small, shared_key_pairs
 
 # two parallel arrays (not array<struct>): lets the kernel emit numpy arrays
 # straight through Arrow with no per-row Python dict materialization
@@ -330,21 +330,6 @@ def winnow_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
     )
 
 
-# Broadcast cap for the shared-fp GATE set (single int64 column): below
-# this row count the gate semi-join broadcasts (~8 bytes/row -> <=64MB
-# blob), above it it stays a shuffle join. Why not the session-wide AQE
-# threshold: that was deliberately lowered to 8MB after mid-size TEXT
-# relations stalled the driver (session.py rationale) — this set is the
-# one relation where a bigger broadcast measurably pays (r5 A/B on the
-# 19.6M-fp bench corpus, interleaved draws: broadcast 25.1-30.6s vs
-# shuffle-gate 35.8-66.3s vs shuffle_hash-hint 30.1-60.2s, identical
-# 309,711 output rows). Scale: shared fps grow with the corpus, so at the
-# 100TB design point the count exceeds this cap and the code falls back to
-# the shuffle join on its own — the broadcast is an optimization the
-# runtime size decides, never an assumption.
-_GATE_BROADCAST_MAX_FPS = 8_000_000
-
-
 def _shared_fp_gate(fps: DataFrame, hot_cap: int,
                     persist_registry: list | None = None) -> DataFrame:
     """The fingerprints SHARED by 2..hot_cap docs of `fps`, as a join gate.
@@ -356,19 +341,15 @@ def _shared_fp_gate(fps: DataFrame, hot_cap: int,
     it are boilerplate, not overlap evidence. Output is IDENTICAL —
     singletons produce zero pairs.
 
-    The gate set is persisted and counted (the count reuses the persisted
-    aggregate, so the expensive fps pass still runs ONCE), then broadcast
-    iff it is small enough — see _GATE_BROADCAST_MAX_FPS."""
+    The gate set is persisted, so the count of broadcast_if_small reuses
+    the aggregate and the expensive fps pass still runs ONCE."""
     counts = fps.groupBy("fp").agg(F.countDistinct("doc_id").alias("n_docs"))
     shared = counts.filter(
         (F.col("n_docs") >= 2) & (F.col("n_docs") <= hot_cap)
     ).select("fp").persist()
     if persist_registry is not None:
         persist_registry.append(shared)
-    return (
-        F.broadcast(shared)
-        if shared.count() <= _GATE_BROADCAST_MAX_FPS else shared
-    )
+    return broadcast_if_small(shared)
 
 
 def overlap_candidates(fps: DataFrame, hot_cap: int = 200,

@@ -11,8 +11,8 @@ Our all-pairs restatement (SURVEY.md §7.1):
              before any expensive kernel; star edges carry them to clusters)
     Stage 2a exact-dup pairs (the star edges — free recall for identical docs)
     Stage 2b COARSE band pass over all docs (high recall)   [tier 0]
-    Stage 2c TIGHT band pass over tier-0 survivors only,
-             min-match counting (the cascade tightening)     [tier 1]
+    Stage 2c TIGHT slice filter over tier-0 pairs only: keep
+             those agreeing on >= m tight MinHash slices     [tier 1]
     Stage 2d SimHash bit-sampling pass: band join + Hamming <= tau prune
     Stage 2e winnowing/substring pass: exact long-overlap pairs
     Stage 3  exact Jaccard verify on the unioned candidate set
@@ -36,19 +36,21 @@ from .functions.signature_udf import make_signature_udf
 from .functions.simhash import hamming64, simhash_band_key
 from .functions.text import fingerprint_md5
 from .operators.assemble import assemble_conversations, with_doc_id
-from .operators.bands import explode_bands, pairable_bands
+from .operators.bands import (
+    explode_bands,
+    pairable_bands,
+    slice_agreements_column,
+)
 from .operators.components import clusters_with_singletons, connected_components
 from .operators.pairs import (
     BAND_KEY,
     pairs_from_bands,
-    pairs_with_min_match,
     shared_key_pairs,
     split_exact_duplicates,
-    survivors,
     tag_exact_duplicates,
 )
 from .operators.suffix import overlap_candidates, verify_overlaps, winnow_fingerprints
-from .operators.verify import verify_pairs_exact_jaccard
+from .operators.verify import attach_pair_sides, verify_pairs_exact_jaccard
 
 
 @dataclass
@@ -149,6 +151,24 @@ def coarse_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
+def tight_tier(pairs: DataFrame, signatures: DataFrame,
+               cfg: DedupConfig) -> DataFrame:
+    """Tier 1 of both drivers -> the (id_a, id_b) pairs whose MinHash
+    signatures agree on >= tight_min_match tight slices (src/dflsh.py:187-197
+    min-match analog); tight_min_match <= 0 bypasses it. A filter over each
+    pair's two signatures: no band table, so no bucket key to skew."""
+    if cfg.tight_min_match <= 0:
+        return pairs
+    agree = slice_agreements_column(
+        "minhash_a", "minhash_b", cfg.tight_n_bands, cfg.tight_rows_per_band
+    )
+    return (
+        attach_pair_sides(pairs, signatures, ["minhash"])
+        .filter(agree >= cfg.tight_min_match)
+        .select("id_a", "id_b")
+    )
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame, cfg: DedupConfig,
     persist_registry: list | None = None,
@@ -158,38 +178,15 @@ def minhash_candidate_pairs(
     can unpersist them once downstream stages are materialized (leaked
     persists accumulate block-manager memory across repeated runs — measured
     as a 7x warm-run slowdown on this VM's ballooned memory)."""
-    # tier 0: coarse, whole corpus. pairable_bands: every consumer below is
-    # a pair self-join, so singleton buckets are dead weight — gating them
-    # out shrank this stage ~3x (bands.py measurement note)
-    coarse = coarse_bands(signatures, cfg)
-    coarse_kept, hot0 = pairable_bands(coarse, cfg.hot_band_cap,
+    # tier 0: coarse, whole corpus. pairable_bands: the consumer is a pair
+    # self-join, so singleton buckets are dead weight — gating them out
+    # shrank this stage ~3x (bands.py measurement note)
+    coarse_kept, hot0 = pairable_bands(coarse_bands(signatures, cfg),
+                                       cfg.hot_band_cap,
                                        persist_registry=persist_registry)
-    # persisted: referenced by the survivor gate AND the final AND-join —
-    # without it the band self-join recomputes once per consumer
-    coarse_pairs = pairs_from_bands(coarse_kept).persist()
-    if persist_registry is not None:
-        persist_registry.append(coarse_pairs)
-
     # a candidate must be generated by the coarse tier AND confirmed by the
-    # tight tier (the cascade's AND-tightening); when tight_min_match == 0 the
-    # tight tier is bypassed: it builds nothing and records no drops
-    if cfg.tight_min_match <= 0:
-        return coarse_pairs, hot0
-    # tier 1: tight bands computed only for tier-0 survivors (cascade gate);
-    # min-match counting prunes candidates (src/dflsh.py:187-197 analog)
-    surv = survivors(coarse_pairs)
-    sigs_surv = signatures.join(surv, "doc_id", "left_semi")
-    tight = explode_bands(
-        sigs_surv, "minhash", tier=1,
-        n_bands=cfg.tight_n_bands, rows_per_band=cfg.tight_rows_per_band,
-    )
-    tight_kept, hot1 = pairable_bands(tight, cfg.hot_band_cap,
-                                      persist_registry=persist_registry)
-    tight_pairs = pairs_with_min_match(tight_kept, cfg.tight_min_match).select(
-        "id_a", "id_b"
-    )
-    cand = coarse_pairs.join(tight_pairs, ["id_a", "id_b"], "inner")
-    return cand, hot0.unionByName(hot1)
+    # tight tier (the cascade's AND-tightening)
+    return tight_tier(pairs_from_bands(coarse_kept), signatures, cfg), hot0
 
 
 def simhash_candidate_pairs(

@@ -15,7 +15,7 @@ practice, so the engine ships an incremental path:
          run_concurrently), each reading only the docs and the index as it
          stood before this batch:
            - band: signatures of fresh representatives, tier-0 bands capped
-             over index ∪ new, the band probe
+             over index ∪ new, the band probe, the tier-1 slice filter
            - overlap: winnow fingerprints, the fingerprint probe and the
              exact-extension verify
            - the doc_id collision check against every indexed doc
@@ -31,13 +31,12 @@ The cascade steps are the batch pipeline's own functions: build_docs,
 check_doc_id_collisions, split_exact_duplicates, build_signatures,
 coarse_bands, the hot-bucket rule (operators/bands.py bucket_sizes),
 pairs_from_bands and overlap_candidates (both over shared_key_pairs — batch
-is the same call with an empty index), overlap_docs_gate and
-merge_evidence. What differs is the tier set: streaming probes the coarse
-tier 0 only, with no tight tier and no SimHash pass, so it can keep a pair
-batch's coarse-AND-tight rule would reject and miss a SimHash-only pair
-(tests/test_streaming.py pins this). The hot-bucket cap also differs: it
-counts index ∪ new and keeps singleton buckets, which a future batch's doc
-may still collide with.
+is the same call with an empty index), tight_tier, overlap_docs_gate and
+merge_evidence. Tier 0 + tier 1 is one rule in both drivers. What differs
+is the SimHash pass: streaming has none, so it misses a SimHash-only pair
+(tests/test_streaming.py pins equal clusterings with SimHash off). The
+hot-bucket cap also differs: it counts index ∪ new and keeps singleton
+buckets, which a future batch's doc may still collide with.
 
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
@@ -81,6 +80,7 @@ from .pipeline import (
     overlap_docs_gate,
     release_persisted,
     run_concurrently,
+    tight_tier,
 )
 
 TURNS_DDL = (
@@ -294,8 +294,9 @@ class IncrementalDedup:
         )
 
         def band_branch():
-            """Signatures -> capped tier-0 bands -> band probe candidates,
-            plus the verify's signature table (index ∪ new)."""
+            """Signatures -> capped tier-0 bands -> band probe candidates
+            -> the tier-1 slice filter, plus the verify's signature table
+            (index ∪ new), which the filter reads too."""
             sigs = build_signatures(fresh_reps_docs, cfg) \
                 .localCheckpoint(eager=True)
             new_bands = coarse_bands(sigs, cfg)
@@ -318,9 +319,10 @@ class IncrementalDedup:
             kept_idx = idx_bands.join(
                 hot_keys, ["tier", "band_id", "band_key"], "left_anti"
             )
-            # probe: new docs vs the existing index plus new vs new
-            cands = pairs_from_bands(kept_new, kept_idx)
             all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
+            # probe: new docs vs the existing index plus new vs new
+            cands = tight_tier(pairs_from_bands(kept_new, kept_idx),
+                               all_sigs, cfg)
             return sigs, hot, kept_new, cands, all_sigs
 
         def overlap_branch():

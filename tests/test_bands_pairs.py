@@ -9,16 +9,23 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
+from lsh_cascade_poc_spark.config import DedupConfig
+from lsh_cascade_poc_spark.operators.bands import (
+    explode_bands,
+    pairable_bands,
+    slice_agreements_column,
+)
 from lsh_cascade_poc_spark.operators.pairs import (
     pairs_from_bands,
-    pairs_with_min_match,
     shared_key_pairs,
     split_exact_duplicates,
-    survivors,
     tag_exact_duplicates,
 )
-from lsh_cascade_poc_spark.pipeline import merge_evidence
+from lsh_cascade_poc_spark.pipeline import (
+    merge_evidence,
+    minhash_candidate_pairs,
+    tight_tier,
+)
 
 
 def _sig_df(spark, sigs: dict[int, list[int]]):
@@ -28,26 +35,47 @@ def _sig_df(spark, sigs: dict[int, list[int]]):
     return spark.createDataFrame(pdf, schema="doc_id long, minhash array<long>")
 
 
+def _slice_agreements(spark, sigs: dict[int, list[int]], n_bands: int,
+                      rows_per_band: int) -> dict[tuple[int, int], int]:
+    """slice_agreements_column over every id_a < id_b pair of `sigs`."""
+    df = _sig_df(spark, sigs)
+    a = df.toDF("id_a", "minhash_a")
+    b = df.toDF("id_b", "minhash_b")
+    rows = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b",
+        slice_agreements_column("minhash_a", "minhash_b", n_bands,
+                                rows_per_band).alias("n"),
+    ).collect()
+    return {(r.id_a, r.id_b): r.n for r in rows}
+
+
 def test_identical_signatures_collide_in_all_bands(spark):
     sig = list(range(16))
-    df = _sig_df(spark, {1: sig, 2: sig, 3: list(range(100, 116))})
-    bands = explode_bands(df, "minhash", tier=0, n_bands=4, rows_per_band=4)
+    sigs = {1: sig, 2: sig, 3: list(range(100, 116))}
+    bands = explode_bands(_sig_df(spark, sigs), "minhash", tier=0, n_bands=4,
+                          rows_per_band=4)
     assert bands.count() == 12
     pairs = pairs_from_bands(bands).collect()
     assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
-    mm = pairs_with_min_match(bands, 4).collect()
-    assert [(r.id_a, r.id_b, r.n_bands) for r in mm] == [(1, 2, 4)]
+    # identical signatures agree on 4 of 4 slices, unrelated ones on none
+    assert _slice_agreements(spark, sigs, 4, 4) == {
+        (1, 2): 4, (1, 3): 0, (2, 3): 0,
+    }
 
 
 def test_partial_band_match(spark):
     a = list(range(16))
-    b = list(range(8)) + list(range(200, 208))  # shares bands 0,1 only
-    df = _sig_df(spark, {1: a, 2: b})
-    bands = explode_bands(df, "minhash", tier=0, n_bands=4, rows_per_band=4)
-    mm2 = pairs_with_min_match(bands, 2).collect()
-    assert [(r.id_a, r.id_b, r.n_bands) for r in mm2] == [(1, 2, 2)]
-    mm3 = pairs_with_min_match(bands, 3).count()
-    assert mm3 == 0
+    b = list(range(8)) + list(range(200, 208))  # shares slices 0,1 only
+    assert _slice_agreements(spark, {1: a, 2: b}, 4, 4) == {(1, 2): 2}
+    # 2 of 4 slices agree: tier 1 keeps the pair at m=2, drops it at m=3
+    sigs = _sig_df(spark, {1: a, 2: b})
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    geometry = dict(n_perm=16, coarse_n_bands=4, tight_n_bands=4,
+                    tight_rows_per_band=4)
+    for m, want in ((2, [(1, 2)]), (3, [])):
+        cfg = DedupConfig(tight_min_match=m, **geometry)
+        got = tight_tier(pairs, sigs, cfg)
+        assert [(r.id_a, r.id_b) for r in got.collect()] == want, m
 
 
 def test_band_id_participates_in_key(spark):
@@ -82,14 +110,12 @@ def test_hot_band_cap_drops_and_records(spark):
 
 
 def test_bypassed_tight_tier_records_no_drops(spark):
-    """tight_min_match == 0 bypasses tier 1: the candidates are the coarse
-    pairs and no tier-1 bucket is built, so none is recorded as dropped."""
-    from lsh_cascade_poc_spark.config import DedupConfig
-    from lsh_cascade_poc_spark.pipeline import minhash_candidate_pairs
-
+    """Tier 1 is a per-pair filter: it builds no bucket, so it records no
+    drop, whether it runs (tight_min_match=1) or is bypassed (0). Here it
+    keeps both coarse pairs either way."""
     # coarse (2 bands x 4 lanes) pairs A-B and B-C through buckets of 2;
-    # tight (8 bands x 1 lane): lane 3 is one bucket of all three, above
-    # the cap
+    # tight (8 bands x 1 lane): lane 3 is one value shared by all three
+    # docs, which a tight bucket table would hold above the cap
     sigs = _sig_df(spark, {
         1: [1, 1, 1, 1, 2, 2, 2, 2],
         2: [1, 1, 1, 1, 3, 3, 3, 3],
@@ -97,13 +123,91 @@ def test_bypassed_tight_tier_records_no_drops(spark):
     })
     geometry = dict(n_perm=8, coarse_n_bands=2, coarse_rows_per_band=4,
                     tight_n_bands=8, tight_rows_per_band=1, hot_band_cap=2)
-    _, hot = minhash_candidate_pairs(sigs, DedupConfig(**geometry))
-    assert [(r.tier, r.band_id, r.n_docs) for r in hot.collect()] == [(1, 3, 3)]
+    for m in (1, 0):
+        cands, hot = minhash_candidate_pairs(
+            sigs, DedupConfig(tight_min_match=m, **geometry))
+        assert sorted((r.id_a, r.id_b) for r in cands.collect()) == \
+            [(1, 2), (2, 3)], m
+        assert hot.filter(F.col("tier") == 1).count() == 0, m
 
-    cands, hot = minhash_candidate_pairs(
-        sigs, DedupConfig(tight_min_match=0, **geometry))
-    assert sorted((r.id_a, r.id_b) for r in cands.collect()) == [(1, 2), (2, 3)]
-    assert hot.filter(F.col("tier") == 1).count() == 0
+
+def _band_join_tier1(sigs: dict[int, list[int]], cfg) -> tuple[set, int]:
+    """Python model of the tier 1 this engine had before the per-pair
+    filter -> (candidates, hot tight buckets): the coarse pairs (pairable
+    coarse buckets: 2..cap docs) AND the pairs sharing >= tight_min_match
+    pairable tight buckets, where the tight buckets are built over the
+    docs of coarse pairs (the survivors) only."""
+    def pairs_by_buckets(ids, n_bands, r):
+        buckets: dict = {}
+        for d in ids:
+            for b in range(n_bands):
+                key = (b, tuple(sigs[d][b * r:b * r + r]))
+                buckets.setdefault(key, []).append(d)
+        shared = Counter()
+        for members in buckets.values():
+            if 2 <= len(members) <= cfg.hot_band_cap:
+                ms = sorted(members)
+                for i, x in enumerate(ms):
+                    for y in ms[i + 1:]:
+                        shared[(x, y)] += 1
+        n_hot = sum(len(m) > cfg.hot_band_cap for m in buckets.values())
+        return shared, n_hot
+
+    coarse, _ = pairs_by_buckets(sigs, cfg.coarse_n_bands,
+                                 cfg.coarse_rows_per_band)
+    survivors = {d for p in coarse for d in p}
+    tight, n_hot = pairs_by_buckets(sorted(survivors), cfg.tight_n_bands,
+                                    cfg.tight_rows_per_band)
+    return {p for p in coarse if tight[p] >= cfg.tight_min_match}, n_hot
+
+
+@pytest.mark.parametrize("m", [1, 2, 3])
+def test_tight_tier_matches_band_join_model(spark, m):
+    """The per-pair slice filter keeps exactly the pairs the former tight
+    band self-join kept whenever no tight bucket among the survivors is
+    hot. Seeded families of mutated signatures make pairs agree on 0..all
+    tight slices."""
+    rng = random.Random(100 + m)
+    bases = [[rng.randrange(4) for _ in range(16)] for _ in range(6)]
+    sigs = {}
+    for d in range(60):
+        base = bases[d % len(bases)]
+        sigs[d] = [v if rng.random() < 0.9 else rng.randrange(10**6)
+                   for v in base]
+    # a shared 2-lane coarse band implies no shared 4-lane tight slice, so
+    # tier 1 drops coarse pairs at every m
+    geometry = dict(n_perm=16, coarse_n_bands=4, coarse_rows_per_band=2,
+                    tight_n_bands=4, tight_rows_per_band=4, hot_band_cap=1000)
+    cfg = DedupConfig(tight_min_match=m, **geometry)
+    want, n_hot = _band_join_tier1(sigs, cfg)
+    coarse, _ = _band_join_tier1(sigs, DedupConfig(tight_min_match=0,
+                                                   **geometry))
+    assert n_hot == 0 and want and want < coarse
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
+    assert {(r.id_a, r.id_b) for r in got.collect()} == want
+    assert hot.count() == 0
+
+
+def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark):
+    """The documented difference: a coarse pair whose only shared tight
+    slice sits in a tight bucket above hot_band_cap was dropped by the
+    band self-join and is kept by the per-pair filter."""
+    # coarse (2 bands x 2 lanes over lanes 0-3) pairs 1-2 and 3-4; tight
+    # (2 bands x 4 lanes): all four docs share slice 1 (lanes 4-7), a
+    # bucket of 4 > cap 2, and no pair shares slice 0
+    sigs = {
+        1: [1, 1, 2, 2, 9, 9, 9, 9],
+        2: [1, 1, 3, 3, 9, 9, 9, 9],
+        3: [7, 7, 5, 5, 9, 9, 9, 9],
+        4: [8, 8, 5, 5, 9, 9, 9, 9],
+    }
+    cfg = DedupConfig(n_perm=8, coarse_n_bands=2, coarse_rows_per_band=2,
+                      tight_n_bands=2, tight_rows_per_band=4,
+                      tight_min_match=1, hot_band_cap=2)
+    assert _band_join_tier1(sigs, cfg) == (set(), 1)
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
+    assert sorted((r.id_a, r.id_b) for r in got.collect()) == [(1, 2), (3, 4)]
+    assert hot.count() == 0
 
 
 @pytest.mark.parametrize("bad", [
@@ -115,18 +219,12 @@ def test_bypassed_tight_tier_records_no_drops(spark):
 def test_config_rejects_bands_past_the_signature(bad):
     """A band slice past the end of the signature would be empty — one
     bucket every doc shares — so such geometry is refused up front."""
-    from lsh_cascade_poc_spark.config import DedupConfig
-
     with pytest.raises(ValueError):
         DedupConfig(**bad)
     DedupConfig(n_perm=64, coarse_n_bands=16, tight_n_bands=10)  # fits
 
 
-def test_survivors_and_exact_pairs(spark):
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    surv = sorted({r.doc_id for r in survivors(pairs).collect()})
-    assert surv == [1, 2, 3]  # set-wise: survivors() may emit duplicates
-
+def test_exact_pairs_and_evidence_merge(spark):
     docs = spark.createDataFrame(
         [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, "z")],
         "doc_id long, fingerprint string",

@@ -110,6 +110,41 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
     assert len(joins) == 3 and len(pair_joins) == 1, plan
 
 
+def test_tight_tier_is_a_pair_filter_not_a_band_join(spark, tiny_turns):
+    """Tier 1 filters the tier-0 pairs by their two signatures: the
+    optimized plan of minhash_candidate_pairs with the tier on holds ONE
+    pair join (tier 0's band self-join), two doc_id joins attaching the
+    signatures, and no tier-1 band explode — a second band self-join or
+    pairable-bucket pass would show up as a tier-1 Generate."""
+    import re
+
+    from lsh_cascade_poc_spark.config import DedupConfig
+    from lsh_cascade_poc_spark.operators.assemble import (
+        assemble_conversations,
+        with_doc_id,
+    )
+    from lsh_cascade_poc_spark.pipeline import (
+        build_signatures,
+        minhash_candidate_pairs,
+    )
+
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
+                      tight_n_bands=5, tight_min_match=1)
+    docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
+    sigs = build_signatures(docs, cfg).localCheckpoint()
+    cands, _ = minhash_candidate_pairs(sigs, cfg)
+    plan = cands._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    pair_joins = [ln for ln in joins if "band_key" in ln and "id_a#" in ln]
+    doc_id_joins = [ln for ln in joins
+                    if re.search(r"\(id_([ab])#\d+L = id_\1#\d+L\)", ln)]
+    assert len(pair_joins) == 1 and len(doc_id_joins) == 2, plan
+    # + the pairable-bucket gate join under each side of the pair join
+    assert len(joins) == 5, plan
+    generates = [ln for ln in plan.splitlines() if "Generate " in ln]
+    assert generates and not any("xxhash64(1," in ln for ln in generates), plan
+
+
 def test_signature_kernel_is_one_fused_arrow_pass(spark, tiny_turns):
     """build_signatures must evaluate exactly ONE Python/Arrow UDF node:
     shingle+minhash+simhash are fused into a single kernel. Two+ nodes mean

@@ -485,42 +485,57 @@ def _partition(conv_of: dict, edges) -> set[frozenset]:
 
 
 def test_batch_stream_parity(spark, tmp_path):
-    """Where the two cascades coincide — tight tier bypassed, SimHash pass
-    emitting nothing, no hot bucket — batch run_dedup and streaming in 2 or
-    3 micro-batches cluster the corpus identically. Exact-group
-    representatives may differ between the paths, so partitions of conv_ids
-    are compared, not raw pairs."""
+    """Where the two cascades coincide — SimHash pass emitting nothing, no
+    hot bucket — batch run_dedup and streaming in 2 or 3 micro-batches
+    cluster the corpus identically: both run tier 0 and the tier-1 slice
+    filter. Two configs: tier 1 at m=1 with the overlap stage running, and
+    a tier 1 that binds (m=4 of 5 slices), which changes the batch
+    clusters. The binding one gates the overlap stage off, whose Jaccard-
+    verified candidates would bring back the pairs tier 1 drops. Exact-
+    group representatives may differ between the paths, so partitions of
+    conv_ids are compared, not raw pairs."""
     from lsh_cascade_poc_spark.pipeline import run_dedup
 
-    cfg = DedupConfig(
-        n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
-        tight_n_bands=0, tight_min_match=0, simhash_hamming_tau=-1,
-        hot_band_cap=10**6, overlap_hot_cap=10**6,
-    )
+    base = dict(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
+                tight_n_bands=5, simhash_hamming_tau=-1,
+                hot_band_cap=10**6, overlap_hot_cap=10**6)
+    no_overlap = dict(min_overlap_chars=10**6)
     turns = generate_corpus(n_base=30, dup_fraction=0.5, seed=11).turns
-    res = run_dedup(spark, spark.createDataFrame(turns, TURNS_DDL), cfg=cfg)
-    conv_of = {r.doc_id: r.conv_id
-               for r in res.docs.select("doc_id", "conv_id").collect()}
-    batch = _partition(conv_of, [
-        (r.doc_id, r.cluster_id) for r in res.clusters.collect()
-    ])
-    assert any(len(g) > 1 for g in batch)
-
     convs = sorted(turns.conv_id.unique())
-    for k in (2, 3):
-        inc = IncrementalDedup(spark, str(tmp_path / f"index{k}"), cfg)
-        for i in range(k):
-            part = turns[turns.conv_id.isin(convs[i::k])]
-            inc.process_batch(spark.createDataFrame(part, TURNS_DDL), i)
-        stream_conv_of = {r.doc_id: r.conv_id for r in
-                          inc.docs().select("doc_id", "conv_id").collect()}
-        assert stream_conv_of == conv_of
-        edges = [(r.id_a, r.id_b) for r in
-                 inc.dup_pairs().filter(F.col("jaccard") >= 0).collect()]
-        assert _partition(conv_of, edges) == batch, f"{k} micro-batches"
 
-    # the documented difference under the default config: the streaming
-    # index holds (and probes) the coarse tier 0 only
+    def batch_run(cfg):
+        res = run_dedup(spark, spark.createDataFrame(turns, TURNS_DDL),
+                        cfg=cfg)
+        conv_of = {r.doc_id: r.conv_id
+                   for r in res.docs.select("doc_id", "conv_id").collect()}
+        return conv_of, _partition(conv_of, [
+            (r.doc_id, r.cluster_id) for r in res.clusters.collect()
+        ])
+
+    _, bypassed = batch_run(DedupConfig(tight_min_match=0, **base,
+                                        **no_overlap))
+    configs = {"m1": DedupConfig(**base),
+               "m4": DedupConfig(tight_min_match=4, **base, **no_overlap)}
+    for name, cfg in configs.items():
+        conv_of, batch = batch_run(cfg)
+        assert any(len(g) > 1 for g in batch)
+        if name == "m4":
+            assert batch != bypassed  # the tight tier binds
+        for k in (2, 3):
+            inc = IncrementalDedup(spark, str(tmp_path / f"{name}_{k}"), cfg)
+            for i in range(k):
+                part = turns[turns.conv_id.isin(convs[i::k])]
+                inc.process_batch(spark.createDataFrame(part, TURNS_DDL), i)
+            stream_conv_of = {r.doc_id: r.conv_id for r in
+                              inc.docs().select("doc_id", "conv_id").collect()}
+            assert stream_conv_of == conv_of
+            edges = [(r.id_a, r.id_b) for r in
+                     inc.dup_pairs().filter(F.col("jaccard") >= 0).collect()]
+            assert _partition(conv_of, edges) == batch, \
+                f"{name}, {k} micro-batches"
+
+    # the streaming index holds (and probes) the coarse tier 0 only: tier 1
+    # is a filter on the probe's pairs, with no band table of its own
     inc = IncrementalDedup(spark, str(tmp_path / "index_default"))
     inc.process_batch(spark.createDataFrame(turns, TURNS_DDL), 0)
     tiers = {r.tier for r in inc._read_table("bands").select("tier")

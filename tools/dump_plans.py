@@ -44,7 +44,7 @@ def main() -> None:
         overlap_candidates,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import build_signatures
+    from lsh_cascade_poc_spark.pipeline import build_signatures, tight_tier
     from lsh_cascade_poc_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans", master="local[4]",
@@ -110,6 +110,19 @@ def main() -> None:
         "an empty index, whose new x index branch Catalyst prunes — no "
         "`Union`, one join (tests/test_plans.py pins it).",
         pairs_from_bands(kept),
+        "simple",
+    ))
+
+    sections.append((
+        "Tier 1: per-pair slice filter",
+        "Two `doc_id` joins attach each tier-0 pair's signatures and one "
+        "predicate, folded into the second join, sums a `slice` = `slice` "
+        "comparison per tight band: no tight band table, count job or "
+        "second self-join (tests/test_plans.py pins it). The pairs are "
+        "checkpointed here to show tier 1 alone. The predicate has no "
+        "lambda, filters joined rows and feeds no `explode`, so the "
+        "higher-order-function trap below does not apply.",
+        tight_tier(pairs_from_bands(kept).localCheckpoint(), sigs_ck, cfg),
         "simple",
     ))
 
