@@ -21,6 +21,21 @@ Cascade semantics (mirrors the 3-stage search, src/pipeline.py:68-119):
   candidate set before the expensive exact-Jaccard verify. Deduplicating
   pairs across bands *before* both is the one barrier worth paying (the
   reference dedups its candidate set the same way, src/e2lsh.py:292-307).
+
+Hot-key capping, inside that one join: a key shared by m docs yields
+m(m-1)/2 pairs; one boilerplate bucket with 10^6 docs is 5*10^11 pairs. AQE
+splits skewed partitions but cannot fix a single quadratic key (SURVEY.md §4
+item 2), so keys held by more than `cap` docs are dropped and *recorded*:
+shared_key_pairs returns them, and the `hot_band_drops` stage stores every
+dropped band bucket's (tier, band_id, band_key, n_docs); recall for such
+boilerplate is recovered by the exact fingerprint (md5) pass which groups
+identical docs without pair explosion. Keys held by one doc are dropped too:
+they can never pair, yet most keys are singletons, so the join input shrinks
+several-fold for identical output (measured: 65% of the 12.28M exploded
+winnow-fp rows of the 2.4M-turn bench corpus were singleton fps; on the
+3.84M-turn corpus, local[4], interleaved draws, gating singleton band buckets
+took the minhash candidate stage, then a coarse and a tight band self-join,
+from 23.1-32.0 s to 6.7-9.3 s with identical 121,724 output pairs).
 """
 
 from __future__ import annotations
@@ -31,12 +46,12 @@ from pyspark.sql import functions as F
 
 BAND_KEY = ["tier", "band_id", "band_key"]
 
-# Broadcast cap for a key-gate set (the pairable band buckets, the shared
-# winnow fingerprints): below this row count the gate join broadcasts (8-16
-# bytes/row -> a blob of at most 64-128MB), above it it stays a shuffle
-# join. Why not the session-wide AQE threshold: that was deliberately
-# lowered to 8MB after mid-size TEXT relations stalled the driver
-# (session.py rationale) — gate sets are the one relation class where
+# Broadcast cap for a key-gate set (shared_key_pairs' 2..cap keys: pairable
+# band buckets, shared winnow fingerprints): below this row count the gate
+# join broadcasts (8-16 bytes/row -> a blob of at most 64-128MB), above it
+# it stays a shuffle join. Why not the session-wide AQE threshold: that was
+# deliberately lowered to 8MB after mid-size TEXT relations stalled the
+# driver (session.py rationale) — gate sets are the one relation class where
 # a bigger broadcast measurably pays (r5 A/B on the 19.6M-fp bench corpus,
 # interleaved draws: broadcast 25.1-30.6s vs shuffle-gate 35.8-66.3s vs
 # shuffle_hash-hint 30.1-60.2s, identical 309,711 output rows). Scale: gate
@@ -54,19 +69,44 @@ def broadcast_if_small(gate: DataFrame) -> DataFrame:
 
 
 def shared_key_pairs(new: DataFrame, index: DataFrame | None,
-                     keys: list[str], cols=()) -> DataFrame:
-    """The cascade's one candidate join: docs sharing a key become a pair.
+                     keys: list[str], cap: int, persist_registry: list,
+                     cols=()) -> tuple[DataFrame, DataFrame]:
+    """The cascade's one candidate join: docs sharing a key become a pair,
+    unless the key is hot -> (pairs, hot).
 
-    (doc_id, *keys, *cols) rows of `new` and `index` -> one row per shared
-    key occurrence (keys..., id_a, id_b, {c}_a, {c}_b) with id_a < id_b and
-    each payload column following its id; NOT deduplicated. Pairs with at
-    least one `new` row are emitted: new x new plus new x index, never
-    index x index (an earlier micro-batch already emitted those). A batch
-    run is a first micro-batch against an empty index (`index=None`):
-    Catalyst prunes the empty new x index branch, so the batch plan is the
-    plain self-join."""
+    The hot-key gate: the distinct docs of each key are counted over
+    new ∪ index, and only keys held by 2..cap docs pair. Distinct docs, not
+    rows: a doc can hold one winnow fp at several positions, and a doc_id
+    re-delivered next to its indexed copy is one doc. `hot` (*keys, n_docs)
+    holds the keys above `cap`, for the caller to record. The non-singleton
+    counts, the only rows either output reads, are persisted and appended
+    to `persist_registry`; the caller unpersists them once it has consumed
+    both outputs. The gate's broadcast_if_small count runs here, so `new`
+    and `index` should derive from materialized tables.
+
+    (doc_id, *keys, *cols) rows of `new` and `index` -> pairs: one row per
+    shared key occurrence (keys..., id_a, id_b, {c}_a, {c}_b) with
+    id_a < id_b and each payload column following its id; NOT
+    deduplicated. Pairs with at least one `new` row are emitted: new x new
+    plus new x index, never index x index (an earlier micro-batch already
+    emitted those). A batch run is a first micro-batch against an empty
+    index (`index=None`): Catalyst prunes the empty new x index branch and
+    the empty side of the count, so the batch plan is the plain gated
+    self-join."""
     if index is None:
         index = new.limit(0)
+    n_docs = (
+        new.select("doc_id", *keys)
+        .unionByName(index.select("doc_id", *keys))
+        .groupBy(*keys).agg(F.countDistinct("doc_id").alias("n_docs"))
+        .filter(F.col("n_docs") >= 2)
+        .persist()
+    )
+    persist_registry.append(n_docs)
+    gate = broadcast_if_small(
+        n_docs.filter(F.col("n_docs") <= cap).select(*keys)
+    )
+    new, index = new.join(gate, keys), index.join(gate, keys)
 
     def side(df: DataFrame, tag: str) -> DataFrame:
         return df.select(*keys, F.col("doc_id").alias(f"id_{tag}"),
@@ -92,18 +132,20 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
           .alias(f"{c}_{t}")
           for t, x, y in (("a", "n", "o"), ("b", "o", "n")) for c in cols],
     )
-    return within.unionByName(cross)
+    return within.unionByName(cross), n_docs.filter(F.col("n_docs") > cap)
 
 
-def pairs_from_bands(bands: DataFrame,
-                     index: DataFrame | None = None) -> DataFrame:
-    """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
-    id_a < id_b: the tier-0 band pass of batch, and streaming's probe of
-    the new batch's bands against the indexed ones. The join shuffles both
-    sides on the band key — the pipeline's dominant shuffle."""
-    return shared_key_pairs(bands, index, BAND_KEY).select(
-        "id_a", "id_b"
-    ).distinct()
+def pairs_from_bands(bands: DataFrame, index: DataFrame | None, cap: int,
+                     persist_registry: list) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, tier, band_id, band_key) -> (distinct (id_a, id_b) with
+    id_a < id_b, hot buckets): the tier-0 band pass of batch, and
+    streaming's probe of the new batch's bands against the indexed ones.
+    The join shuffles both sides on the band key — the pipeline's dominant
+    shuffle. Each doc holds one key per band, so a bucket's distinct docs
+    are its rows."""
+    pairs, hot = shared_key_pairs(bands, index, BAND_KEY, cap,
+                                  persist_registry)
+    return pairs.select("id_a", "id_b").distinct(), hot
 
 
 def tag_exact_duplicates(docs_with_fp: DataFrame) -> DataFrame:

@@ -12,8 +12,8 @@ Design (public algorithms only):
      length >= w + k - 1 chars produces at least one shared fingerprint.
      Computed in a vectorized pandas_udf (numpy sliding-window minimum).
   2. Fingerprints are exploded to (fp, doc_id, pos) and joined on fp by
-     the same shared_key_pairs operator as the MinHash bands, so the same
-     hot-key capping applies (boilerplate license headers etc.); the
+     the same shared_key_pairs operator as the MinHash bands, whose
+     hot-key gate drops boilerplate (license headers etc.); the
      fingerprint pairs aggregate to one row per doc pair carrying three
      seed positions (_pair_seed_agg).
   3. verify_overlaps joins both texts onto each candidate pair and runs a
@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pairs import broadcast_if_small, shared_key_pairs
+from ..config import DedupConfig
+from .pairs import shared_key_pairs
 
 # two parallel arrays (not array<struct>): lets the kernel emit numpy arrays
 # straight through Arrow with no per-row Python dict materialization
@@ -330,31 +331,8 @@ def winnow_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
     )
 
 
-def _shared_fp_gate(fps: DataFrame, hot_cap: int,
-                    persist_registry: list | None = None) -> DataFrame:
-    """The fingerprints SHARED by 2..hot_cap docs of `fps`, as a join gate.
-    The lower bound is the big win: winnowing over distinct text makes most
-    fingerprints singletons (measured at the 2.4M-turn bench corpus: 9.36M
-    distinct fps, only 1.47M shared — 65% of the 12.28M exploded rows were
-    singleton fps that can never form a pair yet flowed through the
-    self-join's build/probe). The upper bound is the old hot cap: fps above
-    it are boilerplate, not overlap evidence. Output is IDENTICAL —
-    singletons produce zero pairs.
-
-    The gate set is persisted, so the count of broadcast_if_small reuses
-    the aggregate and the expensive fps pass still runs ONCE."""
-    counts = fps.groupBy("fp").agg(F.countDistinct("doc_id").alias("n_docs"))
-    shared = counts.filter(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= hot_cap)
-    ).select("fp").persist()
-    if persist_registry is not None:
-        persist_registry.append(shared)
-    return broadcast_if_small(shared)
-
-
-def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
-                       min_shared_fps: int = 1,
-                       persist_registry: list | None = None,
+def overlap_candidates(fps: DataFrame, cfg: DedupConfig,
+                       persist_registry: list,
                        index: DataFrame | None = None) -> DataFrame:
     """Fingerprint pairs -> per-pair seed candidates (three seeds per pair,
     see _pair_seed_agg) bounding the verify stage. `fps` (doc_id, fp, pos)
@@ -362,10 +340,11 @@ def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
     streaming run (shared_key_pairs: new x new plus new x index); a batch
     run has no index.
 
-    Skew control: fingerprints shared by more than `hot_cap` docs of
-    index ∪ fps are boilerplate (short repeated turns), not long-overlap
-    evidence — dropped on both sides before the join (quadratic in bucket
-    size); see _shared_fp_gate. `min_shared_fps` exploits the winnowing
+    Skew control: fingerprints shared by more than `cfg.overlap_hot_cap`
+    docs of index ∪ fps are boilerplate (short repeated turns), not
+    long-overlap evidence — shared_key_pairs drops them on both sides
+    before the join (quadratic in bucket size), and its gate table lands in
+    `persist_registry`. `cfg.overlap_min_shared_fps` exploits the winnowing
     density (one fingerprint per ~w/2 chars): a true long overlap shares
     many fingerprints, an accidental collision one.
 
@@ -376,17 +355,11 @@ def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
     collect_list-per-fp + higher-order-function pair-explosion variant
     (5x slower: interpreted lambda expressions + object aggregation lose
     badly to whole-stage-codegen joins). Don't "simplify" it back."""
-    if index is None:
-        index = fps.limit(0)
-    gate = _shared_fp_gate(
-        fps.select("doc_id", "fp").unionByName(index.select("doc_id", "fp")),
-        hot_cap, persist_registry,
-    )
-    out = _pair_seed_agg(shared_key_pairs(
-        fps.join(gate, "fp"), index.join(gate, "fp"), ["fp"], ["pos"]
-    ))
-    if min_shared_fps > 1:
-        out = out.filter(F.col("n_shared_fps") >= min_shared_fps)
+    pairs, _hot = shared_key_pairs(fps, index, ["fp"], cfg.overlap_hot_cap,
+                                   persist_registry, ["pos"])
+    out = _pair_seed_agg(pairs)
+    if cfg.overlap_min_shared_fps > 1:
+        out = out.filter(F.col("n_shared_fps") >= cfg.overlap_min_shared_fps)
     return out
 
 

@@ -36,11 +36,7 @@ from .functions.signature_udf import make_signature_udf
 from .functions.simhash import hamming64, simhash_band_key
 from .functions.text import fingerprint_md5
 from .operators.assemble import assemble_conversations, with_doc_id
-from .operators.bands import (
-    explode_bands,
-    pairable_bands,
-    slice_agreements_column,
-)
+from .operators.bands import explode_bands, slice_agreements_column
 from .operators.components import clusters_with_singletons, connected_components
 from .operators.pairs import (
     BAND_KEY,
@@ -170,28 +166,23 @@ def tight_tier(pairs: DataFrame, signatures: DataFrame,
 
 
 def minhash_candidate_pairs(
-    signatures: DataFrame, cfg: DedupConfig,
-    persist_registry: list | None = None,
+    signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
 ) -> tuple[DataFrame, DataFrame]:
     """Tiers 0+1 of the banding cascade -> (candidate pairs, hot-band stats).
     Persisted intermediates are appended to `persist_registry` so the caller
     can unpersist them once downstream stages are materialized (leaked
     persists accumulate block-manager memory across repeated runs — measured
     as a 7x warm-run slowdown on this VM's ballooned memory)."""
-    # tier 0: coarse, whole corpus. pairable_bands: the consumer is a pair
-    # self-join, so singleton buckets are dead weight — gating them out
-    # shrank this stage ~3x (bands.py measurement note)
-    coarse_kept, hot0 = pairable_bands(coarse_bands(signatures, cfg),
-                                       cfg.hot_band_cap,
-                                       persist_registry=persist_registry)
-    # a candidate must be generated by the coarse tier AND confirmed by the
-    # tight tier (the cascade's AND-tightening)
-    return tight_tier(pairs_from_bands(coarse_kept), signatures, cfg), hot0
+    # tier 0: coarse, whole corpus; a candidate must be generated by the
+    # coarse tier AND confirmed by the tight tier (the cascade's
+    # AND-tightening)
+    coarse, hot0 = pairs_from_bands(coarse_bands(signatures, cfg), None,
+                                    cfg.hot_band_cap, persist_registry)
+    return tight_tier(coarse, signatures, cfg), hot0
 
 
 def simhash_candidate_pairs(
-    signatures: DataFrame, cfg: DedupConfig,
-    persist_registry: list | None = None,
+    signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
 ) -> tuple[DataFrame, DataFrame]:
     """SimHash bit-sampling pass: 16-bit chunk band join (chunk_hash analog)
     + Hamming <= tau prune (the reference's Stage-2 rerank as a filter).
@@ -207,16 +198,11 @@ def simhash_candidate_pairs(
             ])
         ).alias("band_id", "band_key"),
     ).withColumn("tier", F.lit(2))
-    kept, hot = pairable_bands(banded, cfg.hot_band_cap,
-                               persist_registry=persist_registry)
-    pairs = (
-        shared_key_pairs(kept, None, BAND_KEY, ["simhash"])
-        .filter(hamming64(F.col("simhash_a"), F.col("simhash_b"))
-                <= cfg.simhash_hamming_tau)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return pairs, hot
+    pairs, hot = shared_key_pairs(banded, None, BAND_KEY, cfg.hot_band_cap,
+                                  persist_registry, ["simhash"])
+    close = hamming64(F.col("simhash_a"), F.col("simhash_b")) \
+        <= cfg.simhash_hamming_tau
+    return pairs.filter(close).select("id_a", "id_b").distinct(), hot
 
 
 def overlap_docs_gate(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -236,20 +222,18 @@ def overlap_docs_gate(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def overlap_pairs(docs: DataFrame, fps: DataFrame, cfg: DedupConfig,
-                  persist_registry: list | None = None) -> DataFrame:
+                  persist_registry: list) -> DataFrame:
     """Winnowing fingerprints -> seed candidates -> exact extension; emits
     pairs sharing an exact substring of >= min_overlap_chars.
 
     `fps` is the PRE-MATERIALIZED winnow fingerprint table of the gated
     docs (run_dedup checkpoints it as its own stage). The candidate gate
     counts the shared-fp set in a separate action to size-gate its
-    broadcast (operators/suffix.py _shared_fp_gate); with a lazy fps plan
+    broadcast (operators/pairs.py shared_key_pairs); with a lazy fps plan
     that count would re-run the winnow kernel — the most expensive Arrow
     pass in the stage — a second time."""
     docs = overlap_docs_gate(docs, cfg)
-    cands = overlap_candidates(fps, hot_cap=cfg.overlap_hot_cap,
-                               min_shared_fps=cfg.overlap_min_shared_fps,
-                               persist_registry=persist_registry)
+    cands = overlap_candidates(fps, cfg, persist_registry)
     return verify_overlaps(
         cands, docs, cfg.winnow_kgram_chars, cfg.min_overlap_chars
     ).select("id_a", "id_b")
@@ -361,10 +345,10 @@ def run_dedup(
         )
         # A5/ADVICE: dropped hot buckets are recorded, not silent — their own
         # stage row (count + per-bucket sizes) in the metrics/checkpoint
-        # store. The per-bucket count tables were persisted while the pair
-        # stages evaluated (pairable_bands persist_registry), so this is a
-        # cheap filter, not a band-table re-scan. Only materialized when a
-        # store is recording.
+        # store. The non-singleton bucket counts were persisted while the
+        # pair stages evaluated (shared_key_pairs persist_registry), so this
+        # is a cheap filter, not a band-table re-scan. Only materialized
+        # when a store is recording.
         if store is not None:
             stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
         # every band-tier persisted intermediate is now consumed
@@ -378,7 +362,7 @@ def run_dedup(
         if not enable_overlap_stage:
             return None
         # the fp table is its own materialization: the candidate gate's
-        # broadcast-sizing count (suffix.py _shared_fp_gate) and the
+        # broadcast-sizing count (pairs.py shared_key_pairs) and the
         # candidate self-join both consume it — lazy, the winnow Arrow
         # kernel would run once per consumer
         ov_fps = stage(

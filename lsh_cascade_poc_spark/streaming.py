@@ -14,8 +14,8 @@ practice, so the engine ships an incremental path:
       2. run three independent branches at once (pipeline.py
          run_concurrently), each reading only the docs and the index as it
          stood before this batch:
-           - band: signatures of fresh representatives, tier-0 bands capped
-             over index ∪ new, the band probe, the tier-1 slice filter
+           - band: signatures of fresh representatives, the tier-0 band
+             probe (capped over index ∪ new), the tier-1 slice filter
            - overlap: winnow fingerprints, the fingerprint probe and the
              exact-extension verify
            - the doc_id collision check against every indexed doc
@@ -29,14 +29,16 @@ practice, so the engine ships an incremental path:
 
 The cascade steps are the batch pipeline's own functions: build_docs,
 check_doc_id_collisions, split_exact_duplicates, build_signatures,
-coarse_bands, the hot-bucket rule (operators/bands.py bucket_sizes),
-pairs_from_bands and overlap_candidates (both over shared_key_pairs — batch
-is the same call with an empty index), tight_tier, overlap_docs_gate and
-merge_evidence. Tier 0 + tier 1 is one rule in both drivers. What differs
-is the SimHash pass: streaming has none, so it misses a SimHash-only pair
-(tests/test_streaming.py pins equal clusterings with SimHash off). The
-hot-bucket cap also differs: it counts index ∪ new and keeps singleton
-buckets, which a future batch's doc may still collide with.
+coarse_bands, pairs_from_bands and overlap_candidates (both over
+shared_key_pairs, which holds the one hot-key cap rule — batch is the same
+call with an empty index), tight_tier, overlap_docs_gate and merge_evidence.
+Tier 0 + tier 1 and the cap are one rule in both drivers. What differs:
+  - streaming has no SimHash pass, so it misses a SimHash-only pair
+    (tests/test_streaming.py pins equal clusterings with SimHash off);
+  - the bands index keeps singleton buckets (only hot ones are left out),
+    because a future batch's doc may still collide with them;
+  - a bucket can cross the cap after earlier batches already paired its
+    docs: those pairs stay, and only later probes of the bucket stop.
 
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
@@ -63,8 +65,7 @@ from pyspark.sql import functions as F
 
 from .checkpoint import resolve_fs
 from .config import DedupConfig
-from .operators.bands import bucket_sizes
-from .operators.pairs import pairs_from_bands, split_exact_duplicates
+from .operators.pairs import BAND_KEY, pairs_from_bands, split_exact_duplicates
 from .operators.suffix import (
     overlap_candidates,
     verify_overlaps,
@@ -293,37 +294,26 @@ class IncrementalDedup:
             matched.select("doc_id"), "doc_id", "left_anti"
         )
 
+        band_persists: list = []
+
         def band_branch():
-            """Signatures -> capped tier-0 bands -> band probe candidates
-            -> the tier-1 slice filter, plus the verify's signature table
-            (index ∪ new), which the filter reads too."""
+            """Signatures -> the tier-0 band probe -> the tier-1 slice
+            filter, plus the verify's signature table (index ∪ new), which
+            the filter reads too. The probe caps buckets over index ∪ new
+            (the batch rule): a bucket that grew hot across batches is
+            excluded from probing on BOTH sides and from the index append,
+            and the drop is recorded. Its count persists into
+            band_persists, which hot and the index append read."""
             sigs = build_signatures(fresh_reps_docs, cfg) \
                 .localCheckpoint(eager=True)
             new_bands = coarse_bands(sigs, cfg)
             idx_bands = self._read_table("bands", batch_id, like=new_bands)
             idx_sigs = self._read_table("signatures", batch_id, like=sigs)
-            # hot-band cap over the COMBINED (index ∪ new) band table: a
-            # bucket that grew hot across batches is excluded from probing
-            # on BOTH sides and from the index append, and the drop is
-            # recorded (the batch path's rule, operators/bands.py
-            # bucket_sizes) — the probe join already scans the full index,
-            # so the count pre-pass adds no asymptotic cost
-            combined = idx_bands.select("tier", "band_id", "band_key") \
-                .unionAll(new_bands.select("tier", "band_id", "band_key"))
-            _sizes, hot = bucket_sizes(combined, cfg.hot_band_cap)
-            hot = hot.localCheckpoint(eager=True)
-            hot_keys = hot.select("tier", "band_id", "band_key")
-            kept_new = new_bands.join(
-                hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-            ).localCheckpoint(eager=True)
-            kept_idx = idx_bands.join(
-                hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-            )
             all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
             # probe: new docs vs the existing index plus new vs new
-            cands = tight_tier(pairs_from_bands(kept_new, kept_idx),
-                               all_sigs, cfg)
-            return sigs, hot, kept_new, cands, all_sigs
+            pairs, hot = pairs_from_bands(new_bands, idx_bands,
+                                          cfg.hot_band_cap, band_persists)
+            return sigs, hot, tight_tier(pairs, all_sigs, cfg), all_sigs
 
         def overlap_branch():
             """Long-overlap stage, incremental (batch analog: pipeline.py
@@ -342,13 +332,8 @@ class IncrementalDedup:
             idx_ofps = self._read_table("overlap_fps", batch_id, like=new_fps)
             idx_texts = self._read_table("texts", batch_id, like=long_texts)
             ov_persists: list = []
-            ov_cands = overlap_candidates(
-                new_fps,
-                hot_cap=cfg.overlap_hot_cap,
-                min_shared_fps=cfg.overlap_min_shared_fps,
-                persist_registry=ov_persists,
-                index=idx_ofps,
-            )
+            ov_cands = overlap_candidates(new_fps, cfg, ov_persists,
+                                          index=idx_ofps)
             texts_all = idx_texts.unionByName(long_texts)
             ov_pairs = (
                 verify_overlaps(ov_cands, texts_all, cfg.winnow_kgram_chars,
@@ -361,55 +346,62 @@ class IncrementalDedup:
             release_persisted(ov_persists)
             return long_texts, new_fps, ov_pairs
 
-        # the three branches read only docs and the index as it stood before
-        # this batch, and meet first at verify
-        (sigs, hot, kept_new, cands, all_sigs), \
-            (long_texts, new_fps, ov_pairs), _ = run_concurrently(
-                self.spark, band_branch, overlap_branch, check_ids
+        try:
+            # the three branches read only docs and the index as it stood
+            # before this batch, and meet first at verify
+            (sigs, hot, cands, all_sigs), \
+                (long_texts, new_fps, ov_pairs), _ = run_concurrently(
+                    self.spark, band_branch, overlap_branch, check_ids
+                )
+
+            # ov_pairs candidates join the Jaccard verify; substring-proven
+            # pairs that fail Jaccard keep the batch path's jaccard = -1
+            # evidence marker (merge_evidence)
+            verified = verify_pairs_exact_jaccard(
+                cands.unionByName(ov_pairs).distinct(), all_sigs,
+                threshold=cfg.jaccard_threshold,
             )
+            # materialize BEFORE touching the index dirs: dup's lazy plan reads
+            # the existing bands/signatures batches, and a replay OVERWRITES
+            # this batch's own subdirectories below — writing dup lazily after
+            # that would read deleted files
+            dup = merge_evidence(verified, exact_pairs, ov_pairs) \
+                .localCheckpoint(eager=True)
 
-        # ov_pairs candidates join the Jaccard verify; substring-proven pairs
-        # that fail Jaccard keep the batch path's jaccard = -1 evidence
-        # marker (merge_evidence)
-        verified = verify_pairs_exact_jaccard(
-            cands.unionByName(ov_pairs).distinct(), all_sigs,
-            threshold=cfg.jaccard_threshold,
-        )
-        # materialize BEFORE touching the index dirs: dup's lazy plan reads
-        # the existing bands/signatures batches, and a replay OVERWRITES this
-        # batch's own subdirectories below — writing dup lazily after that
-        # would read deleted files
-        dup = merge_evidence(verified, exact_pairs, ov_pairs) \
-            .localCheckpoint(eager=True)
-
-        # batch-scoped subdirectories + overwrite: a crash between the writes
-        # is healed by the replay overwriting the SAME directories, so the
-        # done-marker is a true commit point (ADVICE r1: plain appends made
-        # replays duplicate rows). The writes are independent and run
-        # concurrently; the marker follows the last of them.
-        writes = {
-            # narrow per-doc bookkeeping (EVERY doc, signed or not): id
-            # mapping + fingerprint — the signature table carries only fresh
-            # representatives
-            "docs": docs.select("conv_id", "doc_id", "fingerprint"),
-            "signatures": sigs,
-            "bands": kept_new,
-            "dup_pairs": dup,
-            "overlap_fps": new_fps,
-            # texts of fresh LONG representatives (every possible verify
-            # candidate is gated, so short docs are dead weight here): the
-            # overlap verify of every FUTURE batch needs the indexed side's
-            # raw text. At cluster scale this table is a projection of the
-            # corpus the stream already owns — point it at the source table
-            # instead of materializing when storage matters.
-            "texts": long_texts,
-            # A5 analog: dropped hot buckets are recorded, never silent
-            "hot_band_drops": hot,
-        }
-        run_concurrently(self.spark, *(
-            partial(self._write_batch, writes[name], name, batch_id)
-            for name in INDEX_TABLES
-        ))
+            # batch-scoped subdirectories + overwrite: a crash between the
+            # writes is healed by the replay overwriting the SAME directories,
+            # so the done-marker is a true commit point (ADVICE r1: plain
+            # appends made replays duplicate rows). The writes are independent
+            # and run concurrently; the marker follows the last of them.
+            writes = {
+                # narrow per-doc bookkeeping (EVERY doc, signed or not): id
+                # mapping + fingerprint — the signature table carries only
+                # fresh representatives
+                "docs": docs.select("conv_id", "doc_id", "fingerprint"),
+                "signatures": sigs,
+                # singleton buckets stay: a future batch's doc may collide
+                "bands": coarse_bands(sigs, cfg).join(
+                    hot.select(*BAND_KEY), BAND_KEY, "left_anti"),
+                "dup_pairs": dup,
+                "overlap_fps": new_fps,
+                # texts of fresh LONG representatives (every possible verify
+                # candidate is gated, so short docs are dead weight here): the
+                # overlap verify of every FUTURE batch needs the indexed side's
+                # raw text. At cluster scale this table is a projection of the
+                # corpus the stream already owns — point it at the source table
+                # instead of materializing when storage matters.
+                "texts": long_texts,
+                # A5 analog: dropped hot buckets are recorded, never silent
+                "hot_band_drops": hot,
+            }
+            run_concurrently(self.spark, *(
+                partial(self._write_batch, writes[name], name, batch_id)
+                for name in INDEX_TABLES
+            ))
+        finally:
+            # the band probe's persisted gate counts, read by cands, hot
+            # and the bands append
+            release_persisted(band_persists)
         with fs.open_output_stream(done_marker) as f:
             f.write(b"ok")
         # periodic index compaction AFTER the commit point: only done-marked

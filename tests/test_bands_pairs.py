@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from lsh_cascade_poc_spark.config import DedupConfig
 from lsh_cascade_poc_spark.operators.bands import (
     explode_bands,
-    pairable_bands,
     slice_agreements_column,
 )
 from lsh_cascade_poc_spark.operators.pairs import (
@@ -24,8 +23,18 @@ from lsh_cascade_poc_spark.operators.pairs import (
 from lsh_cascade_poc_spark.pipeline import (
     merge_evidence,
     minhash_candidate_pairs,
+    release_persisted,
     tight_tier,
 )
+
+
+@pytest.fixture
+def registry():
+    """The persist registry of a test's gated pair joins, released after
+    the test."""
+    reg: list = []
+    yield reg
+    release_persisted(reg)
 
 
 def _sig_df(spark, sigs: dict[int, list[int]]):
@@ -49,14 +58,14 @@ def _slice_agreements(spark, sigs: dict[int, list[int]], n_bands: int,
     return {(r.id_a, r.id_b): r.n for r in rows}
 
 
-def test_identical_signatures_collide_in_all_bands(spark):
+def test_identical_signatures_collide_in_all_bands(spark, registry):
     sig = list(range(16))
     sigs = {1: sig, 2: sig, 3: list(range(100, 116))}
     bands = explode_bands(_sig_df(spark, sigs), "minhash", tier=0, n_bands=4,
                           rows_per_band=4)
     assert bands.count() == 12
-    pairs = pairs_from_bands(bands).collect()
-    assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
+    pairs, _hot = pairs_from_bands(bands, None, 1000, registry)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)]
     # identical signatures agree on 4 of 4 slices, unrelated ones on none
     assert _slice_agreements(spark, sigs, 4, 4) == {
         (1, 2): 4, (1, 3): 0, (2, 3): 0,
@@ -78,14 +87,14 @@ def test_partial_band_match(spark):
         assert [(r.id_a, r.id_b) for r in got.collect()] == want, m
 
 
-def test_band_id_participates_in_key(spark):
+def test_band_id_participates_in_key(spark, registry):
     # same 4 lanes at different band positions must NOT collide
     # (the reference's "c{i}_" prefix trick, src/lsh.py:266-304)
     a = [7, 7, 7, 7] + [1, 2, 3, 4]
     b = [5, 5, 5, 5] + [7, 7, 7, 7]
     df = _sig_df(spark, {1: a, 2: b})
     bands = explode_bands(df, "minhash", tier=0, n_bands=2, rows_per_band=4)
-    assert pairs_from_bands(bands).count() == 0
+    assert pairs_from_bands(bands, None, 1000, registry)[0].count() == 0
 
 
 def test_tier_participates_in_key(spark):
@@ -97,19 +106,19 @@ def test_tier_participates_in_key(spark):
     assert k0 != k1
 
 
-def test_hot_band_cap_drops_and_records(spark):
+def test_hot_band_cap_drops_and_records(spark, registry):
     sig = [1, 2, 3, 4]
     df = _sig_df(spark, {i: sig for i in range(10)})
     bands = explode_bands(df, "minhash", tier=0, n_bands=1, rows_per_band=4)
-    kept, hot = pairable_bands(bands, cap=5)
-    assert kept.count() == 0
+    pairs, hot = pairs_from_bands(bands, None, 5, registry)
+    assert pairs.count() == 0
     hrows = hot.collect()
     assert len(hrows) == 1 and hrows[0].n_docs == 10
-    kept2, hot2 = pairable_bands(bands, cap=100)
-    assert kept2.count() == 10 and hot2.count() == 0
+    pairs2, hot2 = pairs_from_bands(bands, None, 100, registry)
+    assert pairs2.count() == 10 * 9 // 2 and hot2.count() == 0
 
 
-def test_bypassed_tight_tier_records_no_drops(spark):
+def test_bypassed_tight_tier_records_no_drops(spark, registry):
     """Tier 1 is a per-pair filter: it builds no bucket, so it records no
     drop, whether it runs (tight_min_match=1) or is bypassed (0). Here it
     keeps both coarse pairs either way."""
@@ -125,7 +134,7 @@ def test_bypassed_tight_tier_records_no_drops(spark):
                     tight_n_bands=8, tight_rows_per_band=1, hot_band_cap=2)
     for m in (1, 0):
         cands, hot = minhash_candidate_pairs(
-            sigs, DedupConfig(tight_min_match=m, **geometry))
+            sigs, DedupConfig(tight_min_match=m, **geometry), registry)
         assert sorted((r.id_a, r.id_b) for r in cands.collect()) == \
             [(1, 2), (2, 3)], m
         assert hot.filter(F.col("tier") == 1).count() == 0, m
@@ -162,7 +171,7 @@ def _band_join_tier1(sigs: dict[int, list[int]], cfg) -> tuple[set, int]:
 
 
 @pytest.mark.parametrize("m", [1, 2, 3])
-def test_tight_tier_matches_band_join_model(spark, m):
+def test_tight_tier_matches_band_join_model(spark, registry, m):
     """The per-pair slice filter keeps exactly the pairs the former tight
     band self-join kept whenever no tight bucket among the survivors is
     hot. Seeded families of mutated signatures make pairs agree on 0..all
@@ -183,12 +192,12 @@ def test_tight_tier_matches_band_join_model(spark, m):
     coarse, _ = _band_join_tier1(sigs, DedupConfig(tight_min_match=0,
                                                    **geometry))
     assert n_hot == 0 and want and want < coarse
-    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg, registry)
     assert {(r.id_a, r.id_b) for r in got.collect()} == want
     assert hot.count() == 0
 
 
-def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark):
+def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark, registry):
     """The documented difference: a coarse pair whose only shared tight
     slice sits in a tight bucket above hot_band_cap was dropped by the
     band self-join and is kept by the per-pair filter."""
@@ -205,7 +214,7 @@ def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark):
                       tight_n_bands=2, tight_rows_per_band=4,
                       tight_min_match=1, hot_band_cap=2)
     assert _band_join_tier1(sigs, cfg) == (set(), 1)
-    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg, registry)
     assert sorted((r.id_a, r.id_b) for r in got.collect()) == [(1, 2), (3, 4)]
     assert hot.count() == 0
 
@@ -250,36 +259,35 @@ def test_exact_pairs_and_evidence_merge(spark):
 
 
 def _random_key_rows(rng: random.Random, ids: list[int], n: int):
-    """n (doc_id, k, pos) rows over a small key space (many collisions)."""
-    return [(rng.choice(ids), rng.randrange(6), rng.randrange(1000))
+    """n (doc_id, k, pos) rows over a key space where a key is held by one,
+    two or several docs."""
+    return [(rng.choice(ids), rng.randrange(30), rng.randrange(1000))
             for _ in range(n)]
 
 
 @pytest.mark.parametrize("seed", [3, 11])
-def test_shared_key_pairs_matches_brute_force(spark, seed):
-    """shared_key_pairs(new, index) == every pair of rows sharing a key in
-    index ∪ new with id_a < id_b and at least one `new` row, payload in id
-    order — as a MULTISET (one row per shared key occurrence). Some doc_ids
-    sit on both sides, like a re-delivered doc next to its indexed copy."""
+def test_shared_key_pairs_matches_brute_force(spark, registry, seed):
+    """shared_key_pairs(new, index, cap) == every pair of rows sharing a
+    key in index ∪ new with id_a < id_b and at least one `new` row, payload
+    in id order — as a MULTISET (one row per shared key occurrence) — over
+    the keys held by at most `cap` distinct doc_ids; `hot` == the keys held
+    by more, with that count. A doc holding a key at several positions
+    counts once, and so does a doc_id on both sides, like a re-delivered
+    doc next to its indexed copy. cap=2 splits the keys into singletons,
+    pairable keys and hot keys; cap=1000 binds on none."""
     rng = random.Random(seed)
     both = [100, 101, 102]
     new = _random_key_rows(rng, list(range(20, 35)) + both, 40)
     idx = _random_key_rows(rng, list(range(0, 15)) + both, 50)
+    # doc 20 holds key 30 at two positions, doc 100 holds it on both sides
+    new += [(20, 30, 1), (20, 30, 2), (100, 30, 3)]
+    idx += [(100, 30, 4)]
+    docs_of: dict[int, set] = {}
+    for d, k, _ in new + idx:
+        docs_of.setdefault(k, set()).add(d)
+    assert len(docs_of[30]) == 2
     schema = "doc_id long, k int, pos int"
-    got = Counter(
-        tuple(r) for r in shared_key_pairs(
-            spark.createDataFrame(new, schema),
-            spark.createDataFrame(idx, schema), ["k"], ["pos"],
-        ).collect()
-    )
     rows = [(*r, True) for r in new] + [(*r, False) for r in idx]
-    want = Counter()
-    for i, (id1, k1, p1, n1) in enumerate(rows):
-        for id2, k2, p2, n2 in rows[i + 1:]:
-            if k1 == k2 and id1 != id2 and (n1 or n2):
-                (ia, pa), (ib, pb) = sorted([(id1, p1), (id2, p2)])
-                want[(k1, ia, ib, pa, pb)] += 1
-    assert want and got == want
 
     # the band probe keeps streaming's former hits_old ∪ hits_new set rule
     bschema = "doc_id long, band_id int, band_key long"
@@ -289,10 +297,65 @@ def test_shared_key_pairs_matches_brute_force(spark, seed):
     def as_bands(rs):
         return spark.createDataFrame(rs, bschema).withColumn("tier", F.lit(0))
 
-    hits_old = {(min(a, b), max(a, b)) for a, *ka in nb for b, *kb in ib
-                if ka == kb and a != b}
-    hits_new = {(a, b) for a, *ka in nb for b, *kb in nb
-                if ka == kb and a < b}
-    got_pairs = pairs_from_bands(as_bands(nb), as_bands(ib)).collect()
-    assert len(got_pairs) == len(hits_old | hits_new)
-    assert {tuple(r) for r in got_pairs} == hits_old | hits_new
+    for cap in (2, 1000):
+        pairs, hot = shared_key_pairs(
+            spark.createDataFrame(new, schema),
+            spark.createDataFrame(idx, schema), ["k"], cap, registry,
+            ["pos"],
+        )
+        got = Counter(tuple(r) for r in pairs.collect())
+        want = Counter()
+        for i, (id1, k1, p1, n1) in enumerate(rows):
+            for id2, k2, p2, n2 in rows[i + 1:]:
+                if k1 == k2 and id1 != id2 and (n1 or n2) \
+                        and len(docs_of[k1]) <= cap:
+                    (ia, pa), (ib_, pb) = sorted([(id1, p1), (id2, p2)])
+                    want[(k1, ia, ib_, pa, pb)] += 1
+        assert want and got == want, cap
+        want_hot = {(k, len(ds)) for k, ds in docs_of.items()
+                    if len(ds) > cap}
+        assert {tuple(r) for r in hot.collect()} == want_hot, cap
+        assert bool(want_hot) == (cap == 2)
+
+        pairable = {k for k, ds in docs_of.items() if len(ds) <= cap}
+        hits_old = {(min(a, b), max(a, b)) for a, *ka in nb for b, *kb in ib
+                    if ka == kb and a != b and ka[1] in pairable}
+        hits_new = {(a, b) for a, *ka in nb for b, *kb in nb
+                    if ka == kb and a < b and ka[1] in pairable}
+        got_pairs, band_hot = pairs_from_bands(as_bands(nb), as_bands(ib),
+                                               cap, registry)
+        got_pairs = got_pairs.collect()
+        assert len(got_pairs) == len(hits_old | hits_new)
+        assert {tuple(r) for r in got_pairs} == hits_old | hits_new
+        assert {(r.band_id, r.band_key, r.n_docs)
+                for r in band_hot.collect()} == \
+            {(k % 2, k, n) for k, n in want_hot}
+
+
+def test_gated_pairs_leave_no_cached_table(spark):
+    """A gated pair join persists its key counts into the caller's registry
+    and nowhere else: once the pairs and hot keys are collected and
+    release_persisted has run, the session's cache manager holds no table
+    the calls added."""
+    from lsh_cascade_poc_spark.operators.suffix import overlap_candidates
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    sig = [1, 2, 3, 4]
+    sigs = _sig_df(spark, {1: sig, 2: sig, 3: sig, 4: [5, 6, 7, 8]})
+    fps = spark.createDataFrame(
+        [(1, 7, 0), (2, 7, 5), (2, 7, 9), (3, 8, 0)],
+        "doc_id long, fp long, pos int",
+    )
+    cfg = DedupConfig(n_perm=4, coarse_n_bands=1, tight_n_bands=1,
+                      tight_rows_per_band=4, hot_band_cap=2,
+                      overlap_min_shared_fps=1)
+    registry: list = []
+    pairs, hot = minhash_candidate_pairs(sigs, cfg, registry)
+    assert pairs.count() == 0 and [r.n_docs for r in hot.collect()] == [3]
+    cands = overlap_candidates(fps, cfg, registry)
+    assert [(r.id_a, r.id_b) for r in cands.collect()] == [(1, 2)]
+    assert len(registry) == 2
+    assert cache.numCachedEntries() == before + len(registry)
+    release_persisted(registry)
+    assert registry == [] and cache.numCachedEntries() == before

@@ -55,14 +55,19 @@ def test_band_self_join_is_hash_join_not_nested_loop(spark, tiny_turns):
     )
     from lsh_cascade_poc_spark.operators.bands import explode_bands
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
-    from lsh_cascade_poc_spark.pipeline import build_signatures
+    from lsh_cascade_poc_spark.pipeline import (
+        build_signatures,
+        release_persisted,
+    )
 
     cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
                       tight_n_bands=5)
     docs = with_doc_id(assemble_conversations(tiny_turns))
     sigs = build_signatures(docs, cfg)
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
-    plan = plan_of(pairs_from_bands(bands))
+    registry: list = []
+    plan = plan_of(pairs_from_bands(bands, None, 1000, registry)[0])
+    release_persisted(registry)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
@@ -71,10 +76,11 @@ def test_band_self_join_is_hash_join_not_nested_loop(spark, tiny_turns):
 
 def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
     """Batch runs the streaming candidate operator (shared_key_pairs)
-    against an EMPTY index: Catalyst must prune the new x index branch, so
-    the batch plan stays the plain self-join — no Union, and exactly one
-    join on the key table (plus, for overlap, the shared-fp gate join of
-    the one fps side). A lost pruning would double the batch joins."""
+    against an EMPTY index: Catalyst must prune the new x index branch and
+    the empty side of the gate's key count, so the batch plan stays the
+    plain gated self-join — no Union, and exactly one pair join on the key
+    table, with the gate join of the one new side under each of its sides.
+    A lost pruning would double the batch joins."""
     from lsh_cascade_poc_spark.config import DedupConfig
     from lsh_cascade_poc_spark.operators.assemble import (
         assemble_conversations,
@@ -86,7 +92,10 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
         overlap_candidates,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import build_signatures
+    from lsh_cascade_poc_spark.pipeline import (
+        build_signatures,
+        release_persisted,
+    )
 
     def optimized(df) -> tuple[str, list[str], list[str]]:
         """(plan, its joins, its pair joins: those filtering id_a < id_b)"""
@@ -99,12 +108,17 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
     docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
     sigs = build_signatures(docs, cfg).localCheckpoint()
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
-    plan, joins, pair_joins = optimized(pairs_from_bands(bands))
+    registry: list = []
+    plan, joins, pair_joins = optimized(
+        pairs_from_bands(bands, None, cfg.hot_band_cap, registry)[0])
     assert "Union" not in plan, plan
-    assert len(joins) == len(pair_joins) == 1, plan
+    # the pair join + the pairable-bucket gate join under each side of it
+    assert len(joins) == 3 and len(pair_joins) == 1, plan
 
     fps = winnow_fingerprints(docs, 24, 64).localCheckpoint()
-    plan, joins, pair_joins = optimized(overlap_candidates(fps))
+    plan, joins, pair_joins = optimized(
+        overlap_candidates(fps, cfg, registry))
+    release_persisted(registry)
     assert "Union" not in plan, plan
     # the pair join + the shared-fp gate join under each side of it
     assert len(joins) == 3 and len(pair_joins) == 1, plan
@@ -126,14 +140,17 @@ def test_tight_tier_is_a_pair_filter_not_a_band_join(spark, tiny_turns):
     from lsh_cascade_poc_spark.pipeline import (
         build_signatures,
         minhash_candidate_pairs,
+        release_persisted,
     )
 
     cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
                       tight_n_bands=5, tight_min_match=1)
     docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
     sigs = build_signatures(docs, cfg).localCheckpoint()
-    cands, _ = minhash_candidate_pairs(sigs, cfg)
+    registry: list = []
+    cands, _ = minhash_candidate_pairs(sigs, cfg, registry)
     plan = cands._jdf.queryExecution().optimizedPlan().toString()
+    release_persisted(registry)
     joins = [ln for ln in plan.splitlines() if "Join " in ln]
     pair_joins = [ln for ln in joins if "band_key" in ln and "id_a#" in ln]
     doc_id_joins = [ln for ln in joins

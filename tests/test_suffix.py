@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from lsh_cascade_poc_spark.config import DedupConfig
 from lsh_cascade_poc_spark.operators.suffix import (
     _extend_match,
     _kgram_hashes,
@@ -13,6 +14,7 @@ from lsh_cascade_poc_spark.operators.suffix import (
     verify_overlaps,
     winnow_fingerprints,
 )
+from lsh_cascade_poc_spark.pipeline import release_persisted
 
 _ROLL_P = (1 << 61) - 1
 _ROLL_BASE = 1_000_003
@@ -159,8 +161,11 @@ def test_overlap_stage_end_to_end(spark):
         "doc_id long, doc_text string",
     )
     fps = winnow_fingerprints(docs, k=24, w=32)
-    cands = overlap_candidates(fps)
+    registry: list = []
+    cands = overlap_candidates(
+        fps, DedupConfig(overlap_min_shared_fps=1), registry)
     found = verify_overlaps(cands, docs, k=24, min_overlap_chars=96).collect()
+    release_persisted(registry)
     pairs = {(r.id_a, r.id_b) for r in found}
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
@@ -184,8 +189,12 @@ def test_overlap_candidates_prefilter_semantics(spark):
     rows += [(100 + i, f"doc {i} says " + boiler) for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id long, doc_text string")
     fps = winnow_fingerprints(docs, k=24, w=32)
-    cands = overlap_candidates(fps, hot_cap=8, min_shared_fps=1)
+    registry: list = []
+    cands = overlap_candidates(
+        fps, DedupConfig(overlap_hot_cap=8, overlap_min_shared_fps=1),
+        registry)
     pairs = {(r.id_a, r.id_b) for r in cands.collect()}
+    release_persisted(registry)
     assert (1, 2) in pairs  # true overlap survives the gate
     assert all(a < 100 and b < 100 for a, b in pairs), (
         f"boilerplate-only docs must not pair (hot cap), got {pairs}"
@@ -217,7 +226,8 @@ def test_true_overlap_flanked_by_boilerplate_seeds(spark):
         "doc_id long, doc_text string",
     )
     fps = winnow_fingerprints(docs, k=24, w=64)  # production kgram/window
-    cands = overlap_candidates(fps, hot_cap=200, min_shared_fps=2)
+    registry: list = []
+    cands = overlap_candidates(fps, DedupConfig(), registry)
     rows = cands.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -226,6 +236,7 @@ def test_true_overlap_flanked_by_boilerplate_seeds(spark):
     assert r.pos_a < len(bo1), "min seed should land in the leading boilerplate"
     assert r.pos_a2 > r.pos_a + len(ovl), "max seed should land past the overlap"
     found = verify_overlaps(cands, docs, k=24, min_overlap_chars=200).collect()
+    release_persisted(registry)
     assert [(x.id_a, x.id_b) for x in found] == [(r.id_a, r.id_b)]
     assert found[0].overlap_chars >= len(ovl) - 2
 

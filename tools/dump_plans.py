@@ -37,14 +37,18 @@ def main() -> None:
         assemble_conversations,
         with_doc_id,
     )
-    from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
+    from lsh_cascade_poc_spark.operators.bands import explode_bands
     from lsh_cascade_poc_spark.operators.components import _large_star, _canonical
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
     from lsh_cascade_poc_spark.operators.suffix import (
         overlap_candidates,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import build_signatures, tight_tier
+    from lsh_cascade_poc_spark.pipeline import (
+        build_signatures,
+        release_persisted,
+        tight_tier,
+    )
     from lsh_cascade_poc_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans", master="local[4]",
@@ -93,23 +97,25 @@ def main() -> None:
     sigs_ck = sigs.localCheckpoint(eager=True)
     bands = explode_bands(sigs_ck, "minhash", tier=0, n_bands=4,
                           rows_per_band=4)
-    kept, _hot = pairable_bands(bands, cap=100)
+    registry: list = []
+    pairs, _hot = pairs_from_bands(bands, None, cfg.hot_band_cap, registry)
     sections.append((
         "Band self-join: equi-join on (tier, band_id, band_key)",
         "The cascade's dominant shuffle. Band keys are `xxhash64` over "
         "signature slices — computed in whole-stage codegen, no Python. "
         "The self-join is an EQUI-join (test_plans.py pins 'never "
         "nested-loop'; broadcast at this toy scale, shuffle join at real "
-        "scale under the 8MB threshold); the pairable-bucket gate (bucket "
-        "sizes 2..cap, broadcast when small) drops singleton and hot "
-        "buckets before it, and `id_a < id_b` + "
+        "scale under the 8MB threshold); the join's own hot-key gate (the "
+        "persisted `InMemoryRelation` of distinct docs per bucket; buckets "
+        "of 2..cap docs, broadcast when small) drops singleton and hot "
+        "buckets under each of its sides, and `id_a < id_b` + "
         "`distinct` dedups pairs across bands BEFORE the expensive verify. "
         "Both sides read the checkpointed signature stage, mirroring "
         "run_dedup's stage materialization. The join is `shared_key_pairs`, "
         "the operator streaming probes its index with; a batch run passes "
         "an empty index, whose new x index branch Catalyst prunes — no "
-        "`Union`, one join (tests/test_plans.py pins it).",
-        pairs_from_bands(kept),
+        "`Union`, one pair join (tests/test_plans.py pins it).",
+        pairs,
         "simple",
     ))
 
@@ -122,7 +128,10 @@ def main() -> None:
         "checkpointed here to show tier 1 alone. The predicate has no "
         "lambda, filters joined rows and feeds no `explode`, so the "
         "higher-order-function trap below does not apply.",
-        tight_tier(pairs_from_bands(kept).localCheckpoint(), sigs_ck, cfg),
+        # a fresh Dataset: checkpointing `pairs` itself would run its
+        # adaptive plan and turn the band section into a post-run plan
+        tight_tier(pairs.select("id_a", "id_b").localCheckpoint(), sigs_ck,
+                   cfg),
         "simple",
     ))
 
@@ -132,13 +141,13 @@ def main() -> None:
         "Overlap candidates: the same shared-key join on `fp`",
         "The winnow fingerprint table pairs through the same "
         "`shared_key_pairs` join as the bands, keyed on `fp` with `pos` as "
-        "payload. Both join sides are gated to fingerprints shared by "
-        "2..hot_cap docs (the persisted, counted gate set — broadcast when "
-        "small); the empty-index branch is pruned as above. Two "
-        "aggregates then pick three verify seeds per pair (per alignment "
-        "delta, then per pair) and apply `min_shared_fps`.",
-        overlap_candidates(fps, hot_cap=cfg.overlap_hot_cap,
-                           min_shared_fps=cfg.overlap_min_shared_fps),
+        "payload, and through the same gate: both join sides keep the "
+        "fingerprints shared by 2..overlap_hot_cap distinct docs (the "
+        "persisted, counted gate set — broadcast when small); the "
+        "empty-index branch is pruned as above. Two aggregates then pick "
+        "three verify seeds per pair (per alignment delta, then per pair) "
+        "and apply `overlap_min_shared_fps`.",
+        overlap_candidates(fps, cfg, registry),
         "simple",
     ))
 
@@ -147,11 +156,7 @@ def main() -> None:
         "groupBy(min) + join per round — partial aggregation (map-side "
         "combine) handles hot roots; per-round `localCheckpoint` (lazy) "
         "truncates lineage so round N's plan does not embed rounds 1..N-1.",
-        _large_star(_canonical(
-            pairs_from_bands(kept).select(
-                F.col("id_a"), F.col("id_b")
-            )
-        )),
+        _large_star(_canonical(pairs.select(F.col("id_a"), F.col("id_b")))),
         "simple",
     ))
 
@@ -203,6 +208,7 @@ def main() -> None:
         print("```")
         print(plan_of(df, mode).rstrip())
         print("```\n")
+    release_persisted(registry)
     spark.stop()
 
 
