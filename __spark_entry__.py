@@ -2917,11 +2917,9 @@ def oracle_sql() -> dict[str, str]:
     # cannot bind at oracle corpus sizes and is omitted (q_dedup_pairs
     # docstring); that scope precondition fails loudly per-corpus in
     # tests/test_prod_oracle.py::test_dedup_band_occupancy_below_hot_cap.
-    import inspect as _inspect
-
     from lsh_cascade_poc_spark.config import DEFAULT_CONFIG, DedupConfig
     from lsh_cascade_poc_spark.operators.verify import (
-        verify_pairs_exact_jaccard as _vpej,
+        ESTIMATE_MARGIN as _dmargin,
     )
 
     _dcfg = DedupConfig(**_DEDUP_Q_CFG)
@@ -2935,10 +2933,9 @@ def oracle_sql() -> dict[str, str]:
     assert _dcfg.tight_min_match == 1
     # the SimHash SQL packs the bits into ONE BIGINT (bit 63 = sign bit)
     assert _dcfg.simhash_bits == 64
-    # production verify prunes on lane-agreement >= threshold - margin; read
-    # the margin off the verify function's own default so an operators/
-    # verify.py change moves the oracle too
-    _dmargin = _inspect.signature(_vpej).parameters["estimate_margin"].default
+    # production verify prunes on lane-agreement >= threshold - margin; the
+    # margin is imported from operators/verify.py so a change there moves
+    # the oracle too
     _da, _db = make_perms(_dcfg.n_perm, _dcfg.minhash_seed)
     _dlane_cols = []
     for _i in range(_dcfg.n_perm):

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions.simhash import hamming64, simhash_band_key
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("modality", T.StringType(), False),   # image | audio | video
@@ -240,9 +242,10 @@ def sample_video_frames(
 def media_dedup_pairs(media: DataFrame, hamming_tau: int = 6,
                       deterministic_fake: bool = True) -> DataFrame:
     """Embedding-cosine near-dup over media features: feature extraction ->
-    sign-bit SimHash (identity hyperplanes) -> band join + Hamming filter.
-    Reuses the text pipeline's banding machinery, proving the dedup engine is
-    modality-agnostic once a feature column exists."""
+    sign-bit SimHash (identity hyperplanes) -> 4 x 16-bit chunk band
+    self-join + Hamming <= tau filter, built from the text pipeline's
+    SimHash helpers (functions/simhash.py simhash_band_key, hamming64): the
+    dedup expressions are modality-agnostic once a feature column exists."""
     feats = extract_features(media, deterministic_fake)
     signbit = (
         "aggregate(sequence(0, 63), 0L,"
@@ -252,8 +255,7 @@ def media_dedup_pairs(media: DataFrame, hamming_tau: int = 6,
     bands = sigs.select(
         "media_id", "h",
         F.posexplode(F.array(*[
-            F.shiftrightunsigned(F.col("h"), i * 16).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)
+            simhash_band_key(F.col("h"), i, 16) for i in range(4)
         ])).alias("band_id", "band_key"),
     )
     a = bands.select("band_id", "band_key", F.col("media_id").alias("id_a"),
@@ -263,7 +265,7 @@ def media_dedup_pairs(media: DataFrame, hamming_tau: int = 6,
     return (
         a.join(b, ["band_id", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= hamming_tau)
+        .filter(hamming64(F.col("h_a"), F.col("h_b")) <= hamming_tau)
         .select("id_a", "id_b")
         .distinct()
     )

@@ -95,9 +95,13 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
     self-join."""
     if index is None:
         index = new.limit(0)
+    # hash-partitioned on the keys first, the distinct count needs no
+    # second exchange: the (keys, doc_id) dedup and the per-key count both
+    # run within the keys' partitions (one shuffle, not two)
     n_docs = (
         new.select("doc_id", *keys)
         .unionByName(index.select("doc_id", *keys))
+        .repartition(*keys)
         .groupBy(*keys).agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= 2)
         .persist()

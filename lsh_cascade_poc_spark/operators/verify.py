@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 from ..functions.minhash import jaccard_estimate_from_signatures
 from ..functions.shingles import jaccard_on_shingle_arrays
 
+# stage-2 prune of verify_pairs_exact_jaccard: a pair survives iff its
+# MinHash lane-agreement estimate is >= threshold - ESTIMATE_MARGIN (the
+# __spark_entry__ dedup oracle reads this constant)
+ESTIMATE_MARGIN = 0.1
+
 
 def attach_pair_sides(
     pairs: DataFrame,
@@ -43,7 +48,6 @@ def verify_pairs_exact_jaccard(
     pairs: DataFrame,
     signatures: DataFrame,
     threshold: float,
-    estimate_margin: float | None = 0.1,
     shingle_provider=None,
 ) -> DataFrame:
     """-> dup_pairs(id_a, id_b, jaccard), verified in three widening joins so
@@ -53,13 +57,11 @@ def verify_pairs_exact_jaccard(
       1. size-ratio prune (16-byte join): J >= t implies
          min(|A|,|B|)/max(|A|,|B|) >= t — EXACT, zero recall loss.
       2. MinHash lane-agreement estimate (1KB join): drop pairs whose
-         estimate < t - estimate_margin. The estimate is Binomial(n_perm, J)/
+         estimate < t - ESTIMATE_MARGIN. The estimate is Binomial(n_perm, J)/
          n_perm, so at n_perm=128 and margin=0.1 the false-drop probability
          for a true J >= t pair is ~Phi(-0.1/0.035) < 0.3% — and the numpy
          reference applies the IDENTICAL rule, so parity is exact.
       3. exact Jaccard on shingle sets (wide join) >= t.
-
-    Set estimate_margin=None to skip stage 2.
 
     `shingle_provider` (store_shingles=False mode): a callable mapping a
     (doc_id) DataFrame of stage-1/2 SURVIVOR ids to (doc_id, shingles) — the
@@ -90,17 +92,16 @@ def verify_pairs_exact_jaccard(
         .select("id_a", "id_b")
     )
 
-    if estimate_margin is not None:
-        mh = signatures.select("doc_id", "minhash")
-        p = (
-            p.join(mh.withColumnsRenamed({"doc_id": "id_a", "minhash": "mh_a"}), "id_a")
-            .join(mh.withColumnsRenamed({"doc_id": "id_b", "minhash": "mh_b"}), "id_b")
-            .filter(
-                jaccard_estimate_from_signatures(F.col("mh_a"), F.col("mh_b"))
-                >= F.lit(threshold - estimate_margin)
-            )
-            .select("id_a", "id_b")
+    mh = signatures.select("doc_id", "minhash")
+    p = (
+        p.join(mh.withColumnsRenamed({"doc_id": "id_a", "minhash": "mh_a"}), "id_a")
+        .join(mh.withColumnsRenamed({"doc_id": "id_b", "minhash": "mh_b"}), "id_b")
+        .filter(
+            jaccard_estimate_from_signatures(F.col("mh_a"), F.col("mh_b"))
+            >= F.lit(threshold - ESTIMATE_MARGIN)
         )
+        .select("id_a", "id_b")
+    )
 
     if shingle_provider is not None:
         ids = (

@@ -17,12 +17,17 @@ Our all-pairs restatement (SURVEY.md §7.1):
     Stage 2e winnowing/substring pass: exact long-overlap pairs
     Stage 3  exact Jaccard verify on the unioned candidate set
     Stage 4  connected components -> cluster assignment
-Every stage can be checkpointed through StageStore (resume skips committed
-stages); metrics rows record per-stage row counts and wall time.
+Stages 1-3 are one body, run_cascade, with two drivers: run_dedup runs it
+as a first micro-batch against an empty index, and streaming.py's
+IncrementalDedup.process_batch against its index as it stood before each
+micro-batch. Every stage can be checkpointed through StageStore (resume
+skips committed stages); metrics rows record per-stage row counts and wall
+time.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -165,41 +170,63 @@ def tight_tier(pairs: DataFrame, signatures: DataFrame,
     )
 
 
+def _with_index(new: DataFrame, index: Mapping[str, DataFrame] | None,
+                name: str) -> DataFrame:
+    """`new` plus the rows of index table `name` (none for an empty
+    index): the side tables a probe's pairs read, over index ∪ new."""
+    return new if index is None else index[name].unionByName(new)
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
+    index: Mapping[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Tiers 0+1 of the banding cascade -> (candidate pairs, hot-band stats).
     Persisted intermediates are appended to `persist_registry` so the caller
     can unpersist them once downstream stages are materialized (leaked
     persists accumulate block-manager memory across repeated runs — measured
-    as a 7x warm-run slowdown on this VM's ballooned memory)."""
+    as a 7x warm-run slowdown on this VM's ballooned memory). With an
+    `index` (run_cascade), tier 0 probes its `bands` and tier 1 reads its
+    `signatures` too."""
     # tier 0: coarse, whole corpus; a candidate must be generated by the
     # coarse tier AND confirmed by the tight tier (the cascade's
     # AND-tightening)
-    coarse, hot0 = pairs_from_bands(coarse_bands(signatures, cfg), None,
-                                    cfg.hot_band_cap, persist_registry)
-    return tight_tier(coarse, signatures, cfg), hot0
+    coarse, hot0 = pairs_from_bands(
+        coarse_bands(signatures, cfg),
+        None if index is None else index["bands"],
+        cfg.hot_band_cap, persist_registry,
+    )
+    return tight_tier(coarse, _with_index(signatures, index, "signatures"),
+                      cfg), hot0
 
 
 def simhash_candidate_pairs(
     signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
+    index: Mapping[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """SimHash bit-sampling pass: 16-bit chunk band join (chunk_hash analog)
     + Hamming <= tau prune (the reference's Stage-2 rerank as a filter).
+    With an `index`, the chunks of its `signatures` are the probed side.
     Returns (pairs, hot-band stats) like minhash_candidate_pairs."""
     n_bands = cfg.simhash_bits // cfg.simhash_band_bits
-    banded = signatures.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
-                for i in range(n_bands)
-            ])
-        ).alias("band_id", "band_key"),
-    ).withColumn("tier", F.lit(2))
-    pairs, hot = shared_key_pairs(banded, None, BAND_KEY, cfg.hot_band_cap,
-                                  persist_registry, ["simhash"])
+
+    def chunks(sigs: DataFrame) -> DataFrame:
+        return sigs.select(
+            "doc_id",
+            "simhash",
+            F.posexplode(
+                F.array(*[
+                    simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
+                    for i in range(n_bands)
+                ])
+            ).alias("band_id", "band_key"),
+        ).withColumn("tier", F.lit(2))
+
+    pairs, hot = shared_key_pairs(
+        chunks(signatures),
+        None if index is None else chunks(index["signatures"]),
+        BAND_KEY, cfg.hot_band_cap, persist_registry, ["simhash"],
+    )
     close = hamming64(F.col("simhash_a"), F.col("simhash_b")) \
         <= cfg.simhash_hamming_tau
     return pairs.filter(close).select("id_a", "id_b").distinct(), hot
@@ -221,21 +248,28 @@ def overlap_docs_gate(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def overlap_pairs(docs: DataFrame, fps: DataFrame, cfg: DedupConfig,
-                  persist_registry: list) -> DataFrame:
+def overlap_pairs(texts: DataFrame, fps: DataFrame, cfg: DedupConfig,
+                  persist_registry: list,
+                  index: Mapping[str, DataFrame] | None = None) -> DataFrame:
     """Winnowing fingerprints -> seed candidates -> exact extension; emits
-    pairs sharing an exact substring of >= min_overlap_chars.
+    pairs sharing an exact substring of >= min_overlap_chars. `texts`
+    (doc_id, doc_text) are the gated docs (overlap_docs_gate) and `fps`
+    their winnow fingerprints; with an `index`, they probe its
+    `overlap_fps` and extend over its `texts` too.
 
-    `fps` is the PRE-MATERIALIZED winnow fingerprint table of the gated
-    docs (run_dedup checkpoints it as its own stage). The candidate gate
-    counts the shared-fp set in a separate action to size-gate its
-    broadcast (operators/pairs.py shared_key_pairs); with a lazy fps plan
-    that count would re-run the winnow kernel — the most expensive Arrow
-    pass in the stage — a second time."""
-    docs = overlap_docs_gate(docs, cfg)
-    cands = overlap_candidates(fps, cfg, persist_registry)
+    `fps` is PRE-MATERIALIZED (the cascade checkpoints it as its own
+    stage): the candidate gate counts the shared-fp set in a separate
+    action to size-gate its broadcast (operators/pairs.py
+    shared_key_pairs); with a lazy fps plan that count would re-run the
+    winnow kernel — the most expensive Arrow pass in the stage — a second
+    time."""
+    cands = overlap_candidates(
+        fps, cfg, persist_registry,
+        index=None if index is None else index["overlap_fps"],
+    )
     return verify_overlaps(
-        cands, docs, cfg.winnow_kgram_chars, cfg.min_overlap_chars
+        cands, _with_index(texts, index, "texts"), cfg.winnow_kgram_chars,
+        cfg.min_overlap_chars,
     ).select("id_a", "id_b")
 
 
@@ -288,6 +322,126 @@ def merge_evidence(verified: DataFrame, exact: DataFrame,
     return out.groupBy("id_a", "id_b").agg(F.max("jaccard").alias("jaccard"))
 
 
+@dataclass
+class CascadeResult:
+    signatures: DataFrame     # the fresh representatives' signatures
+    hot: DataFrame            # (tier, band_id, band_key, n_docs) hot buckets
+    texts: DataFrame | None   # (doc_id, doc_text) of the long representatives
+    fps: DataFrame | None     # their winnow fingerprints
+    dup_pairs: DataFrame      # (id_a, id_b, jaccard)
+
+
+def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
+                stage, index: Mapping[str, DataFrame] | None = None,
+                overlap: bool = True) -> CascadeResult:
+    """The one cascade body of both drivers: signatures -> tier 0 + tier 1
+    -> SimHash -> winnow overlap -> Jaccard verify -> evidence merge.
+
+    `reps` are the fresh exact-group representatives (docs rows),
+    `exact_pairs` the exact-duplicate evidence (id_a, id_b), and
+    `stage(name, factory)` materializes one stage. `index` holds the
+    streaming index's tables as they stood before this batch, by name
+    (`signatures`, `bands`, `overlap_fps`, `texts`); None is an empty
+    index, which is every batch run and a stream's first batch. Every
+    candidate tier probes it through shared_key_pairs (new x new plus
+    new x indexed), and the verify reads the indexed signatures; that is
+    the body's only branch on it. `overlap=False` skips the winnow stage
+    (batch's enable_overlap_stage)."""
+
+    # each candidate tier is its own materialization, NOT one fused write:
+    # fusing them into a single job looked cheaper on paper (one Catalyst
+    # analysis, overlapping shuffles) but tripled the stage's wall where it
+    # was measured — three tiers' shuffles live simultaneously and the
+    # working set blows past the host's fault-handler comfort zone.
+    # Separate stages also keep per-tier resume + A5 reduction metrics
+    # trivially.
+    def _minhash_chain():
+        """signatures -> minhash tiers -> simhash pass -> hot buckets (one
+        dependency chain)."""
+        signatures = stage("signatures", lambda: build_signatures(reps, cfg))
+        band_persists: list = []
+        try:
+            mh_lazy, mh_hot = minhash_candidate_pairs(signatures, cfg,
+                                                      band_persists, index)
+            mh_pairs = stage("pairs_minhash", lambda: mh_lazy)
+            sh_lazy, sh_hot = simhash_candidate_pairs(signatures, cfg,
+                                                      band_persists, index)
+            sh_pairs = stage("pairs_simhash", lambda: sh_lazy)
+            # A5/ADVICE: dropped hot buckets are recorded, not silent —
+            # their own stage (count + per-bucket sizes). The non-singleton
+            # bucket counts were persisted while the pair stages evaluated
+            # (shared_key_pairs persist_registry), so this is a cheap
+            # filter, not a band-table re-scan.
+            hot = stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
+        finally:
+            # every band-tier persisted intermediate is now consumed; held
+            # through the verify they slow it (release_persisted)
+            release_persisted(band_persists)
+        return signatures, mh_pairs, sh_pairs, hot
+
+    def _overlap_chain():
+        """overlap_fps -> pairs_overlap (independent of the signature
+        chain: both consume only the representatives)."""
+        if not overlap:
+            return None, None, None
+        texts = overlap_docs_gate(reps, cfg).select("doc_id", "doc_text")
+        # the fp table is its own materialization: the candidate gate's
+        # broadcast-sizing count (pairs.py shared_key_pairs) and the
+        # candidate self-join both consume it — lazy, the winnow Arrow
+        # kernel would run once per consumer
+        fps = stage("overlap_fps", lambda: winnow_fingerprints(
+            texts, cfg.winnow_kgram_chars, cfg.winnow_window))
+        ov_persists: list = []
+        try:
+            ov_pairs = stage("pairs_overlap", lambda: overlap_pairs(
+                texts, fps, cfg, ov_persists, index))
+        finally:
+            release_persisted(ov_persists)
+        return texts, fps, ov_pairs
+
+    # The two chains share no data dependency, so the overlap chain runs
+    # on a worker thread while the signature chain runs on this one: each
+    # chain's tasks back-fill the idle capacity the other leaves behind —
+    # stage-tail stragglers, AQE/commit driver round-trips, the gate-count
+    # barriers — at BOTH parallelism levels (at local[1] the single core is
+    # idle during every driver round-trip too). Stage outputs, and
+    # therefore every downstream result, are bit-identical (A/B in
+    # OPTIMIZATION_r06.md).
+    (signatures, mh_pairs, sh_pairs, hot), (texts, fps, ov_pairs) = \
+        run_concurrently(reps.sparkSession, _minhash_chain, _overlap_chain)
+
+    def _verify():
+        # exact pairs are definitionally jaccard 1.0 and skip the verify
+        # join; overlap pairs already passed an exact-substring check but
+        # still go through Jaccard so dup_pairs carries a uniform score
+        # (merge_evidence keeps those below threshold as overlap evidence).
+        # Candidates are deduplicated BEFORE the expensive verify (the one
+        # barrier worth paying; reference dedups candidates the same way,
+        # src/e2lsh.py:292-307).
+        cands = mh_pairs.unionByName(sh_pairs)
+        if ov_pairs is not None:
+            cands = cands.unionByName(ov_pairs)
+        shingle_provider = None
+        if not cfg.store_shingles:
+            from .functions.signature_udf import make_shingles_udf
+
+            sh_udf = make_shingles_udf(cfg.shingle_k)
+            shingle_provider = lambda ids: (  # noqa: E731
+                reps.join(ids, "doc_id", "left_semi")
+                .select("doc_id", sh_udf("doc_text").alias("shingles"))
+            )
+        verified = verify_pairs_exact_jaccard(
+            cands.distinct(),
+            _with_index(signatures, index, "signatures"),
+            threshold=cfg.jaccard_threshold,
+            shingle_provider=shingle_provider,
+        )
+        return merge_evidence(verified, exact_pairs, ov_pairs)
+
+    return CascadeResult(signatures=signatures, hot=hot, texts=texts, fps=fps,
+                         dup_pairs=stage("dup_pairs", _verify))
+
+
 def run_dedup(
     spark: SparkSession,
     turns: DataFrame,
@@ -295,11 +449,13 @@ def run_dedup(
     store: StageStore | None = None,
     enable_overlap_stage: bool = True,
 ) -> DedupResult:
+    """Batch dedup: docs -> id check -> exact split -> the cascade body
+    against an empty index -> clusters."""
     cfg = cfg or DedupConfig()
 
-    def stage(name: str, factory, **kw):
+    def stage(name: str, factory):
         if store is not None:
-            return store.materialize(name, factory, **kw)
+            return store.materialize(name, factory)
         # no checkpoint store: localCheckpoint both materializes the stage
         # (multi-consumer stages would recompute otherwise) and TRUNCATES
         # the logical plan — without truncation each stage embeds every
@@ -319,116 +475,13 @@ def run_dedup(
     # passes see one row per distinct text; members re-attach via star
     # edges in the clustering stage.
     reps_docs, star_edges = split_exact_duplicates(docs)
-
-    # each candidate tier is its own materialization, NOT one fused write:
-    # fusing them into a single job looked cheaper on paper (one Catalyst
-    # analysis, overlapping shuffles) but tripled the stage's wall on this
-    # host — three tiers' shuffles live simultaneously and the working set
-    # blows past the VM's fault-handler comfort zone. Separate stages also
-    # keep per-tier resume + A5 reduction metrics trivially.
-    def _minhash_chain():
-        """signatures -> minhash tiers -> simhash pass (one dependency
-        chain; returns everything the join/verify phase needs)."""
-        signatures = stage("signatures", lambda: build_signatures(reps_docs, cfg))
-        band_persists: list = []
-        mh_pairs_lazy, mh_hot = minhash_candidate_pairs(signatures, cfg,
-                                                        band_persists)
-        mh_pairs = stage(
-            "pairs_minhash",
-            lambda: mh_pairs_lazy.withColumn("source", F.lit("minhash")),
-        )
-        sh_pairs_lazy, sh_hot = simhash_candidate_pairs(signatures, cfg,
-                                                        band_persists)
-        sh_pairs = stage(
-            "pairs_simhash",
-            lambda: sh_pairs_lazy.withColumn("source", F.lit("simhash")),
-        )
-        # A5/ADVICE: dropped hot buckets are recorded, not silent — their own
-        # stage row (count + per-bucket sizes) in the metrics/checkpoint
-        # store. The non-singleton bucket counts were persisted while the
-        # pair stages evaluated (shared_key_pairs persist_registry), so this
-        # is a cheap filter, not a band-table re-scan. Only materialized
-        # when a store is recording.
-        if store is not None:
-            stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
-        # every band-tier persisted intermediate is now consumed
-        release_persisted(band_persists)
-        return signatures, mh_pairs, sh_pairs
-
-    def _overlap_chain():
-        """overlap_fps -> pairs_overlap (independent of the signature
-        chain: both consume only the materialized docs stage); None when
-        the stage is disabled."""
-        if not enable_overlap_stage:
-            return None
-        # the fp table is its own materialization: the candidate gate's
-        # broadcast-sizing count (pairs.py shared_key_pairs) and the
-        # candidate self-join both consume it — lazy, the winnow Arrow
-        # kernel would run once per consumer
-        ov_fps = stage(
-            "overlap_fps",
-            lambda: winnow_fingerprints(
-                overlap_docs_gate(reps_docs, cfg),
-                cfg.winnow_kgram_chars, cfg.winnow_window,
-            ),
-        )
-        ov_persists: list = []
-        ov_pairs = stage(
-            "pairs_overlap",
-            lambda: overlap_pairs(reps_docs, ov_fps, cfg,
-                                  persist_registry=ov_persists)
-            .withColumn("source", F.lit("overlap")),
-        )
-        release_persisted(ov_persists)
-        return ov_pairs
-
-    # The two chains share no data dependency, so the overlap chain runs
-    # on a worker thread while the signature chain runs on this one: each
-    # chain's tasks back-fill the idle capacity the other leaves behind —
-    # stage-tail stragglers, AQE/commit driver round-trips, the gate-count
-    # barriers — at BOTH parallelism levels (at local[1] the single core is
-    # idle during every driver round-trip too). Stage outputs, and
-    # therefore every downstream result, are bit-identical (A/B in
-    # OPTIMIZATION_r06.md).
-    (signatures, mh_pairs, sh_pairs), ov_pairs = run_concurrently(
-        spark, _minhash_chain, _overlap_chain
-    )
-
-    def _verify():
-        # exact pairs are definitionally jaccard 1.0 and skip the verify
-        # join; overlap pairs already passed an exact-substring check but
-        # still go through Jaccard so dup_pairs carries a uniform score
-        # (merge_evidence keeps those below threshold as overlap evidence).
-        # Candidates are deduplicated BEFORE the expensive verify (the one
-        # barrier worth paying; reference dedups candidates the same way,
-        # src/e2lsh.py:292-307).
-        cands = mh_pairs.select("id_a", "id_b").unionByName(
-            sh_pairs.select("id_a", "id_b"))
-        if ov_pairs is not None:
-            cands = cands.unionByName(ov_pairs.select("id_a", "id_b"))
-        shingle_provider = None
-        if not cfg.store_shingles:
-            from .functions.signature_udf import make_shingles_udf
-
-            sh_udf = make_shingles_udf(cfg.shingle_k)
-            shingle_provider = lambda ids: (  # noqa: E731
-                docs.join(ids, "doc_id", "left_semi")
-                .select("doc_id", sh_udf("doc_text").alias("shingles"))
-            )
-        verified = verify_pairs_exact_jaccard(
-            cands.distinct(),
-            signatures,
-            threshold=cfg.jaccard_threshold,
-            shingle_provider=shingle_provider,
-        )
-        return merge_evidence(verified, star_edges, ov_pairs)
-
-    dup_pairs = stage("dup_pairs", _verify)
+    out = run_cascade(reps_docs, star_edges, cfg, stage,
+                      overlap=enable_overlap_stage)
 
     # overlap-evidence-only pairs (jaccard = -1) are reported but never
     # merge clusters: shared boilerplate turns would otherwise chain
     # unrelated conversations into one giant component
-    cluster_edges = dup_pairs.filter(F.col("jaccard") >= 0)
+    cluster_edges = out.dup_pairs.filter(F.col("jaccard") >= 0)
     clusters = stage(
         "clusters",
         lambda: clusters_with_singletons(
@@ -438,5 +491,5 @@ def run_dedup(
             docs,
         ),
     )
-    return DedupResult(docs=docs, signatures=signatures, dup_pairs=dup_pairs,
-                       clusters=clusters)
+    return DedupResult(docs=docs, signatures=out.signatures,
+                       dup_pairs=out.dup_pairs, clusters=clusters)

@@ -11,30 +11,21 @@ practice, so the engine ships an incremental path:
          the applyInPandasWithState + event-time-timeout assembler) and
          collapse exact duplicates (within the batch and against the
          fingerprints of the indexed signatures)
-      2. run three independent branches at once (pipeline.py
-         run_concurrently), each reading only the docs and the index as it
-         stood before this batch:
-           - band: signatures of fresh representatives, the tier-0 band
-             probe (capped over index ∪ new), the tier-1 slice filter
-           - overlap: winnow fingerprints, the fingerprint probe and the
-             exact-extension verify
-           - the doc_id collision check against every indexed doc
-         Both probes are operators/pairs.py shared_key_pairs with the
-         indexed rows as its `index` side (new x new plus new x indexed,
-         never indexed x indexed)
-      3. Jaccard-verify the union of both branches' candidates and merge the
-         evidence into the batch's dup pairs
-      4. write the batch's index tables concurrently; the ``_batch_<id>_done``
+      2. run the batch pipeline's cascade body (pipeline.py run_cascade)
+         over the fresh representatives, with the index as it stood before
+         this batch: signatures, the tier-0 band probe, the tier-1 slice
+         filter, the SimHash chunk probe, the winnow fingerprint probe, the
+         Jaccard verify and the evidence merge. Every probe is
+         operators/pairs.py shared_key_pairs with the indexed rows as its
+         `index` side (new x new plus new x indexed, never indexed x
+         indexed); a batch run is the same body against an empty index.
+         The doc_id collision check against every indexed doc runs next to
+         it (pipeline.py run_concurrently)
+      3. write the batch's index tables concurrently; the ``_batch_<id>_done``
          marker, written after the last of them, is the commit point
 
-The cascade steps are the batch pipeline's own functions: build_docs,
-check_doc_id_collisions, split_exact_duplicates, build_signatures,
-coarse_bands, pairs_from_bands and overlap_candidates (both over
-shared_key_pairs, which holds the one hot-key cap rule — batch is the same
-call with an empty index), tight_tier, overlap_docs_gate and merge_evidence.
-Tier 0 + tier 1 and the cap are one rule in both drivers. What differs:
-  - streaming has no SimHash pass, so it misses a SimHash-only pair
-    (tests/test_streaming.py pins equal clusterings with SimHash off);
+The cascade steps and the hot-key cap are one rule in both drivers. What
+differs:
   - the bands index keeps singleton buckets (only hot ones are left out),
     because a future batch's doc may still collide with them;
   - a bucket can cross the cap after earlier batches already paired its
@@ -48,12 +39,13 @@ once, in one of seven tables (INDEX_TABLES):
 
   docs            (conv_id, doc_id, fingerprint) of every ingested doc
   signatures      fresh representatives' signatures; its (fingerprint,
-                  doc_id) projection is also the exact-collapse index
+                  doc_id) projection is also the exact-collapse index, and
+                  the 16-bit chunks of its simhash the SimHash probe's
   bands           their capped tier-0 bands
   dup_pairs       (id_a, id_b, jaccard) evidence
   overlap_fps     winnow fingerprints of long fresh representatives
   texts           (doc_id, doc_text) of those long representatives
-  hot_band_drops  the recorded hot-bucket drops
+  hot_band_drops  the recorded hot-bucket drops (tier 0 and SimHash)
 """
 
 from __future__ import annotations
@@ -65,23 +57,13 @@ from pyspark.sql import functions as F
 
 from .checkpoint import resolve_fs
 from .config import DedupConfig
-from .operators.pairs import BAND_KEY, pairs_from_bands, split_exact_duplicates
-from .operators.suffix import (
-    overlap_candidates,
-    verify_overlaps,
-    winnow_fingerprints,
-)
-from .operators.verify import verify_pairs_exact_jaccard
+from .operators.pairs import BAND_KEY, split_exact_duplicates
 from .pipeline import (
     build_docs,
-    build_signatures,
     check_doc_id_collisions,
     coarse_bands,
-    merge_evidence,
-    overlap_docs_gate,
-    release_persisted,
+    run_cascade,
     run_concurrently,
-    tight_tier,
 )
 
 TURNS_DDL = (
@@ -93,6 +75,13 @@ TURNS_DDL = (
 # batch writes all of them and every compaction folds all of them
 INDEX_TABLES = ("docs", "signatures", "bands", "dup_pairs", "overlap_fps",
                 "texts", "hot_band_drops")
+
+
+def _checkpoint(_name: str, factory) -> DataFrame:
+    """run_cascade's stage materializer for a micro-batch: no stage store,
+    so the name goes unused; localCheckpoint materializes the stage and
+    truncates its plan."""
+    return factory().localCheckpoint(eager=True)
 
 
 class IncrementalDedup:
@@ -152,8 +141,7 @@ class IncrementalDedup:
                     pass
         return dirs, gens
 
-    def _read_table(self, name: str, batch_id: int | None = None,
-                    like: DataFrame | None = None) -> DataFrame:
+    def _read_table(self, name: str, batch_id: int | None = None) -> DataFrame:
         """One listing of a table's directory -> its CURRENT view: the
         newest MARKED compacted partition plus every per-batch directory
         above its watermark (and below `batch_id` when given: the index as
@@ -168,10 +156,9 @@ class IncrementalDedup:
         compaction watermark: compaction only folds done-marked batches,
         and done batches short-circuit in process_batch.)
 
-        With nothing selected the view is ``like.limit(0)`` — the first
-        batch probes an EMPTY index through the same code path, and
-        Catalyst prunes the empty relation out of its plans; without
-        `like` an empty table raises."""
+        With nothing selected it raises FileNotFoundError: before the
+        first committed batch the index is empty (process_batch's
+        `index=None`)."""
         dirs, gens = self._list_table(name)
         gen = max((g for g in gens if -(g + 1) in dirs), default=None)
         keys = [] if gen is None else [-(gen + 1)]
@@ -181,12 +168,10 @@ class IncrementalDedup:
             and (batch_id is None or b < batch_id)
         )
         if not keys:
-            if like is None:
-                raise FileNotFoundError(
-                    f"index table {name!r} under {self.index_dir} holds no "
-                    "batch yet"
-                )
-            return like.limit(0)
+            raise FileNotFoundError(
+                f"index table {name!r} under {self.index_dir} holds no "
+                "batch yet"
+            )
         base = self._path(name)
         return self.spark.read.option("basePath", base) \
             .parquet(*(f"{base}/{dirs[k]}" for k in keys)).drop("batch_id")
@@ -243,6 +228,16 @@ class IncrementalDedup:
             f"{self._path(name)}/batch_id={batch_id}"
         )
 
+    def _index(self, batch_id: int) -> dict[str, DataFrame] | None:
+        """The index tables process_batch reads, as they stood before
+        `batch_id` -> {name: table}; None before the first committed batch
+        (an empty index)."""
+        try:
+            return {name: self._read_table(name, batch_id) for name in
+                    ("docs", "signatures", "bands", "overlap_fps", "texts")}
+        except FileNotFoundError:
+            return None
+
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
         from pyarrow import fs as pafs
@@ -253,17 +248,9 @@ class IncrementalDedup:
             return  # replayed micro-batch after restart: already applied
 
         docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
-
-        def check_ids():
-            """The id-collision check covers every doc ever ingested. It
-            returns before the first index write below, so a failing batch
-            leaves no done-marker."""
-            ids = docs.select("conv_id", "doc_id")
-            check_doc_id_collisions(ids.unionByName(
-                self._read_table("docs", batch_id, like=ids)
-                .select("conv_id", "doc_id")
-            ))
-
+        index = self._index(batch_id)
+        # the id-collision check covers every doc ever ingested
+        ids = docs.select("conv_id", "doc_id")
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
         # identical-payload flood costs m-1 star edges — never m signature-
@@ -275,133 +262,71 @@ class IncrementalDedup:
         # Parquet reads only the two projected columns) attach to the
         # indexed root by an equi-join and are not signed or banded.
         reps_docs, exact_pairs = split_exact_duplicates(docs)
-        idx_fp = self._read_table("signatures", batch_id, like=reps_docs) \
-            .select("fingerprint", F.col("doc_id").alias("id_old"))
-        matched = reps_docs.join(idx_fp, "fingerprint") \
-            .select("doc_id", "id_old")
-        exact_pairs = exact_pairs.unionByName(
-            matched.select(
-                F.least("doc_id", "id_old").alias("id_a"),
-                F.greatest("doc_id", "id_old").alias("id_b"),
-            )
-            # a conversation re-delivered in a later batch (at-least-once
-            # source) matches its OWN indexed row — same guard as the
-            # band-probe join below, else a degenerate self-pair lands in
-            # dup_pairs
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        fresh_reps_docs = reps_docs.join(
-            matched.select("doc_id"), "doc_id", "left_anti"
-        )
-
-        band_persists: list = []
-
-        def band_branch():
-            """Signatures -> the tier-0 band probe -> the tier-1 slice
-            filter, plus the verify's signature table (index ∪ new), which
-            the filter reads too. The probe caps buckets over index ∪ new
-            (the batch rule): a bucket that grew hot across batches is
-            excluded from probing on BOTH sides and from the index append,
-            and the drop is recorded. Its count persists into
-            band_persists, which hot and the index append read."""
-            sigs = build_signatures(fresh_reps_docs, cfg) \
-                .localCheckpoint(eager=True)
-            new_bands = coarse_bands(sigs, cfg)
-            idx_bands = self._read_table("bands", batch_id, like=new_bands)
-            idx_sigs = self._read_table("signatures", batch_id, like=sigs)
-            all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
-            # probe: new docs vs the existing index plus new vs new
-            pairs, hot = pairs_from_bands(new_bands, idx_bands,
-                                          cfg.hot_band_cap, band_persists)
-            return sigs, hot, tight_tier(pairs, all_sigs, cfg), all_sigs
-
-        def overlap_branch():
-            """Long-overlap stage, incremental (batch analog: pipeline.py
-            overlap_pairs): fresh reps' winnow fingerprints probe the
-            persistent overlap_fps index through the batch operator itself
-            (overlap_candidates with an index); pairs verify by exact
-            extension over the texts table. Overlap evidence lands in
-            dup_pairs with the batch path's jaccard = -1 marker. -> (texts
-            of the long reps, their fingerprints, substring-proven
-            pairs)."""
-            long_texts = overlap_docs_gate(fresh_reps_docs, cfg) \
-                .select("doc_id", "doc_text")
-            new_fps = winnow_fingerprints(
-                long_texts, cfg.winnow_kgram_chars, cfg.winnow_window
-            ).localCheckpoint(eager=True)
-            idx_ofps = self._read_table("overlap_fps", batch_id, like=new_fps)
-            idx_texts = self._read_table("texts", batch_id, like=long_texts)
-            ov_persists: list = []
-            ov_cands = overlap_candidates(new_fps, cfg, ov_persists,
-                                          index=idx_ofps)
-            texts_all = idx_texts.unionByName(long_texts)
-            ov_pairs = (
-                verify_overlaps(ov_cands, texts_all, cfg.winnow_kgram_chars,
-                                cfg.min_overlap_chars)
-                .select("id_a", "id_b")
-                .localCheckpoint(eager=True)
-            )
-            # the gate set persisted inside the candidate probe is consumed
-            # by the materialization above
-            release_persisted(ov_persists)
-            return long_texts, new_fps, ov_pairs
-
-        try:
-            # the three branches read only docs and the index as it stood
-            # before this batch, and meet first at verify
-            (sigs, hot, cands, all_sigs), \
-                (long_texts, new_fps, ov_pairs), _ = run_concurrently(
-                    self.spark, band_branch, overlap_branch, check_ids
+        if index is not None:
+            ids = ids.unionByName(index["docs"].select("conv_id", "doc_id"))
+            matched = reps_docs.join(
+                index["signatures"].select(
+                    "fingerprint", F.col("doc_id").alias("id_old")),
+                "fingerprint",
+            ).select("doc_id", "id_old")
+            exact_pairs = exact_pairs.unionByName(
+                matched.select(
+                    F.least("doc_id", "id_old").alias("id_a"),
+                    F.greatest("doc_id", "id_old").alias("id_b"),
                 )
-
-            # ov_pairs candidates join the Jaccard verify; substring-proven
-            # pairs that fail Jaccard keep the batch path's jaccard = -1
-            # evidence marker (merge_evidence)
-            verified = verify_pairs_exact_jaccard(
-                cands.unionByName(ov_pairs).distinct(), all_sigs,
-                threshold=cfg.jaccard_threshold,
+                # a conversation re-delivered in a later batch (at-least-once
+                # source) matches its OWN indexed row — same guard as the
+                # probe joins (shared_key_pairs), else a degenerate
+                # self-pair lands in dup_pairs
+                .filter(F.col("id_a") != F.col("id_b"))
             )
-            # materialize BEFORE touching the index dirs: dup's lazy plan reads
-            # the existing bands/signatures batches, and a replay OVERWRITES
-            # this batch's own subdirectories below — writing dup lazily after
-            # that would read deleted files
-            dup = merge_evidence(verified, exact_pairs, ov_pairs) \
-                .localCheckpoint(eager=True)
+            reps_docs = reps_docs.join(
+                matched.select("doc_id"), "doc_id", "left_anti"
+            )
 
-            # batch-scoped subdirectories + overwrite: a crash between the
-            # writes is healed by the replay overwriting the SAME directories,
-            # so the done-marker is a true commit point (ADVICE r1: plain
-            # appends made replays duplicate rows). The writes are independent
-            # and run concurrently; the marker follows the last of them.
-            writes = {
-                # narrow per-doc bookkeeping (EVERY doc, signed or not): id
-                # mapping + fingerprint — the signature table carries only
-                # fresh representatives
-                "docs": docs.select("conv_id", "doc_id", "fingerprint"),
-                "signatures": sigs,
-                # singleton buckets stay: a future batch's doc may collide
-                "bands": coarse_bands(sigs, cfg).join(
-                    hot.select(*BAND_KEY), BAND_KEY, "left_anti"),
-                "dup_pairs": dup,
-                "overlap_fps": new_fps,
-                # texts of fresh LONG representatives (every possible verify
-                # candidate is gated, so short docs are dead weight here): the
-                # overlap verify of every FUTURE batch needs the indexed side's
-                # raw text. At cluster scale this table is a projection of the
-                # corpus the stream already owns — point it at the source table
-                # instead of materializing when storage matters.
-                "texts": long_texts,
-                # A5 analog: dropped hot buckets are recorded, never silent
-                "hot_band_drops": hot,
-            }
-            run_concurrently(self.spark, *(
-                partial(self._write_batch, writes[name], name, batch_id)
-                for name in INDEX_TABLES
-            ))
-        finally:
-            # the band probe's persisted gate counts, read by cands, hot
-            # and the bands append
-            release_persisted(band_persists)
+        # the cascade reads only docs and the index as it stood before this
+        # batch; the id check runs next to it and, like it, returns before
+        # the first index write below, so a failing batch leaves no
+        # done-marker. Every stage of the cascade, dup_pairs included, is
+        # materialized before the writes touch the index dirs: a replay
+        # OVERWRITES this batch's own subdirectories.
+        out, _ = run_concurrently(
+            self.spark,
+            partial(run_cascade, reps_docs, exact_pairs, cfg, _checkpoint,
+                    index),
+            partial(check_doc_id_collisions, ids),
+        )
+
+        # batch-scoped subdirectories + overwrite: a crash between the
+        # writes is healed by the replay overwriting the SAME directories,
+        # so the done-marker is a true commit point (ADVICE r1: plain
+        # appends made replays duplicate rows). The writes are independent
+        # and run concurrently; the marker follows the last of them.
+        writes = {
+            # narrow per-doc bookkeeping (EVERY doc, signed or not): id
+            # mapping + fingerprint — the signature table carries only
+            # fresh representatives
+            "docs": docs.select("conv_id", "doc_id", "fingerprint"),
+            "signatures": out.signatures,
+            # singleton buckets stay: a future batch's doc may collide
+            "bands": coarse_bands(out.signatures, cfg).join(
+                out.hot.select(*BAND_KEY), BAND_KEY, "left_anti"),
+            "dup_pairs": out.dup_pairs,
+            "overlap_fps": out.fps,
+            # texts of fresh LONG representatives (every possible verify
+            # candidate is gated, so short docs are dead weight here): the
+            # overlap verify of every FUTURE batch needs the indexed side's
+            # raw text. At cluster scale this table is a projection of the
+            # corpus the stream already owns — point it at the source table
+            # instead of materializing when storage matters.
+            "texts": out.texts,
+            # A5 analog: dropped hot buckets are recorded, never silent
+            "hot_band_drops": out.hot,
+        }
+        run_concurrently(self.spark, *(
+            partial(self._write_batch, writes[name], name, batch_id)
+            for name in INDEX_TABLES
+        ))
         with fs.open_output_stream(done_marker) as f:
             f.write(b"ok")
         # periodic index compaction AFTER the commit point: only done-marked
@@ -452,7 +377,9 @@ class IncrementalDedup:
     def hot_band_drops(self) -> DataFrame:
         """Recorded hot-bucket drops (tier, band_id, band_key, n_docs) per
         batch — empty before the first batch."""
-        empty = self.spark.createDataFrame(
-            [], "tier int, band_id int, band_key bigint, n_docs bigint"
-        )
-        return self._read_table("hot_band_drops", like=empty)
+        try:
+            return self._read_table("hot_band_drops")
+        except FileNotFoundError:
+            return self.spark.createDataFrame(
+                [], "tier int, band_id int, band_key bigint, n_docs bigint"
+            )

@@ -5,6 +5,8 @@ transcript corpora at two sizes."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from lsh_cascade_poc_spark.datagen.transcripts import (
@@ -17,6 +19,12 @@ from lsh_cascade_poc_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # a bounded driver heap: the session default (48g) lets G1 grow the
+    # heap it never gives back past the RAM of a 16 GB host over one suite
+    # run (tests/test_streaming.py alone reached an 11 GB JVM); the test
+    # corpora need a fraction of 4g, the size the benchmark runs its larger
+    # workloads in (3g)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield s
 

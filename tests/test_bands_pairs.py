@@ -359,3 +359,68 @@ def test_gated_pairs_leave_no_cached_table(spark):
     assert cache.numCachedEntries() == before + len(registry)
     release_persisted(registry)
     assert registry == [] and cache.numCachedEntries() == before
+
+
+def test_simhash_pairs_probe_an_index(spark, registry):
+    """simhash_candidate_pairs(new, cfg, registry, index) == a Python model
+    over index ∪ new: pairs with at least one `new` doc (new x new plus
+    new x index, never index x index) that share a 16-bit chunk at the same
+    position, held by at most `cap` distinct docs, and lie within Hamming
+    distance tau; `hot` == the chunks held by more, as tier-2 rows."""
+    from itertools import combinations
+
+    from lsh_cascade_poc_spark.pipeline import simhash_candidate_pairs
+
+    mask = (1 << 64) - 1
+    rng = random.Random(5)
+    bases = [rng.getrandbits(64) for _ in range(4)]
+
+    def near(base):  # a family member: up to 6 flipped bits
+        for _ in range(rng.randrange(7)):
+            base ^= 1 << rng.randrange(64)
+        return base
+
+    def signed(h):
+        return h - (1 << 64) if h >> 63 else h
+
+    new = {d: near(rng.choice(bases)) for d in range(20, 32)}
+    idx = {d: near(rng.choice(bases)) for d in range(0, 12)}
+    idx[1] = idx[0]      # an index x index pair the probe must not emit
+    new[20] = idx[2]     # a new doc equal to an indexed one
+
+    def chunks(h):
+        return [(i, (h >> (16 * i)) & 0xFFFF) for i in range(4)]
+
+    docs_of: dict = {}
+    for d, h in [*new.items(), *idx.items()]:
+        for key in chunks(h):
+            docs_of.setdefault(key, set()).add(d)
+
+    def as_df(sigs):
+        return spark.createDataFrame(
+            [(d, signed(h)) for d, h in sigs.items()],
+            "doc_id long, simhash long")
+
+    rows = [(d, h, True) for d, h in new.items()] + \
+        [(d, h, False) for d, h in idx.items()]
+    for cap in (3, 1000):
+        cfg = DedupConfig(hot_band_cap=cap)
+        tau = cfg.simhash_hamming_tau
+        pairs, hot = simhash_candidate_pairs(as_df(new), cfg, registry,
+                                             {"signatures": as_df(idx)})
+        want = {
+            (min(d1, d2), max(d1, d2))
+            for (d1, h1, n1), (d2, h2, n2) in combinations(rows, 2)
+            if (n1 or n2) and bin((h1 ^ h2) & mask).count("1") <= tau
+            and any(k1 == k2 and len(docs_of[k1]) <= cap
+                    for k1, k2 in zip(chunks(h1), chunks(h2)))
+        }
+        got = [tuple(r) for r in pairs.collect()]
+        assert len(got) == len(set(got)) and set(got) == want, cap
+        assert (2, 20) in want  # a new doc equal to an indexed one
+        assert not any(a < 12 and b < 12 for a, b in want)
+        assert any(a >= 20 for a, _ in want) and any(a < 12 for a, _ in want)
+        want_hot = {(2, i, k, len(ds)) for (i, k), ds in docs_of.items()
+                    if len(ds) > cap}
+        assert {tuple(r) for r in hot.collect()} == want_hot, cap
+        assert bool(want_hot) == (cap == 3)

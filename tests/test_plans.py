@@ -124,6 +124,28 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
     assert len(joins) == 3 and len(pair_joins) == 1, plan
 
 
+def test_key_gate_count_is_one_exchange(spark):
+    """The hot-key gate of shared_key_pairs counts distinct docs per key
+    over new ∪ index in ONE exchange: the union is hash-partitioned on the
+    keys, so the (keys, doc_id) dedup and the per-key count run inside
+    those partitions instead of shuffling once per aggregate."""
+    from lsh_cascade_poc_spark.operators.pairs import shared_key_pairs
+    from lsh_cascade_poc_spark.pipeline import release_persisted
+
+    def keyed(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("doc_id"),
+                                          (F.col("id") % 7).alias("k"))
+
+    for index in (None, keyed(40, 60)):
+        registry: list = []
+        shared_key_pairs(keyed(0, 40), index, ["k"], 1000, registry)
+        [n_docs] = registry
+        release_persisted(registry)
+        # a fresh Dataset over the released count: its own plan, uncached
+        plan = plan_of(n_docs.select("*"), mode="simple")
+        assert plan.count("Exchange") == 1, plan
+
+
 def test_tight_tier_is_a_pair_filter_not_a_band_join(spark, tiny_turns):
     """Tier 1 filters the tier-0 pairs by their two signatures: the
     optimized plan of minhash_candidate_pairs with the tier on holds ONE

@@ -205,6 +205,8 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     drops = inc.hot_band_drops().collect()
     assert drops, "hot-band drops were not recorded"
     assert max(r.n_docs for r in drops) > cfg.hot_band_cap
+    # the SimHash probe (tier 2) applies the same cap and records its drops
+    assert any(r.tier == 2 for r in drops), drops
     max_bucket = (
         bands.groupBy("tier", "band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -485,20 +487,23 @@ def _partition(conv_of: dict, edges) -> set[frozenset]:
 
 
 def test_batch_stream_parity(spark, tmp_path):
-    """Where the two cascades coincide — SimHash pass emitting nothing, no
-    hot bucket — batch run_dedup and streaming in 2 or 3 micro-batches
-    cluster the corpus identically: both run tier 0 and the tier-1 slice
-    filter. Two configs: tier 1 at m=1 with the overlap stage running, and
-    a tier 1 that binds (m=4 of 5 slices), which changes the batch
-    clusters. The binding one gates the overlap stage off, whose Jaccard-
-    verified candidates would bring back the pairs tier 1 drops. Exact-
-    group representatives may differ between the paths, so partitions of
-    conv_ids are compared, not raw pairs."""
+    """Where the two drivers coincide — no hot bucket — batch run_dedup and
+    streaming in 2 or 3 micro-batches cluster the corpus identically: both
+    run one cascade body (tier 0, the tier-1 slice filter, the SimHash
+    pass, the overlap stage, the verify). Two configs: tier 1 at m=1 with
+    the overlap stage running, and a tier 1 that binds (m=5 of 5 slices:
+    with the SimHash pass on, the pairs m=4 drops on this corpus all come
+    back as SimHash candidates), which changes the batch clusters. The binding one gates the overlap
+    stage off, whose Jaccard-verified candidates would bring back the pairs
+    tier 1 drops. Exact-group representatives may differ between the
+    paths, so partitions of conv_ids are compared, not raw pairs. Neither
+    driver leaves a cached table behind."""
     from lsh_cascade_poc_spark.pipeline import run_dedup
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     base = dict(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
-                tight_n_bands=5, simhash_hamming_tau=-1,
-                hot_band_cap=10**6, overlap_hot_cap=10**6)
+                tight_n_bands=5, hot_band_cap=10**6, overlap_hot_cap=10**6)
     no_overlap = dict(min_overlap_chars=10**6)
     turns = generate_corpus(n_base=30, dup_fraction=0.5, seed=11).turns
     convs = sorted(turns.conv_id.unique())
@@ -506,6 +511,7 @@ def test_batch_stream_parity(spark, tmp_path):
     def batch_run(cfg):
         res = run_dedup(spark, spark.createDataFrame(turns, TURNS_DDL),
                         cfg=cfg)
+        assert cache.numCachedEntries() == cached
         conv_of = {r.doc_id: r.conv_id
                    for r in res.docs.select("doc_id", "conv_id").collect()}
         return conv_of, _partition(conv_of, [
@@ -515,17 +521,18 @@ def test_batch_stream_parity(spark, tmp_path):
     _, bypassed = batch_run(DedupConfig(tight_min_match=0, **base,
                                         **no_overlap))
     configs = {"m1": DedupConfig(**base),
-               "m4": DedupConfig(tight_min_match=4, **base, **no_overlap)}
+               "m5": DedupConfig(tight_min_match=5, **base, **no_overlap)}
     for name, cfg in configs.items():
         conv_of, batch = batch_run(cfg)
         assert any(len(g) > 1 for g in batch)
-        if name == "m4":
+        if name == "m5":
             assert batch != bypassed  # the tight tier binds
         for k in (2, 3):
             inc = IncrementalDedup(spark, str(tmp_path / f"{name}_{k}"), cfg)
             for i in range(k):
                 part = turns[turns.conv_id.isin(convs[i::k])]
                 inc.process_batch(spark.createDataFrame(part, TURNS_DDL), i)
+            assert cache.numCachedEntries() == cached
             stream_conv_of = {r.doc_id: r.conv_id for r in
                               inc.docs().select("doc_id", "conv_id").collect()}
             assert stream_conv_of == conv_of

@@ -106,8 +106,9 @@ def main() -> None:
         "The self-join is an EQUI-join (test_plans.py pins 'never "
         "nested-loop'; broadcast at this toy scale, shuffle join at real "
         "scale under the 8MB threshold); the join's own hot-key gate (the "
-        "persisted `InMemoryRelation` of distinct docs per bucket; buckets "
-        "of 2..cap docs, broadcast when small) drops singleton and hot "
+        "persisted `InMemoryRelation` of distinct docs per bucket, counted "
+        "after ONE exchange on the bucket key; buckets of 2..cap docs, "
+        "broadcast when small) drops singleton and hot "
         "buckets under each of its sides, and `id_a < id_b` + "
         "`distinct` dedups pairs across bands BEFORE the expensive verify. "
         "Both sides read the checkpointed signature stage, mirroring "
