@@ -978,7 +978,6 @@ def q_prod_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier, checked hash-exact vs DuckDB."""
     from lsh_cascade_poc_spark.operators.bands import explode_bands
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
-    from lsh_cascade_poc_spark.pipeline import release_persisted
 
     # checkpoint: bands and both exact-verify sides consume sig — without
     # plan truncation the Arrow signature kernel would run three times
@@ -986,14 +985,8 @@ def q_prod_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mh = sig.select("doc_id", F.col("sig.minhash").alias("minhash"))
     bands = explode_bands(mh, "minhash", tier=0, n_bands=16, rows_per_band=4)
     # cap = every doc: the oracle's band join has no hot-bucket rule, so
-    # the gate drops only singleton buckets, which never pair. The pairs are
-    # materialized so the gate's persisted count is released here.
-    persists: list = []
-    try:
-        cand = pairs_from_bands(bands, None, sig.count(), persists)[0] \
-            .localCheckpoint(eager=True)
-    finally:
-        release_persisted(persists)
+    # the gate drops only singleton buckets, which never pair
+    cand = pairs_from_bands(bands, None, sig.count())[0]
     sh = sig.select("doc_id", F.col("sig.shingles").alias("shingles"))
     sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -1529,26 +1522,20 @@ def q_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         verify_overlaps,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import release_persisted
 
     docs = _docs_normalized(spark, sf_dir).select(
         "doc_id", F.col("norm_text").alias("doc_text")
     ).filter(
         F.col("doc_text").rlike("^[ -~]*$") & (F.length("doc_text") >= 96)
     )
-    # materialized: the candidate gate's broadcast-sizing count would
-    # otherwise re-run the winnow kernel (see pipeline.py overlap_pairs)
+    # materialized: the candidate gate's per-fp count and both sides of
+    # the fp self-join read it, and lazy each could re-run the winnow
+    # kernel (see pipeline.py overlap_pairs)
     fps = winnow_fingerprints(docs, k=24, w=32).localCheckpoint(eager=True)
-    # the oracle's gate: 2..200 docs per fp, no minimum shared-fp count;
-    # the candidates are materialized so the gate's persist is released here
-    persists: list = []
-    try:
-        cands = overlap_candidates(
-            fps, DedupConfig(overlap_hot_cap=200, overlap_min_shared_fps=1),
-            persists,
-        ).localCheckpoint(eager=True)
-    finally:
-        release_persisted(persists)
+    # the oracle's gate: 2..200 docs per fp, no minimum shared-fp count
+    cands = overlap_candidates(
+        fps, DedupConfig(overlap_hot_cap=200, overlap_min_shared_fps=1),
+    )
     return verify_overlaps(cands, docs, k=24, min_overlap_chars=96)
 
 

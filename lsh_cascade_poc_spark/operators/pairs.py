@@ -36,6 +36,14 @@ winnow-fp rows of the 2.4M-turn bench corpus were singleton fps; on the
 3.84M-turn corpus, local[4], interleaved draws, gating singleton band buckets
 took the minhash candidate stage, then a coarse and a tight band self-join,
 from 23.1-32.0 s to 6.7-9.3 s with identical 121,724 output pairs).
+
+The gate is one lazy plan, neither cached nor counted: the session's 8MB
+(adaptive) broadcast threshold (session.py) broadcasts a small gate set and
+keeps a large one a shuffle join, from its runtime size. Broadcasting a
+small gate pays (r5 A/B on the 19.6M-fp bench corpus, interleaved draws:
+broadcast 25.1-30.6 s vs shuffle gate 35.8-66.3 s vs shuffle_hash hint
+30.1-60.2 s, identical 309,711 output rows), and at design scale the gate
+outgrows the threshold and stays a shuffle join on its own.
 """
 
 from __future__ import annotations
@@ -46,30 +54,9 @@ from pyspark.sql import functions as F
 
 BAND_KEY = ["tier", "band_id", "band_key"]
 
-# Broadcast cap for a key-gate set (shared_key_pairs' 2..cap keys: pairable
-# band buckets, shared winnow fingerprints): below this row count the gate
-# join broadcasts (8-16 bytes/row -> a blob of at most 64-128MB), above it
-# it stays a shuffle join. Why not the session-wide AQE threshold: that was
-# deliberately lowered to 8MB after mid-size TEXT relations stalled the
-# driver (session.py rationale) — gate sets are the one relation class where
-# a bigger broadcast measurably pays (r5 A/B on the 19.6M-fp bench corpus,
-# interleaved draws: broadcast 25.1-30.6s vs shuffle-gate 35.8-66.3s vs
-# shuffle_hash-hint 30.1-60.2s, identical 309,711 output rows). Scale: gate
-# sets grow with the corpus, so at the 100TB design point the count exceeds
-# this cap and the join falls back to the shuffle on its own — the
-# broadcast is an optimization the runtime size decides, never an
-# assumption.
-_GATE_BROADCAST_MAX = 8_000_000
-
-
-def broadcast_if_small(gate: DataFrame) -> DataFrame:
-    """`gate` hinted for broadcast iff it holds <= _GATE_BROADCAST_MAX rows.
-    Runs one count job over `gate`: callers persist what it derives from."""
-    return F.broadcast(gate) if gate.count() <= _GATE_BROADCAST_MAX else gate
-
 
 def shared_key_pairs(new: DataFrame, index: DataFrame | None,
-                     keys: list[str], cap: int, persist_registry: list,
+                     keys: list[str], cap: int,
                      cols=()) -> tuple[DataFrame, DataFrame]:
     """The cascade's one candidate join: docs sharing a key become a pair,
     unless the key is hot -> (pairs, hot).
@@ -78,11 +65,9 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
     new ∪ index, and only keys held by 2..cap docs pair. Distinct docs, not
     rows: a doc can hold one winnow fp at several positions, and a doc_id
     re-delivered next to its indexed copy is one doc. `hot` (*keys, n_docs)
-    holds the keys above `cap`, for the caller to record. The non-singleton
-    counts, the only rows either output reads, are persisted and appended
-    to `persist_registry`; the caller unpersists them once it has consumed
-    both outputs. The gate's broadcast_if_small count runs here, so `new`
-    and `index` should derive from materialized tables.
+    holds the keys above `cap`, for the caller to record. Both outputs are
+    lazy: building them runs no Spark job, and each action re-derives the
+    count from `new` and `index`, so those should be materialized tables.
 
     (doc_id, *keys, *cols) rows of `new` and `index` -> pairs: one row per
     shared key occurrence (keys..., id_a, id_b, {c}_a, {c}_b) with
@@ -104,12 +89,8 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
         .repartition(*keys)
         .groupBy(*keys).agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= 2)
-        .persist()
     )
-    persist_registry.append(n_docs)
-    gate = broadcast_if_small(
-        n_docs.filter(F.col("n_docs") <= cap).select(*keys)
-    )
+    gate = n_docs.filter(F.col("n_docs") <= cap).select(*keys)
     new, index = new.join(gate, keys), index.join(gate, keys)
 
     def side(df: DataFrame, tag: str) -> DataFrame:
@@ -139,16 +120,15 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
     return within.unionByName(cross), n_docs.filter(F.col("n_docs") > cap)
 
 
-def pairs_from_bands(bands: DataFrame, index: DataFrame | None, cap: int,
-                     persist_registry: list) -> tuple[DataFrame, DataFrame]:
+def pairs_from_bands(bands: DataFrame, index: DataFrame | None,
+                     cap: int) -> tuple[DataFrame, DataFrame]:
     """(doc_id, tier, band_id, band_key) -> (distinct (id_a, id_b) with
     id_a < id_b, hot buckets): the tier-0 band pass of batch, and
     streaming's probe of the new batch's bands against the indexed ones.
     The join shuffles both sides on the band key — the pipeline's dominant
     shuffle. Each doc holds one key per band, so a bucket's distinct docs
     are its rows."""
-    pairs, hot = shared_key_pairs(bands, index, BAND_KEY, cap,
-                                  persist_registry)
+    pairs, hot = shared_key_pairs(bands, index, BAND_KEY, cap)
     return pairs.select("id_a", "id_b").distinct(), hot
 
 

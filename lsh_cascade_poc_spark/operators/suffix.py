@@ -332,7 +332,6 @@ def winnow_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
 
 
 def overlap_candidates(fps: DataFrame, cfg: DedupConfig,
-                       persist_registry: list,
                        index: DataFrame | None = None) -> DataFrame:
     """Fingerprint pairs -> per-pair seed candidates (three seeds per pair,
     see _pair_seed_agg) bounding the verify stage. `fps` (doc_id, fp, pos)
@@ -343,10 +342,9 @@ def overlap_candidates(fps: DataFrame, cfg: DedupConfig,
     Skew control: fingerprints shared by more than `cfg.overlap_hot_cap`
     docs of index ∪ fps are boilerplate (short repeated turns), not
     long-overlap evidence — shared_key_pairs drops them on both sides
-    before the join (quadratic in bucket size), and its gate table lands in
-    `persist_registry`. `cfg.overlap_min_shared_fps` exploits the winnowing
-    density (one fingerprint per ~w/2 chars): a true long overlap shares
-    many fingerprints, an accidental collision one.
+    before the join (quadratic in bucket size). `cfg.overlap_min_shared_fps`
+    exploits the winnowing density (one fingerprint per ~w/2 chars): a true
+    long overlap shares many fingerprints, an accidental collision one.
 
     Shape note (measured on the 24.5M-fp bench corpus, local[4]): this
     countDistinct + codegen self-join formulation beat both a
@@ -356,7 +354,7 @@ def overlap_candidates(fps: DataFrame, cfg: DedupConfig,
     (5x slower: interpreted lambda expressions + object aggregation lose
     badly to whole-stage-codegen joins). Don't "simplify" it back."""
     pairs, _hot = shared_key_pairs(fps, index, ["fp"], cfg.overlap_hot_cap,
-                                   persist_registry, ["pos"])
+                                   ["pos"])
     out = _pair_seed_agg(pairs)
     if cfg.overlap_min_shared_fps > 1:
         out = out.filter(F.col("n_shared_fps") >= cfg.overlap_min_shared_fps)

@@ -83,21 +83,19 @@ def verify_pairs_exact_jaccard(
             F.col("doc_id"), F.size("shingles").alias("n_sh")
         )
     p = (
-        pairs.join(sizes.withColumnsRenamed({"doc_id": "id_a", "n_sh": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "id_b", "n_sh": "n_b"}), "id_b")
+        attach_pair_sides(pairs, sizes, ["n_sh"])
         .filter(
-            F.least("n_a", "n_b").cast("double")
-            >= F.lit(threshold) * F.greatest("n_a", "n_b").cast("double")
+            F.least("n_sh_a", "n_sh_b").cast("double")
+            >= F.lit(threshold) * F.greatest("n_sh_a", "n_sh_b").cast("double")
         )
         .select("id_a", "id_b")
     )
 
-    mh = signatures.select("doc_id", "minhash")
     p = (
-        p.join(mh.withColumnsRenamed({"doc_id": "id_a", "minhash": "mh_a"}), "id_a")
-        .join(mh.withColumnsRenamed({"doc_id": "id_b", "minhash": "mh_b"}), "id_b")
+        attach_pair_sides(p, signatures, ["minhash"])
         .filter(
-            jaccard_estimate_from_signatures(F.col("mh_a"), F.col("mh_b"))
+            jaccard_estimate_from_signatures(F.col("minhash_a"),
+                                             F.col("minhash_b"))
             >= F.lit(threshold - ESTIMATE_MARGIN)
         )
         .select("id_a", "id_b")

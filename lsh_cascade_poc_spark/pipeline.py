@@ -178,30 +178,26 @@ def _with_index(new: DataFrame, index: Mapping[str, DataFrame] | None,
 
 
 def minhash_candidate_pairs(
-    signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
+    signatures: DataFrame, cfg: DedupConfig,
     index: Mapping[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Tiers 0+1 of the banding cascade -> (candidate pairs, hot-band stats).
-    Persisted intermediates are appended to `persist_registry` so the caller
-    can unpersist them once downstream stages are materialized (leaked
-    persists accumulate block-manager memory across repeated runs — measured
-    as a 7x warm-run slowdown on this VM's ballooned memory). With an
-    `index` (run_cascade), tier 0 probes its `bands` and tier 1 reads its
-    `signatures` too."""
+    """Tiers 0+1 of the banding cascade -> (candidate pairs, hot-band stats),
+    both lazy. With an `index` (run_cascade), tier 0 probes its `bands` and
+    tier 1 reads its `signatures` too."""
     # tier 0: coarse, whole corpus; a candidate must be generated by the
     # coarse tier AND confirmed by the tight tier (the cascade's
     # AND-tightening)
     coarse, hot0 = pairs_from_bands(
         coarse_bands(signatures, cfg),
         None if index is None else index["bands"],
-        cfg.hot_band_cap, persist_registry,
+        cfg.hot_band_cap,
     )
     return tight_tier(coarse, _with_index(signatures, index, "signatures"),
                       cfg), hot0
 
 
 def simhash_candidate_pairs(
-    signatures: DataFrame, cfg: DedupConfig, persist_registry: list,
+    signatures: DataFrame, cfg: DedupConfig,
     index: Mapping[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """SimHash bit-sampling pass: 16-bit chunk band join (chunk_hash analog)
@@ -225,7 +221,7 @@ def simhash_candidate_pairs(
     pairs, hot = shared_key_pairs(
         chunks(signatures),
         None if index is None else chunks(index["signatures"]),
-        BAND_KEY, cfg.hot_band_cap, persist_registry, ["simhash"],
+        BAND_KEY, cfg.hot_band_cap, ["simhash"],
     )
     close = hamming64(F.col("simhash_a"), F.col("simhash_b")) \
         <= cfg.simhash_hamming_tau
@@ -249,7 +245,6 @@ def overlap_docs_gate(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def overlap_pairs(texts: DataFrame, fps: DataFrame, cfg: DedupConfig,
-                  persist_registry: list,
                   index: Mapping[str, DataFrame] | None = None) -> DataFrame:
     """Winnowing fingerprints -> seed candidates -> exact extension; emits
     pairs sharing an exact substring of >= min_overlap_chars. `texts`
@@ -258,14 +253,12 @@ def overlap_pairs(texts: DataFrame, fps: DataFrame, cfg: DedupConfig,
     `overlap_fps` and extend over its `texts` too.
 
     `fps` is PRE-MATERIALIZED (the cascade checkpoints it as its own
-    stage): the candidate gate counts the shared-fp set in a separate
-    action to size-gate its broadcast (operators/pairs.py
-    shared_key_pairs); with a lazy fps plan that count would re-run the
-    winnow kernel — the most expensive Arrow pass in the stage — a second
-    time."""
+    stage): the candidate gate's per-fp doc count and both sides of the
+    fp self-join (operators/pairs.py shared_key_pairs) read it within one
+    plan; over a lazy fps plan each of them could re-run the winnow
+    kernel, the most expensive Arrow pass in the stage."""
     cands = overlap_candidates(
-        fps, cfg, persist_registry,
-        index=None if index is None else index["overlap_fps"],
+        fps, cfg, index=None if index is None else index["overlap_fps"],
     )
     return verify_overlaps(
         cands, _with_index(texts, index, "texts"), cfg.winnow_kgram_chars,
@@ -290,18 +283,14 @@ def run_concurrently(spark: SparkSession, *branches):
         return [first] + [f.result() for f in futures]
 
 
-def release_persisted(dfs: list) -> None:
-    """Unpersist and forget the persisted intermediates a consumed stage
-    leaves behind. They die with the stage that consumed them: holding them
-    through later stages measurably slows THOSE stages (r5: verify ran 3x
-    slower with the three tiers' gate tables still cached), and a long
-    stream would accumulate one set per micro-batch."""
-    for df in dfs:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    dfs.clear()
+def local_stage(_name: str, factory) -> DataFrame:
+    """A stage materializer without a checkpoint store (run_dedup without
+    one, every streaming micro-batch): the name goes unused, and an eager
+    localCheckpoint both materializes the stage (multi-consumer stages
+    would recompute otherwise) and TRUNCATES its logical plan — without
+    truncation each stage embeds every upstream stage's expression tree
+    and Catalyst analysis explodes."""
+    return factory().localCheckpoint(eager=True)
 
 
 def merge_evidence(verified: DataFrame, exact: DataFrame,
@@ -359,24 +348,15 @@ def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
         """signatures -> minhash tiers -> simhash pass -> hot buckets (one
         dependency chain)."""
         signatures = stage("signatures", lambda: build_signatures(reps, cfg))
-        band_persists: list = []
-        try:
-            mh_lazy, mh_hot = minhash_candidate_pairs(signatures, cfg,
-                                                      band_persists, index)
-            mh_pairs = stage("pairs_minhash", lambda: mh_lazy)
-            sh_lazy, sh_hot = simhash_candidate_pairs(signatures, cfg,
-                                                      band_persists, index)
-            sh_pairs = stage("pairs_simhash", lambda: sh_lazy)
-            # A5/ADVICE: dropped hot buckets are recorded, not silent —
-            # their own stage (count + per-bucket sizes). The non-singleton
-            # bucket counts were persisted while the pair stages evaluated
-            # (shared_key_pairs persist_registry), so this is a cheap
-            # filter, not a band-table re-scan.
-            hot = stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
-        finally:
-            # every band-tier persisted intermediate is now consumed; held
-            # through the verify they slow it (release_persisted)
-            release_persisted(band_persists)
+        mh_lazy, mh_hot = minhash_candidate_pairs(signatures, cfg, index)
+        mh_pairs = stage("pairs_minhash", lambda: mh_lazy)
+        sh_lazy, sh_hot = simhash_candidate_pairs(signatures, cfg, index)
+        sh_pairs = stage("pairs_simhash", lambda: sh_lazy)
+        # A5/ADVICE: dropped hot buckets are recorded, not silent — their
+        # own stage (count + per-bucket sizes). The gate counts are lazy
+        # (shared_key_pairs), so this stage re-aggregates the tier-0 band
+        # keys and the SimHash chunks of the checkpointed signatures.
+        hot = stage("hot_band_drops", lambda: mh_hot.unionByName(sh_hot))
         return signatures, mh_pairs, sh_pairs, hot
 
     def _overlap_chain():
@@ -386,23 +366,19 @@ def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
             return None, None, None
         texts = overlap_docs_gate(reps, cfg).select("doc_id", "doc_text")
         # the fp table is its own materialization: the candidate gate's
-        # broadcast-sizing count (pairs.py shared_key_pairs) and the
-        # candidate self-join both consume it — lazy, the winnow Arrow
-        # kernel would run once per consumer
+        # per-fp count and both sides of the self-join (pairs.py
+        # shared_key_pairs) consume it — lazy, the winnow Arrow kernel
+        # could run once per consumer
         fps = stage("overlap_fps", lambda: winnow_fingerprints(
             texts, cfg.winnow_kgram_chars, cfg.winnow_window))
-        ov_persists: list = []
-        try:
-            ov_pairs = stage("pairs_overlap", lambda: overlap_pairs(
-                texts, fps, cfg, ov_persists, index))
-        finally:
-            release_persisted(ov_persists)
+        ov_pairs = stage("pairs_overlap", lambda: overlap_pairs(
+            texts, fps, cfg, index))
         return texts, fps, ov_pairs
 
     # The two chains share no data dependency, so the overlap chain runs
     # on a worker thread while the signature chain runs on this one: each
     # chain's tasks back-fill the idle capacity the other leaves behind —
-    # stage-tail stragglers, AQE/commit driver round-trips, the gate-count
+    # stage-tail stragglers, AQE/commit driver round-trips, the query-stage
     # barriers — at BOTH parallelism levels (at local[1] the single core is
     # idle during every driver round-trip too). Stage outputs, and
     # therefore every downstream result, are bit-identical (A/B in
@@ -453,14 +429,7 @@ def run_dedup(
     against an empty index -> clusters."""
     cfg = cfg or DedupConfig()
 
-    def stage(name: str, factory):
-        if store is not None:
-            return store.materialize(name, factory)
-        # no checkpoint store: localCheckpoint both materializes the stage
-        # (multi-consumer stages would recompute otherwise) and TRUNCATES
-        # the logical plan — without truncation each stage embeds every
-        # upstream stage's expression tree and Catalyst analysis explodes
-        return factory().localCheckpoint(eager=True)
+    stage = local_stage if store is None else store.materialize
 
     docs = stage("docs", lambda: build_docs(turns, cfg))
     # the id-collision check runs SERIALLY, in front of the chains: as a

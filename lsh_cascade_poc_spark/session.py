@@ -39,6 +39,16 @@ def _tune_worker_malloc() -> None:
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` when SPARK_GRAFT_DRIVER_MEM is unset: 48g, or
+    half the host's physical memory if that is smaller. The G1 settings
+    below keep the heap at its high-water mark, so a heap sized past the
+    host's RAM grows until the OS kills the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = phys // 2 // (1 << 20)
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "lsh_cascade_poc_spark",
     master: str | None = None,
@@ -70,15 +80,18 @@ def get_spark(
         # overwhelm this host's serialized fault handler (UDF kernels ALSO
         # re-chunk internally — see functions/signature_udf.py)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         # a crashed Python worker should leave a traceback, not a bare
         # "exited unexpectedly" (r1's bench died blind in stage 262)
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
         # do NOT force frequent JVM GC (periodicGC / System.gc()): G1 full
         # collections UNCOMMIT heap regions, and re-faulting them is the
-        # expensive thing on this host. Block hygiene is explicit unpersist
-        # (pipeline.py persist_registry), not GC pressure.
+        # expensive thing on this host. The package persists no table by
+        # hand (stages are checkpoints, operators/pairs.py key gates are
+        # lazy), so GC pressure has no cache to reclaim.
         # keep the G1 heap at its high-water mark — uncommitted regions would
         # be re-faulted at ~6MB/s on this host
         .config("spark.driver.extraJavaOptions",

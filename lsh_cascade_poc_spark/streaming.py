@@ -6,11 +6,9 @@ practice, so the engine ships an incremental path:
 
   readStream(turn files) -> foreachBatch:
       1. build the micro-batch's docs (complete convs per batch — the
-         file-per-conversation-chunk contract; for turns arriving ACROSS
-         micro-batches use streaming_state.assemble_conversations_stream,
-         the applyInPandasWithState + event-time-timeout assembler) and
-         collapse exact duplicates (within the batch and against the
-         fingerprints of the indexed signatures)
+         file-per-conversation-chunk contract) and collapse exact
+         duplicates (within the batch and against the fingerprints of the
+         indexed signatures)
       2. run the batch pipeline's cascade body (pipeline.py run_cascade)
          over the fresh representatives, with the index as it stood before
          this batch: signatures, the tier-0 band probe, the tier-1 slice
@@ -62,6 +60,7 @@ from .pipeline import (
     build_docs,
     check_doc_id_collisions,
     coarse_bands,
+    local_stage,
     run_cascade,
     run_concurrently,
 )
@@ -75,13 +74,6 @@ TURNS_DDL = (
 # batch writes all of them and every compaction folds all of them
 INDEX_TABLES = ("docs", "signatures", "bands", "dup_pairs", "overlap_fps",
                 "texts", "hot_band_drops")
-
-
-def _checkpoint(_name: str, factory) -> DataFrame:
-    """run_cascade's stage materializer for a micro-batch: no stage store,
-    so the name goes unused; localCheckpoint materializes the stage and
-    truncates its plan."""
-    return factory().localCheckpoint(eager=True)
 
 
 class IncrementalDedup:
@@ -247,7 +239,7 @@ class IncrementalDedup:
         if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
             return  # replayed micro-batch after restart: already applied
 
-        docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
+        docs = local_stage("docs", lambda: build_docs(turns_batch, cfg))
         index = self._index(batch_id)
         # the id-collision check covers every doc ever ingested
         ids = docs.select("conv_id", "doc_id")
@@ -292,7 +284,7 @@ class IncrementalDedup:
         # OVERWRITES this batch's own subdirectories.
         out, _ = run_concurrently(
             self.spark,
-            partial(run_cascade, reps_docs, exact_pairs, cfg, _checkpoint,
+            partial(run_cascade, reps_docs, exact_pairs, cfg, local_stage,
                     index),
             partial(check_doc_id_collisions, ids),
         )

@@ -23,18 +23,8 @@ from lsh_cascade_poc_spark.operators.pairs import (
 from lsh_cascade_poc_spark.pipeline import (
     merge_evidence,
     minhash_candidate_pairs,
-    release_persisted,
     tight_tier,
 )
-
-
-@pytest.fixture
-def registry():
-    """The persist registry of a test's gated pair joins, released after
-    the test."""
-    reg: list = []
-    yield reg
-    release_persisted(reg)
 
 
 def _sig_df(spark, sigs: dict[int, list[int]]):
@@ -58,13 +48,13 @@ def _slice_agreements(spark, sigs: dict[int, list[int]], n_bands: int,
     return {(r.id_a, r.id_b): r.n for r in rows}
 
 
-def test_identical_signatures_collide_in_all_bands(spark, registry):
+def test_identical_signatures_collide_in_all_bands(spark):
     sig = list(range(16))
     sigs = {1: sig, 2: sig, 3: list(range(100, 116))}
     bands = explode_bands(_sig_df(spark, sigs), "minhash", tier=0, n_bands=4,
                           rows_per_band=4)
     assert bands.count() == 12
-    pairs, _hot = pairs_from_bands(bands, None, 1000, registry)
+    pairs, _hot = pairs_from_bands(bands, None, 1000)
     assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)]
     # identical signatures agree on 4 of 4 slices, unrelated ones on none
     assert _slice_agreements(spark, sigs, 4, 4) == {
@@ -87,14 +77,14 @@ def test_partial_band_match(spark):
         assert [(r.id_a, r.id_b) for r in got.collect()] == want, m
 
 
-def test_band_id_participates_in_key(spark, registry):
+def test_band_id_participates_in_key(spark):
     # same 4 lanes at different band positions must NOT collide
     # (the reference's "c{i}_" prefix trick, src/lsh.py:266-304)
     a = [7, 7, 7, 7] + [1, 2, 3, 4]
     b = [5, 5, 5, 5] + [7, 7, 7, 7]
     df = _sig_df(spark, {1: a, 2: b})
     bands = explode_bands(df, "minhash", tier=0, n_bands=2, rows_per_band=4)
-    assert pairs_from_bands(bands, None, 1000, registry)[0].count() == 0
+    assert pairs_from_bands(bands, None, 1000)[0].count() == 0
 
 
 def test_tier_participates_in_key(spark):
@@ -106,19 +96,19 @@ def test_tier_participates_in_key(spark):
     assert k0 != k1
 
 
-def test_hot_band_cap_drops_and_records(spark, registry):
+def test_hot_band_cap_drops_and_records(spark):
     sig = [1, 2, 3, 4]
     df = _sig_df(spark, {i: sig for i in range(10)})
     bands = explode_bands(df, "minhash", tier=0, n_bands=1, rows_per_band=4)
-    pairs, hot = pairs_from_bands(bands, None, 5, registry)
+    pairs, hot = pairs_from_bands(bands, None, 5)
     assert pairs.count() == 0
     hrows = hot.collect()
     assert len(hrows) == 1 and hrows[0].n_docs == 10
-    pairs2, hot2 = pairs_from_bands(bands, None, 100, registry)
+    pairs2, hot2 = pairs_from_bands(bands, None, 100)
     assert pairs2.count() == 10 * 9 // 2 and hot2.count() == 0
 
 
-def test_bypassed_tight_tier_records_no_drops(spark, registry):
+def test_bypassed_tight_tier_records_no_drops(spark):
     """Tier 1 is a per-pair filter: it builds no bucket, so it records no
     drop, whether it runs (tight_min_match=1) or is bypassed (0). Here it
     keeps both coarse pairs either way."""
@@ -134,7 +124,7 @@ def test_bypassed_tight_tier_records_no_drops(spark, registry):
                     tight_n_bands=8, tight_rows_per_band=1, hot_band_cap=2)
     for m in (1, 0):
         cands, hot = minhash_candidate_pairs(
-            sigs, DedupConfig(tight_min_match=m, **geometry), registry)
+            sigs, DedupConfig(tight_min_match=m, **geometry))
         assert sorted((r.id_a, r.id_b) for r in cands.collect()) == \
             [(1, 2), (2, 3)], m
         assert hot.filter(F.col("tier") == 1).count() == 0, m
@@ -171,7 +161,7 @@ def _band_join_tier1(sigs: dict[int, list[int]], cfg) -> tuple[set, int]:
 
 
 @pytest.mark.parametrize("m", [1, 2, 3])
-def test_tight_tier_matches_band_join_model(spark, registry, m):
+def test_tight_tier_matches_band_join_model(spark, m):
     """The per-pair slice filter keeps exactly the pairs the former tight
     band self-join kept whenever no tight bucket among the survivors is
     hot. Seeded families of mutated signatures make pairs agree on 0..all
@@ -192,12 +182,12 @@ def test_tight_tier_matches_band_join_model(spark, registry, m):
     coarse, _ = _band_join_tier1(sigs, DedupConfig(tight_min_match=0,
                                                    **geometry))
     assert n_hot == 0 and want and want < coarse
-    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg, registry)
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
     assert {(r.id_a, r.id_b) for r in got.collect()} == want
     assert hot.count() == 0
 
 
-def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark, registry):
+def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark):
     """The documented difference: a coarse pair whose only shared tight
     slice sits in a tight bucket above hot_band_cap was dropped by the
     band self-join and is kept by the per-pair filter."""
@@ -214,7 +204,7 @@ def test_tight_tier_keeps_pair_of_a_hot_tight_bucket(spark, registry):
                       tight_n_bands=2, tight_rows_per_band=4,
                       tight_min_match=1, hot_band_cap=2)
     assert _band_join_tier1(sigs, cfg) == (set(), 1)
-    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg, registry)
+    got, hot = minhash_candidate_pairs(_sig_df(spark, sigs), cfg)
     assert sorted((r.id_a, r.id_b) for r in got.collect()) == [(1, 2), (3, 4)]
     assert hot.count() == 0
 
@@ -266,7 +256,7 @@ def _random_key_rows(rng: random.Random, ids: list[int], n: int):
 
 
 @pytest.mark.parametrize("seed", [3, 11])
-def test_shared_key_pairs_matches_brute_force(spark, registry, seed):
+def test_shared_key_pairs_matches_brute_force(spark, seed):
     """shared_key_pairs(new, index, cap) == every pair of rows sharing a
     key in index ∪ new with id_a < id_b and at least one `new` row, payload
     in id order — as a MULTISET (one row per shared key occurrence) — over
@@ -300,8 +290,7 @@ def test_shared_key_pairs_matches_brute_force(spark, registry, seed):
     for cap in (2, 1000):
         pairs, hot = shared_key_pairs(
             spark.createDataFrame(new, schema),
-            spark.createDataFrame(idx, schema), ["k"], cap, registry,
-            ["pos"],
+            spark.createDataFrame(idx, schema), ["k"], cap, ["pos"],
         )
         got = Counter(tuple(r) for r in pairs.collect())
         want = Counter()
@@ -323,7 +312,7 @@ def test_shared_key_pairs_matches_brute_force(spark, registry, seed):
         hits_new = {(a, b) for a, *ka in nb for b, *kb in nb
                     if ka == kb and a < b and ka[1] in pairable}
         got_pairs, band_hot = pairs_from_bands(as_bands(nb), as_bands(ib),
-                                               cap, registry)
+                                               cap)
         got_pairs = got_pairs.collect()
         assert len(got_pairs) == len(hits_old | hits_new)
         assert {tuple(r) for r in got_pairs} == hits_old | hits_new
@@ -333,10 +322,9 @@ def test_shared_key_pairs_matches_brute_force(spark, registry, seed):
 
 
 def test_gated_pairs_leave_no_cached_table(spark):
-    """A gated pair join persists its key counts into the caller's registry
-    and nowhere else: once the pairs and hot keys are collected and
-    release_persisted has run, the session's cache manager holds no table
-    the calls added."""
+    """A gated pair join caches nothing: once the pairs and hot keys are
+    collected, with no release step, the session's cache manager holds no
+    table the calls added."""
     from lsh_cascade_poc_spark.operators.suffix import overlap_candidates
 
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -350,19 +338,45 @@ def test_gated_pairs_leave_no_cached_table(spark):
     cfg = DedupConfig(n_perm=4, coarse_n_bands=1, tight_n_bands=1,
                       tight_rows_per_band=4, hot_band_cap=2,
                       overlap_min_shared_fps=1)
-    registry: list = []
-    pairs, hot = minhash_candidate_pairs(sigs, cfg, registry)
+    pairs, hot = minhash_candidate_pairs(sigs, cfg)
     assert pairs.count() == 0 and [r.n_docs for r in hot.collect()] == [3]
-    cands = overlap_candidates(fps, cfg, registry)
+    cands = overlap_candidates(fps, cfg)
     assert [(r.id_a, r.id_b) for r in cands.collect()] == [(1, 2)]
-    assert len(registry) == 2
-    assert cache.numCachedEntries() == before + len(registry)
-    release_persisted(registry)
-    assert registry == [] and cache.numCachedEntries() == before
+    assert cache.numCachedEntries() == before
 
 
-def test_simhash_pairs_probe_an_index(spark, registry):
-    """simhash_candidate_pairs(new, cfg, registry, index) == a Python model
+def test_candidate_tiers_run_no_job_at_call(spark):
+    """Building the candidate tiers is lazy: minhash_candidate_pairs,
+    simhash_candidate_pairs and overlap_candidates (each through the
+    shared_key_pairs gate, with and without an index) start no Spark job;
+    their key gates are sized by the plan at run time, not by a count."""
+    from lsh_cascade_poc_spark.operators.suffix import overlap_candidates
+    from lsh_cascade_poc_spark.pipeline import simhash_candidate_pairs
+
+    sig = [1, 2, 3, 4]
+    sigs = _sig_df(spark, {1: sig, 2: sig, 3: [5, 6, 7, 8]}).withColumn(
+        "simhash", F.col("doc_id") * 7)
+    fps = spark.createDataFrame([(1, 7, 0), (2, 7, 5)],
+                                "doc_id long, fp long, pos int")
+    cfg = DedupConfig(n_perm=4, coarse_n_bands=1, tight_n_bands=1,
+                      tight_rows_per_band=4, tight_min_match=1)
+    index = {"bands": explode_bands(sigs, "minhash", tier=0, n_bands=1,
+                                    rows_per_band=4),
+             "signatures": sigs}
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(), default=-1)
+    for idx in (None, index):
+        minhash_candidate_pairs(sigs, cfg, idx)
+        simhash_candidate_pairs(sigs, cfg, idx)
+        overlap_candidates(fps, cfg, None if idx is None else fps)
+    assert [j for j in tracker.getJobIdsForGroup() if j > before] == []
+    # the tracker does see an action's job
+    fps.count()
+    assert max(tracker.getJobIdsForGroup()) > before
+
+
+def test_simhash_pairs_probe_an_index(spark):
+    """simhash_candidate_pairs(new, cfg, index) == a Python model
     over index ∪ new: pairs with at least one `new` doc (new x new plus
     new x index, never index x index) that share a 16-bit chunk at the same
     position, held by at most `cap` distinct docs, and lie within Hamming
@@ -406,7 +420,7 @@ def test_simhash_pairs_probe_an_index(spark, registry):
     for cap in (3, 1000):
         cfg = DedupConfig(hot_band_cap=cap)
         tau = cfg.simhash_hamming_tau
-        pairs, hot = simhash_candidate_pairs(as_df(new), cfg, registry,
+        pairs, hot = simhash_candidate_pairs(as_df(new), cfg,
                                              {"signatures": as_df(idx)})
         want = {
             (min(d1, d2), max(d1, d2))

@@ -88,22 +88,17 @@ def test_pipeline_resume(spark, tiny_turns, tmp_path):
 
 def test_bucket_sizes_and_stage_size(spark, store):
     """A6: per-bucket band-index sizes + on-disk stage footprint. The band
-    pair join persists the sizes of the buckets that can pair or be hot
-    (>= 2 docs) and returns those above the cap."""
+    pair join returns the sizes of the buckets above the cap; at cap 1
+    that is every bucket that could pair (>= 2 docs), never a singleton."""
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
-    from lsh_cascade_poc_spark.pipeline import release_persisted
 
     bands = spark.createDataFrame(
         [(0, 0, 10, 1), (0, 0, 10, 2), (0, 0, 10, 3), (0, 1, 99, 1)],
         "tier int, band_id int, band_key long, doc_id long",
     )
-    registry: list = []
-    pairs, hot = pairs_from_bands(bands, None, 2, registry)
-    [sizes] = registry
-    assert [tuple(r) for r in sizes.collect()] == [(0, 0, 10, 3)]
+    pairs, hot = pairs_from_bands(bands, None, 1)
     assert [tuple(r) for r in hot.collect()] == [(0, 0, 10, 3)]
     assert pairs.count() == 0
-    release_persisted(registry)
 
     store.materialize("sized", lambda: spark.range(1000))
     assert store.stage_size_bytes("sized") > 0

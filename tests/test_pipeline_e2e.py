@@ -28,10 +28,8 @@ CFG = DedupConfig(
 
 @pytest.fixture(scope="module")
 def spark_result(spark, tiny_turns):
-    res = run_dedup(spark, tiny_turns, cfg=CFG, enable_overlap_stage=True)
-    res.docs.persist().count()
-    res.dup_pairs.persist().count()
-    return res
+    # every stage of the result is an eager localCheckpoint already
+    return run_dedup(spark, tiny_turns, cfg=CFG, enable_overlap_stage=True)
 
 
 @pytest.fixture(scope="module")

@@ -55,19 +55,14 @@ def test_band_self_join_is_hash_join_not_nested_loop(spark, tiny_turns):
     )
     from lsh_cascade_poc_spark.operators.bands import explode_bands
     from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
-    from lsh_cascade_poc_spark.pipeline import (
-        build_signatures,
-        release_persisted,
-    )
+    from lsh_cascade_poc_spark.pipeline import build_signatures
 
     cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
                       tight_n_bands=5)
     docs = with_doc_id(assemble_conversations(tiny_turns))
     sigs = build_signatures(docs, cfg)
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
-    registry: list = []
-    plan = plan_of(pairs_from_bands(bands, None, 1000, registry)[0])
-    release_persisted(registry)
+    plan = plan_of(pairs_from_bands(bands, None, 1000)[0])
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
@@ -92,10 +87,7 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
         overlap_candidates,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import (
-        build_signatures,
-        release_persisted,
-    )
+    from lsh_cascade_poc_spark.pipeline import build_signatures
 
     def optimized(df) -> tuple[str, list[str], list[str]]:
         """(plan, its joins, its pair joins: those filtering id_a < id_b)"""
@@ -108,17 +100,14 @@ def test_batch_candidate_joins_prune_the_empty_index(spark, tiny_turns):
     docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
     sigs = build_signatures(docs, cfg).localCheckpoint()
     bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
-    registry: list = []
     plan, joins, pair_joins = optimized(
-        pairs_from_bands(bands, None, cfg.hot_band_cap, registry)[0])
+        pairs_from_bands(bands, None, cfg.hot_band_cap)[0])
     assert "Union" not in plan, plan
     # the pair join + the pairable-bucket gate join under each side of it
     assert len(joins) == 3 and len(pair_joins) == 1, plan
 
     fps = winnow_fingerprints(docs, 24, 64).localCheckpoint()
-    plan, joins, pair_joins = optimized(
-        overlap_candidates(fps, cfg, registry))
-    release_persisted(registry)
+    plan, joins, pair_joins = optimized(overlap_candidates(fps, cfg))
     assert "Union" not in plan, plan
     # the pair join + the shared-fp gate join under each side of it
     assert len(joins) == 3 and len(pair_joins) == 1, plan
@@ -130,20 +119,46 @@ def test_key_gate_count_is_one_exchange(spark):
     keys, so the (keys, doc_id) dedup and the per-key count run inside
     those partitions instead of shuffling once per aggregate."""
     from lsh_cascade_poc_spark.operators.pairs import shared_key_pairs
-    from lsh_cascade_poc_spark.pipeline import release_persisted
 
     def keyed(lo, hi):
         return spark.range(lo, hi).select(F.col("id").alias("doc_id"),
                                           (F.col("id") % 7).alias("k"))
 
     for index in (None, keyed(40, 60)):
-        registry: list = []
-        shared_key_pairs(keyed(0, 40), index, ["k"], 1000, registry)
-        [n_docs] = registry
-        release_persisted(registry)
-        # a fresh Dataset over the released count: its own plan, uncached
-        plan = plan_of(n_docs.select("*"), mode="simple")
+        # `hot` is the count itself, filtered above the cap
+        _pairs, hot = shared_key_pairs(keyed(0, 40), index, ["k"], 1000)
+        plan = plan_of(hot, mode="simple")
         assert plan.count("Exchange") == 1, plan
+
+
+def test_small_key_gate_is_broadcast_at_run_time(spark, tiny_turns):
+    """The key gate of pairs_from_bands carries no broadcast hint and runs
+    no count: the session's (adaptive) broadcast threshold decides its join
+    from the gate's size. Executed over a small band table, the plan joins
+    the gate with a BroadcastHashJoin: a hash join on the band key that,
+    unlike the pair join, filters no `id_a < id_b`."""
+    from lsh_cascade_poc_spark.config import DedupConfig
+    from lsh_cascade_poc_spark.operators.assemble import (
+        assemble_conversations,
+        with_doc_id,
+    )
+    from lsh_cascade_poc_spark.operators.bands import explode_bands
+    from lsh_cascade_poc_spark.operators.pairs import pairs_from_bands
+    from lsh_cascade_poc_spark.pipeline import build_signatures
+
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
+                      tight_n_bands=5)
+    docs = with_doc_id(assemble_conversations(tiny_turns))
+    sigs = build_signatures(docs, cfg).localCheckpoint()
+    bands = explode_bands(sigs, "minhash", tier=0, n_bands=4, rows_per_band=4)
+    pairs, _hot = pairs_from_bands(bands, None, cfg.hot_band_cap)
+    assert pairs.collect()  # executes this Dataset's own adaptive plan
+    plan = plan_of(pairs, mode="simple")
+    assert "isFinalPlan=true" in plan, plan
+    gate_joins = [ln for ln in plan.splitlines()
+                  if "BroadcastHashJoin [" in ln and "band_key#" in ln
+                  and "id_a#" not in ln]
+    assert gate_joins, plan
 
 
 def test_tight_tier_is_a_pair_filter_not_a_band_join(spark, tiny_turns):
@@ -162,17 +177,14 @@ def test_tight_tier_is_a_pair_filter_not_a_band_join(spark, tiny_turns):
     from lsh_cascade_poc_spark.pipeline import (
         build_signatures,
         minhash_candidate_pairs,
-        release_persisted,
     )
 
     cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
                       tight_n_bands=5, tight_min_match=1)
     docs = with_doc_id(assemble_conversations(tiny_turns)).localCheckpoint()
     sigs = build_signatures(docs, cfg).localCheckpoint()
-    registry: list = []
-    cands, _ = minhash_candidate_pairs(sigs, cfg, registry)
+    cands, _ = minhash_candidate_pairs(sigs, cfg)
     plan = cands._jdf.queryExecution().optimizedPlan().toString()
-    release_persisted(registry)
     joins = [ln for ln in plan.splitlines() if "Join " in ln]
     pair_joins = [ln for ln in joins if "band_key" in ln and "id_a#" in ln]
     doc_id_joins = [ln for ln in joins

@@ -14,7 +14,6 @@ from lsh_cascade_poc_spark.operators.suffix import (
     verify_overlaps,
     winnow_fingerprints,
 )
-from lsh_cascade_poc_spark.pipeline import release_persisted
 
 _ROLL_P = (1 << 61) - 1
 _ROLL_BASE = 1_000_003
@@ -161,11 +160,8 @@ def test_overlap_stage_end_to_end(spark):
         "doc_id long, doc_text string",
     )
     fps = winnow_fingerprints(docs, k=24, w=32)
-    registry: list = []
-    cands = overlap_candidates(
-        fps, DedupConfig(overlap_min_shared_fps=1), registry)
+    cands = overlap_candidates(fps, DedupConfig(overlap_min_shared_fps=1))
     found = verify_overlaps(cands, docs, k=24, min_overlap_chars=96).collect()
-    release_persisted(registry)
     pairs = {(r.id_a, r.id_b) for r in found}
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
@@ -189,12 +185,9 @@ def test_overlap_candidates_prefilter_semantics(spark):
     rows += [(100 + i, f"doc {i} says " + boiler) for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id long, doc_text string")
     fps = winnow_fingerprints(docs, k=24, w=32)
-    registry: list = []
     cands = overlap_candidates(
-        fps, DedupConfig(overlap_hot_cap=8, overlap_min_shared_fps=1),
-        registry)
+        fps, DedupConfig(overlap_hot_cap=8, overlap_min_shared_fps=1))
     pairs = {(r.id_a, r.id_b) for r in cands.collect()}
-    release_persisted(registry)
     assert (1, 2) in pairs  # true overlap survives the gate
     assert all(a < 100 and b < 100 for a, b in pairs), (
         f"boilerplate-only docs must not pair (hot cap), got {pairs}"
@@ -226,8 +219,7 @@ def test_true_overlap_flanked_by_boilerplate_seeds(spark):
         "doc_id long, doc_text string",
     )
     fps = winnow_fingerprints(docs, k=24, w=64)  # production kgram/window
-    registry: list = []
-    cands = overlap_candidates(fps, DedupConfig(), registry)
+    cands = overlap_candidates(fps, DedupConfig())
     rows = cands.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -236,7 +228,6 @@ def test_true_overlap_flanked_by_boilerplate_seeds(spark):
     assert r.pos_a < len(bo1), "min seed should land in the leading boilerplate"
     assert r.pos_a2 > r.pos_a + len(ovl), "max seed should land past the overlap"
     found = verify_overlaps(cands, docs, k=24, min_overlap_chars=200).collect()
-    release_persisted(registry)
     assert [(x.id_a, x.id_b) for x in found] == [(r.id_a, r.id_b)]
     assert found[0].overlap_chars >= len(ovl) - 2
 

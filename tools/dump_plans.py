@@ -44,11 +44,7 @@ def main() -> None:
         overlap_candidates,
         winnow_fingerprints,
     )
-    from lsh_cascade_poc_spark.pipeline import (
-        build_signatures,
-        release_persisted,
-        tight_tier,
-    )
+    from lsh_cascade_poc_spark.pipeline import build_signatures, tight_tier
     from lsh_cascade_poc_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans", master="local[4]",
@@ -97,8 +93,7 @@ def main() -> None:
     sigs_ck = sigs.localCheckpoint(eager=True)
     bands = explode_bands(sigs_ck, "minhash", tier=0, n_bands=4,
                           rows_per_band=4)
-    registry: list = []
-    pairs, _hot = pairs_from_bands(bands, None, cfg.hot_band_cap, registry)
+    pairs, _hot = pairs_from_bands(bands, None, cfg.hot_band_cap)
     sections.append((
         "Band self-join: equi-join on (tier, band_id, band_key)",
         "The cascade's dominant shuffle. Band keys are `xxhash64` over "
@@ -106,10 +101,11 @@ def main() -> None:
         "The self-join is an EQUI-join (test_plans.py pins 'never "
         "nested-loop'; broadcast at this toy scale, shuffle join at real "
         "scale under the 8MB threshold); the join's own hot-key gate (the "
-        "persisted `InMemoryRelation` of distinct docs per bucket, counted "
-        "after ONE exchange on the bucket key; buckets of 2..cap docs, "
-        "broadcast when small) drops singleton and hot "
-        "buckets under each of its sides, and `id_a < id_b` + "
+        "distinct docs per bucket, counted after ONE exchange on the "
+        "bucket key; buckets of 2..cap docs, a lazy subplan that AQE "
+        "broadcasts when its runtime size is under the same 8MB "
+        "threshold) drops singleton and hot buckets under each of its "
+        "sides, and `id_a < id_b` + "
         "`distinct` dedups pairs across bands BEFORE the expensive verify. "
         "Both sides read the checkpointed signature stage, mirroring "
         "run_dedup's stage materialization. The join is `shared_key_pairs`, "
@@ -144,11 +140,11 @@ def main() -> None:
         "`shared_key_pairs` join as the bands, keyed on `fp` with `pos` as "
         "payload, and through the same gate: both join sides keep the "
         "fingerprints shared by 2..overlap_hot_cap distinct docs (the "
-        "persisted, counted gate set — broadcast when small); the "
+        "same lazy gate subplan, broadcast when small); the "
         "empty-index branch is pruned as above. Two aggregates then pick "
         "three verify seeds per pair (per alignment delta, then per pair) "
         "and apply `overlap_min_shared_fps`.",
-        overlap_candidates(fps, cfg, registry),
+        overlap_candidates(fps, cfg),
         "simple",
     ))
 
@@ -209,7 +205,6 @@ def main() -> None:
         print("```")
         print(plan_of(df, mode).rstrip())
         print("```\n")
-    release_persisted(registry)
     spark.stop()
 
 
