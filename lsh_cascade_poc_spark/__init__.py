@@ -6,8 +6,14 @@ filter -> Hamming rerank -> exact cosine verify, /root/reference/src/pipeline.py
 is re-targeted as a bulk *all-pairs* near-duplicate detection + clustering
 pipeline over tables of multi-turn conversation transcripts:
 
-    coarse MinHash bands  ->  tight bands (min-match)  ->  exact Jaccard verify
-    -> connected-components clustering
+    exact md5 collapse  ->  MinHash + SimHash signatures  ->  candidates:
+      coarse MinHash bands (tier 0) -> tight slice filter (tier 1, min-match)
+      SimHash chunk bands -> Hamming prune
+      winnowing fingerprints -> exact long-overlap extension
+    ->  exact Jaccard verify  ->  connected-components clustering
+
+(pipeline.py lists the stages; the three candidate sources are unioned
+before the verify)
 
 Everything is declarative DataFrame/SQL; Python appears only inside
 Arrow-vectorized ``pandas_udf`` kernels (never per-row UDFs).

@@ -1,11 +1,12 @@
-"""MinHash signatures — Arrow-vectorized pandas_udf over hashed shingle sets.
+"""MinHash signatures — batched numpy kernels over hashed shingle sets.
 
 Reference analog: the 128-bit binary fingerprint pipeline
 (/root/reference/src/lsh.py:234-263 batch SimHash; /root/reference/src/itq_lsh.py:130-161
 ITQ transform). Like the reference we compute fingerprints with *batched numpy
 kernels* (src/lsh.py:249-253 does one (bits, dim) @ (dim, n) matmul per batch);
-here the batch arrives as an Arrow RecordBatch inside a pandas_udf, and the
-kernel is a per-permutation multiply-add + segmented min-reduce.
+here the batch arrives as an Arrow RecordBatch inside the fused signature
+pandas_udf (signature_udf.py), and the kernel is a per-permutation
+multiply-add + segmented min-reduce.
 
 Permutation family: h_i(x) = a_i * x + b_i over Z/2^64 with a_i odd — a
 bijection of the 64-bit shingle-hash space (see make_perms for why no
@@ -16,12 +17,8 @@ batch≡single).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 _EMPTY_SENTINEL = np.int64((1 << 63) - 1)  # signature lane for empty sets
@@ -94,8 +91,8 @@ def storage_lanes(sig: np.ndarray) -> np.ndarray:
 
 def minhash_numpy(shingle_sets: list[np.ndarray], n_perm: int, seed: int) -> np.ndarray:
     """Reference implementation over a list of per-doc shingle-hash arrays,
-    in STORAGE form (int32 lanes). Test oracle: must equal the pandas_udf
-    output lane-for-lane."""
+    in STORAGE form (int32 lanes). Test oracle: must equal the fused signature
+    kernel's minhash lane-for-lane."""
     a, b = make_perms(n_perm, seed)
     if not shingle_sets:
         return np.empty((0, n_perm), dtype=np.int32)
@@ -106,30 +103,6 @@ def minhash_numpy(shingle_sets: list[np.ndarray], n_perm: int, seed: int) -> np.
     )
     offsets = np.cumsum([0] + [len(s) for s in shingle_sets[:-1]], dtype=np.int64)
     return storage_lanes(minhash_flat(flat, offsets, a, b))
-
-
-def make_minhash_udf(n_perm: int, seed: int):
-    """pandas_udf: array<long> shingle hashes -> array<int> signature
-    (storage lanes). Iterator form so permutation params are materialized
-    once per worker, not once per batch."""
-    a, b = make_perms(n_perm, seed)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def minhash_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            arrays = [
-                np.asarray(v, dtype=np.int64) if v is not None else np.empty(0, np.int64)
-                for v in s
-            ]
-            lengths = np.fromiter((len(x) for x in arrays), dtype=np.int64, count=len(arrays))
-            flat = np.concatenate(arrays) if arrays and lengths.sum() else np.empty(0, np.int64)
-            offsets = np.zeros(len(arrays), dtype=np.int64)
-            if len(arrays) > 1:
-                np.cumsum(lengths[:-1], out=offsets[1:])
-            sig = storage_lanes(minhash_flat(flat, offsets, a, b))
-            yield pd.Series(list(sig))
-
-    return minhash_udf
 
 
 def jaccard_estimate_from_signatures(sig_a: "F.Column", sig_b: "F.Column") -> "F.Column":

@@ -4,8 +4,9 @@ Reference analog: SimHashGenerator.hash_batch (/root/reference/src/lsh.py:234-26
 computes sign-of-projection bits from embedding vectors; for *text* dedup the
 classic Charikar construction replaces projections with token-hash bit votes:
 each shingle hash votes +1/-1 per bit position, the sign of the per-bit sum is
-the fingerprint bit. Computed as a batched numpy kernel in a pandas_udf
-(segmented add-reduce), same shape as the reference's batch matmul.
+the fingerprint bit. Computed as a batched numpy kernel (segmented
+add-reduce) inside the fused signature pandas_udf (signature_udf.py), same
+shape as the reference's batch matmul.
 
 Hamming distance (reference: XOR+popcount, src/lsh.py:307-320) is pure
 Catalyst: F.bit_count(a ^ b) — JVM codegen, no Python.
@@ -17,13 +18,9 @@ chunk index participates in the join key (the reference's "c{i}_" prefix trick).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def simhash_from_hashes_numpy(hash_sets: list[np.ndarray], n_bits: int = 64) -> np.ndarray:
@@ -71,25 +68,6 @@ def _simhash_flat(flat: np.ndarray, offsets: np.ndarray, n_rows: int, n_bits: in
         code_ne |= positive.astype(np.uint64) << np.uint64(bit)
     out_u[nonempty] = code_ne
     return out_u.view(np.int64)
-
-
-def make_simhash_udf(n_bits: int = 64):
-    """pandas_udf: array<long> (hashed shingles/tokens) -> long simhash."""
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            arrays = [
-                np.asarray(v, dtype=np.int64) if v is not None else np.empty(0, np.int64)
-                for v in s
-            ]
-            lengths = np.fromiter((len(x) for x in arrays), dtype=np.int64, count=len(arrays))
-            flat = np.concatenate(arrays) if arrays and lengths.sum() else np.empty(0, np.int64)
-            offsets = np.zeros(len(arrays), dtype=np.int64)
-            if len(arrays) > 1:
-                np.cumsum(lengths[:-1], out=offsets[1:])
-            yield pd.Series(_simhash_flat(flat, offsets, len(arrays), n_bits))
-
-    return simhash_udf
 
 
 def hamming64(a: Column, b: Column) -> Column:

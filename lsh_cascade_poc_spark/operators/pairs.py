@@ -62,12 +62,14 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
     unless the key is hot -> (pairs, hot).
 
     The hot-key gate: the distinct docs of each key are counted over
-    new ∪ index, and only keys held by 2..cap docs pair. Distinct docs, not
-    rows: a doc can hold one winnow fp at several positions, and a doc_id
-    re-delivered next to its indexed copy is one doc. `hot` (*keys, n_docs)
-    holds the keys above `cap`, for the caller to record. Both outputs are
-    lazy: building them runs no Spark job, and each action re-derives the
-    count from `new` and `index`, so those should be materialized tables.
+    new ∪ index, for the keys the batch touches (held by at least one `new`
+    row: a key held only by indexed docs can emit no pair), and only keys
+    held by 2..cap docs pair. Distinct docs, not rows: a doc can hold one
+    winnow fp at several positions, and a doc_id re-delivered next to its
+    indexed copy is one doc. `hot` (*keys, n_docs) holds the touched keys
+    above `cap`, for the caller to record. Both outputs are lazy: building
+    them runs no Spark job, and each action re-derives the count from `new`
+    and `index`, so those should be materialized tables.
 
     (doc_id, *keys, *cols) rows of `new` and `index` -> pairs: one row per
     shared key occurrence (keys..., id_a, id_b, {c}_a, {c}_b) with
@@ -82,13 +84,16 @@ def shared_key_pairs(new: DataFrame, index: DataFrame | None,
         index = new.limit(0)
     # hash-partitioned on the keys first, the distinct count needs no
     # second exchange: the (keys, doc_id) dedup and the per-key count both
-    # run within the keys' partitions (one shuffle, not two)
+    # run within the keys' partitions (one shuffle, not two); the
+    # touched-key flag is one more aggregate over the same exchange
     n_docs = (
-        new.select("doc_id", *keys)
-        .unionByName(index.select("doc_id", *keys))
+        new.select("doc_id", *keys, F.lit(True).alias("_new"))
+        .unionByName(index.select("doc_id", *keys, F.lit(False).alias("_new")))
         .repartition(*keys)
-        .groupBy(*keys).agg(F.countDistinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= 2)
+        .groupBy(*keys).agg(F.countDistinct("doc_id").alias("n_docs"),
+                            F.max("_new").alias("_new"))
+        .filter((F.col("n_docs") >= 2) & F.col("_new"))
+        .drop("_new")
     )
     gate = n_docs.filter(F.col("n_docs") <= cap).select(*keys)
     new, index = new.join(gate, keys), index.join(gate, keys)

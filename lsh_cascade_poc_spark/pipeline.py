@@ -144,12 +144,25 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def coarse_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Tier-0 (coarse, high-recall) MinHash bands: the only tier the
-    streaming index holds and probes."""
+    """Tier-0 (coarse, high-recall) MinHash bands of `signatures`."""
     return explode_bands(
         signatures, "minhash", tier=0,
         n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
     )
+
+
+def simhash_chunks(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Tier-2 SimHash bands of `signatures`: (doc_id, simhash, band_id,
+    band_key, tier) with one simhash_band_bits chunk per band (chunk_hash
+    analog)."""
+    return signatures.select(
+        "doc_id",
+        "simhash",
+        F.posexplode(F.array(*[
+            simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
+            for i in range(cfg.simhash_bits // cfg.simhash_band_bits)
+        ])).alias("band_id", "band_key"),
+    ).withColumn("tier", F.lit(2))
 
 
 def tight_tier(pairs: DataFrame, signatures: DataFrame,
@@ -182,14 +195,14 @@ def minhash_candidate_pairs(
     index: Mapping[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Tiers 0+1 of the banding cascade -> (candidate pairs, hot-band stats),
-    both lazy. With an `index` (run_cascade), tier 0 probes its `bands` and
-    tier 1 reads its `signatures` too."""
+    both lazy. With an `index` (run_cascade), tier 0 probes the coarse
+    bands of its `signatures` and tier 1 reads them too."""
     # tier 0: coarse, whole corpus; a candidate must be generated by the
     # coarse tier AND confirmed by the tight tier (the cascade's
     # AND-tightening)
     coarse, hot0 = pairs_from_bands(
         coarse_bands(signatures, cfg),
-        None if index is None else index["bands"],
+        None if index is None else coarse_bands(index["signatures"], cfg),
         cfg.hot_band_cap,
     )
     return tight_tier(coarse, _with_index(signatures, index, "signatures"),
@@ -204,23 +217,9 @@ def simhash_candidate_pairs(
     + Hamming <= tau prune (the reference's Stage-2 rerank as a filter).
     With an `index`, the chunks of its `signatures` are the probed side.
     Returns (pairs, hot-band stats) like minhash_candidate_pairs."""
-    n_bands = cfg.simhash_bits // cfg.simhash_band_bits
-
-    def chunks(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id",
-            "simhash",
-            F.posexplode(
-                F.array(*[
-                    simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
-                    for i in range(n_bands)
-                ])
-            ).alias("band_id", "band_key"),
-        ).withColumn("tier", F.lit(2))
-
     pairs, hot = shared_key_pairs(
-        chunks(signatures),
-        None if index is None else chunks(index["signatures"]),
+        simhash_chunks(signatures, cfg),
+        None if index is None else simhash_chunks(index["signatures"], cfg),
         BAND_KEY, cfg.hot_band_cap, ["simhash"],
     )
     close = hamming64(F.col("simhash_a"), F.col("simhash_b")) \
@@ -330,7 +329,7 @@ def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
     `exact_pairs` the exact-duplicate evidence (id_a, id_b), and
     `stage(name, factory)` materializes one stage. `index` holds the
     streaming index's tables as they stood before this batch, by name
-    (`signatures`, `bands`, `overlap_fps`, `texts`); None is an empty
+    (`signatures`, `overlap_fps`, `texts`); None is an empty
     index, which is every batch run and a stream's first batch. Every
     candidate tier probes it through shared_key_pairs (new x new plus
     new x indexed), and the verify reads the indexed signatures; that is

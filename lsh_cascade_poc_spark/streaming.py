@@ -22,10 +22,10 @@ practice, so the engine ships an incremental path:
       3. write the batch's index tables concurrently; the ``_batch_<id>_done``
          marker, written after the last of them, is the commit point
 
-The cascade steps and the hot-key cap are one rule in both drivers. What
+The cascade steps and the hot-key cap are one rule in both drivers: a
+probe sizes each bucket the batch's docs fall into over every indexed doc
+plus the new ones, as a batch run sizes it over the whole corpus. What
 differs:
-  - the bands index keeps singleton buckets (only hot ones are left out),
-    because a future batch's doc may still collide with them;
   - a bucket can cross the cap after earlier batches already paired its
     docs: those pairs stay, and only later probes of the bucket stop.
 
@@ -33,13 +33,13 @@ Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
 state lives in parquet tables (index_dir), so the stream is restartable via
 Spark's checkpointLocation + idempotent batch-id guard. Each fact is stored
-once, in one of seven tables (INDEX_TABLES):
+once, in one of six tables (INDEX_TABLES):
 
   docs            (conv_id, doc_id, fingerprint) of every ingested doc
   signatures      fresh representatives' signatures; its (fingerprint,
                   doc_id) projection is also the exact-collapse index, and
-                  the 16-bit chunks of its simhash the SimHash probe's
-  bands           their capped tier-0 bands
+                  the tier-0 bands of its minhash and the 16-bit chunks of
+                  its simhash are the band probes' indexed side
   dup_pairs       (id_a, id_b, jaccard) evidence
   overlap_fps     winnow fingerprints of long fresh representatives
   texts           (doc_id, doc_text) of those long representatives
@@ -55,11 +55,10 @@ from pyspark.sql import functions as F
 
 from .checkpoint import resolve_fs
 from .config import DedupConfig
-from .operators.pairs import BAND_KEY, split_exact_duplicates
+from .operators.pairs import split_exact_duplicates
 from .pipeline import (
     build_docs,
     check_doc_id_collisions,
-    coarse_bands,
     local_stage,
     run_cascade,
     run_concurrently,
@@ -72,12 +71,12 @@ TURNS_DDL = (
 
 # every index table, one batch_id-partitioned parquet directory each; every
 # batch writes all of them and every compaction folds all of them
-INDEX_TABLES = ("docs", "signatures", "bands", "dup_pairs", "overlap_fps",
-                "texts", "hot_band_drops")
+INDEX_TABLES = ("docs", "signatures", "dup_pairs", "overlap_fps", "texts",
+                "hot_band_drops")
 
 
 class IncrementalDedup:
-    """foreachBatch sink: maintains signatures + band index + dup pairs."""
+    """foreachBatch sink: maintains signatures + dup pairs."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cfg: DedupConfig | None = None,
@@ -226,7 +225,7 @@ class IncrementalDedup:
         (an empty index)."""
         try:
             return {name: self._read_table(name, batch_id) for name in
-                    ("docs", "signatures", "bands", "overlap_fps", "texts")}
+                    ("docs", "signatures", "overlap_fps", "texts")}
         except FileNotFoundError:
             return None
 
@@ -300,9 +299,6 @@ class IncrementalDedup:
             # fresh representatives
             "docs": docs.select("conv_id", "doc_id", "fingerprint"),
             "signatures": out.signatures,
-            # singleton buckets stay: a future batch's doc may collide
-            "bands": coarse_bands(out.signatures, cfg).join(
-                out.hot.select(*BAND_KEY), BAND_KEY, "left_anti"),
             "dup_pairs": out.dup_pairs,
             "overlap_fps": out.fps,
             # texts of fresh LONG representatives (every possible verify
@@ -367,8 +363,10 @@ class IncrementalDedup:
         )
 
     def hot_band_drops(self) -> DataFrame:
-        """Recorded hot-bucket drops (tier, band_id, band_key, n_docs) per
-        batch — empty before the first batch."""
+        """Recorded hot-bucket drops (tier, band_id, band_key, n_docs): the
+        hot buckets each batch's docs fell into, sized over every doc
+        indexed up to and including that batch — empty before the first
+        batch."""
         try:
             return self._read_table("hot_band_drops")
         except FileNotFoundError:

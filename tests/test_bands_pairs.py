@@ -261,7 +261,7 @@ def test_shared_key_pairs_matches_brute_force(spark, seed):
     key in index ∪ new with id_a < id_b and at least one `new` row, payload
     in id order — as a MULTISET (one row per shared key occurrence) — over
     the keys held by at most `cap` distinct doc_ids; `hot` == the keys held
-    by more, with that count. A doc holding a key at several positions
+    by more and by at least one `new` row, with that count. A doc holding a key at several positions
     counts once, and so does a doc_id on both sides, like a re-delivered
     doc next to its indexed copy. cap=2 splits the keys into singletons,
     pairable keys and hot keys; cap=1000 binds on none."""
@@ -301,10 +301,14 @@ def test_shared_key_pairs_matches_brute_force(spark, seed):
                     (ia, pa), (ib_, pb) = sorted([(id1, p1), (id2, p2)])
                     want[(k1, ia, ib_, pa, pb)] += 1
         assert want and got == want, cap
+        new_keys = {k for _, k, _ in new}
         want_hot = {(k, len(ds)) for k, ds in docs_of.items()
-                    if len(ds) > cap}
+                    if len(ds) > cap and k in new_keys}
         assert {tuple(r) for r in hot.collect()} == want_hot, cap
         assert bool(want_hot) == (cap == 2)
+        # keys only indexed docs hold can emit no pair and are not reported
+        assert any(len(ds) > cap and k not in new_keys
+                   for k, ds in docs_of.items()) == (cap == 2)
 
         pairable = {k for k, ds in docs_of.items() if len(ds) <= cap}
         hits_old = {(min(a, b), max(a, b)) for a, *ka in nb for b, *kb in ib
@@ -360,9 +364,7 @@ def test_candidate_tiers_run_no_job_at_call(spark):
                                 "doc_id long, fp long, pos int")
     cfg = DedupConfig(n_perm=4, coarse_n_bands=1, tight_n_bands=1,
                       tight_rows_per_band=4, tight_min_match=1)
-    index = {"bands": explode_bands(sigs, "minhash", tier=0, n_bands=1,
-                                    rows_per_band=4),
-             "signatures": sigs}
+    index = {"signatures": sigs}
     tracker = spark.sparkContext.statusTracker()
     before = max(tracker.getJobIdsForGroup(), default=-1)
     for idx in (None, index):
@@ -380,7 +382,8 @@ def test_simhash_pairs_probe_an_index(spark):
     over index ∪ new: pairs with at least one `new` doc (new x new plus
     new x index, never index x index) that share a 16-bit chunk at the same
     position, held by at most `cap` distinct docs, and lie within Hamming
-    distance tau; `hot` == the chunks held by more, as tier-2 rows."""
+    distance tau; `hot` == the chunks held by more and by at least one
+    `new` doc, as tier-2 rows."""
     from itertools import combinations
 
     from lsh_cascade_poc_spark.pipeline import simhash_candidate_pairs
@@ -401,6 +404,8 @@ def test_simhash_pairs_probe_an_index(spark):
     idx = {d: near(rng.choice(bases)) for d in range(0, 12)}
     idx[1] = idx[0]      # an index x index pair the probe must not emit
     new[20] = idx[2]     # a new doc equal to an indexed one
+    lone = rng.getrandbits(64)
+    idx.update({d: lone for d in range(12, 16)})  # chunks no new doc holds
 
     def chunks(h):
         return [(i, (h >> (16 * i)) & 0xFFFF) for i in range(4)]
@@ -432,9 +437,12 @@ def test_simhash_pairs_probe_an_index(spark):
         got = [tuple(r) for r in pairs.collect()]
         assert len(got) == len(set(got)) and set(got) == want, cap
         assert (2, 20) in want  # a new doc equal to an indexed one
-        assert not any(a < 12 and b < 12 for a, b in want)
+        assert not any(a in idx and b in idx for a, b in want)
         assert any(a >= 20 for a, _ in want) and any(a < 12 for a, _ in want)
         want_hot = {(2, i, k, len(ds)) for (i, k), ds in docs_of.items()
-                    if len(ds) > cap}
+                    if len(ds) > cap and ds & new.keys()}
         assert {tuple(r) for r in hot.collect()} == want_hot, cap
         assert bool(want_hot) == (cap == 3)
+    # the lone chunks, held by 4 indexed docs and no new one, were above
+    # the cap at 3 and still not reported: no pair of this batch reads them
+    assert all(docs_of[k] == set(range(12, 16)) for k in chunks(lone))

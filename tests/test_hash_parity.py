@@ -6,18 +6,16 @@ determinism :12-16, batch ≡ single :66-72, Hamming identities :138-168)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
-from lsh_cascade_poc_spark.functions.minhash import (
-    make_minhash_udf,
-    make_perms,
-    minhash_numpy,
+from lsh_cascade_poc_spark.functions.minhash import make_perms, minhash_numpy
+from lsh_cascade_poc_spark.functions.signature_udf import (
+    doc_shingles,
+    make_signature_udf,
 )
 from lsh_cascade_poc_spark.functions.simhash import (
     hamming64,
     hamming64_numpy,
-    make_simhash_udf,
     simhash_from_hashes_numpy,
 )
 from lsh_cascade_poc_spark.reference_impl import xxh64_i64
@@ -32,20 +30,30 @@ def test_python_xxh64_matches_spark_xxhash64(spark):
     assert got == want
 
 
-def test_minhash_spark_matches_numpy(spark):
-    rng = np.random.default_rng(0)
-    sets = [
-        np.sort(np.unique(rng.integers(-(2**62), 2**62, size=n, dtype=np.int64)))
-        for n in [1, 3, 50, 200]
-    ] + [np.empty(0, dtype=np.int64)]
-    n_perm, seed = 32, 42
-    want = minhash_numpy(sets, n_perm, seed)
+# texts for the fused kernel: an empty doc, docs shorter than one shingle,
+# and longer ones
+_TEXTS = ["", "one", "two tokens", "a b c d e f g h",
+          " ".join(f"w{i % 37}" for i in range(300)),
+          "passage: 日本語テキスト mixed with ascii tokens and more tokens"]
+_K = 3
 
-    pdf = pd.DataFrame({"id": range(len(sets)), "sh": [list(map(int, s)) for s in sets]})
-    df = spark.createDataFrame(pdf, schema="id long, sh array<long>")
-    udf = make_minhash_udf(n_perm, seed)
-    rows = df.select("id", udf("sh").alias("sig")).orderBy("id").collect()
-    got = np.array([r.sig for r in rows], dtype=np.int64)
+
+def _fused_signatures(spark, n_perm: int, seed: int, n_bits: int):
+    """The fused signature kernel over _TEXTS -> its rows, in text order."""
+    df = spark.createDataFrame(list(enumerate(_TEXTS)), "id long, text string")
+    udf = make_signature_udf(_K, n_perm, seed, n_bits)
+    return [r.sig for r in
+            df.select("id", udf("text").alias("sig")).orderBy("id").collect()]
+
+
+def test_minhash_spark_matches_numpy(spark):
+    """The fused kernel's minhash column == minhash_numpy over the same
+    shingle sets, empty doc included."""
+    n_perm, seed = 32, 42
+    want = minhash_numpy([doc_shingles(t, _K) for t in _TEXTS], n_perm, seed)
+    got = np.array([s.minhash for s in _fused_signatures(spark, n_perm, seed,
+                                                         64)],
+                   dtype=np.int64)
     assert np.array_equal(got, want)
 
 
@@ -69,14 +77,16 @@ def test_minhash_estimates_jaccard():
 
 
 def test_simhash_spark_matches_numpy(spark):
-    rng = np.random.default_rng(2)
-    sets = [rng.integers(-(2**62), 2**62, size=n, dtype=np.int64) for n in [1, 5, 64, 300]]
+    """The fused kernel's simhash column == simhash_from_hashes_numpy over
+    the same shingle sets (an empty doc hashes to 0)."""
+    sets = [doc_shingles(t, _K) for t in _TEXTS]
     want = simhash_from_hashes_numpy(sets, 64)
-    pdf = pd.DataFrame({"id": range(len(sets)), "sh": [list(map(int, s)) for s in sets]})
-    df = spark.createDataFrame(pdf, schema="id long, sh array<long>")
-    rows = df.select("id", make_simhash_udf(64)("sh").alias("h")).orderBy("id").collect()
-    got = np.array([r.h for r in rows], dtype=np.int64)
+    sigs = _fused_signatures(spark, 32, 42, 64)
+    got = np.array([s.simhash for s in sigs], dtype=np.int64)
     assert np.array_equal(got, want)
+    assert got[0] == 0 and np.all(got[1:] != 0)
+    # the shingles column is the same sets the references hashed
+    assert all(list(s.shingles) == list(w) for s, w in zip(sigs, sets))
 
 
 def test_simhash_similar_sets_close_hamming():

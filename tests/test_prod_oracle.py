@@ -376,7 +376,7 @@ def test_dedup_band_occupancy_below_hot_cap(spark, sf_dir):
     import __spark_entry__ as entry
     from lsh_cascade_poc_spark.config import DedupConfig
     from lsh_cascade_poc_spark.operators.bands import explode_bands
-    from lsh_cascade_poc_spark.functions.simhash import simhash_band_key
+    from lsh_cascade_poc_spark.pipeline import simhash_chunks
 
     cfg = DedupConfig(**entry._DEDUP_Q_CFG)
     sigs = entry._dedup_run(spark, sf_dir).signatures
@@ -385,13 +385,7 @@ def test_dedup_band_occupancy_below_hot_cap(spark, sf_dir):
                       rows_per_band=cfg.coarse_rows_per_band),
         explode_bands(sigs, "minhash", tier=1, n_bands=cfg.tight_n_bands,
                       rows_per_band=cfg.tight_rows_per_band),
-        sigs.select(
-            "doc_id",
-            F.posexplode(F.array(*[
-                simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
-                for i in range(cfg.simhash_bits // cfg.simhash_band_bits)
-            ])).alias("band_id", "band_key"),
-        ).withColumn("tier", F.lit(2)),
+        simhash_chunks(sigs, cfg),
     ]
     for t in tiers:
         occ = (

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from lsh_cascade_poc_spark.config import DedupConfig
 from lsh_cascade_poc_spark.datagen.transcripts import generate_corpus
+from lsh_cascade_poc_spark.operators.pairs import BAND_KEY, shared_key_pairs
+from lsh_cascade_poc_spark.pipeline import coarse_bands, simhash_chunks
 from lsh_cascade_poc_spark.streaming import TURNS_DDL, IncrementalDedup
 
 CFG = DedupConfig(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
@@ -195,25 +197,31 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     flood_ids = [d for d, c in conv_of.items() if c.startswith("flood")]
     assert len({find(d) for d in flood_ids}) == 1
 
-    # flood docs never enter the band index: only the batch-1 root is banded
-    bands = inc._read_table("bands")
-    banded_convs = {conv_of[r.doc_id] for r in bands.select("doc_id").distinct().collect()}
-    assert sum(c.startswith("flood") for c in banded_convs) <= 1
+    # flood docs never enter the signatures the probes band: only the
+    # batch-1 root is signed
+    signed_convs = [conv_of[r.doc_id]
+                    for r in inc.signatures().select("doc_id").collect()]
+    assert sum(c.startswith("flood") for c in signed_convs) == 1
 
     # (b) the hot family tripped the cap: drops recorded with bucket size
-    # above the cap, and NO stored bucket ever exceeds the cap
+    # above the cap, and NO pair of batch 2 comes from a bucket above it,
+    # sized over every signed doc
     drops = inc.hot_band_drops().collect()
     assert drops, "hot-band drops were not recorded"
     assert max(r.n_docs for r in drops) > cfg.hot_band_cap
     # the SimHash probe (tier 2) applies the same cap and records its drops
     assert any(r.tier == 2 for r in drops), drops
-    max_bucket = (
-        bands.groupBy("tier", "band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("m"))
-        .collect()[0].m
-    )
-    assert max_bucket <= cfg.hot_band_cap
+    sigs = inc.signatures()
+    old = inc._index(1)["signatures"]
+    new = sigs.join(old.select("doc_id"), "doc_id", "left_anti")
+    sizes = []
+    for bands_of in (coarse_bands, simhash_chunks):
+        probe, _ = shared_key_pairs(bands_of(new, cfg), bands_of(old, cfg),
+                                    BAND_KEY, cfg.hot_band_cap)
+        n_docs = bands_of(sigs, cfg).groupBy(*BAND_KEY).agg(
+            F.countDistinct("doc_id").alias("n"))
+        sizes += [r.n for r in probe.join(n_docs, BAND_KEY).collect()]
+    assert sizes and max(sizes) <= cfg.hot_band_cap
 
     # the replay guard still holds with the new tables
     os.remove(os.path.join(str(tmp_path / "index"), "_batch_1_done"))
@@ -221,6 +229,62 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     assert inc.docs().count() == 15
     assert inc.signatures().count() == 7
     assert inc.dup_pairs().count() == len(pairs)
+
+
+_FAMILY = (
+    "a long shared boilerplate preamble sentence that dominates the shingle "
+    "set of every variant document in this hot family " * 3
+)
+
+
+def _batch_drops(spark, index, batch_id: int) -> list:
+    """The hot-bucket drops batch `batch_id` recorded, as Rows."""
+    return spark.read.parquet(
+        str(index / "hot_band_drops" / f"batch_id={batch_id}")).collect()
+
+
+def test_stream_batch_outside_hot_buckets_records_no_drop(spark, tmp_path):
+    """A micro-batch whose docs fall into no hot bucket records no drop:
+    the hot-key gate sizes only the buckets a batch touches, so a bucket
+    held by indexed docs alone is not reported again by every later
+    batch."""
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
+                      tight_n_bands=5, hot_band_cap=2)
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), cfg)
+    inc.process_batch(spark.createDataFrame(_mk_turns(
+        [(f"hot{i}", _FAMILY + f" variant {i}") for i in range(5)]),
+        TURNS_DDL), 0)
+    first = _batch_drops(spark, index, 0)
+    assert {r.tier for r in first} == {0, 2}, first
+    inc.process_batch(spark.createDataFrame(_mk_turns([
+        (f"other{i}", " ".join(f"unrelated{i}x{j} words" for j in range(40)))
+        for i in range(3)]), TURNS_DDL), 1)
+    assert _batch_drops(spark, index, 1) == []
+    assert inc.hot_band_drops().count() == len(first)
+
+
+def test_stream_hot_bucket_sized_over_index_and_new(spark, tmp_path):
+    """A tier-0 bucket that was hot in batch 0 is sized over index ∪ new in
+    batch 1, as a batch run over the same 7 docs sizes it: its batch-1 drop
+    reads n_docs = 7, the same as the family's tier-2 (SimHash) drop."""
+    cfg = DedupConfig(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
+                      tight_n_bands=5, hot_band_cap=2)
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), cfg)
+    variants = [(f"hot{i}", _FAMILY + f" variant {i}") for i in range(7)]
+    inc.process_batch(
+        spark.createDataFrame(_mk_turns(variants[:5]), TURNS_DDL), 0)
+    inc.process_batch(
+        spark.createDataFrame(_mk_turns(variants[5:]), TURNS_DDL), 1)
+    hot0 = {(r.band_id, r.band_key) for r in _batch_drops(spark, index, 0)
+            if r.tier == 0}
+    assert hot0
+    later = _batch_drops(spark, index, 1)
+    again = [r.n_docs for r in later
+             if r.tier == 0 and (r.band_id, r.band_key) in hot0]
+    assert again and max(again) == 7, later
+    assert max(r.n_docs for r in later if r.tier == 2) == 7, later
 
 
 def test_redelivered_conversation_no_self_pair(spark, tmp_path):
@@ -333,29 +397,29 @@ def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
 
     # compactions fired at batch 7 and 15: everything <= 15 lives in ONE
     # compacted partition (batch_id=-16), batches 16..20 stay per-batch
-    for name in ("bands", "signatures", "dup_pairs", "docs"):
+    for name in ("signatures", "dup_pairs", "docs"):
         dirs_c = batch_dirs("ix_c", name)
         assert len(dirs_c) <= 1 + 8, (name, dirs_c)
         assert "batch_id=-16" in dirs_c, (name, dirs_c)
         assert len(batch_dirs("ix_n", name)) == n_batches
-    markers = [f for f in os.listdir(tmp_path / "ix_c" / "bands")
+    markers = [f for f in os.listdir(tmp_path / "ix_c" / "signatures")
                if f.startswith("_compact_")]
     assert markers == ["_compact_15_done"]
 
     # crash artifact: an UNMARKED compacted dir (writer died before its
     # marker) must not leak into the read view
-    stale = tmp_path / "ix_c" / "bands" / "batch_id=-100"
+    sigs_dir = tmp_path / "ix_c" / "signatures"
+    stale = sigs_dir / "batch_id=-100"
     os.makedirs(stale)
-    (tmp_path / "ix_c" / "bands" / "batch_id=-16" / "_SUCCESS").touch()
+    (sigs_dir / "batch_id=-16" / "_SUCCESS").touch()
     import shutil
-    for f in os.listdir(tmp_path / "ix_c" / "bands" / "batch_id=-16"):
+    for f in os.listdir(sigs_dir / "batch_id=-16"):
         if f.endswith(".parquet"):
-            shutil.copy(tmp_path / "ix_c" / "bands" / "batch_id=-16" / f,
-                        stale / f)
-    n_bands_before = len(batch_dirs("ix_c", "bands"))
-    assert inc_c._read_table("bands").count() == \
-        inc_n._read_table("bands").count()
-    assert len(batch_dirs("ix_c", "bands")) == n_bands_before
+            shutil.copy(sigs_dir / "batch_id=-16" / f, stale / f)
+    n_sigs_before = len(batch_dirs("ix_c", "signatures"))
+    assert inc_c._read_table("signatures").count() == \
+        inc_n._read_table("signatures").count()
+    assert len(batch_dirs("ix_c", "signatures")) == n_sigs_before
 
 
 def test_streaming_rejects_slim_signatures(spark, tmp_path):
@@ -372,7 +436,7 @@ def test_docs_root_is_global_across_batches(spark, tmp_path):
     reads back from docs() with ONE global _root (the fingerprint's
     first-indexed representative), not one root per batch. The root is
     derived at read time from the signatures table: the index holds its
-    seven tables and nothing else, and the docs table on disk keeps only
+    six tables and nothing else, and the docs table on disk keeps only
     (conv_id, doc_id, fingerprint)."""
     import pyarrow.parquet as pq
 
@@ -395,7 +459,7 @@ def test_docs_root_is_global_across_batches(spark, tmp_path):
     assert roots == {ids["c0"]} or roots == {ids["c1"]}  # batch-0 rep
 
     tables = sorted(d.name for d in index.iterdir() if d.is_dir())
-    assert tables == sorted(INDEX_TABLES) and len(tables) == 7
+    assert tables == sorted(INDEX_TABLES) and len(tables) == 6
     for b in range(2):
         part = next((index / "docs" / f"batch_id={b}").glob("*.parquet"))
         assert pq.read_schema(part).names == ["conv_id", "doc_id", "fingerprint"]
@@ -540,14 +604,6 @@ def test_batch_stream_parity(spark, tmp_path):
                      inc.dup_pairs().filter(F.col("jaccard") >= 0).collect()]
             assert _partition(conv_of, edges) == batch, \
                 f"{name}, {k} micro-batches"
-
-    # the streaming index holds (and probes) the coarse tier 0 only: tier 1
-    # is a filter on the probe's pairs, with no band table of its own
-    inc = IncrementalDedup(spark, str(tmp_path / "index_default"))
-    inc.process_batch(spark.createDataFrame(turns, TURNS_DDL), 0)
-    tiers = {r.tier for r in inc._read_table("bands").select("tier")
-             .distinct().collect()}
-    assert tiers == {0}
 
 
 def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):

@@ -6,17 +6,41 @@ operators at sf0.001. Run from the repo root:
 The assertions behind these plans live in tests/test_plans.py; this dump is
 the human-readable companion (what the plan looks like and why it's the one
 we want).
+
+Two more modes measure the registered queries (__spark_entry__.queries(), by
+default bench.py's BENCH_QUERIES) at local[$SPARK_GRAFT_CPUS] over
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 corpus next to sf0.001):
+  --mode queries [--names a,b,c] [--repeats K] [--noop]
+      per-query timing, K interleaved repeats, reporting all samples + min.
+      --noop times df.write.format("noop") instead of .count().
+  --mode plans [--names a,b,c] [--out plans/r06 --suffix _before]
+      dump .explain("formatted") of each query to <out>/<name><suffix>.txt
+Per-stage pipeline walls: perfbench/run.py --trace 1.
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
+QUERY_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR",
+                              os.path.join(os.path.dirname(SF_DIR), "sf0.1"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _mk_spark(cores: int, shuffle_partitions: int):
+    from lsh_cascade_poc_spark.session import get_spark
+
+    return get_spark(app_name="dump_plans", master=f"local[{cores}]",
+                     shuffle_partitions=shuffle_partitions,
+                     extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
 def plan_of(df, mode: str = "simple") -> str:
@@ -25,7 +49,48 @@ def plan_of(df, mode: str = "simple") -> str:
     )
 
 
-def main() -> None:
+def mode_queries(names: list[str], repeats: int, noop: bool) -> None:
+    import __spark_entry__ as entrymod
+
+    spark = _mk_spark(CPUS, max(8, CPUS))
+    spark.read.parquet(f"{QUERY_SF_DIR}/documents.parquet").count()
+    qmap = entrymod.queries()
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    for _rep in range(repeats):
+        for name in names:
+            fn = qmap[name]
+            spark.sparkContext.setJobDescription(f"bx:{name}")
+            t0 = time.perf_counter()
+            df = fn(spark, QUERY_SF_DIR)
+            if noop:
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
+            samples[name].append(round(time.perf_counter() - t0, 3))
+            spark.sparkContext.setJobDescription(None)
+    out = {n: {"samples": samples[n], "min": min(samples[n])} for n in names}
+    print(json.dumps(out), flush=True)
+    spark.stop()
+
+
+def mode_plans(names: list[str], out_dir: str, suffix: str) -> None:
+    import __spark_entry__ as entrymod
+
+    os.makedirs(out_dir, exist_ok=True)
+    spark = _mk_spark(CPUS, max(8, CPUS))
+    qmap = entrymod.queries()
+    for name in names:
+        df = qmap[name](spark, QUERY_SF_DIR)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as f:
+            f.write(plan)
+        print(f"wrote {name}{suffix}.txt", flush=True)
+    spark.stop()
+
+
+def mode_headline() -> None:
     from pyspark.sql import functions as F
 
     from lsh_cascade_poc_spark.config import DedupConfig
@@ -45,11 +110,8 @@ def main() -> None:
         winnow_fingerprints,
     )
     from lsh_cascade_poc_spark.pipeline import build_signatures, tight_tier
-    from lsh_cascade_poc_spark.session import get_spark
 
-    spark = get_spark(app_name="dump_plans", master="local[4]",
-                      shuffle_partitions=8,
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = _mk_spark(4, 8)
     cfg = DedupConfig(n_perm=32, coarse_n_bands=4, coarse_rows_per_band=4,
                       tight_n_bands=5)
     turns = corpus_to_spark(spark, generate_corpus(n_base=30, dup_fraction=0.3,
@@ -206,6 +268,31 @@ def main() -> None:
         print(plan_of(df, mode).rstrip())
         print("```\n")
     spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--mode", choices=["queries", "plans"],
+                    help="measure the registered queries; without it, print "
+                    "PLANS.md")
+    ap.add_argument("--names", default="")
+    ap.add_argument("--repeats", type=int, default=2)
+    ap.add_argument("--noop", action="store_true")
+    ap.add_argument("--out", default="plans/r06")
+    ap.add_argument("--suffix", default="")
+    args = ap.parse_args()
+    if args.mode is None:
+        mode_headline()
+        return
+
+    import bench as benchmod
+
+    names = ([n for n in args.names.split(",") if n]
+             if args.names else list(benchmod.BENCH_QUERIES))
+    if args.mode == "queries":
+        mode_queries(names, args.repeats, args.noop)
+    else:
+        mode_plans(names, args.out, args.suffix)
 
 
 if __name__ == "__main__":
