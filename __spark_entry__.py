@@ -1547,10 +1547,10 @@ def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id < 3 — the reference's flagship search composed end-to-end with
     its production fingerprint (src/pipeline.py:68-119 over the ITQ codes of
     src/itq_lsh.py:130-161). itq_transform pins the transform cross-engine;
-    THIS query pins the composition. The hyperplane-SimHash production
-    kernels (embedding/search.py cascade_search) stay covered by the
-    recall-vs-brute-force pytests (tests/test_embedding.py) and the
-    hash-exact cascade_topk."""
+    THIS query pins the composition. The same cascade on the sign-bit
+    SimHash fingerprint is the hash-exact q_cascade_topk (SURVEY §7
+    re-targets the reference's per-query search to the all-pairs dedup
+    cascade, so the package holds no search module)."""
     import numpy as np
 
     from pyspark.sql import Window
@@ -1610,19 +1610,17 @@ def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# driver-side ITQ fit sample bound: fit_itq_on_dataframe's default
-# sample_rows, in deterministic vec_id order — the production fit's sample
-# semantics, and a BOUNDED driver collect at any corpus size (ADVICE r4:
-# the previous full-table toPandas diverged from the production fit above
-# 10k vectors and made driver memory unbounded in corpus size). The oracle
-# builder truncates its parquet read with the same constant, so the two
-# engines keep fitting on the identical matrix.
+# driver-side ITQ / IVF fit sample bound (the reference's <=10k-row fits),
+# in deterministic vec_id order — a BOUNDED driver collect at any corpus
+# size (ADVICE r4: a full-table toPandas made driver memory unbounded in
+# corpus size). The oracle builder truncates its parquet read with the
+# same constant, so the two engines keep fitting on the identical matrix.
 _ITQ_FIT_SAMPLE_ROWS = 10_000
 
 
 def _itq_fit_matrix(emb):
     """Bounded deterministic fit matrix: first _ITQ_FIT_SAMPLE_ROWS rows in
-    vec_id order (fit_itq_on_dataframe(order_col='vec_id') semantics)."""
+    vec_id order."""
     import numpy as np
 
     pdf = (
@@ -1633,10 +1631,9 @@ def _itq_fit_matrix(emb):
 
 
 def _itq64_fold_model(x):
-    """_itq16_fold_model at the PRODUCTION bit width (64 bits, n_iter=25 —
-    the same deterministic driver-side itq_fit the production
-    fit_itq_on_dataframe path runs): W = pca @ rotation (64 x 64) and
-    c = mean @ W, rounded to 6 decimals for literal inlining."""
+    """_itq16_fold_model at the production bit width (64 bits, n_iter=25,
+    the deterministic driver-side itq_fit): W = pca @ rotation (64 x 64)
+    and c = mean @ W, rounded to 6 decimals for literal inlining."""
     import numpy as np
 
     from lsh_cascade_poc_spark.embedding.itq import itq_fit
@@ -1662,14 +1659,12 @@ def _itq64_bit_term(j: int, spark_side: bool) -> str:
 def q_itq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H9/H10/H11 oracle-exact (promoted r4, VERDICT r3 #7): ITQ fit at the
     PRODUCTION bit width (64 bits, deterministic driver-side itq_fit on the
-    vec_id-ordered matrix — the same fit the production fit_itq_on_dataframe
-    path computes) + transform + bits->int64 pack (codes_to_lanes bit j =
-    1<<j convention), as a Catalyst fold over inlined 6-decimal fitted
-    literals. Identical literals in both engines => identical sequential
-    double folds => identical sign bits => identical packed codes (the
-    q_itq_transform treatment at 4x the width; ref transform
-    src/itq_lsh.py:130-161). The production Arrow UDF (make_itq_udf) stays
-    pytest-parity-gated against numpy (tests/test_embedding.py)."""
+    vec_id-ordered matrix) + transform + bits->int64 pack (bit j = 1<<j),
+    as a Catalyst fold over inlined 6-decimal fitted literals. Identical
+    literals in both engines => identical sequential double folds =>
+    identical sign bits => identical packed codes (the q_itq_transform
+    treatment at 4x the width; ref transform src/itq_lsh.py:130-161). This
+    fold is the one ITQ transform."""
     emb = _read(spark, sf_dir, "embeddings")
     w, c = _itq64_fold_model(_itq_fit_matrix(emb))
     bits = []
@@ -1696,11 +1691,10 @@ def q_e2lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (embedding/e2lsh.py e2lsh_buckets_quantized_numpy — projections
     on a 1e-6 grid in exact int64 arithmetic, same Arrow-UDF shape and same
     explode/bucket-join path as the float32 kernel), so the bucket ids are
-    order-insensitive integers an SQL engine reproduces bit-exactly. The
-    float32 kernel (make_e2lsh_udf) remains the low-latency option and stays
-    numpy-parity + collision-prob gated in tests/test_embedding.py; its
-    dot-accumulation order genuinely cannot be pinned cross-engine (the r3
-    declaration), which is exactly what the quantized grid removes. Oracle
+    order-insensitive integers an SQL engine reproduces bit-exactly. A
+    float32 kernel's dot-accumulation order genuinely cannot be pinned
+    cross-engine (the r3 declaration), which is exactly what the quantized
+    grid removes, so the quantized kernel is the one E2LSH kernel. Oracle
     joins on raw (table, bucket-tuple) equality; the Spark side joins on
     xxhash64(table, tuple), identical up to 64-bit hash collisions
     (~n^2/2^65, negligible at gate scale). Ref analog: E2LSHIndex.query
@@ -1727,9 +1721,8 @@ def q_e2lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's coordinate-major order (src/e2lsh.py:197-205), over the
     SAME literal-inlined oracle buckets as q_e2lsh_buckets (k=2, 3 tables).
     The perturbation arithmetic is pure integers, so the probe SET is
-    cross-engine exact. The production float32 kernels
-    (make_e2lsh_udf + explode_e2lsh_probe_buckets) stay covered by the
-    numpy-parity/superset pytests (tests/test_probes_segments.py) and by
+    cross-engine exact. This is the one E2LSH multiprobe implementation;
+    the production bucket kernel of the same hash family runs in
     q_e2lsh_pairs."""
     base = q_e2lsh_buckets(spark, sf_dir).localCheckpoint(eager=True)
     # coordinate-major (-1, +1 per coordinate) + the base bucket first —
@@ -1781,8 +1774,8 @@ def q_e2lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (table, coordinate), computed as a Catalyst sequential fold (the
     q_cosine_topk parity idiom) with the projection vectors inlined as
     literals (ref src/e2lsh.py:75-147 hash_batch_all_tables). The
-    production path (make_e2lsh_udf: numpy batch einsum) stays in
-    q_e2lsh_pairs; THIS query pins the hash definition cross-engine."""
+    production path (the quantized Arrow kernel) is q_e2lsh_pairs; THIS
+    query pins the hash definition cross-engine."""
     a, b, w = _e2lsh_oracle_params()
     emb = _read(spark, sf_dir, "embeddings")
     parts = []
@@ -1904,9 +1897,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined as 6-decimal literals into a Catalyst fold. Home cell =
     argmax_j round(cos(v, c_j), 6) (first-max tie-break); queries vec_id<5
     probe their 4 nearest cells; exact cosine rerank top-10 (the
-    q_cascade_topk fold idiom). The production float32 kernels
-    (embedding/ivf.py make_ivf_cells_udf / ivf_search) stay covered by the
-    full-probe==brute-force and assignment-parity pytests."""
+    q_cascade_topk fold idiom). This fold is the one IVF assignment and
+    probe: embedding/ivf.py holds only the fit."""
     from pyspark.sql import Window
 
     base = _ivf_base(spark, sf_dir)
@@ -1950,7 +1942,7 @@ def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal near-dup: documents reshaped into binary media payloads ->
     fake-decode features (codecs stubbed) -> signbit SimHash band join.
     Rows-only; contracts tested in tests/test_multimodal.py."""
-    from lsh_cascade_poc_spark.multimodal import MEDIA_SCHEMA, media_dedup_pairs
+    from lsh_cascade_poc_spark.multimodal import media_dedup_pairs
 
     docs = _read(spark, sf_dir, "documents")
     # planted duplicates: docs with doc_id % 100 < 8 share a payload with

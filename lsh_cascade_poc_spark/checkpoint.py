@@ -2,9 +2,8 @@
 
 North-rule requirement: every stage writes its output plus per-partition
 lineage/metrics so the pipeline resumes from the last committed checkpoint.
-Backend is Iceberg when the runtime jar is present (session.iceberg_configs);
-otherwise plain Parquet directories with an atomic `_COMMITTED` marker —
-Spark's Parquet commit protocol plus the marker gives the same
+Every stage is a Parquet directory plus a `_COMMITTED` marker written
+after the data — Spark's Parquet commit protocol plus the marker gives the same
 "stage output exists iff it committed" property the reference gets from
 pickled index files (/root/reference/src/cascade_search.py:301-340
 save_index/load_index is the reference's checkpoint analog).

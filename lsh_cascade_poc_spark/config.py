@@ -14,11 +14,6 @@ import json
 from dataclasses import asdict, dataclass
 
 
-# Mersenne prime 2^61 - 1: modulus for the universal-hash MinHash permutations
-# (a*x + b) mod p. Fits products of 61-bit values in uint64 math via splitting.
-MERSENNE_P = (1 << 61) - 1
-
-
 @dataclass(frozen=True)
 class DedupConfig:
     """All knobs of the dedup cascade. Deterministic: the one random element,

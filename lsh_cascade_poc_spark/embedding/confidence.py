@@ -14,46 +14,18 @@ Spark restatement: probe-key GENERATION is pure Catalyst expressions over the
 argmin|proj|) as array expressions, rank bands with sort_array over structs
 (deterministic tie-break on band_id), and emit base keys + flipped keys as
 one exploded (id, band_id, band_key) table that feeds the SAME band equi-join
-as plain banding (search.band_candidates). No Python in the probe path; only
-the fingerprint+projection UDF touches Arrow once.
+as plain banding (`__spark_entry__.q_confidence_multiprobe` joins it to
+`vector_hash.explode_lane_bands`). No Python in the probe path: the caller
+supplies the fingerprint lanes and the per-bit projections as columns.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .vector_hash import lane_band_key, simhash_vectors_numpy
-
-_CONF_SCHEMA = T.StructType([
-    T.StructField("lanes", T.ArrayType(T.LongType())),
-    T.StructField("proj", T.ArrayType(T.FloatType())),
-])
-
-
-def make_simhash_confidence_udf(planes: np.ndarray):
-    """pandas_udf: embedding -> struct(lanes, proj) — H5 fingerprint plus the
-    per-bit projection values (transform_with_confidence analog). One matmul
-    per Arrow batch, like the reference's batch path."""
-    p = planes.astype(np.float32)
-
-    @F.pandas_udf(_CONF_SCHEMA)
-    def simhash_conf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            mat = np.stack([np.asarray(v, dtype=np.float32) for v in s])
-            proj = mat @ p.T                       # (n, n_bits) float32
-            lanes = simhash_vectors_numpy(mat, p)  # same sign convention
-            yield pd.DataFrame({
-                "lanes": list(lanes),
-                "proj": list(proj),
-            })
-
-    return simhash_conf
+from .vector_hash import lane_band_key
 
 
 def _band_conf_structs(
@@ -130,8 +102,8 @@ def explode_confidence_probes(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """-> (id, band_id, band_key) probe table for the band equi-join. Feed as
-    the query side of search.band_candidates; the doc side stays the plain
-    exploded band table (docs are indexed once, probing is query-side only —
+    the query side of the join; the doc side stays the plain exploded band
+    table (docs are indexed once, probing is query-side only —
     exactly the reference's asymmetry)."""
     return df.select(
         F.col(id_col),

@@ -1,35 +1,22 @@
-"""IVF (inverted-file) approximate nearest-neighbour — the k-means-coarse-
-quantizer scale path for embedding similarity search.
+"""IVF (inverted-file) approximate nearest-neighbour: the k-means coarse
+quantizer fit.
 
 No direct reference analog (the reference's scale paths are LSH bands and
-the Overlap segment index — both implemented in vector_hash.py /
-cascade_search); IVF is the standard third option a training-data pipeline
-expects: partition the corpus into Voronoi cells of a small k-means
-codebook, search only the `nprobe` cells nearest to each query.
+the Overlap segment index); IVF is the standard third option a
+training-data pipeline expects: partition the corpus into Voronoi cells of
+a small k-means codebook, search only the cells nearest to each query.
 
-Spark shape:
-  fit     driver-side numpy Lloyd's k-means on a bounded deterministic
-          sample (same pattern as the ITQ fit, embedding/itq.py)
-  assign  one Arrow pass: (n, dim) @ (dim, k) argmin — cell_id per row;
-          at warehouse scale the doc table is WRITTEN partitioned/bucketed
-          by cell_id, so a probe reads only nprobe/k of the data
-          (partition pruning does the candidate filtering for free)
-  search  probe cells exploded query-side -> equi-join on cell_id ->
-          exact cosine rerank top-k (search.cosine_topk on candidates)
+The fit is driver-side numpy Lloyd's k-means on a bounded deterministic
+matrix. Cell assignment and the probe/rerank are SQL:
+`__spark_entry__._ivf_base` folds the centroids into literals, and
+`q_ivf_topk` / `q_semantic_dedup` join on the home cell.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .search import cosine_topk
 
 
 @dataclass
@@ -58,91 +45,3 @@ def ivf_fit(x: np.ndarray, n_cells: int, n_iter: int = 20, seed: int = 42) -> IV
                 if n > 0:
                     cent[c] = v / n
     return IVFModel(centroids=cent.astype(np.float32))
-
-
-def fit_ivf_on_dataframe(
-    df: DataFrame, vec_col: str, n_cells: int,
-    sample_rows: int = 50_000, n_iter: int = 20, seed: int = 42,
-    order_col: str | None = None,
-) -> IVFModel:
-    """Bounded driver-side fit on a deterministic sample (hash-ordered like
-    fit_itq_on_dataframe — partitioning-independent)."""
-    key = F.col(order_col) if order_col else F.xxhash64(F.col(vec_col))
-    pdf = (
-        df.select(F.col(vec_col), key.alias("_ord"))
-        .orderBy("_ord").limit(sample_rows).select(vec_col).toPandas()
-    )
-    x = np.stack([np.asarray(v, dtype=np.float32) for v in pdf[vec_col]])
-    return ivf_fit(x, n_cells, n_iter=n_iter, seed=seed)
-
-
-def save_ivf_model(model: IVFModel, path: str) -> None:
-    np.savez(path, centroids=model.centroids)
-
-
-def load_ivf_model(path: str) -> IVFModel:
-    z = np.load(path if path.endswith(".npz") else path + ".npz")
-    return IVFModel(centroids=z["centroids"])
-
-
-def make_ivf_cells_udf(model: IVFModel, nprobe: int = 1):
-    """pandas_udf: embedding -> array<int> of the nprobe nearest cell ids
-    (position 0 = home cell). One matmul per Arrow batch."""
-    cent = model.centroids
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def ivf_cells(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        c = cent.T  # (dim, k)
-        for s in it:
-            x = np.stack([np.asarray(v, dtype=np.float32) for v in s])
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            sims = (x / n) @ c                    # (rows, k)
-            p = min(nprobe, sims.shape[1])
-            # top-p cells, nearest-first, deterministic tie-break on cell id
-            idx = np.argsort(-sims, axis=1, kind="stable")[:, :p]
-            yield pd.Series([row.astype(np.int32) for row in idx])
-
-    return ivf_cells
-
-
-def assign_cells(df: DataFrame, model: IVFModel, vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
-    """-> df + cell_id (home cell). At warehouse scale, WRITE the result
-    partitioned by cell_id — probes then prune partitions at scan time."""
-    udf = make_ivf_cells_udf(model, nprobe=1)
-    return df.withColumn("cell_id", F.element_at(udf(F.col(vec_col)), 1))
-
-
-def ivf_search(
-    docs_with_cells: DataFrame,
-    queries: DataFrame,
-    model: IVFModel,
-    top_k: int,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Set-oriented IVF search: explode each query's nprobe nearest cells,
-    equi-join on cell_id, exact cosine rerank -> (query_id, doc_id, cosine,
-    rank). The doc side is touched only in the probed cells."""
-    probe_udf = make_ivf_cells_udf(model, nprobe=nprobe)
-    q_probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col),
-            F.explode(probe_udf(F.col(vec_col))).alias("cell_id"),
-        )
-    )
-    cands = (
-        docs_with_cells.select(F.col(id_col).alias("doc_id"), "cell_id")
-        .join(F.broadcast(q_probes.select("query_id", "cell_id")), "cell_id")
-        .filter(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id")
-        .distinct()
-    )
-    return cosine_topk(
-        docs_with_cells.select(F.col(id_col), F.col(vec_col)),
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        top_k, vec_col=vec_col, query_id_col="query_id", candidates=cands,
-    )

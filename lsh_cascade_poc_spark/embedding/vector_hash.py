@@ -1,69 +1,19 @@
-"""Vector fingerprinting: SimHash over embeddings, packed into int64 lanes.
+"""Band tables over vector fingerprints packed into int64 lanes.
 
 Reference parity:
-  - SimHashGenerator.hash_batch  /root/reference/src/lsh.py:234-263
-    (batch projection (bits, dim) @ (dim, n) -> sign bits -> packed ints)
   - chunk_hash banding           /root/reference/src/lsh.py:266-304
-  - hamming_distance             /root/reference/src/lsh.py:307-320
-  - multiprobe flips             /root/reference/src/lsh.py:116-146 (H8)
+  - Overlap(w, s) segments       CASCADE_SEARCH_DESIGN.md:17-38 (H18)
 
 Fingerprints are ``array<long>`` lanes (n_bits/64 elements) — never Python
-bigints or hex strings in executors (SURVEY.md §1.4). Hamming over lanes is
-the codegen expression sum(bit_count(a[i] ^ b[i])).
+bigints or hex strings in executors (SURVEY.md §1.4). The driver queries
+build the lanes in SQL (`__spark_entry__._SPARK_SIGNBIT`); these helpers
+only cut them into band keys.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def simhash_vectors_numpy(vectors: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    """(n, dim) x (n_bits, dim) -> (n, n_lanes) int64 lanes. Bit b of the
-    fingerprint = sign(planes[b] . v); bit b lives in lane b//64, position
-    b%64 — the same packing np.packbits+view would give, kept explicit."""
-    n_bits = planes.shape[0]
-    assert n_bits % 64 == 0
-    proj = vectors.astype(np.float32) @ planes.T.astype(np.float32)  # (n, n_bits)
-    bits = (proj > 0).astype(np.uint64)
-    n_lanes = n_bits // 64
-    lanes = np.zeros((vectors.shape[0], n_lanes), dtype=np.uint64)
-    for lane in range(n_lanes):
-        chunk = bits[:, lane * 64 : (lane + 1) * 64]
-        lanes[:, lane] = (chunk << np.arange(64, dtype=np.uint64)[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-    return lanes.astype(np.int64)
-
-
-def make_vector_simhash_udf(planes: np.ndarray):
-    """pandas_udf: array<float> embedding -> array<long> fingerprint lanes.
-    The plane matrix is captured once per worker (iterator form)."""
-    p = planes.astype(np.float32)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def simhash_vec(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            mat = np.stack([np.asarray(v, dtype=np.float32) for v in s])
-            lanes = simhash_vectors_numpy(mat, p)
-            yield pd.Series(list(lanes))
-
-    return simhash_vec
-
-
-def hamming_lanes(a: Column, b: Column) -> Column:
-    """Total Hamming distance across int64 lanes — pure built-ins:
-    aggregate(zip_with(a, b, bit_count(xor)), sum)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
 
 
 def lane_band_key(lanes: Column, band_idx: int, band_bits: int) -> Column:
@@ -124,16 +74,3 @@ def explode_overlap_segments(
             ])
         ).alias("band_id", "band_key"),
     )
-
-
-def multiprobe_band_keys(key: Column, band_bits: int, max_flips: int = 1) -> Column:
-    """H8: probe keys = the key plus all single-bit flips (and the key
-    itself first). Returns array<long>; explode before the band join."""
-    probes = [key]
-    for bit in range(band_bits):
-        probes.append(key.bitwiseXOR(F.lit(1 << bit)))
-    if max_flips >= 2:
-        for i in range(band_bits):
-            for j in range(i + 1, band_bits):
-                probes.append(key.bitwiseXOR(F.lit((1 << i) | (1 << j))))
-    return F.array(*probes)

@@ -7,15 +7,24 @@ this module is the driver program —
     spark-submit --py-files lsh_cascade_poc_spark.zip \
         --master yarn --deploy-mode cluster \
         lsh_cascade_poc_spark/job.py \
-        --input  warehouse.transcripts \
+        --input  local.db.transcripts \
         --work-dir  s3://bucket/dedup-work \
         --output s3://bucket/dedup-out
 
-`--input` is an Iceberg table name when the catalog is configured (the north
-rule's table form; session.iceberg_configs documents the catalog settings) or
-a parquet path otherwise. Every stage checkpoints through StageStore keyed by
-the config hash, so re-submitting the SAME job resumes from the last
-committed stage; metrics and per-partition lineage land next to the data.
+`--input` is a parquet path (it contains "/" or ends in ".parquet") or
+otherwise a table name read with `spark.read.table` — e.g. an Iceberg table
+(the north rule's table form) when spark-submit configures the catalog and
+puts org.apache.iceberg:iceberg-spark-runtime on the classpath:
+
+    --conf spark.sql.extensions=org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions
+    --conf spark.sql.catalog.local=org.apache.iceberg.spark.SparkCatalog
+    --conf spark.sql.catalog.local.type=hadoop
+    --conf spark.sql.catalog.local.warehouse=s3://bucket/iceberg
+
+Every stage checkpoints through StageStore (Parquet plus a `_COMMITTED`
+marker, never Iceberg) keyed by the config hash, so re-submitting the SAME
+job resumes from the last committed stage; metrics and per-partition
+lineage land next to the data.
 No master is forced here — spark-submit owns cluster sizing, which is how
 the N vs 4N executor scaling comparison is driven externally.
 """

@@ -54,8 +54,8 @@ _FP_SCHEMA = T.StructType(
 # session Arrow batch size (see functions/signature_udf.py rationale)
 _CHUNK_ROWS = 1024
 
-# polynomial rolling hash over a 61-bit Mersenne prime field
-_ROLL_P = (1 << 61) - 1
+# base of the polynomial rolling hash (uint64 wraparound, see
+# _kgram_hashes_flat)
 _ROLL_BASE = 1_000_003
 
 

@@ -79,10 +79,7 @@ def build_docs(turns: DataFrame, cfg: DedupConfig) -> DataFrame:
                 turns, max_turn_chars=cfg.max_turn_chars,
                 min_doc_chars=cfg.min_doc_chars,
             )
-        ).withColumn(
-            # max_chars=0: full-content exact key (see fingerprint_md5)
-            "fingerprint", fingerprint_md5(F.col("doc_text"), max_chars=0)
-        )
+        ).withColumn("fingerprint", fingerprint_md5(F.col("doc_text")))
     )
 
 
@@ -115,10 +112,7 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     fp = (
         F.col("fingerprint") if "fingerprint" in docs.columns
-        # max_chars=0: the exact-dup key must cover the FULL assembled text
-        # (a truncated key collapses prefix-sharing long docs — see
-        # functions/text.py fingerprint_md5)
-        else fingerprint_md5(F.col("doc_text"), max_chars=0)
+        else fingerprint_md5(F.col("doc_text"))
     )
     # doc_text deliberately NOT carried: signatures are checkpointed and
     # re-joined repeatedly; the raw text stays in the docs table only

@@ -1,10 +1,9 @@
 """SparkSession factory tuned for the dedup engine.
 
 Local mode here; the same builder settings apply on a real cluster (AQE,
-Arrow, skew-join). Iceberg catalog support is gated behind an import-try —
-the runtime image carries no Iceberg jars, so stage checkpoints fall back to
-plain Parquet (see checkpoint.py); on a cluster with the Iceberg runtime jar,
-``iceberg_configs`` supplies the catalog settings the north rule expects.
+Arrow, skew-join). The session configures no table catalog: stage
+checkpoints are Parquet (checkpoint.py), and an Iceberg catalog for
+`job.py --input` is the deployment's `--conf` settings (job.py lists them).
 """
 
 from __future__ import annotations
@@ -12,18 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-
-def iceberg_configs(warehouse: str, catalog: str = "local") -> dict[str, str]:
-    """Catalog config for an Iceberg Hadoop catalog (only usable when
-    org.apache.iceberg:iceberg-spark-runtime is on the classpath)."""
-    return {
-        f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{catalog}.type": "hadoop",
-        f"spark.sql.catalog.{catalog}.warehouse": warehouse,
-        "spark.sql.extensions":
-            "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-    }
 
 
 def _tune_worker_malloc() -> None:

@@ -50,3 +50,26 @@ def tiny_turns(spark, tiny_corpus):
 @pytest.fixture(scope="session")
 def small_turns(spark, small_corpus):
     return corpus_to_spark(spark, small_corpus).cache()
+
+
+@pytest.fixture
+def write_embeddings(spark, tmp_path):
+    """Writes an (n, 64) float32 matrix as `<tmp>/sf/embeddings.parquet`
+    (vec_id = row index), the table the driver's vector queries read, and
+    returns the sf dir to pass them."""
+    import numpy as np
+    import pandas as pd
+
+    def write(vectors) -> str:
+        sf = tmp_path / "sf"
+        sf.mkdir(exist_ok=True)
+        pdf = pd.DataFrame({
+            "vec_id": np.arange(len(vectors), dtype=np.int64),
+            "embedding": [list(map(float, v)) for v in vectors],
+        })
+        spark.createDataFrame(
+            pdf, schema="vec_id long, embedding array<float>"
+        ).write.mode("overwrite").parquet(str(sf / "embeddings.parquet"))
+        return str(sf)
+
+    return write

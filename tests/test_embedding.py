@@ -1,57 +1,31 @@
-"""Embedding-mode operator tests — mirrors /root/reference/tests/test_lsh.py
-and test_pipeline.py: metric properties (similar -> small Hamming,
-orthogonal -> mid-band), batch ≡ single, self-query top-1, cascade recall."""
+"""Embedding-mode tests — mirrors the reference's tests/test_lsh.py and
+test_pipeline.py (metric properties: similar -> small Hamming, unrelated ->
+mid-band; self-query top-1; cascade recall) over the kernels and driver
+queries that run them: the signbit fingerprint, q_hamming_topk,
+q_multiprobe_hamming, q_pivot_prefilter, q_cascade_topk, the ITQ fit and
+q_itq_codes fold, and the quantized E2LSH kernel of q_e2lsh_pairs, each
+against numpy."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
+
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from lsh_cascade_poc_spark.embedding.e2lsh import (
-    e2lsh_buckets_numpy,
+    e2lsh_buckets_quantized_numpy,
     e2lsh_candidate_pairs,
-    e2lsh_collision_prob,
     explode_e2lsh_buckets,
     make_e2lsh_params,
-    make_e2lsh_udf,
+    make_e2lsh_quantized_udf,
+    quantize_e2lsh_params,
 )
-from lsh_cascade_poc_spark.embedding.hyperplanes import (
-    generate_data_sampled_hyperplanes,
-    generate_orthogonal_hyperplanes,
-    generate_random_hyperplanes,
-)
-from lsh_cascade_poc_spark.embedding.itq import (
-    codes_to_lanes,
-    fit_itq_on_dataframe,
-    isotropy_score,
-    itq_fit,
-    itq_transform_numpy,
-    make_itq_udf,
-    whitening_fit,
-    whitening_transform_numpy,
-)
-from lsh_cascade_poc_spark.embedding.search import (
-    band_candidates,
-    cascade_search,
-    cosine_topk,
-    hamming_topn,
-    pivot_filter,
-    recall_at_k,
-    select_pivots_furthest_first,
-    with_pivot_distances,
-)
-from lsh_cascade_poc_spark.embedding.vector_hash import (
-    explode_lane_bands,
-    hamming_lanes,
-    make_vector_simhash_udf,
-    multiprobe_band_keys,
-    simhash_vectors_numpy,
-)
+from lsh_cascade_poc_spark.embedding.itq import itq_fit
 
 DIM = 64
-N_BITS = 128
 
 
 def _unit(rng, n):
@@ -67,11 +41,6 @@ def vectors():
 
 
 @pytest.fixture(scope="module")
-def planes():
-    return generate_random_hyperplanes(DIM, N_BITS, seed=42)
-
-
-@pytest.fixture(scope="module")
 def emb_df(spark, vectors):
     pdf = pd.DataFrame({
         "vec_id": range(len(vectors)),
@@ -80,275 +49,307 @@ def emb_df(spark, vectors):
     return spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").cache()
 
 
-def test_hyperplane_determinism_and_shapes():
-    a = generate_random_hyperplanes(DIM, N_BITS, 42)
-    b = generate_random_hyperplanes(DIM, N_BITS, 42)
-    c = generate_random_hyperplanes(DIM, N_BITS, 7)
-    assert np.array_equal(a, b) and not np.array_equal(a, c)
-    q = generate_orthogonal_hyperplanes(DIM, DIM, 42)
-    assert np.allclose(q @ q.T, np.eye(DIM), atol=1e-4)
-    rng = np.random.default_rng(0)
-    d = generate_data_sampled_hyperplanes(_unit(rng, 50), N_BITS, 42)
-    assert d.shape == (N_BITS, DIM)
-    assert np.allclose(np.linalg.norm(d, axis=1), 1.0, atol=1e-5)
+def _signbit_numpy(vectors: np.ndarray) -> np.ndarray:
+    """The signbit fingerprint the driver queries compute in SQL
+    (_SPARK_SIGNBIT): bit i = embedding[i] > 0, packed into one int64."""
+    bits = (vectors > 0).astype(np.uint64)
+    return (bits << np.arange(64, dtype=np.uint64)).sum(
+        axis=1, dtype=np.uint64).astype(np.int64)
 
 
-def test_vector_simhash_metric_properties(vectors, planes):
-    # similar vectors -> Hamming < 32/128 (test_lsh.py:33-49);
-    # near-orthogonal -> mid band (test_lsh.py:51-64)
+def _popcount(x) -> int:
+    return bin(int(x) & 0xFFFFFFFFFFFFFFFF).count("1")
+
+
+def _near_copies(v: np.ndarray, scales, seed: int) -> np.ndarray:
+    """Unit vectors at increasing distance from v (noise of norm `scale`)."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for scale in scales:
+        n = rng.standard_normal(DIM).astype(np.float32)
+        u = v + scale * n / np.linalg.norm(n)
+        out.append(u / np.linalg.norm(u))
+    return np.stack(out).astype(np.float32)
+
+
+def test_hyperplane_determinism_and_shapes(vectors):
+    """The seeded projections the vector kernels hash with: E2LSH lines
+    (q_e2lsh_pairs) and the ITQ PCA basis (q_itq_codes)."""
+    a = make_e2lsh_params(DIM, k=4, n_tables=3, w=1.0, seed=42)
+    b = make_e2lsh_params(DIM, k=4, n_tables=3, w=1.0, seed=42)
+    c = make_e2lsh_params(DIM, k=4, n_tables=3, w=1.0, seed=7)
+    assert a.a.shape == (3, 4, DIM) and a.b.shape == (3, 4)
+    assert (a.n_tables, a.k) == (3, 4)
+    assert np.array_equal(a.a, b.a) and np.array_equal(a.b, b.b)
+    assert not np.array_equal(a.a, c.a)
+    assert ((a.b >= 0) & (a.b < a.w)).all()  # offsets uniform on [0, w)
+    m = itq_fit(vectors, 32, n_iter=5, seed=42)
+    p = m.pca.astype(np.float64)
+    assert p.shape == (DIM, 32)
+    assert np.allclose(p.T @ p, np.eye(32), atol=1e-4)  # orthonormal basis
+
+
+def test_vector_simhash_metric_properties(spark, vectors):
+    # similar vectors -> Hamming < 16/64 (test_lsh.py:33-49's 32/128);
+    # unrelated vectors -> mid band (test_lsh.py:51-64's 40..88 of 128)
     v = vectors[0]
     noise = np.random.default_rng(1).standard_normal(DIM).astype(np.float32) * 0.05
     similar = v + noise
     similar /= np.linalg.norm(similar)
-    ortho = np.zeros(DIM, dtype=np.float32)
-    ortho[np.argmin(np.abs(v))] = 1.0
-    lanes = simhash_vectors_numpy(np.stack([v, similar, ortho]), planes)
-    u = lanes.astype(np.uint64)
-    d_sim = sum(bin(int(a ^ b)).count("1") for a, b in zip(u[0], u[1]))
-    d_ortho = sum(bin(int(a ^ b)).count("1") for a, b in zip(u[0], u[2]))
-    assert d_sim < 32
-    assert 40 < d_ortho < 88
-
-
-def test_vector_simhash_udf_matches_numpy(spark, emb_df, vectors, planes):
-    udf = make_vector_simhash_udf(planes)
-    rows = emb_df.select("vec_id", udf("embedding").alias("lanes")).orderBy("vec_id").collect()
-    got = np.array([r.lanes for r in rows], dtype=np.int64)
-    want = simhash_vectors_numpy(vectors, planes)
-    assert np.array_equal(got, want)
-
-
-def test_hamming_lanes_expr(spark):
     df = spark.createDataFrame(
-        [([0, 0], [0, 0]), ([1, 0], [0, 0]), ([-1, -1], [0, 0])],
-        "a array<long>, b array<long>",
+        [(i, list(map(float, u))) for i, u in enumerate([v, similar, vectors[1]])],
+        "vec_id long, embedding array<float>",
     )
-    got = [r[0] for r in df.select(hamming_lanes(F.col("a"), F.col("b"))).collect()]
-    assert got == [0, 1, 128]
+    h = [r.h for r in df.select("vec_id", F.expr(entry._SPARK_SIGNBIT).alias("h"))
+         .orderBy("vec_id").collect()]
+    d_sim = _popcount(h[0] ^ h[1])
+    d_other = _popcount(h[0] ^ h[2])
+    assert d_sim < 16
+    assert 20 < d_other < 44
 
 
-def test_multiprobe_keys(spark):
-    df = spark.createDataFrame([(5,)], "k long")
-    probes = df.select(multiprobe_band_keys(F.col("k"), 4, max_flips=1).alias("p")).collect()[0].p
-    assert probes[0] == 5
-    assert set(probes) == {5, 4, 7, 1, 13}  # 5 ^ {0,1,2,4,8}
+def test_vector_simhash_udf_matches_numpy(spark, emb_df, vectors):
+    """The signbit fingerprint: Spark's expression == numpy == DuckDB's
+    oracle expression, bit 63 (long-min) included."""
+    import duckdb
+
+    rows = emb_df.select("vec_id", F.expr(entry._SPARK_SIGNBIT).alias("h")) \
+        .orderBy("vec_id").collect()
+    got = np.array([r.h for r in rows], dtype=np.int64)
+    want = _signbit_numpy(vectors)
+    assert np.array_equal(got, want)
+    assert (want < 0).any()  # bit 63 set somewhere
+
+    pdf = pd.DataFrame({"vec_id": range(len(vectors)),
+                        "embedding": [list(map(float, v)) for v in vectors]})
+    con = duckdb.connect()
+    con.register("pdf", pdf)
+    duck = con.execute(
+        f"SELECT {entry._DUCK_SIGNBIT} FROM"
+        " (SELECT vec_id, embedding::FLOAT[] AS embedding FROM pdf)"
+        " ORDER BY vec_id"
+    ).fetchall()
+    assert np.array_equal(np.array([r[0] for r in duck], dtype=np.int64), want)
+
+
+def test_multiprobe_keys(spark, vectors, write_embeddings):
+    """q_multiprobe_hamming: probe keys are the query's four 16-bit band
+    keys plus every single-bit flip, so the candidates are exactly the
+    docs within Hamming 1 of the query in some band (verified <= 24)."""
+    corpus = np.concatenate([vectors, _near_copies(vectors[7], [0.1, 0.3, 0.5, 0.7], 3)])
+    got = {(r.vec_id, r.hamming)
+           for r in entry.q_multiprobe_hamming(spark, write_embeddings(corpus)).collect()}
+    h = _signbit_numpy(corpus)
+    q = int(h[7]) & 0xFFFFFFFFFFFFFFFF
+
+    def band(x, i):
+        return ((int(x) & 0xFFFFFFFFFFFFFFFF) >> (16 * i)) & 0xFFFF
+
+    want, exact = set(), set()
+    for d in range(len(corpus)):
+        ham = _popcount(h[d] ^ h[7])
+        if d == 7 or ham > 24:
+            continue
+        flips = [_popcount(band(h[d], i) ^ band(q, i)) for i in range(4)]
+        if min(flips) <= 1:
+            want.add((d, ham))
+        if min(flips) == 0:
+            exact.add(d)
+    assert got == want
+    assert (100, _popcount(h[100] ^ h[7])) in got  # the nearest planted copy
+    assert exact <= {d for d, _ in got}
 
 
 def test_itq_roundtrip_and_properties(vectors):
     model = itq_fit(vectors, 64, n_iter=20, seed=42)
     r = model.rotation.astype(np.float64)
     assert np.allclose(r @ r.T, np.eye(64), atol=1e-4)  # rotation orthogonal
-    codes = itq_transform_numpy(vectors, model)
-    assert codes.shape == (100, 64) and set(np.unique(codes)) <= {0, 1}
+    # the reference transform order (center -> PCA-project -> rotate ->
+    # sign) that q_itq_codes folds into SQL literals
+    codes = ((vectors - model.mean) @ model.pca @ model.rotation) >= 0
+    assert codes.shape == (100, 64)
     # determinism
-    codes2 = itq_transform_numpy(vectors, itq_fit(vectors, 64, n_iter=20, seed=42))
-    assert np.array_equal(codes, codes2)
-    # similar vectors -> similar codes
-    lanes = codes_to_lanes(codes)
-    assert lanes.shape == (100, 1)
+    again = itq_fit(vectors, 64, n_iter=20, seed=42)
+    for a, b in ((model.mean, again.mean), (model.pca, again.pca),
+                 (model.rotation, again.rotation)):
+        assert np.array_equal(a, b)
 
 
-def test_itq_udf_matches_numpy(spark, emb_df, vectors):
-    model = itq_fit(vectors, 64, n_iter=10, seed=42)
-    rows = emb_df.select("vec_id", make_itq_udf(model)("embedding").alias("lanes")) \
-        .orderBy("vec_id").collect()
-    got = np.array([r.lanes for r in rows], dtype=np.int64)
-    want = codes_to_lanes(itq_transform_numpy(vectors, model))
-    assert np.array_equal(got, want)
+def test_itq_udf_matches_numpy(spark, vectors, write_embeddings):
+    """q_itq_codes' SQL fold == the same sequential double fold in numpy
+    over the same 6-decimal literals, and agrees with the unrounded
+    reference transform on all but boundary bits."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    got = {r.vec_id: r.itq_code
+           for r in entry.q_itq_codes(spark, write_embeddings(vectors)).collect()}
+    w, c = entry._itq64_fold_model(vectors)
+    w_lit = [[float(f"{x:.6f}") for x in w[:, j]] for j in range(64)]
+    c_lit = [float(f"{x:.6f}") for x in c]
+
+    def bit(v, j):
+        acc = 0.0
+        for x, y in zip(v, w_lit[j]):
+            acc += float(x) * y
+        # Spark's round(double, 6): HALF_UP on the double's decimal string
+        return Decimal(repr(acc - c_lit[j])).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP) >= 0
+
+    def pack(bits):
+        return sum((-(1 << 63) if j == 63 else 1 << j) for j in range(64) if bits[j])
+
+    want = {i: pack([bit(v, j) for j in range(64)]) for i, v in enumerate(vectors)}
+    assert got == want
+
+    m = itq_fit(vectors, 64, n_iter=25, seed=42)
+    ref = ((vectors - m.mean) @ m.pca @ m.rotation) >= 0
+    sql = np.array([[(want[i] >> j) & 1 for j in range(64)] for i in range(len(vectors))])
+    assert (sql == ref).mean() > 0.99
 
 
 def test_fit_itq_on_dataframe(spark, emb_df, vectors):
-    model = fit_itq_on_dataframe(emb_df.orderBy("vec_id"), "embedding", 64, n_iter=5)
-    assert model.pca.shape == (DIM, 64)
-
-
-def test_whitening_improves_isotropy(vectors):
-    skewed = vectors * np.linspace(0.1, 3.0, DIM)[None, :].astype(np.float32)
-    before = isotropy_score(skewed)
-    model = whitening_fit(skewed)
-    after = isotropy_score(whitening_transform_numpy(skewed, model, renormalize=False))
-    assert after > before
-    assert after > 0.5
+    """The driver's fit matrix is the vec_id-ordered float32 embeddings,
+    whatever the partitioning, and folds to a (dim, 64) model."""
+    x = entry._itq_fit_matrix(emb_df.repartition(3))
+    assert x.dtype == np.float32 and np.array_equal(x, vectors)
+    w, c = entry._itq64_fold_model(x)
+    assert w.shape == (DIM, 64) and c.shape == (64,)
 
 
 def test_e2lsh_batch_udf_matches_numpy(spark, emb_df, vectors):
     params = make_e2lsh_params(DIM, k=4, n_tables=3, w=1.0, seed=42)
-    want = e2lsh_buckets_numpy(vectors, params)
-    rows = emb_df.select("vec_id", make_e2lsh_udf(params)("embedding").alias("b")) \
+    qa, qb, qw = quantize_e2lsh_params(params)
+    want = e2lsh_buckets_quantized_numpy(vectors, qa, qb, qw)
+    rows = emb_df.select("vec_id", make_e2lsh_quantized_udf(params)("embedding").alias("b")) \
         .orderBy("vec_id").collect()
     got = np.array([r.b for r in rows], dtype=np.int32)
+    assert got.shape == (len(vectors), 3, 4)
     assert np.array_equal(got, want)
 
 
-def test_e2lsh_candidates_and_collision_prob(spark, emb_df):
+def test_e2lsh_candidates_and_collision_prob(spark, vectors):
+    """The bucket join q_e2lsh_pairs runs pairs exactly the ids sharing a
+    bucket tuple in some table; identical vectors (distance 0, collision
+    probability 1) pair in every table."""
+    corpus = np.concatenate([vectors, vectors[:5]])
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(len(corpus)),
+                      "embedding": [list(map(float, v)) for v in corpus]}),
+        schema="vec_id long, embedding array<float>",
+    )
     params = make_e2lsh_params(DIM, k=2, n_tables=4, w=4.0, seed=1)
-    buckets = emb_df.select("vec_id", make_e2lsh_udf(params)("embedding").alias("b"))
+    buckets = df.select("vec_id", make_e2lsh_quantized_udf(params)("embedding").alias("b"))
     table = explode_e2lsh_buckets(buckets, "b")
     assert table.columns == ["vec_id", "table_id", "bucket_key"]
-    pairs = e2lsh_candidate_pairs(table)
-    assert pairs.count() > 0  # wide w -> collisions exist
-    assert e2lsh_collision_prob(0.0, 4.0) == 1.0
-    assert e2lsh_collision_prob(2.0, 4.0) == 0.5
-    assert e2lsh_collision_prob(8.0, 4.0) == 0.0
+    pairs = {(r.id_a, r.id_b) for r in e2lsh_candidate_pairs(table).collect()}
+    qa, qb, qw = quantize_e2lsh_params(params)
+    b = e2lsh_buckets_quantized_numpy(corpus, qa, qb, qw)
+    n = len(corpus)
+    assert pairs == {
+        (i, j) for i in range(n) for j in range(i + 1, n)
+        if any((b[i, t] == b[j, t]).all() for t in range(4))
+    }
+    assert len(pairs) > 5  # wide w -> collisions beyond the planted copies
+    for i in range(5):
+        assert (i, 100 + i) in pairs
+        assert (b[i] == b[100 + i]).all()
 
 
 @pytest.fixture(scope="module")
-def clustered_emb_df(spark):
-    """20 planted clusters x 6 points with small noise — real neighbors have
-    high cosine (random vectors have near-orthogonal 'neighbors', which no
-    LSH can recall; the reference's recall numbers are on real embeddings)."""
+def clustered_vectors():
+    """12 planted clusters x 12 points with small noise — real neighbors
+    have high cosine (random vectors have near-orthogonal 'neighbors', which
+    no LSH can recall; the reference's recall numbers are on real
+    embeddings) — plus exact copies of vec_id 0..2, the queries of
+    q_cascade_topk."""
     rng = np.random.default_rng(7)
     centers = _unit(rng, 12)
     pts = []
     for c in centers:
-        # 12 points per cluster (> top_k) with noise of fixed norm 0.25 so
-        # within-cluster cosine ~0.95 — every top-10 neighbor is in-cluster
+        # noise of fixed norm 0.25 so within-cluster cosine ~0.95 — every
+        # top-5 neighbor is in-cluster
         for _ in range(12):
             n = rng.standard_normal(DIM).astype(np.float32)
             n = 0.25 * n / np.linalg.norm(n)
             v = c + n
             pts.append(v / np.linalg.norm(v))
-    pdf = pd.DataFrame({
-        "vec_id": range(len(pts)),
-        "embedding": [list(map(float, v)) for v in pts],
-    })
-    return spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").cache()
+    pts = np.stack(pts).astype(np.float32)
+    return np.concatenate([pts, pts[:3]])
 
 
-def test_cascade_search_self_query_and_recall(spark, clustered_emb_df, planes):
-    """Self-query returns itself with cosine ~1 (test_pipeline.py:106-124);
-    cascade recall vs brute force >= 0.8 at generous limits."""
-    udf = make_vector_simhash_udf(planes)
-    docs = clustered_emb_df.select(
-        "vec_id", "embedding", udf("embedding").alias("lanes")
-    ).cache()
-    queries = docs.filter(F.col("vec_id") < 5)
-    doc_bands = explode_lane_bands(docs, "lanes", N_BITS, band_bits=8)
-    query_bands = explode_lane_bands(queries, "lanes", N_BITS, band_bits=8)
-
-    res = cascade_search(docs, queries, doc_bands, query_bands,
-                         stage1_limit=50, top_k=10).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r.rank)
-        assert rows[0].doc_id == qid and rows[0].cosine > 0.99
+def test_cascade_search_self_query_and_recall(spark, clustered_vectors, write_embeddings):
+    """q_cascade_topk: a query's exact copy comes back first with cosine ~1
+    (test_pipeline.py:106-124's self-query; the query itself is excluded),
+    cosines are ranked, and recall vs brute-force q_cosine_topk >= 0.8."""
+    sf = write_embeddings(clustered_vectors)
+    n_base = len(clustered_vectors) - 3
+    res = entry.q_cascade_topk(spark, sf).collect()
+    for qid in range(3):
+        rows = sorted((r for r in res if r.query_id == qid), key=lambda r: r.rank)
+        assert [r.rank for r in rows] == [1, 2, 3, 4, 5]
+        assert rows[0].doc_id == n_base + qid and rows[0].cosine > 0.99
         cos = [r.cosine for r in rows]
         assert cos == sorted(cos, reverse=True)
 
-    pred = spark.createDataFrame(
-        [(r.query_id, r.doc_id) for r in res], "query_id long, doc_id long"
-    )
-    gt = cosine_topk(
-        docs, queries.withColumnRenamed("vec_id", "query_id"), 10
-    ).select("query_id", "doc_id")
-    rec = recall_at_k(pred, gt, 10)
+    pred = {(r.query_id, r.doc_id) for r in res}
+    gt = {(r.query_id, r.doc_id) for r in entry.q_cosine_topk(spark, sf).collect()}
+    assert len(gt) == 15
+    rec = len(pred & gt) / len(gt)
     assert rec >= 0.8, rec
 
 
-def test_band_candidates_reduce(spark, emb_df, planes):
-    """Stage-1 reduces candidates vs full corpus (test_pipeline.py:70-86)."""
-    udf = make_vector_simhash_udf(planes)
-    docs = emb_df.select("vec_id", udf("embedding").alias("lanes"))
-    queries = docs.filter(F.col("vec_id") == 0)
-    cands = band_candidates(
-        explode_lane_bands(docs, "lanes", N_BITS, band_bits=16),
-        explode_lane_bands(queries, "lanes", N_BITS, band_bits=16),
-    )
-    n = cands.count()
-    assert 1 <= n < 100  # contains self, smaller than corpus
+def test_pivot_filter_triangle_inequality(spark, vectors, write_embeddings):
+    """q_pivot_prefilter keeps exactly the docs whose pivot distances all
+    lie within 8 of the query's, so (triangle inequality) it never drops
+    a doc within Hamming 8 of the query, and it prunes the rest."""
+    corpus = np.concatenate([vectors, _near_copies(vectors[42], [0.02, 0.05, 0.1, 0.3], 5)])
+    kept = {r.vec_id: r.max_dev
+            for r in entry.q_pivot_prefilter(spark, write_embeddings(corpus)).collect()}
+    h = _signbit_numpy(corpus)
+    pivots, q = h[:8], h[42]
+    dev = {d: max(abs(_popcount(h[d] ^ p) - _popcount(q ^ p)) for p in pivots)
+           for d in range(len(corpus))}
+    assert kept == {d: m for d, m in dev.items() if m <= 8}
+    assert kept[42] == 0  # the query itself always survives
+    near = [d for d in range(len(corpus)) if d != 42 and _popcount(h[d] ^ q) <= 8]
+    assert near  # the planted near copies
+    assert set(near) <= set(kept)
+    assert len(kept) < len(corpus)
 
 
-def test_pivot_filter_triangle_inequality(spark, emb_df, vectors, planes):
-    udf = make_vector_simhash_udf(planes)
-    docs = emb_df.select("vec_id", udf("embedding").alias("lanes")).cache()
-    lanes = simhash_vectors_numpy(vectors, planes)
-    pivots = select_pivots_furthest_first(lanes, 4, seed=42)
-    with_pd = with_pivot_distances(docs, "lanes", pivots)
-    # query = vector 0; its pivot distances computed the same way
-    u = lanes.astype(np.uint64)
-    qpd = [int(sum(bin(int(a ^ b)).count("1") for a, b in zip(u[0], p.astype(np.uint64))))
-           for p in pivots]
-    kept = pivot_filter(with_pd, qpd, threshold=100)
-    assert kept.count() == 100  # t=100 keeps everything (max distance 128)
-    kept0 = pivot_filter(with_pd, qpd, threshold=0)
-    ids = [r.vec_id for r in kept0.select("vec_id").collect()]
-    assert 0 in ids  # the query itself always survives t=0
-    assert kept0.count() < 100
+def test_hamming_topn_contains_self(spark, vectors, write_embeddings):
+    """q_hamming_topk == brute-force top-10 by (Hamming, doc_id) per query;
+    a query's exact copy ranks first at distance 0."""
+    corpus = np.concatenate([vectors, vectors[:3]])
+    rows = entry.q_hamming_topk(spark, write_embeddings(corpus)).collect()
+    h = _signbit_numpy(corpus)
+    for qid in range(5):
+        got = sorted((r.rank, r.doc_id, r.hamming) for r in rows if r.query_id == qid)
+        ham = sorted((_popcount(h[qid] ^ h[d]), d) for d in range(len(corpus)) if d != qid)
+        assert got == [(i + 1, d, hd) for i, (hd, d) in enumerate(ham[:10])]
+        if qid < 3:
+            assert got[0][1:] == (100 + qid, 0)
 
 
-def test_hamming_topn_contains_self(spark, emb_df, planes):
-    udf = make_vector_simhash_udf(planes)
-    docs = emb_df.select("vec_id", udf("embedding").alias("lanes"))
-    queries = docs.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "lanes"
-    )
-    top = hamming_topn(docs, queries, 5).collect()
-    for qid in range(3):
-        rows = [r for r in top if r.query_id == qid]
-        assert len(rows) == 5
-        assert min(r.hamming for r in rows) == 0  # self at distance 0
-
-
-def test_compute_embedding_stats(spark, emb_df, vectors):
-    """H16-b (VERDICT r4 #3): sampled cosine-distribution diagnostic vs the
-    reference compute_embedding_stats semantics (src/loader_comparison.py:
-    143-179) — same seeded pair-index draw and statistics, run on the
-    documented deterministic hash-ordered pool. Recomputed here verbatim
-    from the contract (unit vectors: dot == cosine), plus partitioning
-    invariance (the pool order must not depend on the physical layout)."""
-    from lsh_cascade_poc_spark.embedding.itq import compute_embedding_stats
-
-    stats = compute_embedding_stats(emb_df, sample_size=200, seed=42)
-    assert stats["n_vectors"] == len(vectors)
-    assert stats["dim"] == vectors.shape[1]
-    assert -1.0 - 1e-9 <= stats["cos_sim_min"] <= stats["cos_sim_median"]
-    assert stats["cos_sim_median"] <= stats["cos_sim_max"] <= 1.0 + 1e-9
-
-    # independent recomputation from the documented contract
-    pool_ids = [
-        r.vec_id
-        for r in emb_df.select("vec_id")
-        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(42)))
-        .collect()
-    ]
-    x = np.stack([vectors[i] for i in pool_ids]).astype(np.float64)
-    rng = np.random.default_rng(42)
-    i1 = rng.integers(0, len(x), size=200)
-    i2 = rng.integers(0, len(x), size=200)
-    cos = np.sum(x[i1] * x[i2], axis=1)  # unit vectors: dot == cosine
-    assert abs(stats["cos_sim_mean"] - float(np.mean(cos))) < 1e-6
-    assert abs(stats["cos_sim_std"] - float(np.std(cos))) < 1e-6
-    assert abs(stats["cos_sim_median"] - float(np.median(cos))) < 1e-6
-
-    # partitioning invariance: identical dict regardless of layout
-    again = compute_embedding_stats(emb_df.repartition(7), sample_size=200, seed=42)
-    assert again == stats
+def _e2lsh_buckets_float32(vectors, params):
+    """The float32 form of the reference hash, floor((a.v + b) / w)
+    (src/e2lsh.py:75-147): (n, dim) -> (n, L, k) int32."""
+    av = np.einsum("lkd,nd->nlk", params.a, vectors.astype(np.float32))
+    return np.floor((av + params.b[None, :, :]) / params.w).astype(np.int32)
 
 
 def test_e2lsh_quantized_kernel(spark, emb_df, vectors):
-    """The fixed-point E2LSH variant (r5, VERDICT r4 #4): UDF == numpy
+    """The fixed-point E2LSH kernel (r5, VERDICT r4 #4): UDF == numpy
     bit-exactly, buckets are genuine floors (negative-side check), and the
-    quantized grid stays within one bucket of the float32 kernel."""
+    quantized grid stays within one bucket of the float32 hash."""
     import math
-
-    from lsh_cascade_poc_spark.embedding.e2lsh import (
-        e2lsh_buckets_numpy,
-        e2lsh_buckets_quantized_numpy,
-        make_e2lsh_params,
-        make_e2lsh_quantized_udf,
-        quantize_e2lsh_params,
-    )
 
     params = make_e2lsh_params(vectors.shape[1], k=3, n_tables=2, w=2.0, seed=7)
     qa, qb, qw = quantize_e2lsh_params(params)
     want = e2lsh_buckets_quantized_numpy(vectors.astype(np.float32), qa, qb, qw)
-    rows = (
-        emb_df.select("vec_id", make_e2lsh_quantized_udf(params)("embedding").alias("b"))
-        .orderBy("vec_id")
-        .collect()
-    )
+    rows = emb_df.select(
+        "vec_id", make_e2lsh_quantized_udf(params)("embedding").alias("b")
+    ).orderBy("vec_id").collect()
     got = np.array([r.b for r in rows], dtype=np.int32)
     assert np.array_equal(got, want)
 
@@ -365,6 +366,6 @@ def test_e2lsh_quantized_kernel(spark, emb_df, vectors):
 
     # the 1e-6 grid can only move a projection across a floor boundary by
     # ~dim*1e-6/w — quantized and float32 buckets agree except at boundaries
-    f32 = e2lsh_buckets_numpy(vectors.astype(np.float32), params)
+    f32 = _e2lsh_buckets_float32(vectors, params)
     assert np.abs(f32.astype(np.int64) - want.astype(np.int64)).max() <= 1
     assert (f32 == want).mean() > 0.99

@@ -4,17 +4,52 @@ what's tested is the real Spark contract around it."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lsh_cascade_poc_spark.multimodal import (
     FEATURE_DIM,
     extract_features,
     media_dedup_pairs,
-    resize_images,
-    sample_video_frames,
-    synthetic_media,
 )
+
+MEDIA_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType(), False),
+    T.StructField("modality", T.StringType(), False),   # image | audio | video
+    T.StructField("payload", T.BinaryType(), True),      # opaque encoded bytes
+    T.StructField("meta", T.StructType([
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("sample_rate", T.IntegerType(), True),
+        T.StructField("n_frames", T.IntegerType(), True),
+        T.StructField("codec", T.StringType(), True),
+    ]), True),
+])
+
+
+def synthetic_media(spark, n: int = 50, seed: int = 42,
+                    dup_fraction: float = 0.2):
+    """Deterministic fake media corpus with planted exact-payload duplicates."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    mid = 0
+    for i in range(n):
+        modality = ["image", "audio", "video"][i % 3]
+        payload = bytes(rng.integers(0, 256, size=int(rng.integers(64, 256)), dtype=np.uint8))
+        meta = {
+            "width": 640 if modality == "image" else None,
+            "height": 480 if modality == "image" else None,
+            "sample_rate": 16000 if modality == "audio" else None,
+            "n_frames": 12 if modality == "video" else None,
+            "codec": "fake",
+        }
+        rows.append((mid, modality, payload, meta))
+        mid += 1
+        if rng.random() < dup_fraction:
+            rows.append((mid, modality, payload, meta))  # exact payload dup
+            mid += 1
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -27,24 +62,6 @@ def test_feature_extraction_shape_and_determinism(spark, media):
     f2 = {r.media_id: r.feature for r in extract_features(media).collect()}
     assert f1 == f2  # deterministic across runs/partitionings
     assert all(len(v) == FEATURE_DIM for v in f1.values())
-
-
-def test_resize_contract(spark, media):
-    out = resize_images(media, 32, 16).collect()
-    assert out, "no images in corpus"
-    for r in out:
-        assert r.width == 32 and r.height == 16
-        assert len(r.payload) == 32 * 16
-
-
-def test_frame_sampling(spark, media):
-    frames = sample_video_frames(media, every_n=3).collect()
-    assert frames
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    for idxs in by_media.values():
-        assert sorted(idxs) == [0, 3, 6, 9]  # n_frames=12, every 3rd
 
 
 def test_media_dedup_finds_planted_payload_dups(spark, media):
@@ -98,10 +115,6 @@ def test_real_audio_decode_path(spark):
     """VERDICT r2 #8: the non-fake decode path is executable where a codec
     exists. Audio uses the stdlib wave module (present everywhere), so this
     test runs UNCONDITIONALLY: features must be the actual PCM samples."""
-    import numpy as np
-
-    from lsh_cascade_poc_spark.multimodal import MEDIA_SCHEMA, extract_features
-
     samples = [0.0, 0.5, -0.5, 0.25]
     media = spark.createDataFrame(
         [(1, "audio", _wav_bytes(samples),
@@ -121,14 +134,8 @@ def test_real_image_decode_path(spark):
     """Env-gated: runs the PIL image decode where PIL exists, skipped (not
     failing) elsewhere — the NotImplementedError branch is then the only
     behavior left untested on codec-less hosts, by design."""
-    import pytest
-
     PIL_Image = pytest.importorskip("PIL.Image")
     import io
-
-    import numpy as np
-
-    from lsh_cascade_poc_spark.multimodal import MEDIA_SCHEMA, extract_features
 
     img = PIL_Image.new("L", (16, 16), color=128)
     buf = io.BytesIO()
@@ -146,13 +153,6 @@ def test_real_image_decode_path(spark):
 def test_video_real_path_raises_not_implemented(spark):
     """The video demux stays an HONEST stub: the real path must raise
     NotImplementedError, never silently fall back to the fake."""
-    import pytest
-
-    from lsh_cascade_poc_spark.multimodal import (
-        extract_features,
-        synthetic_media,
-    )
-
     media = synthetic_media(spark, n=3, seed=1).filter("modality = 'video'")
     with pytest.raises(Exception) as ei:
         extract_features(media, deterministic_fake=False).collect()

@@ -1,5 +1,7 @@
-"""F5 confidence multiprobe, H13 E2LSH multiprobe, H18 overlap segments,
-S10 model save/load — parity vs numpy references + recall-improvement."""
+"""F5 confidence multiprobe, H13 E2LSH multiprobe, H18 overlap segments and
+the driver-side ITQ/IVF fits: the probe-key and segment expressions the
+driver queries run (q_confidence_multiprobe, q_e2lsh_multiprobe,
+q_overlap_segments, q_ivf_topk), in parity with numpy references."""
 
 from __future__ import annotations
 
@@ -7,45 +9,59 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+import __spark_entry__ as entry
 from lsh_cascade_poc_spark.embedding.confidence import (
     confidence_probes_numpy,
     explode_confidence_probes,
-    make_simhash_confidence_udf,
 )
-from lsh_cascade_poc_spark.embedding.e2lsh import (
-    e2lsh_buckets_numpy,
-    e2lsh_candidate_pairs,
-    e2lsh_query_candidates,
-    explode_e2lsh_buckets,
-    explode_e2lsh_probe_buckets,
-    load_e2lsh_params,
-    make_e2lsh_params,
-    make_e2lsh_udf,
-    multiprobe_buckets_numpy,
-    save_e2lsh_params,
-)
-from lsh_cascade_poc_spark.embedding.hyperplanes import generate_random_hyperplanes
-from lsh_cascade_poc_spark.embedding.itq import (
-    fit_itq_on_dataframe,
-    itq_fit,
-    itq_transform_numpy,
-    load_itq_model,
-    load_whiten_model,
-    make_itq_udf,
-    save_itq_model,
-    save_whiten_model,
-    whitening_fit,
-    whitening_transform_numpy,
-)
-from lsh_cascade_poc_spark.embedding.vector_hash import (
-    explode_overlap_segments,
-    simhash_vectors_numpy,
-)
+from lsh_cascade_poc_spark.embedding.itq import itq_fit
+from lsh_cascade_poc_spark.embedding.vector_hash import explode_overlap_segments
 
 N_BITS = 128
 BAND_BITS = 8
 DIM = 32
+
+
+def generate_random_hyperplanes(dim: int, n_bits: int, seed: int) -> np.ndarray:
+    """(n_bits, dim) float32 Gaussian hyperplanes (reference
+    generate_random_hyperplanes, src/lsh.py:29-43)."""
+    return np.random.default_rng(seed).standard_normal((n_bits, dim)).astype(np.float32)
+
+
+def simhash_vectors_numpy(vectors: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(n, dim) x (n_bits, dim) -> (n, n_bits // 64) int64 SimHash lanes
+    (reference SimHashGenerator.hash_batch, src/lsh.py:234-263): bit b =
+    planes[b] . v > 0, stored in lane b // 64 at position b % 64."""
+    proj = vectors.astype(np.float32) @ planes.T.astype(np.float32)
+    n, n_bits = proj.shape
+    bits = (proj > 0).astype(np.uint64).reshape(n, n_bits // 64, 64)
+    return (bits << np.arange(64, dtype=np.uint64)).sum(
+        axis=2, dtype=np.uint64).astype(np.int64)
+
+
+def make_simhash_confidence_udf(planes: np.ndarray):
+    """pandas_udf: embedding -> struct(lanes, proj), the fingerprint plus the
+    per-bit projection values (reference transform_with_confidence,
+    src/dflsh.py:101-134). Self-contained, so Spark's Python workers need
+    not import this test module."""
+    p = planes.astype(np.float32)
+
+    @F.pandas_udf(T.StructType([
+        T.StructField("lanes", T.ArrayType(T.LongType())),
+        T.StructField("proj", T.ArrayType(T.FloatType())),
+    ]))
+    def simhash_conf(s: pd.Series) -> pd.DataFrame:
+        mat = np.stack([np.asarray(v, dtype=np.float32) for v in s])
+        proj = mat @ p.T                                  # (n, n_bits)
+        n, n_bits = proj.shape
+        bits = (proj > 0).astype(np.uint64).reshape(n, n_bits // 64, 64)
+        lanes = (bits << np.arange(64, dtype=np.uint64)).sum(
+            axis=2, dtype=np.uint64).astype(np.int64)
+        return pd.DataFrame({"lanes": list(lanes), "proj": list(proj)})
+
+    return simhash_conf
 
 
 @pytest.fixture(scope="module")
@@ -125,43 +141,43 @@ def test_confidence_probes_superset_and_recall(spark, vecs, planes):
     assert len(planted & c_multi) >= len(planted & c_base)
 
 
-def test_e2lsh_probe_parity_and_superset(spark, vecs):
-    params = make_e2lsh_params(DIM, k=3, n_tables=4, w=1.5, seed=5)
-    df = _vec_df(spark, vecs)
-    buckets = df.select("vec_id", make_e2lsh_udf(params)("embedding").alias("b"))
-    buckets = buckets.localCheckpoint(eager=True)
+def test_e2lsh_probe_parity_and_superset(spark, write_embeddings):
+    """q_e2lsh_multiprobe: its buckets are floor((a.v + b) / w) (numpy, up to
+    6-decimal rounding at floor boundaries); queries vec_id < 5 pair with
+    exactly the docs whose bucket equals the base bucket or one of its four
+    +-1 single-coordinate perturbations in some table — a strict superset
+    of the plain bucket-join candidates."""
+    # 64-dim, the width the oracle params are drawn at; unnormalized so the
+    # projections spread over many w=4 buckets
+    x = np.random.default_rng(5).standard_normal((60, 64)).astype(np.float32)
+    sf = write_embeddings(x)
+    base = entry.q_e2lsh_buckets(spark, sf).collect()
+    a, b, w = entry._e2lsh_oracle_params()
+    got_b = np.zeros((len(x), a.shape[0], 2), dtype=np.int64)
+    for r in base:
+        got_b[r.vec_id, r.table_id] = (r.b0, r.b1)
+    want_b = np.floor(
+        (np.einsum("tkd,nd->ntk", a, x.astype(np.float64)) + b[None]) / w
+    ).astype(np.int64)
+    assert np.abs(got_b - want_b).max() <= 1
+    assert (got_b == want_b).mean() > 0.99
 
-    # parity: the Spark probe table's bucket keys == xxhash64 of the numpy
-    # probe tuples (base + perturbations), hashed through the same JVM expr
-    n_probes = 4
-    got = {
-        (r.vec_id, r.table_id, r.bucket_key)
-        for r in explode_e2lsh_probe_buckets(buckets, "b", k=3, n_probes=n_probes).collect()
-    }
-    bk = e2lsh_buckets_numpy(vecs, params)  # (n, L, k)
-    expected_rows = []
-    for i in range(len(vecs)):
-        for t in range(params.n_tables):
-            base = bk[i, t]
-            for probe in [base] + multiprobe_buckets_numpy(base, n_probes):
-                expected_rows.append((i, t, list(map(int, probe))))
-    edf = spark.createDataFrame(
-        expected_rows, "vec_id long, table_id int, bucket array<int>"
-    ).select("vec_id", "table_id", F.xxhash64("table_id", "bucket").alias("bucket_key"))
-    want = {(r.vec_id, r.table_id, r.bucket_key) for r in edf.collect()}
+    got = {(r.query_id, r.doc_id)
+           for r in entry.q_e2lsh_multiprobe(spark, sf).collect()}
+    deltas = [(0, 0), (-1, 0), (1, 0), (0, -1), (0, 1)]
+    want, plain = set(), set()
+    for q in range(5):
+        for d in range(len(x)):
+            if d == q:
+                continue
+            for t in range(a.shape[0]):
+                diff = tuple(got_b[d, t] - got_b[q, t])
+                if diff in deltas:
+                    want.add((q, d))
+                if diff == (0, 0):
+                    plain.add((q, d))
     assert got == want
-
-    # superset: multiprobe candidates contain the plain bucket-join candidates
-    doc_b = explode_e2lsh_buckets(buckets, "b")
-    plain = {
-        (r.id_a, r.id_b) for r in e2lsh_candidate_pairs(doc_b).collect()
-    }
-    qp = explode_e2lsh_probe_buckets(buckets, "b", k=3, n_probes=n_probes)
-    multi = {
-        tuple(sorted((r.query_id, r.doc_id)))
-        for r in e2lsh_query_candidates(doc_b, qp).collect()
-    }
-    assert plain <= multi
+    assert plain < got
 
 
 def test_overlap_segment_parity(spark, vecs, planes):
@@ -191,149 +207,56 @@ def test_overlap_segment_parity(spark, vecs, planes):
     assert got == want
 
 
-def test_model_save_load_roundtrip(tmp_path, vecs, spark):
-    """S10: persisted ITQ / whitening / E2LSH params reproduce codes exactly
-    (reference save/load: src/itq_lsh.py:204-237, src/whitening.py:115-140,
-    src/dflsh.py:264-289)."""
-    itq = itq_fit(vecs, 32, n_iter=10, seed=9)
-    save_itq_model(itq, str(tmp_path / "itq.npz"))
-    itq2 = load_itq_model(str(tmp_path / "itq"))
-    assert np.array_equal(itq_transform_numpy(vecs, itq), itq_transform_numpy(vecs, itq2))
-
-    wm = whitening_fit(vecs)
-    save_whiten_model(wm, str(tmp_path / "wm.npz"))
-    wm2 = load_whiten_model(str(tmp_path / "wm"))
-    assert np.array_equal(
-        whitening_transform_numpy(vecs, wm), whitening_transform_numpy(vecs, wm2)
-    )
-
-    ep = make_e2lsh_params(DIM, k=3, n_tables=2, w=2.0, seed=1)
-    save_e2lsh_params(ep, str(tmp_path / "e2lsh.npz"))
-    ep2 = load_e2lsh_params(str(tmp_path / "e2lsh"))
-    assert np.array_equal(e2lsh_buckets_numpy(vecs, ep), e2lsh_buckets_numpy(vecs, ep2))
-    assert ep2.w == ep.w
 
 
 def test_fit_itq_deterministic_across_partitionings(spark, vecs):
+    """The driver's ITQ fit matrix (_itq_fit_matrix) is read in vec_id
+    order, so the fitted model does not depend on the physical layout."""
     df1 = _vec_df(spark, vecs).repartition(7)
     df2 = _vec_df(spark, vecs).repartition(2).sortWithinPartitions("embedding")
-    m1 = fit_itq_on_dataframe(df1, "embedding", 32, sample_rows=25, n_iter=5)
-    m2 = fit_itq_on_dataframe(df2, "embedding", 32, sample_rows=25, n_iter=5)
+    x1 = entry._itq_fit_matrix(df1)
+    x2 = entry._itq_fit_matrix(df2)
+    assert np.array_equal(x1, vecs) and np.array_equal(x2, vecs)
+    m1 = itq_fit(x1, 32, n_iter=5, seed=42)
+    m2 = itq_fit(x2, 32, n_iter=5, seed=42)
     assert np.array_equal(m1.mean, m2.mean)
     assert np.array_equal(m1.pca, m2.pca)
     assert np.array_equal(m1.rotation, m2.rotation)
 
 
-def test_combined_band_pivot_filter(spark, vecs, planes):
-    """Composition parity (reference combined_band_pivot_filter,
-    src/dflsh.py:460-519): output == band-join candidates pruned by the
-    numpy triangle-inequality mask."""
-    from lsh_cascade_poc_spark.embedding.search import (
-        combined_band_pivot_candidates,
-        with_pivot_distances,
-    )
-    from lsh_cascade_poc_spark.embedding.vector_hash import explode_lane_bands
+def test_ivf_assign_parity_and_full_probe_recall(spark, write_embeddings):
+    """q_ivf_topk: the SQL cell assignment == numpy argmax of the rounded
+    cosine to the driver-fitted centroids; every result lies in one of
+    the query's 4 probed cells; on clustered data the probed cells hold
+    the full brute-force top-10 (recall 1.0)."""
+    rng = np.random.default_rng(11)
+    centers = rng.standard_normal((16, 64))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    pts = []
+    for c in centers:
+        for _ in range(12):  # > top-10 + 1: every true neighbor is in-cluster
+            n = rng.standard_normal(64)
+            v = c + 0.25 * n / np.linalg.norm(n)
+            pts.append(v / np.linalg.norm(v))
+    x = np.stack(pts).astype(np.float32)
+    sf = write_embeddings(x)
 
-    lanes = simhash_vectors_numpy(vecs, planes)
-    pdf = pd.DataFrame({
-        "vec_id": np.arange(len(vecs), dtype=np.int64),
-        "lanes": [row for row in lanes],
-    })
-    df = spark.createDataFrame(pdf).localCheckpoint(eager=True)
-    pivots = lanes[:3]
-    with_pd = with_pivot_distances(df, "lanes", pivots).localCheckpoint(eager=True)
+    base = entry._ivf_base(spark, sf)
+    cells = {r.vec_id: r.cell
+             for r in base.select("vec_id", entry._ivf_cell().alias("cell")).collect()}
+    cents = entry._ivf_oracle_centroids(x)
+    x64 = x.astype(np.float64)
+    sims = np.round((x64 @ cents.T) / np.linalg.norm(x64, axis=1, keepdims=True), 6)
+    assert cells == {i: int(np.argmax(sims[i])) for i in range(len(x))}
 
-    bands = explode_lane_bands(df, "lanes", N_BITS, band_bits=8)
-    queries = df.filter(F.col("vec_id") < 5)
-    q_bands = explode_lane_bands(queries, "lanes", N_BITS, band_bits=8)
-    threshold = 6
-    got = {
-        (r.query_id, r.doc_id)
-        for r in combined_band_pivot_candidates(
-            bands, q_bands, with_pd, with_pd, n_pivots=3, threshold=threshold
-        ).filter(F.col("query_id") != F.col("doc_id")).collect()
-    }
-
-    # numpy reference
-    u = lanes.astype(np.uint64)
-
-    def ham(a, b):
-        return sum(int(x ^ y).bit_count() for x, y in zip(a, b))
-
-    pd_mat = np.array([[ham(row, p) for p in pivots.astype(np.uint64)] for row in u])
-    want = set()
-    n_bands = N_BITS // 8
+    res = entry.q_ivf_topk(spark, sf).collect()
+    cos = (x64 @ x64.T) / np.outer(np.linalg.norm(x64, axis=1), np.linalg.norm(x64, axis=1))
+    hits = 0
     for q in range(5):
-        for d in range(len(vecs)):
-            if d == q:
-                continue
-            share = any(
-                (int(u[q][b * 8 // 64]) >> (b * 8 % 64)) & 0xFF
-                == (int(u[d][b * 8 // 64]) >> (b * 8 % 64)) & 0xFF
-                for b in range(n_bands)
-            )
-            if share and all(
-                abs(pd_mat[d][i] - pd_mat[q][i]) <= threshold for i in range(3)
-            ):
-                want.add((q, d))
-    assert got == want
-
-
-def test_ivf_assign_parity_and_full_probe_recall(spark, vecs):
-    """IVF: Spark cell assignment == numpy argmax; probing ALL cells
-    recovers exactly the brute-force top-k; model save/load roundtrip."""
-    from lsh_cascade_poc_spark.embedding.ivf import (
-        assign_cells,
-        fit_ivf_on_dataframe,
-        ivf_fit,
-        ivf_search,
-        load_ivf_model,
-        save_ivf_model,
-    )
-    from lsh_cascade_poc_spark.embedding.search import cosine_topk
-
-    df = _vec_df(spark, vecs).localCheckpoint(eager=True)
-    model = ivf_fit(vecs, n_cells=4, n_iter=10, seed=1)
-
-    with_cells = assign_cells(df, model)
-    got = {r.vec_id: r.cell_id for r in with_cells.collect()}
-    n = np.linalg.norm(vecs, axis=1, keepdims=True)
-    want = np.argmax((vecs / n) @ model.centroids.T, axis=1)
-    assert got == {i: int(want[i]) for i in range(len(vecs))}
-
-    queries = df.filter(F.col("vec_id") < 4)
-    full = ivf_search(with_cells, queries, model, top_k=5, nprobe=4)
-    brute = cosine_topk(
-        df, queries.withColumnRenamed("vec_id", "query_id"), 5
-    ).filter(F.col("query_id") != F.col("doc_id"))
-    got_pairs = {(r.query_id, r.doc_id) for r in full.collect()}
-    # brute force includes self-matches at rank 1 which ivf_search excludes;
-    # recompute brute without self for a fair set comparison
-    brute2 = cosine_topk(
-        df.filter(F.col("vec_id") >= 0), queries.withColumnRenamed("vec_id", "query_id"),
-        6
-    ).filter(F.col("query_id") != F.col("doc_id")) \
-        .filter(F.col("rank") <= 6)
-    want_pairs = set()
-    per_q: dict = {}
-    for r in sorted(brute2.collect(), key=lambda r: (r.query_id, r.rank)):
-        per_q.setdefault(r.query_id, [])
-        if len(per_q[r.query_id]) < 5:
-            per_q[r.query_id].append(r.doc_id)
-            want_pairs.add((r.query_id, r.doc_id))
-    assert got_pairs == want_pairs
-
-    # nprobe=1 candidates are a subset; recall still positive
-    one = ivf_search(with_cells, queries, model, top_k=5, nprobe=1)
-    assert 0 < one.count() <= full.count()
-
-
-def test_ivf_model_roundtrip(tmp_path, vecs):
-    from lsh_cascade_poc_spark.embedding.ivf import (
-        ivf_fit, load_ivf_model, save_ivf_model,
-    )
-
-    m = ivf_fit(vecs, n_cells=4, n_iter=5, seed=7)
-    save_ivf_model(m, str(tmp_path / "ivf.npz"))
-    m2 = load_ivf_model(str(tmp_path / "ivf"))
-    assert np.array_equal(m.centroids, m2.centroids)
+        rows = sorted((r for r in res if r.query_id == q), key=lambda r: r.rank)
+        assert [r.rank for r in rows] == list(range(1, 11))
+        probed = set(np.argsort(-sims[q], kind="stable")[:4].tolist())
+        assert {cells[r.doc_id] for r in rows} <= probed
+        truth = [d for d in np.argsort(-cos[q], kind="stable") if d != q][:10]
+        hits += len({r.doc_id for r in rows} & set(truth))
+    assert hits / 50 == 1.0

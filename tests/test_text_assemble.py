@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 from lsh_cascade_poc_spark.functions.text import (
     fingerprint_md5,
     is_valid_text,
-    langid,
     normalize_text,
-    quality_features,
-    token_count,
 )
 from lsh_cascade_poc_spark.operators.assemble import assemble_conversations
 from lsh_cascade_poc_spark.reference_impl import ref_assemble, ref_normalize
@@ -72,30 +69,45 @@ def test_assembly_matches_reference_per_turn(spark, tiny_corpus):
         assert line_got == line_want
 
 
-def test_quality_and_langid_and_fingerprint(spark):
-    df = spark.createDataFrame(
-        [
-            ("the cat and the dog is in the house, yes!",),
-            ("el gato es una casa por la manana como siempre",),
-            ("zz qq xx",),
-        ],
-        ["text"],
-    )
-    q = quality_features(F.col("text"))
-    rows = df.select(
-        token_count(F.col("text")).alias("ntok"),
-        q["stopword_ratio"].alias("stop"),
-        q["punct_ratio"].alias("punct"),
-        langid(F.col("text")).alias("lang"),
-        fingerprint_md5(F.col("text")).alias("fp"),
-    ).collect()
-    assert rows[0].ntok == 10
-    assert rows[0].stop > 0.3
-    assert rows[0].punct > 0
-    assert rows[0].lang == "en"
-    assert rows[1].lang == "es"
-    assert rows[2].lang == "und"
-    assert len(rows[0].fp) == 32
+def test_quality_and_langid_and_fingerprint(spark, tmp_path):
+    """The quality and language heuristics the driver runs (q_quality_scores,
+    q_langid) on hand-checked texts, and the exact-dup key: md5 of the whole
+    normalized text, so whitespace variants share it and two long texts
+    that differ only past 2048 normalized characters (the former
+    truncation default) do not."""
+    import hashlib
+
+    import __spark_entry__ as entry
+
+    texts = [
+        "the cat and the dog is in the house, yes!",
+        "el gato es una casa por la manana como siempre",
+        "zz qq xx yy ww",
+    ]
+    sf = tmp_path / "sf"
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string") \
+        .write.parquet(str(sf / "documents.parquet"))
+    q = {r.doc_id: r for r in entry.q_quality_scores(spark, str(sf)).collect()}
+    assert q[0].n_tokens == 10
+    assert q[0].stopword_ratio == 0.6  # the x3, and, is, in
+    assert q[0].unique_ratio == 0.8    # 8 distinct: "the" x3
+    assert q[2].stopword_ratio == 0.0
+    lang = {r.doc_id: r.pred_lang for r in entry.q_langid(spark, str(sf)).collect()}
+    assert lang == {0: "en", 1: "es", 2: "und"}
+
+    shared = "word " * 600  # 3000 normalized chars
+    texts = [
+        "the cat  and\tthe dog",
+        " the cat and the dog ",
+        shared + "tail one",
+        shared + "tail two",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    fps = [r.fp for r in df.select(fingerprint_md5(F.col("text")).alias("fp")).collect()]
+    assert fps == [hashlib.md5(ref_normalize(t, 0).encode()).hexdigest() for t in texts]
+    assert all(len(fp) == 32 for fp in fps)
+    assert fps[0] == fps[1]
+    assert fps[2] != fps[3]
 
 
 def test_shingled_queries_survive_short_token_docs(spark, tmp_path):
