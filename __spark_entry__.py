@@ -311,6 +311,8 @@ def q_lsh_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full normalize -> shingle -> 4x md5-per-shingle expression tree —
     the dominant cost of the query (measured 3.15s -> ~1.8s at sf0.1,
     plan: 2x md5 projection subtrees -> 1; guide §2.4 duplicated subtrees)."""
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     sig = q_minhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
     bands = sig.select(
         "doc_id",
@@ -897,6 +899,8 @@ def q_prod_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint: sizes + both self-join sides consume `sh` — without plan
     # truncation the Arrow shingle kernel would run three times over
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     sh = docs.select(
         "doc_id", make_shingles_udf(5)(F.col("norm_text")).alias("shingles")
     ).localCheckpoint(eager=True)
@@ -981,6 +985,8 @@ def q_prod_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # checkpoint: bands and both exact-verify sides consume sig — without
     # plan truncation the Arrow signature kernel would run three times
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     sig = _prod_signatures(spark, sf_dir).localCheckpoint(eager=True)
     mh = sig.select("doc_id", F.col("sig.minhash").alias("minhash"))
     bands = explode_bands(mh, "minhash", tier=0, n_bands=16, rows_per_band=4)
@@ -1137,6 +1143,8 @@ def q_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side (plans/r06/contamination_overlap_before.txt, Filter (2));
     # measured 2.10-2.38s -> 0.95-1.19s at sf0.1, identical 4,498 rows
     # (guide §7.2 duplicated subtrees / §4.4 class of optimizer duplication)
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     sh = _docs_shingled(spark, sf_dir).withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(1000))
     ).localCheckpoint(eager=True)
@@ -1249,6 +1257,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 1.08s -> ~0.7s at sf0.1). Identical output: dl and n_docs
     # are computed before the term filter, and explode(filter(toks)) emits
     # exactly the rows explode(toks).filter(isin) did.
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     base = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
@@ -1531,6 +1541,8 @@ def q_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized: the candidate gate's per-fp count and both sides of
     # the fp self-join read it, and lazy each could re-run the winnow
     # kernel (see pipeline.py overlap_pairs)
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     fps = winnow_fingerprints(docs, k=24, w=32).localCheckpoint(eager=True)
     # the oracle's gate: 2..200 docs per fp, no minimum shared-fp count
     cands = overlap_candidates(
@@ -1565,6 +1577,8 @@ def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" (x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, v) -> acc + v)"
             f" - {c[j]:.6f}D, 6) >= 0D THEN {1 << j} ELSE 0 END)"
         )
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     base = emb.select(
         "vec_id", "embedding",
         F.expr(f"CAST({' + '.join(bits)} AS INT)").alias("itq16"),
@@ -1724,6 +1738,8 @@ def q_e2lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine exact. This is the one E2LSH multiprobe implementation;
     the production bucket kernel of the same hash family runs in
     q_e2lsh_pairs."""
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     base = q_e2lsh_buckets(spark, sf_dir).localCheckpoint(eager=True)
     # coordinate-major (-1, +1 per coordinate) + the base bucket first —
     # generate_multiprobe_keys order with k=2 (all 4 perturbations fit)
@@ -1880,6 +1896,8 @@ def _ivf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
         for j in range(cents.shape[0])
     ]
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     return emb.select(
         "vec_id", "embedding", F.array(*sims).alias("sims")
     ).localCheckpoint(eager=True)
@@ -1993,6 +2011,8 @@ def q_media_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection — lazy, the hash tree evaluates once per side (the
     # q_lsh_band_pairs treatment; rows are tiny: media_id + int64 + 64-char
     # hex per doc)
+    # unreplicated localCheckpoint blocks: a lost executor fails the query
+    # instead of recomputing it, accepted as each driver query is one short job
     sig = docs.select(
         F.col("doc_id").alias("media_id"),
         F.sha2(payload, 256).alias("h"),

@@ -9,10 +9,12 @@ shuffle-based CC for Spark.
   large-star: for each node u, connect every neighbor v > u to min(N(u) ∪ u)
   small-star: for each node u, connect every neighbor v <= u to min(N(u) ∪ u)
 
-Each round is a groupBy(min) + join; lineage is cut every round with
-localCheckpoint (a real cluster run writes the frontier to the checkpoint
-store instead — see checkpoint.py). Convergence = edge set stable (count of
-changed edges == 0). Hot roots (a giant cluster's representative) are exactly
+Each round is a groupBy(min) + join; lineage is cut every two rounds with
+a localCheckpoint, in every run (the frontier is never written to the
+checkpoint store). Convergence is checked every two rounds by comparing an
+(edge count, xor checksum) signature of the edge set with the previous
+one; once at most `local_finish_edges` edges remain, the driver finishes
+with a union-find. Hot roots (a giant cluster's representative) are exactly
 the skew AQE's skew-join splitting handles; the groupBy side uses partial
 aggregation so a hot node aggregates map-side first.
 """

@@ -146,7 +146,9 @@ def tag_exact_duplicates(docs_with_fp: DataFrame) -> DataFrame:
     return docs_with_fp.withColumn("_root", F.min("doc_id").over(w))
 
 
-def split_exact_duplicates(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_exact_duplicates(
+    tagged: DataFrame, indexed: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """(representatives, star_edges) from a tag_exact_duplicates output.
 
     representatives = the min-id row of every fingerprint group; star_edges =
@@ -156,11 +158,36 @@ def split_exact_duplicates(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     edges instead of m fingerprint-colliding rows in every band bucket.
     Near-dup relations are invariant under the collapse (identical text =>
     identical shingles => identical jaccard to any third doc), and connected
-    components re-attaches members through the star edges."""
+    components re-attaches members through the star edges.
+
+    `indexed` (fingerprint, doc_id) are the fingerprints an earlier
+    micro-batch already signed (a stream index holds one row per distinct
+    fingerprint ever seen): a representative whose fingerprint is among
+    them attaches to that indexed doc by an equi-join, as one more exact
+    pair, and leaves the representatives: it is never signed or banded
+    again, so a text flooding batch after batch adds no rows to the
+    PERSISTENT index's buckets, where every later probe would pay for
+    them. None is an empty index (a batch run)."""
     reps = tagged.filter(F.col("doc_id") == F.col("_root")).drop("_root")
     star = (
         tagged.filter(F.col("doc_id") != F.col("_root"))
         .select(F.col("_root").alias("id_a"), F.col("doc_id").alias("id_b"))
     )
-    return reps, star
-
+    if indexed is None:
+        return reps, star
+    matched = reps.join(
+        indexed.select("fingerprint", F.col("doc_id").alias("id_old")),
+        "fingerprint",
+    ).select("doc_id", "id_old")
+    star = star.unionByName(
+        matched.select(
+            F.least("doc_id", "id_old").alias("id_a"),
+            F.greatest("doc_id", "id_old").alias("id_b"),
+        )
+        # a conversation re-delivered in a later batch (at-least-once
+        # source) matches its OWN indexed row — same guard as the probe
+        # joins (shared_key_pairs), else a degenerate self-pair lands in
+        # dup_pairs
+        .filter(F.col("id_a") != F.col("id_b"))
+    )
+    return reps.join(matched.select("doc_id"), "doc_id", "left_anti"), star

@@ -17,7 +17,7 @@ Our all-pairs restatement (SURVEY.md §7.1):
     Stage 2e winnowing/substring pass: exact long-overlap pairs
     Stage 3  exact Jaccard verify on the unioned candidate set
     Stage 4  connected components -> cluster assignment
-Stages 1-3 are one body, run_cascade, with two drivers: run_dedup runs it
+Stages 0-3 are one body, run_cascade, with two drivers: run_dedup runs it
 as a first micro-batch against an empty index, and streaming.py's
 IncrementalDedup.process_batch against its index as it stood before each
 micro-batch. Every stage can be checkpointed through StageStore (resume
@@ -179,9 +179,11 @@ def tight_tier(pairs: DataFrame, signatures: DataFrame,
 
 def _with_index(new: DataFrame, index: Mapping[str, DataFrame] | None,
                 name: str) -> DataFrame:
-    """`new` plus the rows of index table `name` (none for an empty
-    index): the side tables a probe's pairs read, over index ∪ new."""
-    return new if index is None else index[name].unionByName(new)
+    """`new` plus the rows of index table `name`, in `new`'s columns (none
+    for an empty index): the tables a step reads over index ∪ new."""
+    if index is None:
+        return new
+    return index[name].select(*new.columns).unionByName(new)
 
 
 def minhash_candidate_pairs(
@@ -306,6 +308,7 @@ def merge_evidence(verified: DataFrame, exact: DataFrame,
 
 @dataclass
 class CascadeResult:
+    docs: DataFrame           # the batch's docs (build_docs)
     signatures: DataFrame     # the fresh representatives' signatures
     hot: DataFrame            # (tier, band_id, band_key, n_docs) hot buckets
     texts: DataFrame | None   # (doc_id, doc_text) of the long representatives
@@ -313,22 +316,38 @@ class CascadeResult:
     dup_pairs: DataFrame      # (id_a, id_b, jaccard)
 
 
-def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
-                stage, index: Mapping[str, DataFrame] | None = None,
+def run_cascade(turns: DataFrame, cfg: DedupConfig, stage,
+                index: Mapping[str, DataFrame] | None = None,
                 overlap: bool = True) -> CascadeResult:
-    """The one cascade body of both drivers: signatures -> tier 0 + tier 1
-    -> SimHash -> winnow overlap -> Jaccard verify -> evidence merge.
+    """The one cascade body of both drivers, from turns to dup_pairs: docs
+    -> doc_id check -> exact collapse -> signatures -> tier 0 + tier 1 ->
+    SimHash -> winnow overlap -> Jaccard verify -> evidence merge.
 
-    `reps` are the fresh exact-group representatives (docs rows),
-    `exact_pairs` the exact-duplicate evidence (id_a, id_b), and
     `stage(name, factory)` materializes one stage. `index` holds the
     streaming index's tables as they stood before this batch, by name
-    (`signatures`, `overlap_fps`, `texts`); None is an empty
-    index, which is every batch run and a stream's first batch. Every
-    candidate tier probes it through shared_key_pairs (new x new plus
-    new x indexed), and the verify reads the indexed signatures; that is
-    the body's only branch on it. `overlap=False` skips the winnow stage
+    (`docs`, `signatures`, `overlap_fps`, `texts`); None is an empty
+    index, which is every batch run and a stream's first batch. The id
+    check covers the indexed docs too, the exact collapse attaches
+    representatives to the indexed fingerprints, every candidate tier
+    probes the index through shared_key_pairs (new x new plus new x
+    indexed), and the verify reads the indexed signatures; that is the
+    body's only branch on it. `overlap=False` skips the winnow stage
     (batch's enable_overlap_stage)."""
+    docs = stage("docs", lambda: build_docs(turns, cfg))
+    # the id-collision check runs SERIALLY, in front of the chains: as a
+    # third concurrent task it was measured 153.6-159.4s vs 149.2-150.2s
+    # for check-first + two chains (its countDistinct aggregate competes
+    # with the two Arrow kernels for cores exactly when they saturate the
+    # machine, delaying both chains for no overlap gain)
+    check_doc_id_collisions(
+        _with_index(docs.select("conv_id", "doc_id"), index, "docs"))
+    # exact-duplicate collapse BEFORE any signature computation or banding:
+    # representatives and star edges are NARROW filters over the docs
+    # checkpoint, the signature kernel runs over reps only, and all LSH
+    # passes see one row per distinct text; members re-attach via star
+    # edges in the clustering stage.
+    reps, exact_pairs = split_exact_duplicates(
+        docs, None if index is None else index["signatures"])
 
     # each candidate tier is its own materialization, NOT one fused write:
     # fusing them into a single job looked cheaper on paper (one Catalyst
@@ -407,7 +426,8 @@ def run_cascade(reps: DataFrame, exact_pairs: DataFrame, cfg: DedupConfig,
         )
         return merge_evidence(verified, exact_pairs, ov_pairs)
 
-    return CascadeResult(signatures=signatures, hot=hot, texts=texts, fps=fps,
+    return CascadeResult(docs=docs, signatures=signatures, hot=hot,
+                         texts=texts, fps=fps,
                          dup_pairs=stage("dup_pairs", _verify))
 
 
@@ -418,27 +438,10 @@ def run_dedup(
     store: StageStore | None = None,
     enable_overlap_stage: bool = True,
 ) -> DedupResult:
-    """Batch dedup: docs -> id check -> exact split -> the cascade body
-    against an empty index -> clusters."""
+    """Batch dedup: the cascade body against an empty index -> clusters."""
     cfg = cfg or DedupConfig()
-
     stage = local_stage if store is None else store.materialize
-
-    docs = stage("docs", lambda: build_docs(turns, cfg))
-    # the id-collision check runs SERIALLY, in front of the chains: as a
-    # third concurrent task it was measured 153.6-159.4s vs 149.2-150.2s
-    # for check-first + two chains (its countDistinct aggregate competes
-    # with the two Arrow kernels for cores exactly when they saturate the
-    # machine, delaying both chains for no overlap gain)
-    check_doc_id_collisions(docs)
-    # exact-duplicate collapse BEFORE any signature computation or banding:
-    # representatives and star edges are NARROW filters over the docs
-    # checkpoint, the signature kernel runs over reps only, and all LSH
-    # passes see one row per distinct text; members re-attach via star
-    # edges in the clustering stage.
-    reps_docs, star_edges = split_exact_duplicates(docs)
-    out = run_cascade(reps_docs, star_edges, cfg, stage,
-                      overlap=enable_overlap_stage)
+    out = run_cascade(turns, cfg, stage, overlap=enable_overlap_stage)
 
     # overlap-evidence-only pairs (jaccard = -1) are reported but never
     # merge clusters: shared boilerplate turns would otherwise chain
@@ -450,8 +453,8 @@ def run_dedup(
             connected_components(
                 cluster_edges.select("id_a", "id_b"), cfg.cc_max_iterations
             ),
-            docs,
+            out.docs,
         ),
     )
-    return DedupResult(docs=docs, signatures=out.signatures,
+    return DedupResult(docs=out.docs, signatures=out.signatures,
                        dup_pairs=out.dup_pairs, clusters=clusters)

@@ -5,20 +5,20 @@ doesn't require it either, but a 10^12-turn corpus is APPENDED to in
 practice, so the engine ships an incremental path:
 
   readStream(turn files) -> foreachBatch:
-      1. build the micro-batch's docs (complete convs per batch — the
-         file-per-conversation-chunk contract) and collapse exact
-         duplicates (within the batch and against the fingerprints of the
-         indexed signatures)
+      1. read the index as it stood before this batch (its committed
+         batches only)
       2. run the batch pipeline's cascade body (pipeline.py run_cascade)
-         over the fresh representatives, with the index as it stood before
-         this batch: signatures, the tier-0 band probe, the tier-1 slice
-         filter, the SimHash chunk probe, the winnow fingerprint probe, the
-         Jaccard verify and the evidence merge. Every probe is
-         operators/pairs.py shared_key_pairs with the indexed rows as its
-         `index` side (new x new plus new x indexed, never indexed x
-         indexed); a batch run is the same body against an empty index.
-         The doc_id collision check against every indexed doc runs next to
-         it (pipeline.py run_concurrently)
+         over the micro-batch's turns (complete convs per batch — the
+         file-per-conversation-chunk contract) against that index: the
+         docs, the doc_id collision check over the batch and every indexed
+         doc, the exact collapse (within the batch and against the
+         fingerprints of the indexed signatures), signatures, the tier-0
+         band probe, the tier-1 slice filter, the SimHash chunk probe, the
+         winnow fingerprint probe, the Jaccard verify and the evidence
+         merge. Every probe is operators/pairs.py shared_key_pairs with
+         the indexed rows as its `index` side (new x new plus new x
+         indexed, never indexed x indexed); a batch run is the same body
+         against an empty index
       3. write the batch's index tables concurrently; the ``_batch_<id>_done``
          marker, written after the last of them, is the commit point
 
@@ -29,8 +29,9 @@ differs:
   - a bucket can cross the cap after earlier batches already paired its
     docs: those pairs stay, and only later probes of the bucket stop.
 
-Each micro-batch costs one band join of (new x indexed) instead of a full
-self-join — the standard "probe the inverted index" incremental dedup. All
+Each micro-batch costs three probes of (new x indexed) — the tier-0 bands,
+the SimHash chunks and the winnow fingerprints — instead of full
+self-joins: the standard "probe the inverted index" incremental dedup. All
 state lives in parquet tables (index_dir), so the stream is restartable via
 Spark's checkpointLocation + idempotent batch-id guard. Each fact is stored
 once, in one of six tables (INDEX_TABLES):
@@ -55,14 +56,7 @@ from pyspark.sql import functions as F
 
 from .checkpoint import resolve_fs
 from .config import DedupConfig
-from .operators.pairs import split_exact_duplicates
-from .pipeline import (
-    build_docs,
-    check_doc_id_collisions,
-    local_stage,
-    run_cascade,
-    run_concurrently,
-)
+from .pipeline import local_stage, run_cascade, run_concurrently
 
 TURNS_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -104,6 +98,11 @@ class IncrementalDedup:
         """Path as Spark sees it (keeps the URI scheme)."""
         return f"{self.index_dir.rstrip('/')}/{name}"
 
+    def _done_marker(self, root: str, batch_id: int) -> str:
+        """The commit marker of `batch_id` under the index `root` (as
+        resolve_fs returns it)."""
+        return f"{root.rstrip('/')}/_batch_{batch_id}_done"
+
     def _list_table(self, name: str) -> tuple[dict[int, str], list[int]]:
         """Direct children of a table dir -> ({batch_or_gen dir key: base
         name}, [marked compaction gens]). Compacted partitions are stored as
@@ -134,34 +133,42 @@ class IncrementalDedup:
 
     def _read_table(self, name: str, batch_id: int | None = None) -> DataFrame:
         """One listing of a table's directory -> its CURRENT view: the
-        newest MARKED compacted partition plus every per-batch directory
-        above its watermark (and below `batch_id` when given: the index as
-        it stood before that batch). Stale artifacts a crash can leave
-        behind — an unmarked compacted dir (died before its marker), an
-        older compacted gen or folded batch dirs (died before GC) — are
-        never selected, so deletion in _compact is pure garbage collection,
-        never a correctness step. Leaving out the reading batch's own
-        directory hides a crashed attempt's half-written output from its
-        replay, which then overwrites that directory, so a replay can never
-        accumulate duplicate rows. (A replayed batch can never sit BELOW a
-        compaction watermark: compaction only folds done-marked batches,
-        and done batches short-circuit in process_batch.)
+        newest MARKED compacted partition plus every COMMITTED per-batch
+        directory (its ``_batch_<k>_done`` marker exists; one metadata call
+        checks them all) above its watermark, and below `batch_id` when
+        given: the index as it stood before that batch. Stale artifacts a
+        crash can leave behind — a failed batch's partial writes (died
+        before its marker), an unmarked compacted dir (died before its
+        marker), an older compacted gen or folded batch dirs (died before
+        GC) — are never selected, so deletion in _compact is pure garbage
+        collection, never a correctness step, and a replay, which
+        overwrites its batch's directories, never reads or accumulates
+        duplicate rows. (A replayed batch can never sit BELOW a compaction
+        watermark: compaction only folds done-marked batches, and done
+        batches short-circuit in process_batch.)
 
         With nothing selected it raises FileNotFoundError: before the
         first committed batch the index is empty (process_batch's
         `index=None`)."""
+        from pyarrow import fs as pafs
+
         dirs, gens = self._list_table(name)
         gen = max((g for g in gens if -(g + 1) in dirs), default=None)
-        keys = [] if gen is None else [-(gen + 1)]
-        keys += sorted(
+        batches = sorted(
             b for b in dirs
             if b >= 0 and (gen is None or b > gen)
             and (batch_id is None or b < batch_id)
         )
+        fs, root = resolve_fs(self.index_dir)
+        markers = fs.get_file_info(
+            [self._done_marker(root, b) for b in batches])
+        keys = [] if gen is None else [-(gen + 1)]
+        keys += [b for b, m in zip(batches, markers)
+                 if m.type != pafs.FileType.NotFound]
         if not keys:
             raise FileNotFoundError(
                 f"index table {name!r} under {self.index_dir} holds no "
-                "batch yet"
+                "committed batch yet"
             )
         base = self._path(name)
         return self.spark.read.option("basePath", base) \
@@ -230,63 +237,21 @@ class IncrementalDedup:
             return None
 
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
-        cfg = self.cfg
         from pyarrow import fs as pafs
 
         fs, root = resolve_fs(self.index_dir)
-        done_marker = f"{root.rstrip('/')}/_batch_{batch_id}_done"
+        done_marker = self._done_marker(root, batch_id)
         if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
             return  # replayed micro-batch after restart: already applied
 
-        docs = local_stage("docs", lambda: build_docs(turns_batch, cfg))
-        index = self._index(batch_id)
-        # the id-collision check covers every doc ever ingested
-        ids = docs.select("conv_id", "doc_id")
-        # exact-fingerprint collapse BEFORE the signature kernel or banding
-        # (same scale move as the batch path, pipeline.py run_dedup): an
-        # identical-payload flood costs m-1 star edges — never m signature-
-        # kernel invocations, and never m rows in a band bucket of the
-        # PERSISTENT index (where one such bucket would make every future
-        # batch's probe join quadratic). Within-batch groups collapse to
-        # their min-id rep; reps whose fingerprint is already indexed (the
-        # signatures table holds one row per distinct fingerprint ever seen;
-        # Parquet reads only the two projected columns) attach to the
-        # indexed root by an equi-join and are not signed or banded.
-        reps_docs, exact_pairs = split_exact_duplicates(docs)
-        if index is not None:
-            ids = ids.unionByName(index["docs"].select("conv_id", "doc_id"))
-            matched = reps_docs.join(
-                index["signatures"].select(
-                    "fingerprint", F.col("doc_id").alias("id_old")),
-                "fingerprint",
-            ).select("doc_id", "id_old")
-            exact_pairs = exact_pairs.unionByName(
-                matched.select(
-                    F.least("doc_id", "id_old").alias("id_a"),
-                    F.greatest("doc_id", "id_old").alias("id_b"),
-                )
-                # a conversation re-delivered in a later batch (at-least-once
-                # source) matches its OWN indexed row — same guard as the
-                # probe joins (shared_key_pairs), else a degenerate
-                # self-pair lands in dup_pairs
-                .filter(F.col("id_a") != F.col("id_b"))
-            )
-            reps_docs = reps_docs.join(
-                matched.select("doc_id"), "doc_id", "left_anti"
-            )
-
-        # the cascade reads only docs and the index as it stood before this
-        # batch; the id check runs next to it and, like it, returns before
-        # the first index write below, so a failing batch leaves no
-        # done-marker. Every stage of the cascade, dup_pairs included, is
-        # materialized before the writes touch the index dirs: a replay
-        # OVERWRITES this batch's own subdirectories.
-        out, _ = run_concurrently(
-            self.spark,
-            partial(run_cascade, reps_docs, exact_pairs, cfg, local_stage,
-                    index),
-            partial(check_doc_id_collisions, ids),
-        )
+        # the cascade reads only the batch and the index as it stood before
+        # it, and raises (a doc_id collision included) before the first
+        # index write below, so a failing batch leaves no done-marker. Every
+        # stage of the cascade, dup_pairs included, is materialized before
+        # the writes touch the index dirs: a replay OVERWRITES this batch's
+        # own subdirectories.
+        out = run_cascade(turns_batch, self.cfg, local_stage,
+                          self._index(batch_id))
 
         # batch-scoped subdirectories + overwrite: a crash between the
         # writes is healed by the replay overwriting the SAME directories,
@@ -297,7 +262,7 @@ class IncrementalDedup:
             # narrow per-doc bookkeeping (EVERY doc, signed or not): id
             # mapping + fingerprint — the signature table carries only
             # fresh representatives
-            "docs": docs.select("conv_id", "doc_id", "fingerprint"),
+            "docs": out.docs.select("conv_id", "doc_id", "fingerprint"),
             "signatures": out.signatures,
             "dup_pairs": out.dup_pairs,
             "overlap_fps": out.fps,

@@ -108,7 +108,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     # crash mid-write: the first attempt left EXTRA rows (duplicated file)
     # in its own batch dir. The replay must neither keep them (overwrite
     # heals the dir) nor READ them as index state while recomputing
-    # (_read_table excludes the replaying batch).
+    # (_read_table selects only done-marked batches below the replaying one).
     import glob
     import shutil
 
@@ -116,7 +116,10 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     sig_dir = os.path.join(str(tmp_path / "index"), "signatures", "batch_id=0")
     a_file = glob.glob(os.path.join(sig_dir, "*.parquet"))[0]
     shutil.copy(a_file, os.path.join(sig_dir, "part-dup-copy.parquet"))
-    assert inc.signatures().count() > sigs1  # corruption is visible pre-replay
+    # the corruption is on disk, but readers select committed batches only
+    assert spark.read.parquet(sig_dir).count() > sigs1
+    with pytest.raises(FileNotFoundError):
+        inc.signatures()
     inc.process_batch(batch, 0)
     assert inc.signatures().count() == sigs1
     assert {(r.id_a, r.id_b) for r in inc.dup_pairs().collect()} == pairs1
@@ -552,7 +555,7 @@ def _partition(conv_of: dict, edges) -> set[frozenset]:
 
 def test_batch_stream_parity(spark, tmp_path):
     """Where the two drivers coincide — no hot bucket — batch run_dedup and
-    streaming in 2 or 3 micro-batches cluster the corpus identically: both
+    streaming in 1, 2 or 3 micro-batches cluster the corpus identically: both
     run one cascade body (tier 0, the tier-1 slice filter, the SimHash
     pass, the overlap stage, the verify). Two configs: tier 1 at m=1 with
     the overlap stage running, and a tier 1 that binds (m=5 of 5 slices:
@@ -560,7 +563,9 @@ def test_batch_stream_parity(spark, tmp_path):
     back as SimHash candidates), which changes the batch clusters. The binding one gates the overlap
     stage off, whose Jaccard-verified candidates would bring back the pairs
     tier 1 drops. Exact-group representatives may differ between the
-    paths, so partitions of conv_ids are compared, not raw pairs. Neither
+    paths, so partitions of conv_ids are compared, not raw pairs — except
+    for a one-batch stream, a batch run's micro-batch against an empty
+    index, whose dup_pairs must equal the batch run's row for row. Neither
     driver leaves a cached table behind."""
     from lsh_cascade_poc_spark.pipeline import run_dedup
 
@@ -580,18 +585,18 @@ def test_batch_stream_parity(spark, tmp_path):
                    for r in res.docs.select("doc_id", "conv_id").collect()}
         return conv_of, _partition(conv_of, [
             (r.doc_id, r.cluster_id) for r in res.clusters.collect()
-        ])
+        ]), sorted(tuple(r) for r in res.dup_pairs.collect())
 
-    _, bypassed = batch_run(DedupConfig(tight_min_match=0, **base,
-                                        **no_overlap))
+    _, bypassed, _ = batch_run(DedupConfig(tight_min_match=0, **base,
+                                           **no_overlap))
     configs = {"m1": DedupConfig(**base),
                "m5": DedupConfig(tight_min_match=5, **base, **no_overlap)}
     for name, cfg in configs.items():
-        conv_of, batch = batch_run(cfg)
+        conv_of, batch, batch_pairs = batch_run(cfg)
         assert any(len(g) > 1 for g in batch)
         if name == "m5":
             assert batch != bypassed  # the tight tier binds
-        for k in (2, 3):
+        for k in (1, 2, 3):
             inc = IncrementalDedup(spark, str(tmp_path / f"{name}_{k}"), cfg)
             for i in range(k):
                 part = turns[turns.conv_id.isin(convs[i::k])]
@@ -600,6 +605,9 @@ def test_batch_stream_parity(spark, tmp_path):
             stream_conv_of = {r.doc_id: r.conv_id for r in
                               inc.docs().select("doc_id", "conv_id").collect()}
             assert stream_conv_of == conv_of
+            if k == 1:
+                assert sorted(tuple(r) for r in inc.dup_pairs().select(
+                    "id_a", "id_b", "jaccard").collect()) == batch_pairs, name
             edges = [(r.id_a, r.id_b) for r in
                      inc.dup_pairs().filter(F.col("jaccard") >= 0).collect()]
             assert _partition(conv_of, edges) == batch, \
@@ -609,7 +617,8 @@ def test_batch_stream_parity(spark, tmp_path):
 def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):
     """One of the concurrent index writes fails: process_batch raises only
     after every sibling write has finished (no Spark job outlives it), the
-    batch leaves no done-marker, and the replay gives the dup pairs of an
+    batch leaves no done-marker, the readers see only the committed batch
+    until the replay, and the replay gives the dup pairs of an
     uninterrupted index."""
     corpus = generate_corpus(n_base=20, dup_fraction=0.5, seed=5)
     turns = corpus.turns
@@ -625,6 +634,16 @@ def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):
     index = tmp_path / "index"
     inc = IncrementalDedup(spark, str(index), CFG)
     inc.process_batch(batches[0], 0)
+
+    def readers():
+        return (
+            sorted(tuple(r) for r in inc.dup_pairs().collect()),
+            sorted(r.doc_id for r in inc.signatures().collect()),
+            sorted(tuple(r) for r in inc.docs().select(
+                "conv_id", "doc_id", "_root").collect()),
+        )
+
+    committed = readers()
     write = IncrementalDedup._write_batch
     in_flight = []
 
@@ -647,6 +666,9 @@ def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):
     assert in_flight == []
     assert not (index / "_batch_1_done").exists()
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    # the failed batch's finished writes are on disk but uncommitted
+    assert (index / "dup_pairs" / "batch_id=1").exists()
+    assert readers() == committed
 
     monkeypatch.setattr(IncrementalDedup, "_write_batch", write)
     inc.process_batch(batches[1], 1)
