@@ -28,7 +28,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_COMMIT_MARKER = "_COMMITTED"
+# a StageStore stage, and a stream index commit (streaming.py), counts iff
+# its directory holds this marker
+COMMIT_MARKER = "_COMMITTED"
 
 METRICS_SCHEMA = (
     "stage string, config_hash string, rows_out bigint, n_partitions int, "
@@ -69,7 +71,7 @@ class StageStore:
         from pyarrow import fs as pafs
 
         fs, path = self._fs_path(stage)
-        info = fs.get_file_info(f"{path}/{_COMMIT_MARKER}")
+        info = fs.get_file_info(f"{path}/{COMMIT_MARKER}")
         return info.type != pafs.FileType.NotFound
 
     def load(self, stage: str) -> DataFrame:
@@ -101,7 +103,7 @@ class StageStore:
         rows, n_parts = self._footer_stats(fs, fspath)
         self._append_metrics(stage, rows, n_parts, wall_ms, extra_metrics or {})
         # atomic-enough commit marker: written only after data + metrics land
-        with fs.open_output_stream(f"{fspath}/{_COMMIT_MARKER}") as f:
+        with fs.open_output_stream(f"{fspath}/{COMMIT_MARKER}") as f:
             f.write(json.dumps({"rows": rows, "wall_ms": wall_ms}).encode())
         return out
 

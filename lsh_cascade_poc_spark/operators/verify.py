@@ -69,19 +69,13 @@ def verify_pairs_exact_jaccard(
     wide shingle arrays exist transiently for the pruned pair set (at 10^12
     docs the persistent signature table must not carry a corpus of shingles).
     """
-    if "n_shingles" in signatures.columns:
-        # prefer the slim precomputed count: F.size(shingles) would make the
-        # size-prune joins read the WIDE shingle-array column for every doc
-        # (the dominant column of the signature table) just to measure it —
-        # the int column prunes the scan to doc_id + n_shingles (guide §2.3
-        # "project before the exchange" / §6 column pruning)
-        sizes = signatures.select(
-            F.col("doc_id"), F.col("n_shingles").alias("n_sh")
-        )
-    else:
-        sizes = signatures.select(
-            F.col("doc_id"), F.size("shingles").alias("n_sh")
-        )
+    # n_shingles (every signatures table comes from build_signatures), not
+    # F.size(shingles): the size-prune joins then read one int per doc, not
+    # the WIDE shingle-array column (guide §2.3 "project before the
+    # exchange" / §6 column pruning)
+    sizes = signatures.select(
+        F.col("doc_id"), F.col("n_shingles").alias("n_sh")
+    )
     p = (
         attach_pair_sides(pairs, sizes, ["n_sh"])
         .filter(

@@ -6,7 +6,7 @@ practice, so the engine ships an incremental path:
 
   readStream(turn files) -> foreachBatch:
       1. read the index as it stood before this batch (its committed
-         batches only)
+         directories only, see the layout below)
       2. run the batch pipeline's cascade body (pipeline.py run_cascade)
          over the micro-batch's turns (complete convs per batch — the
          file-per-conversation-chunk contract) against that index: the
@@ -19,8 +19,9 @@ practice, so the engine ships an incremental path:
          the indexed rows as its `index` side (new x new plus new x
          indexed, never indexed x indexed); a batch run is the same body
          against an empty index
-      3. write the batch's index tables concurrently; the ``_batch_<id>_done``
-         marker, written after the last of them, is the commit point
+      3. write the batch's index tables concurrently under batch_<id>/;
+         its _COMMITTED marker, written after the last of them, is the
+         commit point
 
 The cascade steps and the hot-key cap are one rule in both drivers: a
 probe sizes each bucket the batch's docs fall into over every indexed doc
@@ -32,9 +33,16 @@ differs:
 Each micro-batch costs three probes of (new x indexed) — the tier-0 bands,
 the SimHash chunks and the winnow fingerprints — instead of full
 self-joins: the standard "probe the inverted index" incremental dedup. All
-state lives in parquet tables (index_dir), so the stream is restartable via
-Spark's checkpointLocation + idempotent batch-id guard. Each fact is stored
-once, in one of six tables (INDEX_TABLES):
+state lives in parquet tables under index_dir, one directory per commit:
+
+  batch_<k>/<table>/       written by micro-batch k
+  compact_<upto>/<table>/  every batch <= upto, folded every compact_every
+
+A directory is read iff it holds StageStore's _COMMITTED marker: the view
+is the newest committed compaction plus the committed batches above it.
+The stream is restartable via Spark's checkpointLocation and an idempotent
+batch-id guard. Each fact is stored once, in one of six tables
+(INDEX_TABLES):
 
   docs            (conv_id, doc_id, fingerprint) of every ingested doc
   signatures      fresh representatives' signatures; its (fingerprint,
@@ -49,12 +57,13 @@ once, in one of six tables (INDEX_TABLES):
 
 from __future__ import annotations
 
+import re
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import resolve_fs
+from .checkpoint import COMMIT_MARKER, resolve_fs
 from .config import DedupConfig
 from .pipeline import local_stage, run_cascade, run_concurrently
 
@@ -63,10 +72,12 @@ TURNS_DDL = (
     "ts timestamp"
 )
 
-# every index table, one batch_id-partitioned parquet directory each; every
-# batch writes all of them and every compaction folds all of them
+# every index table; every batch writes all of them and every compaction
+# folds all of them
 INDEX_TABLES = ("docs", "signatures", "dup_pairs", "overlap_fps", "texts",
                 "hot_band_drops")
+# the only directories of an index root: one per batch and per compaction
+_COMMIT_DIR = re.compile(r"(batch|compact)_(\d+)")
 
 
 class IncrementalDedup:
@@ -84,12 +95,9 @@ class IncrementalDedup:
                 "no text of short representatives, so the verify cannot "
                 "re-shingle them"
             )
-        # fold per-batch subdirectories into one compacted partition every
-        # this many batches (0 disables). Without it the index accumulates
-        # one directory per micro-batch FOREVER and every batch's probe pays
-        # a file listing linear in stream history — the one 100-TB streaming
-        # nit left by r3 (VERDICT r3 #5). See _compact for the idempotent
-        # marker protocol.
+        # fold the batch dirs into one compaction every this many batches
+        # (0 disables); without it every batch's probe pays a file listing
+        # linear in stream history (VERDICT r3 #5)
         self.compact_every = compact_every
         fs, root = resolve_fs(self.index_dir)
         fs.create_dir(root, recursive=True)
@@ -98,166 +106,117 @@ class IncrementalDedup:
         """Path as Spark sees it (keeps the URI scheme)."""
         return f"{self.index_dir.rstrip('/')}/{name}"
 
-    def _done_marker(self, root: str, batch_id: int) -> str:
-        """The commit marker of `batch_id` under the index `root` (as
-        resolve_fs returns it)."""
-        return f"{root.rstrip('/')}/_batch_{batch_id}_done"
-
-    def _list_table(self, name: str) -> tuple[dict[int, str], list[int]]:
-        """Direct children of a table dir -> ({batch_or_gen dir key: base
-        name}, [marked compaction gens]). Compacted partitions are stored as
-        ``batch_id=-(gen+1)`` (never collides with real batch ids >= 0) and
-        count only when their ``_compact_<gen>_done`` marker exists."""
+    def _view(self) -> tuple[int, list[int], list[tuple[str, int]]]:
+        """One listing of the index root plus one batched stat of the commit
+        markers -> (u, batches, dirs): u is the `upto` of the newest
+        committed compaction (-1 before the first), batches the committed
+        batch ids above u, ascending, and dirs every (kind, id) directory,
+        committed or not. What a crash leaves behind (a dir that died
+        before its marker, an older compaction or folded batches that died
+        before their deletion) is never read, so the deletes in _compact
+        are garbage collection, not a correctness step. Any other directory
+        (a table dir of the older per-table layout) raises ValueError."""
         from pyarrow import fs as pafs
 
         fs, root = resolve_fs(self.index_dir)
-        infos = fs.get_file_info(
-            pafs.FileSelector(f"{root.rstrip('/')}/{name}",
-                              allow_not_found=True)
-        )
-        dirs: dict[int, str] = {}
-        gens: list[int] = []
-        for i in infos:
-            base = i.base_name
-            if i.type == pafs.FileType.Directory and base.startswith("batch_id="):
-                try:
-                    dirs[int(base.split("=", 1)[1])] = base
-                except ValueError:
-                    pass
-            elif base.startswith("_compact_") and base.endswith("_done"):
-                try:
-                    gens.append(int(base[len("_compact_"):-len("_done")]))
-                except ValueError:
-                    pass
-        return dirs, gens
-
-    def _read_table(self, name: str, batch_id: int | None = None) -> DataFrame:
-        """One listing of a table's directory -> its CURRENT view: the
-        newest MARKED compacted partition plus every COMMITTED per-batch
-        directory (its ``_batch_<k>_done`` marker exists; one metadata call
-        checks them all) above its watermark, and below `batch_id` when
-        given: the index as it stood before that batch. Stale artifacts a
-        crash can leave behind — a failed batch's partial writes (died
-        before its marker), an unmarked compacted dir (died before its
-        marker), an older compacted gen or folded batch dirs (died before
-        GC) — are never selected, so deletion in _compact is pure garbage
-        collection, never a correctness step, and a replay, which
-        overwrites its batch's directories, never reads or accumulates
-        duplicate rows. (A replayed batch can never sit BELOW a compaction
-        watermark: compaction only folds done-marked batches, and done
-        batches short-circuit in process_batch.)
-
-        With nothing selected it raises FileNotFoundError: before the
-        first committed batch the index is empty (process_batch's
-        `index=None`)."""
-        from pyarrow import fs as pafs
-
-        dirs, gens = self._list_table(name)
-        gen = max((g for g in gens if -(g + 1) in dirs), default=None)
-        batches = sorted(
-            b for b in dirs
-            if b >= 0 and (gen is None or b > gen)
-            and (batch_id is None or b < batch_id)
-        )
-        fs, root = resolve_fs(self.index_dir)
+        root = root.rstrip("/")
+        dirs = []
+        for info in fs.get_file_info(pafs.FileSelector(root)):
+            if info.type != pafs.FileType.Directory:
+                continue
+            m = _COMMIT_DIR.fullmatch(info.base_name)
+            if m is None:
+                raise ValueError(
+                    f"{self.index_dir} holds {info.base_name!r}, not a "
+                    "batch_<k> or compact_<upto> dir: an older index layout")
+            dirs.append((m[1], int(m[2])))
         markers = fs.get_file_info(
-            [self._done_marker(root, b) for b in batches])
-        keys = [] if gen is None else [-(gen + 1)]
-        keys += [b for b, m in zip(batches, markers)
-                 if m.type != pafs.FileType.NotFound]
-        if not keys:
+            [f"{root}/{kind}_{k}/{COMMIT_MARKER}" for kind, k in dirs])
+        done = [d for d, m in zip(dirs, markers)
+                if m.type != pafs.FileType.NotFound]
+        u = max((k for kind, k in done if kind == "compact"), default=-1)
+        return u, sorted(k for kind, k in done
+                         if kind == "batch" and k > u), dirs
+
+    def _read(self, name: str, view, before: int | None = None) -> DataFrame:
+        """Table `name` over the committed dirs of `view` (_view), below
+        batch `before` when given: the index as it stood before that
+        batch. With none it raises FileNotFoundError: before the first
+        committed batch the index is empty."""
+        u, batches, _ = view
+        dirs = [f"compact_{u}"] * (u >= 0) + [
+            f"batch_{k}" for k in batches if before is None or k < before]
+        if not dirs:
             raise FileNotFoundError(
-                f"index table {name!r} under {self.index_dir} holds no "
-                "committed batch yet"
-            )
-        base = self._path(name)
-        return self.spark.read.option("basePath", base) \
-            .parquet(*(f"{base}/{dirs[k]}" for k in keys)).drop("batch_id")
+                f"stream index {self.index_dir} holds no committed batch yet")
+        return self.spark.read.parquet(
+            *(self._path(f"{d}/{name}") for d in dirs))
+
+    def _commit(self, name: str) -> None:
+        """Write the marker of directory `name`: its commit point."""
+        fs, root = resolve_fs(self.index_dir)
+        with fs.open_output_stream(
+                f"{root.rstrip('/')}/{name}/{COMMIT_MARKER}") as f:
+            f.write(b"ok")
 
     def _compact(self, upto: int) -> None:
-        """Fold every per-batch subdirectory with batch_id <= upto (all
-        done-marked — `upto` is the just-committed batch) plus the previous
-        compacted partition into ONE partition per table. The tables share
-        nothing, so they fold concurrently (run_concurrently), each in its
-        own protocol order (_compact_table)."""
-        run_concurrently(self.spark, *(
-            partial(self._compact_table, name, upto) for name in INDEX_TABLES
-        ))
+        """Fold the committed view up to batch `upto` (the just-committed
+        one) into compact_<upto>/: the six tables are written concurrently,
+        one marker commits them together, then every batch_<k <= upto> and
+        every other compact_* is deleted whole. A crash before the marker
+        leaves a compact_<upto> no reader selects and the next compaction
+        deletes; a crash among the deletes leaves dirs no view selects."""
+        view = self._view()
 
-    def _compact_table(self, name: str, upto: int) -> None:
-        """Compact one table. Idempotent marker protocol (write-ahead order):
-          1. write the folded rows to ``batch_id=-(upto+1)`` (a staging dir
-             no reader selects yet — readers require the marker),
-          2. write ``_compact_<upto>_done`` (the commit point: readers now
-             prefer this gen and ignore everything at or below it),
-          3. best-effort GC of folded batch dirs, older compacted gens and
-             their markers (a crash here leaves garbage, not wrong answers —
-             see _read_table).
-        """
+        def fold(name: str) -> None:
+            # single partition: the compacted result IS the small
+            # historical tail; at cluster scale raise this to taste
+            self._read(name, view, upto + 1).coalesce(1).write \
+                .mode("overwrite").parquet(self._path(f"compact_{upto}/{name}"))
+
+        run_concurrently(self.spark, *(
+            partial(fold, name) for name in INDEX_TABLES))
+        self._commit(f"compact_{upto}")
         fs, root = resolve_fs(self.index_dir)
-        dirs, gens = self._list_table(name)
-        if not any(0 <= b <= upto for b in dirs):
-            return  # nothing to fold (table absent or already compact)
-        df = self._read_table(name, upto + 1)
-        # single partition: the compacted result IS the small historical
-        # tail; at cluster scale raise this to taste via repartition
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{self._path(name)}/batch_id=-{upto + 1}"
-        )
-        tdir = f"{root.rstrip('/')}/{name}"
-        with fs.open_output_stream(f"{tdir}/_compact_{upto}_done") as f:
-            f.write(b"ok")
-        # GC: folded batch dirs, superseded compacted dirs + markers
-        for b, base in dirs.items():
-            if (0 <= b <= upto) or (b < 0 and b != -(upto + 1)):
-                try:
-                    fs.delete_dir(f"{tdir}/{base}")
-                except Exception:
-                    pass
-        for g in gens:
-            if g != upto:
-                try:
-                    fs.delete_file(f"{tdir}/_compact_{g}_done")
-                except Exception:
-                    pass
+        for kind, k in view[2]:
+            if (kind == "batch" and k <= upto) or (
+                    kind == "compact" and k != upto):
+                fs.delete_dir(f"{root.rstrip('/')}/{kind}_{k}")
 
     def _write_batch(self, df: DataFrame, name: str, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(
-            f"{self._path(name)}/batch_id={batch_id}"
-        )
+            self._path(f"batch_{batch_id}/{name}"))
 
-    def _index(self, batch_id: int) -> dict[str, DataFrame] | None:
+    def _index(self, view, batch_id: int) -> dict[str, DataFrame] | None:
         """The index tables process_batch reads, as they stood before
-        `batch_id` -> {name: table}; None before the first committed batch
-        (an empty index)."""
+        `batch_id` in `view` -> {name: table}; None before the first
+        committed batch (an empty index)."""
         try:
-            return {name: self._read_table(name, batch_id) for name in
+            return {name: self._read(name, view, batch_id) for name in
                     ("docs", "signatures", "overlap_fps", "texts")}
         except FileNotFoundError:
             return None
 
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
-        from pyarrow import fs as pafs
-
-        fs, root = resolve_fs(self.index_dir)
-        done_marker = self._done_marker(root, batch_id)
-        if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
+        view = self._view()
+        u, batches, _ = view
+        if batch_id <= u or batch_id in batches:
             return  # replayed micro-batch after restart: already applied
 
         # the cascade reads only the batch and the index as it stood before
         # it, and raises (a doc_id collision included) before the first
-        # index write below, so a failing batch leaves no done-marker. Every
-        # stage of the cascade, dup_pairs included, is materialized before
-        # the writes touch the index dirs: a replay OVERWRITES this batch's
-        # own subdirectories.
+        # index write below, so a failing batch leaves no commit marker.
+        # Every stage of the cascade, dup_pairs included, is materialized
+        # before the writes touch the index: a replay OVERWRITES this
+        # batch's own tables.
         out = run_cascade(turns_batch, self.cfg, local_stage,
-                          self._index(batch_id))
+                          self._index(view, batch_id))
 
-        # batch-scoped subdirectories + overwrite: a crash between the
-        # writes is healed by the replay overwriting the SAME directories,
-        # so the done-marker is a true commit point (ADVICE r1: plain
-        # appends made replays duplicate rows). The writes are independent
-        # and run concurrently; the marker follows the last of them.
+        # one directory per batch + overwrite: a crash between the writes
+        # is healed by the replay overwriting the SAME directories, so the
+        # marker is a true commit point (ADVICE r1: plain appends made
+        # replays duplicate rows). The writes are independent and run
+        # concurrently; the marker follows the last of them.
         writes = {
             # narrow per-doc bookkeeping (EVERY doc, signed or not): id
             # mapping + fingerprint — the signature table carries only
@@ -280,11 +239,10 @@ class IncrementalDedup:
             partial(self._write_batch, writes[name], name, batch_id)
             for name in INDEX_TABLES
         ))
-        with fs.open_output_stream(done_marker) as f:
-            f.write(b"ok")
-        # periodic index compaction AFTER the commit point: only done-marked
-        # batches are ever folded, so a replay (which short-circuits on the
-        # marker) can never race its own compaction
+        self._commit(f"batch_{batch_id}")
+        # periodic index compaction AFTER the commit point: only committed
+        # batches are ever folded, and a replay of a folded batch
+        # short-circuits on the compaction's `upto`
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             self._compact(batch_id)
 
@@ -304,12 +262,12 @@ class IncrementalDedup:
         return writer.start()
 
     def dup_pairs(self) -> DataFrame:
-        return self._read_table("dup_pairs")
+        return self._read("dup_pairs", self._view())
 
     def signatures(self) -> DataFrame:
         """Fresh-representative signatures (one row per distinct fingerprint
         first seen in each batch) — the banded/verifiable population."""
-        return self._read_table("signatures")
+        return self._read("signatures", self._view())
 
     def docs(self) -> DataFrame:
         """Narrow per-doc bookkeeping for EVERY ingested doc:
@@ -318,10 +276,11 @@ class IncrementalDedup:
         first-indexed representative, i.e. its one row in the signatures
         table. An exact group straddling micro-batches thus reads with ONE
         root."""
-        roots = self._read_table("signatures") \
+        view = self._view()
+        roots = self._read("signatures", view) \
             .select("fingerprint", F.col("doc_id").alias("root_id"))
         return (
-            self._read_table("docs")
+            self._read("docs", view)
             .join(roots, "fingerprint", "left")
             .withColumn("_root", F.coalesce("root_id", F.col("doc_id")))
             .drop("root_id")
@@ -333,7 +292,7 @@ class IncrementalDedup:
         indexed up to and including that batch — empty before the first
         batch."""
         try:
-            return self._read_table("hot_band_drops")
+            return self._read("hot_band_drops", self._view())
         except FileNotFoundError:
             return self.spark.createDataFrame(
                 [], "tier int, band_id int, band_key bigint, n_docs bigint"

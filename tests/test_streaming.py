@@ -95,7 +95,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
 
     # simulate a crash AFTER the data writes but BEFORE the commit marker:
     # the marker is gone, so the stream replays batch 0 on restart
-    os.remove(os.path.join(str(tmp_path / "index"), "_batch_0_done"))
+    os.remove(os.path.join(str(tmp_path / "index"), "batch_0", "_COMMITTED"))
     inc.process_batch(batch, 0)
 
     assert inc.signatures().count() == sigs1
@@ -108,12 +108,12 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     # crash mid-write: the first attempt left EXTRA rows (duplicated file)
     # in its own batch dir. The replay must neither keep them (overwrite
     # heals the dir) nor READ them as index state while recomputing
-    # (_read_table selects only done-marked batches below the replaying one).
+    # (_read selects only committed batches below the replaying one).
     import glob
     import shutil
 
-    os.remove(os.path.join(str(tmp_path / "index"), "_batch_0_done"))
-    sig_dir = os.path.join(str(tmp_path / "index"), "signatures", "batch_id=0")
+    os.remove(os.path.join(str(tmp_path / "index"), "batch_0", "_COMMITTED"))
+    sig_dir = os.path.join(str(tmp_path / "index"), "batch_0", "signatures")
     a_file = glob.glob(os.path.join(sig_dir, "*.parquet"))[0]
     shutil.copy(a_file, os.path.join(sig_dir, "part-dup-copy.parquet"))
     # the corruption is on disk, but readers select committed batches only
@@ -215,7 +215,7 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     # the SimHash probe (tier 2) applies the same cap and records its drops
     assert any(r.tier == 2 for r in drops), drops
     sigs = inc.signatures()
-    old = inc._index(1)["signatures"]
+    old = inc._index(inc._view(), 1)["signatures"]
     new = sigs.join(old.select("doc_id"), "doc_id", "left_anti")
     sizes = []
     for bands_of in (coarse_bands, simhash_chunks):
@@ -227,7 +227,7 @@ def test_streaming_exact_flood_and_hot_band_cap(spark, tmp_path):
     assert sizes and max(sizes) <= cfg.hot_band_cap
 
     # the replay guard still holds with the new tables
-    os.remove(os.path.join(str(tmp_path / "index"), "_batch_1_done"))
+    os.remove(os.path.join(str(tmp_path / "index"), "batch_1", "_COMMITTED"))
     inc.process_batch(spark.createDataFrame(b2, TURNS_DDL), 1)
     assert inc.docs().count() == 15
     assert inc.signatures().count() == 7
@@ -243,7 +243,7 @@ _FAMILY = (
 def _batch_drops(spark, index, batch_id: int) -> list:
     """The hot-bucket drops batch `batch_id` recorded, as Rows."""
     return spark.read.parquet(
-        str(index / "hot_band_drops" / f"batch_id={batch_id}")).collect()
+        str(index / f"batch_{batch_id}" / "hot_band_drops")).collect()
 
 
 def test_stream_batch_outside_hot_buckets_records_no_drop(spark, tmp_path):
@@ -360,11 +360,13 @@ def test_streaming_cross_batch_overlap(spark, tmp_path):
 def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
     """VERDICT r3 #5: >= 20 micro-batches with compact_every=8 produce
     dup_pairs identical to the uncompacted stream, while the index keeps a
-    bounded number of per-batch subdirectories (1 compacted partition + at
-    most compact_every live batch dirs) instead of one per batch forever.
-    Also exercises crash artifacts: an unmarked stale compacted dir must be
-    invisible to readers."""
+    bounded number of directories (1 compaction + at most compact_every
+    batch dirs) instead of one per batch forever. Also exercises a crash
+    artifact: a compaction that died after folding some tables (its dir
+    holds no marker) changes no reader's rows, and the next compaction
+    deletes it."""
     import os
+    import shutil
 
     corpus = generate_corpus(n_base=40, dup_fraction=0.5, seed=7)
     turns = corpus.turns
@@ -383,46 +385,87 @@ def test_compaction_preserves_results_and_bounds_files(spark, tmp_path):
         inc_c.process_batch(batch, i)
         inc_n.process_batch(batch, i)
 
-    id_c = {r.doc_id: r.conv_id
-            for r in inc_c.docs().select("doc_id", "conv_id").collect()}
-    id_n = {r.doc_id: r.conv_id
-            for r in inc_n.docs().select("doc_id", "conv_id").collect()}
-    pairs_c = {(id_c[r.id_a], id_c[r.id_b], r.jaccard)
-               for r in inc_c.dup_pairs().collect()}
-    pairs_n = {(id_n[r.id_a], id_n[r.id_b], r.jaccard)
-               for r in inc_n.dup_pairs().collect()}
-    assert pairs_c == pairs_n
-    assert inc_c.docs().count() == inc_n.docs().count()
+    def readers(inc):
+        conv_of = {r.doc_id: r.conv_id
+                   for r in inc.docs().select("doc_id", "conv_id").collect()}
+        return (
+            {(conv_of[r.id_a], conv_of[r.id_b], r.jaccard)
+             for r in inc.dup_pairs().collect()},
+            inc.docs().count(),
+            sorted(conv_of[r.doc_id]
+                   for r in inc.signatures().select("doc_id").collect()),
+        )
 
-    def batch_dirs(ix, name):
-        p = tmp_path / ix / name
-        return sorted(d for d in os.listdir(p) if d.startswith("batch_id="))
+    want = readers(inc_n)
+    assert readers(inc_c) == want
 
+    ix_c = tmp_path / "ix_c"
     # compactions fired at batch 7 and 15: everything <= 15 lives in ONE
-    # compacted partition (batch_id=-16), batches 16..20 stay per-batch
+    # compaction dir (compact_15), batches 16..20 stay per-batch
+    dirs_c = set(os.listdir(ix_c))
+    assert len(dirs_c) <= 1 + 8, dirs_c
+    assert dirs_c == {"compact_15"} | {f"batch_{k}" for k in range(16, 21)}
     for name in ("signatures", "dup_pairs", "docs"):
-        dirs_c = batch_dirs("ix_c", name)
-        assert len(dirs_c) <= 1 + 8, (name, dirs_c)
-        assert "batch_id=-16" in dirs_c, (name, dirs_c)
-        assert len(batch_dirs("ix_n", name)) == n_batches
-    markers = [f for f in os.listdir(tmp_path / "ix_c" / "signatures")
-               if f.startswith("_compact_")]
-    assert markers == ["_compact_15_done"]
+        assert (ix_c / "compact_15" / name).is_dir(), name
+    assert (ix_c / "compact_15" / "_COMMITTED").exists()
+    assert len(os.listdir(tmp_path / "ix_n")) == n_batches
 
-    # crash artifact: an UNMARKED compacted dir (writer died before its
-    # marker) must not leak into the read view
-    sigs_dir = tmp_path / "ix_c" / "signatures"
-    stale = sigs_dir / "batch_id=-100"
-    os.makedirs(stale)
-    (sigs_dir / "batch_id=-16" / "_SUCCESS").touch()
-    import shutil
-    for f in os.listdir(sigs_dir / "batch_id=-16"):
-        if f.endswith(".parquet"):
-            shutil.copy(sigs_dir / "batch_id=-16" / f, stale / f)
-    n_sigs_before = len(batch_dirs("ix_c", "signatures"))
-    assert inc_c._read_table("signatures").count() == \
-        inc_n._read_table("signatures").count()
-    assert len(batch_dirs("ix_c", "signatures")) == n_sigs_before
+    # crash artifact: a compaction up to batch 18 that died after folding
+    # two of its tables, before its marker
+    stale = ix_c / "compact_18"
+    for name in ("signatures", "dup_pairs"):
+        shutil.copytree(ix_c / "compact_15" / name, stale / name)
+    assert readers(inc_c) == want
+    # the next compaction deletes it with the dirs it folds
+    inc_c._compact(20)
+    assert os.listdir(ix_c) == ["compact_20"]
+    assert readers(inc_c) == want
+
+
+def test_replay_of_a_folded_batch_is_a_no_op(spark, tmp_path):
+    """Replaying a batch that a committed compaction folded (its batch_<k>
+    dir is deleted) runs nothing and writes nothing, as does replaying a
+    committed batch above the compaction: every reader's rows and the
+    index dirs stay as they were."""
+    turns = generate_corpus(n_base=12, dup_fraction=0.5, seed=3).turns
+    convs = sorted(turns.conv_id.unique())
+    batches = [spark.createDataFrame(turns[turns.conv_id.isin(convs[i::3])],
+                                     TURNS_DDL) for i in range(3)]
+    index = tmp_path / "index"
+    inc = IncrementalDedup(spark, str(index), CFG, compact_every=2)
+    for i, b in enumerate(batches):
+        inc.process_batch(b, i)
+
+    def state():
+        return (sorted(os.listdir(index)), inc.signatures().count(),
+                inc.docs().count(), inc.dup_pairs().count())
+
+    before = state()
+    assert before[0] == ["batch_2", "compact_1"] and before[3] > 0
+    for i, b in enumerate(batches):
+        inc.process_batch(b, i)
+    assert state() == before
+
+
+def test_index_of_the_per_table_layout_is_refused(spark, tmp_path):
+    """An index dir of the older per-table layout (<table>/batch_id=<k>
+    dirs and a root _batch_<k>_done marker) is refused with ValueError by
+    the first batch and by every reader, not read as an empty index."""
+    index = tmp_path / "index"
+    spark.createDataFrame([("c0", 1, "fp0")],
+                          "conv_id string, doc_id bigint, fingerprint string") \
+        .write.parquet(str(index / "docs" / "batch_id=0"))
+    (index / "_batch_0_done").touch()
+    inc = IncrementalDedup(spark, str(index), CFG)
+    batch = spark.createDataFrame(
+        _mk_turns([("c1", "a conversation that says something new")]),
+        TURNS_DDL)
+    with pytest.raises(ValueError, match="docs"):
+        inc.process_batch(batch, 1)
+    for read in (inc.dup_pairs, inc.signatures, inc.docs, inc.hot_band_drops):
+        with pytest.raises(ValueError, match="docs"):
+            read()
+    assert sorted(os.listdir(index)) == ["_batch_0_done", "docs"]
 
 
 def test_streaming_rejects_slim_signatures(spark, tmp_path):
@@ -461,10 +504,12 @@ def test_docs_root_is_global_across_batches(spark, tmp_path):
     ids = {r.conv_id: r.doc_id for r in rows}
     assert roots == {ids["c0"]} or roots == {ids["c1"]}  # batch-0 rep
 
-    tables = sorted(d.name for d in index.iterdir() if d.is_dir())
-    assert tables == sorted(INDEX_TABLES) and len(tables) == 6
+    assert sorted(d.name for d in index.iterdir()) == ["batch_0", "batch_1"]
     for b in range(2):
-        part = next((index / "docs" / f"batch_id={b}").glob("*.parquet"))
+        tables = sorted(d.name for d in (index / f"batch_{b}").iterdir()
+                        if d.is_dir())
+        assert tables == sorted(INDEX_TABLES) and len(tables) == 6
+        part = next((index / f"batch_{b}" / "docs").glob("*.parquet"))
         assert pq.read_schema(part).names == ["conv_id", "doc_id", "fingerprint"]
     assert inc.docs().columns == ["fingerprint", "conv_id", "doc_id", "_root"]
 
@@ -531,8 +576,8 @@ def test_doc_id_collision_fails_in_batch_and_stream(spark, tmp_path, monkeypatch
     inc.process_batch(turns("ac"), 0)
     with pytest.raises(RuntimeError, match="doc_id collisions"):
         inc.process_batch(turns("b"), 1)
-    assert not (index / "_batch_1_done").exists()
-    assert not (index / "docs" / "batch_id=1").exists()
+    assert not (index / "batch_1" / "_COMMITTED").exists()
+    assert not (index / "batch_1" / "docs").exists()
 
 
 def _partition(conv_of: dict, edges) -> set[frozenset]:
@@ -664,15 +709,15 @@ def test_failing_index_write_commits_nothing(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="injected"):
         inc.process_batch(batches[1], 1)
     assert in_flight == []
-    assert not (index / "_batch_1_done").exists()
+    assert not (index / "batch_1" / "_COMMITTED").exists()
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     # the failed batch's finished writes are on disk but uncommitted
-    assert (index / "dup_pairs" / "batch_id=1").exists()
+    assert (index / "batch_1" / "dup_pairs").exists()
     assert readers() == committed
 
     monkeypatch.setattr(IncrementalDedup, "_write_batch", write)
     inc.process_batch(batches[1], 1)
-    assert (index / "_batch_1_done").exists()
+    assert (index / "batch_1" / "_COMMITTED").exists()
     got = {(r.id_a, r.id_b, r.jaccard) for r in inc.dup_pairs().collect()}
     assert got == want
     assert any(j >= 0 for _, _, j in want)
