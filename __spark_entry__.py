@@ -891,18 +891,14 @@ def q_prod_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_pairs is only the banding/xxhash64 plumbing (pytest lane-exact).
     Scope: ASCII-printable docs (identical tokenization in numpy U16 and
     DuckDB; python str.split also splits on exotic unicode whitespace that
-    SQL string_split would not)."""
-    from lsh_cascade_poc_spark.functions.signature_udf import make_shingles_udf
-
-    docs = _docs_normalized(spark, sf_dir).filter(
-        F.col("norm_text").rlike("^[ -~]*$")
-    )
+    SQL string_split would not). The shingles are the `shingles` column of
+    the fused signature kernel (_prod_signatures), the one the pipeline runs."""
     # checkpoint: sizes + both self-join sides consume `sh` — without plan
-    # truncation the Arrow shingle kernel would run three times over
+    # truncation the Arrow signature kernel would run three times over
     # unreplicated localCheckpoint blocks: a lost executor fails the query
     # instead of recomputing it, accepted as each driver query is one short job
-    sh = docs.select(
-        "doc_id", make_shingles_udf(5)(F.col("norm_text")).alias("shingles")
+    sh = _prod_signatures(spark, sf_dir).select(
+        "doc_id", F.col("sig.shingles").alias("shingles")
     ).localCheckpoint(eager=True)
     sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -933,7 +929,7 @@ def _prod_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production signature kernel (functions/signature_udf.py) at the
     PRODUCTION DedupConfig parameters (shingle_k=5, n_perm=128, seed=42)
     over the ASCII-printable normalized documents — the shared input of the
-    prod_band_keys / prod_lsh_pairs oracle queries."""
+    prod_shingle_pairs / prod_band_keys / prod_lsh_pairs oracle queries."""
     from lsh_cascade_poc_spark.functions.signature_udf import make_signature_udf
 
     docs = _docs_normalized(spark, sf_dir).filter(

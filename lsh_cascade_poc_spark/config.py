@@ -93,13 +93,6 @@ class DedupConfig:
     # single-fp collisions that dominate the candidate set
     overlap_min_shared_fps: int = 2
 
-    # Store full shingle arrays in the signatures table (True) or only the
-    # slim n_shingles count (False). False is the 100TB-scale setting: the
-    # persistent signature table shrinks ~10x and the verify stage re-shingles
-    # ONLY the stage-1/2 survivor docs from text (functions/signature_udf.py
-    # make_shingles_udf). Results are identical (tested).
-    store_shingles: bool = True
-
     # --- verification + clustering ---
     jaccard_threshold: float = 0.80
     cc_max_iterations: int = 20

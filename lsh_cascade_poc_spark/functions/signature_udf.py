@@ -167,27 +167,3 @@ def make_signature_udf(shingle_k: int, n_perm: int, minhash_seed: int,
 
     return signature
 
-
-def make_shingles_udf(shingle_k: int):
-    """pandas_udf: doc_text -> array<long> sorted distinct shingle hashes.
-    The re-shingle path for store_shingles=False runs: signatures tables at
-    10^12-doc scale should not carry a corpus-sized shingle column, so the
-    verify stage recomputes shingles from text for SURVIVOR docs only (the
-    pair set after the slim size/estimate prunes is orders of magnitude
-    smaller than the corpus). Identical hash scheme to the fused kernel."""
-
-    def _chunk(texts: list[str]) -> pd.Series:
-        out: list[np.ndarray] = []
-        for t in texts:
-            th = hash_tokens(t.split() if t else [])
-            sh = shingle_hashes_from_token_hashes(th, shingle_k)
-            out.append(np.unique(sh.astype(np.int64)))
-        return pd.Series(out)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def shingles_only(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            for lo in range(0, len(s), _CHUNK_ROWS):
-                yield _chunk(s.iloc[lo : lo + _CHUNK_ROWS].tolist())
-
-    return shingles_only

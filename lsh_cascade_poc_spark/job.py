@@ -53,9 +53,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--hot-band-cap", type=int, default=None)
     p.add_argument("--no-overlap", action="store_true",
                    help="skip the winnowing long-overlap stage")
-    p.add_argument("--slim-signatures", action="store_true",
-                   help="store_shingles=False: slim signature table, verify "
-                        "re-shingles survivors from text (100TB setting)")
     p.add_argument("--shuffle-partitions", type=int, default=None,
                    help="override spark.sql.shuffle.partitions (size to "
                         "~128MB/partition of band table at your scale)")
@@ -79,8 +76,6 @@ def main(argv: list[str] | None = None) -> None:
         overrides["n_perm"] = args.n_perm
     if args.hot_band_cap is not None:
         overrides["hot_band_cap"] = args.hot_band_cap
-    if args.slim_signatures:
-        overrides["store_shingles"] = False
     cfg = DedupConfig(**overrides)
 
     spark = get_spark(app_name="dedup_cascade",

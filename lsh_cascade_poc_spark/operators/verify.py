@@ -48,7 +48,6 @@ def verify_pairs_exact_jaccard(
     pairs: DataFrame,
     signatures: DataFrame,
     threshold: float,
-    shingle_provider=None,
 ) -> DataFrame:
     """-> dup_pairs(id_a, id_b, jaccard), verified in three widening joins so
     the wide shingle arrays shuffle only for near-final survivors (the
@@ -62,12 +61,6 @@ def verify_pairs_exact_jaccard(
          for a true J >= t pair is ~Phi(-0.1/0.035) < 0.3% — and the numpy
          reference applies the IDENTICAL rule, so parity is exact.
       3. exact Jaccard on shingle sets (wide join) >= t.
-
-    `shingle_provider` (store_shingles=False mode): a callable mapping a
-    (doc_id) DataFrame of stage-1/2 SURVIVOR ids to (doc_id, shingles) — the
-    signature table then needs only the slim `n_shingles` int column, and the
-    wide shingle arrays exist transiently for the pruned pair set (at 10^12
-    docs the persistent signature table must not carry a corpus of shingles).
     """
     # n_shingles (every signatures table comes from build_signatures), not
     # F.size(shingles): the size-prune joins then read one int per doc, not
@@ -95,16 +88,7 @@ def verify_pairs_exact_jaccard(
         .select("id_a", "id_b")
     )
 
-    if shingle_provider is not None:
-        ids = (
-            p.select(F.col("id_a").alias("doc_id"))
-            .unionAll(p.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        shingle_src = shingle_provider(ids)
-    else:
-        shingle_src = signatures.select("doc_id", "shingles")
-    sided = attach_pair_sides(p, shingle_src, ["shingles"])
+    sided = attach_pair_sides(p, signatures, ["shingles"])
     jac = jaccard_on_shingle_arrays(F.col("shingles_a"), F.col("shingles_b"))
     return (
         sided.withColumn("jaccard", jac)

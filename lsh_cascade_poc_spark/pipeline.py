@@ -57,9 +57,11 @@ from .operators.verify import attach_pair_sides, verify_pairs_exact_jaccard
 @dataclass
 class DedupResult:
     docs: DataFrame        # (conv_id, doc_id, doc_text, n_turns, fingerprint, _root, ...)
-    signatures: DataFrame  # (doc_id, shingles, minhash, simhash, fingerprint)
-    #                        — exact-dup-group REPRESENTATIVES only (members
-    #                        carry no signature; they re-attach via _root)
+    signatures: DataFrame  # build_signatures' schema: (conv_id, doc_id,
+    #                        fingerprint, shingles, n_shingles, minhash,
+    #                        simhash) — exact-dup-group REPRESENTATIVES only
+    #                        (members carry no signature; they re-attach via
+    #                        _root)
     dup_pairs: DataFrame   # (id_a, id_b, jaccard)
     clusters: DataFrame    # (doc_id, cluster_id) — all docs, singletons included
 
@@ -116,7 +118,7 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     # doc_text deliberately NOT carried: signatures are checkpointed and
     # re-joined repeatedly; the raw text stays in the docs table only
-    out = docs.select(
+    return docs.select(
         "conv_id",
         "doc_id",
         fp.alias("fingerprint"),
@@ -130,11 +132,6 @@ def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
         F.col("_sig.minhash").alias("minhash"),
         F.col("_sig.simhash").alias("simhash"),
     )
-    if not cfg.store_shingles:
-        # 100TB-scale mode: the persistent signature table carries only the
-        # shingle COUNT; verify re-shingles survivor docs from text
-        out = out.drop("shingles")
-    return out
 
 
 def coarse_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -309,7 +306,8 @@ def merge_evidence(verified: DataFrame, exact: DataFrame,
 @dataclass
 class CascadeResult:
     docs: DataFrame           # the batch's docs (build_docs)
-    signatures: DataFrame     # the fresh representatives' signatures
+    signatures: DataFrame     # the fresh representatives' signatures, in
+    #                           DedupResult.signatures' schema
     hot: DataFrame            # (tier, band_id, band_key, n_docs) hot buckets
     texts: DataFrame | None   # (doc_id, doc_text) of the long representatives
     fps: DataFrame | None     # their winnow fingerprints
@@ -409,20 +407,10 @@ def run_cascade(turns: DataFrame, cfg: DedupConfig, stage,
         cands = mh_pairs.unionByName(sh_pairs)
         if ov_pairs is not None:
             cands = cands.unionByName(ov_pairs)
-        shingle_provider = None
-        if not cfg.store_shingles:
-            from .functions.signature_udf import make_shingles_udf
-
-            sh_udf = make_shingles_udf(cfg.shingle_k)
-            shingle_provider = lambda ids: (  # noqa: E731
-                reps.join(ids, "doc_id", "left_semi")
-                .select("doc_id", sh_udf("doc_text").alias("shingles"))
-            )
         verified = verify_pairs_exact_jaccard(
             cands.distinct(),
             _with_index(signatures, index, "signatures"),
             threshold=cfg.jaccard_threshold,
-            shingle_provider=shingle_provider,
         )
         return merge_evidence(verified, exact_pairs, ov_pairs)
 

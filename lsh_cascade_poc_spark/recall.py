@@ -68,27 +68,6 @@ def planted_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _root_shingles(res, planted: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(doc_id=root, shingles) for every root referenced by a planted pair.
-    Uses the signature table when it stores shingles (store_shingles=True);
-    otherwise re-shingles just the referenced roots from text — a planted-
-    sized subset, never the corpus."""
-    if "shingles" in res.signatures.columns:
-        return res.signatures.select("doc_id", "shingles")
-    from .functions.signature_udf import make_shingles_udf
-
-    roots = (
-        planted.select(F.col("root_a").alias("doc_id"))
-        .unionByName(planted.select(F.col("root_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_udf = make_shingles_udf(cfg.shingle_k)
-    return (
-        res.docs.join(roots, "doc_id", "left_semi")
-        .select("doc_id", sh_udf("doc_text").alias("shingles"))
-    )
-
-
 def recall_report(res, cfg: DedupConfig) -> dict:
     """res: DedupResult (docs/signatures/dup_pairs/clusters materialized) on
     a corpus produced by the planted-family generator -> recall dict:
@@ -96,7 +75,7 @@ def recall_report(res, cfg: DedupConfig) -> dict:
     per_kind: {kind: {planted, contract, contract_hit, clustered,
     evidenced}}}."""
     planted = planted_pairs(res.docs)
-    sh = _root_shingles(res, planted, cfg)
+    sh = res.signatures.select("doc_id", "shingles")
     with_j = (
         planted
         .join(sh.withColumnsRenamed({"doc_id": "root_a", "shingles": "sh_a"}),

@@ -89,12 +89,6 @@ class IncrementalDedup:
         self.spark = spark
         self.index_dir = index_dir
         self.cfg = cfg or DedupConfig()
-        if not self.cfg.store_shingles:
-            raise ValueError(
-                "IncrementalDedup needs store_shingles=True: the index keeps "
-                "no text of short representatives, so the verify cannot "
-                "re-shingle them"
-            )
         # fold the batch dirs into one compaction every this many batches
         # (0 disables); without it every batch's probe pays a file listing
         # linear in stream history (VERDICT r3 #5)

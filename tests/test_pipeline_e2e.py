@@ -140,32 +140,6 @@ def test_no_verified_false_positives(spark_result, ref_result):
         assert true_j >= CFG.jaccard_threshold or r.jaccard == 1.0
 
 
-def test_store_shingles_false_is_equivalent(spark, tiny_turns):
-    """store_shingles=False (slim signature table + survivor re-shingle from
-    text) must produce IDENTICAL dup_pairs and clusters to the default."""
-    from lsh_cascade_poc_spark.config import DedupConfig
-    from lsh_cascade_poc_spark.pipeline import run_dedup
-
-    base = dict(n_perm=32, coarse_n_bands=8, coarse_rows_per_band=4,
-                tight_n_bands=5, tight_rows_per_band=6, cc_max_iterations=8)
-    r_full = run_dedup(spark, tiny_turns, cfg=DedupConfig(**base),
-                       enable_overlap_stage=False)
-    r_slim = run_dedup(spark, tiny_turns,
-                       cfg=DedupConfig(store_shingles=False, **base),
-                       enable_overlap_stage=False)
-    pairs_full = sorted(
-        (r.id_a, r.id_b, round(r.jaccard, 9)) for r in r_full.dup_pairs.collect()
-    )
-    pairs_slim = sorted(
-        (r.id_a, r.id_b, round(r.jaccard, 9)) for r in r_slim.dup_pairs.collect()
-    )
-    assert pairs_full == pairs_slim
-    assert "shingles" not in r_slim.signatures.columns
-    c_full = sorted((r.doc_id, r.cluster_id) for r in r_full.clusters.collect())
-    c_slim = sorted((r.doc_id, r.cluster_id) for r in r_slim.clusters.collect())
-    assert c_full == c_slim
-
-
 def test_exact_flood_collapses_before_kernel(spark, tmp_path):
     """Batch-side scale invariant (mirrors the streaming flood test): an
     m-fold identical-payload flood costs ONE signature-kernel row and m-1

@@ -1,6 +1,7 @@
 """Cross-engine parity of the production banding arithmetic.
 
-Two layers pin q_prod_band_keys / q_prod_lsh_pairs (__spark_entry__):
+Two layers pin q_prod_shingle_pairs / q_prod_band_keys / q_prod_lsh_pairs
+(__spark_entry__):
   1. a pure-Python model of Spark's XXH64.hashInt chain (the semantics the
      DuckDB HUGEINT SQL implements) vs the real JVM xxhash64 on random
      int32 chains — the analog of reference tests/test_lsh.py's
@@ -128,6 +129,26 @@ def test_prod_band_keys_duckdb_oracle_sf0001(spark):
         f" SELECT * FROM read_parquet('{SF001}/documents.parquet')"
     )
     want = sorted(con.execute(entry.oracle_sql()["prod_band_keys"]).fetchall())
+    assert got == want
+    assert len(got) > 0
+
+
+@pytest.mark.skipif(not os.path.isdir(SF001), reason="driver testdata absent")
+def test_prod_shingle_pairs_duckdb_oracle_sf0001(spark):
+    import __spark_entry__ as entry
+
+    got = sorted(
+        (r.id_a, r.id_b, r.n_inter, r.jaccard)
+        for r in entry.queries()["prod_shingle_pairs"](spark, SF001).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS"
+        f" SELECT * FROM read_parquet('{SF001}/documents.parquet')"
+    )
+    want = sorted(
+        con.execute(entry.oracle_sql()["prod_shingle_pairs"]).fetchall()
+    )
     assert got == want
     assert len(got) > 0
 
